@@ -209,10 +209,10 @@ object QueryPlanner {
     * request — QueryResponse.java). With `internal` set, the query is counted
     * into the S10 internal-metrics loopback like the reference's
     * DataStore.query does (response count + elapsed ms). With `meta` set, the
-    * reference's pre-scan catalog validation runs first: a subquery whose
-    * first tag matches no catalog entry throws
-    * [[TimelyApi.NoMatchingTagsException]] (HTTP 400, DataStore.java:936-941)
-    * instead of returning an empty array. */
+    * reference's pre-scan catalog validation runs first
+    * ([[TimelyApi.planQuery]]): a subquery whose first tag matches no catalog
+    * entry throws [[TimelyApi.NoMatchingTagsException]] (HTTP 400,
+    * DataStore.java:936-941) instead of returning an empty array. */
   def runQuery(
       points: DataFrame,
       req: TsQueryRequest,
@@ -220,12 +220,12 @@ object QueryPlanner {
       internal: Option[graft.streaming.InternalMetrics] = None,
       meta: Option[DataFrame] = None): String = {
     val t0 = System.currentTimeMillis()
-    meta.foreach(m => req.queries.foreach(q => TimelyApi.requireMatchingTags(m, q)))
+    val frames = TimelyApi.planQuery(points, req, auths, meta)
     // ONE spliced stream over all subqueries (reference DataStore.java:645-662)
     // — each series object is written as its sorted rows arrive, so even here
     // the intermediate is the response string itself, never a row collect
     val sw = new java.io.StringWriter()
-    val numResponses = QueryJson.writeResponses(plan(points, req, auths), sw)
+    val numResponses = QueryJson.writeResponses(frames, sw)
     internal.foreach(_.addQueryResponse(numResponses, System.currentTimeMillis() - t0))
     sw.toString
   }

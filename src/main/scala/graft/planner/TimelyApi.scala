@@ -11,7 +11,11 @@ import org.json4s.jackson.JsonMethods
  *   server/src/main/java/timely/api/response/timeseries/AggregatorsResponse.java:21-30)
  * - version (/version — common/src/main/java/timely/api/request/VersionRequest.java:2-14)
  * - suggest / lookup / metrics-report over a meta frame (M1-M3; the query
- *   implementations live in graft.queries.TimelyQueries and Points.meta).
+ *   implementations live in graft.queries.TimelyQueries and Points.meta)
+ * - the lookup-query grammar, the cache report (M6) and the query's
+ *   meta-check-then-plan step.
+ * Every transport (HTTP, WebSocket) serves these operations by calling them
+ * here, so an answer does not depend on the socket a request arrives on.
  */
 object TimelyApi {
 
@@ -79,6 +83,39 @@ object TimelyApi {
     if (matched.isEmpty) throw new NoMatchingTagsException
   }
 
+  /** The query's step before execution, shared by every transport and
+    * [[QueryPlanner.runQuery]]: with a catalog, the [[requireMatchingTags]]
+    * check of every subquery, then [[QueryPlanner.plan]]. Both fail before
+    * any row is read, so a caller can still answer with an error status. */
+  def planQuery(
+      points: DataFrame,
+      req: QueryPlanner.TsQueryRequest,
+      auths: Seq[String],
+      meta: Option[DataFrame]): Seq[DataFrame] = {
+    meta.foreach(m => req.queries.foreach(q => requireMatchingTags(m, q)))
+    QueryPlanner.plan(points, req, auths)
+  }
+
+  /** `metric{tagk=regex,...}` — the reference's SearchLookupRequest query
+    * grammar (DataStore.java:582-600) — into the metric and its tag map.
+    * Malformed input (no closing brace, a tag without `=`) throws
+    * IllegalArgumentException. */
+  def parseLookupQuery(q: String): (String, Map[String, String]) = {
+    val brace = q.indexOf('{')
+    if (brace < 0) (q, Map.empty)
+    else {
+      require(q.endsWith("}"), s"bad lookup query: $q")
+      val tags = q.substring(brace + 1, q.length - 1).split(",").toSeq
+        .filter(_.nonEmpty)
+        .map { t =>
+          val i = t.indexOf('=')
+          require(i > 0, s"bad lookup tag '$t'")
+          t.substring(0, i) -> t.substring(i + 1)
+        }.toMap
+      (q.substring(0, brace), tags)
+    }
+  }
+
   /** /api/search/lookup: tag-value regex lookup for one metric, with total. */
   def lookup(meta: DataFrame, metric: String, tagvPattern: String, limit: Int = 25): (DataFrame, Long) = {
     val matches = meta.where(col("metric") === metric && col("tagv").rlike(tagvPattern))
@@ -113,6 +150,23 @@ object TimelyApi {
       JObject("metric" -> JString(m), "tags" -> JArray(tags))
     })
     JsonMethods.compact(JsonMethods.render(JObject("metrics" -> metrics)))
+  }
+
+  /** /api/cache wire shape — the reference's CacheResponse
+    * (CacheResponse.java:7-36, served by HttpCacheRequestHandler and the WS
+    * `cache` operation): the oldest and newest timestamp and the sorted metric
+    * names of the points visible to `auths`; nulls and an empty list for an
+    * empty store. */
+  def cacheJson(points: DataFrame, auths: Seq[String]): String = {
+    val agg = points
+      .where(graft.functions.VizFunctions.vizVisible(col("viz"), lit(auths.mkString(","))))
+      .agg(min("ts"), max("ts"), sort_array(collect_set(col("metric")))).collect().head
+    val (oldest, newest, metrics) =
+      if (agg.isNullAt(0)) (JNull, JNull, JArray(Nil))
+      else (JLong(agg.getLong(0)), JLong(agg.getLong(1)),
+        JArray(agg.getSeq[String](2).map(JString(_)).toList))
+    JsonMethods.compact(JsonMethods.render(JObject(
+      "oldestTimestamp" -> oldest, "newestTimestamp" -> newest, "metrics" -> metrics)))
   }
 
   /** /api/suggest wire shape: a bare JSON array of the suggestion strings

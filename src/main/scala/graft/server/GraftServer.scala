@@ -2,7 +2,6 @@ package graft.server
 
 import org.apache.spark.sql.SparkSession
 
-import graft.model.MetricPoint
 import graft.sources.PointStore
 
 /**
@@ -10,47 +9,36 @@ import graft.sources.PointStore
  * `Server` (server/src/main/java/timely/server/Server.java starts the TCP,
  * HTTP, UDP and WebSocket listeners together over one DataStore,
  * Server.java:520-585): HTTP facade, WebSocket gateway, and TCP/UDP line
- * listeners, all bound to ONE parquet point store + meta catalog, so a put
- * over any transport is immediately queryable over every other and live
- * subscriptions tail the same store the socket ingest appends to.
+ * listeners, all bound to ONE parquet point store + meta catalog.
  *
- * Ingest from the socket listeners lands through the same append shape as
- * the facades (points partitioned for pruning + meta rows). An optional
- * [[AuthSessions]] store gives the HTTP and WS surfaces per-caller
- * authorization (the TCP/UDP line protocol is unauthenticated in the
- * reference too — it binds those listeners to trusted interfaces).
+ * A put over any transport lands through the same [[PointStore.append]],
+ * which serializes appends, so concurrent puts from many connections are
+ * each stored exactly once and are immediately queryable over every other
+ * transport; live subscriptions tail the same store. HTTP and WS serve the
+ * same operations through the same library calls ([[graft.planner.TimelyApi]],
+ * [[graft.planner.QueryPlanner.runQuery]]), so a request gets the same body
+ * on either. An optional [[AuthSessions]] store gives the HTTP and WS
+ * surfaces per-caller authorization (the TCP/UDP line protocol is
+ * unauthenticated in the reference too — it binds those listeners to trusted
+ * interfaces).
  */
 class GraftServer(
     spark: SparkSession,
     dataDir: String,
     metaDir: String,
     sessions: Option[AuthSessions] = None,
-    internal: Option[graft.streaming.InternalMetrics] = None,
-    metaRefreshMs: Long = 0L,
     tls: Option[Tls.Config] = None,
     staticRoot: Option[String] = None) {
 
   /** Ports the server is listening on after [[start]]. */
   case class Ports(http: Int, ws: Int, tcp: Int, udp: Int)
 
-  val http = new HttpApi(spark, dataDir, metaDir,
-    internal = internal, metaRefreshMs = metaRefreshMs, sessions = sessions,
+  val http = new HttpApi(spark, dataDir, metaDir, sessions = sessions,
     tls = tls, staticRoot = staticRoot)
   val ws = new WebSocketApi(spark, dataDir, metaDir, sessions = sessions,
     tls = tls)
-
-  /** The socket listeners' storage sink — the same append as the facades. */
-  private def ingest(batch: Seq[MetricPoint]): Unit = if (batch.nonEmpty) {
-    val s = spark
-    import s.implicits._
-    val df = batch.toDF()
-    PointStore.write(df, dataDir)
-    PointStore.metaProjection(df).write.mode("append").parquet(metaDir)
-    internal.foreach(_.incrementMetricsReceived(batch.size.toLong))
-  }
-
-  val tcp = new PutListeners.Tcp(ingest)
-  val udp = new PutListeners.Udp(ingest)
+  val tcp = new PutListeners.Tcp(PointStore.append(spark, _, dataDir, metaDir))
+  val udp = new PutListeners.Udp(PointStore.append(spark, _, dataDir, metaDir))
 
   private var ports: Option[Ports] = None
 

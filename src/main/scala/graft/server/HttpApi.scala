@@ -9,28 +9,30 @@ import scala.util.control.NonFatal
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer, HttpsConfigurator, HttpsExchange, HttpsParameters, HttpsServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
 import graft.model.{MetricParser, MetricPoint}
-import graft.planner.{QueryJson, QueryPlanner, TimelyApi}
+import graft.planner.{QueryJson, TimelyApi}
 import graft.sources.{MetaSnapshot, PointStore}
 
 /**
- * Thin HTTP facade over the engine's planner — the serving analog of the
- * reference's Netty HTTP pipeline (Server.java:520-527: aggregators, metrics,
- * query, search/lookup, suggest, version, put). The route handlers' LOGIC and
- * wire JSON all live in oracle-gated library code ([[QueryPlanner.runQuery]],
- * [[TimelyApi]], [[QueryJson]]); this class only binds them to a port, so an
- * OpenTSDB/Grafana-style client can speak to the engine directly.
+ * HTTP facade — the serving analog of the reference's Netty HTTP pipeline
+ * (Server.java:520-527: aggregators, metrics, query, search/lookup, suggest,
+ * version, put). This class holds HTTP framing, auth and error mapping only:
+ * every operation it routes is a library call shared with the WebSocket
+ * gateway — [[TimelyApi]] for suggest, lookup (and its query grammar),
+ * metrics, cache and the query's meta-check-then-plan step, [[QueryJson]]
+ * for the query wire format, and [[PointStore]] for the store reads and the
+ * one serialized put append — so an OpenTSDB/Grafana-style client gets the
+ * same answer here as over any other transport.
  *
- * Storage: puts append to a [[PointStore]] parquet directory (+ meta catalog),
- * queries re-read it — the facade is stateless between requests. Bulk ingest
- * at scale should use [[graft.streaming.PutLineIngest]] / [[PointStore]]
- * directly; `/api/put` exists for wire parity and integration tests, accepting
- * both the reference's flattened Metric JSON
+ * Storage: puts append to a [[PointStore]] parquet directory (+ meta catalog)
+ * through [[PointStore.append]]; queries re-read it, so the facade is
+ * stateless between requests. Bulk ingest at scale should use
+ * [[graft.streaming.PutLineIngest]] / [[PointStore]] directly; `/api/put`
+ * exists for wire parity and integration tests, accepting both the
+ * reference's flattened Metric JSON
  * (`{"name":"m1","timestamp":1,"measure":1.0,"tags":[{"k1":"v1"}]}` —
  * Metric.java:19, HTTP body shape MetricRequest.java:56-60) and newline-
  * separated `put <metric> <ts> <value> k=v...` lines (the TCP wire format,
@@ -39,7 +41,8 @@ import graft.sources.{MetaSnapshot, PointStore}
  * Query responses stream through [[QueryJson.writeResponses]] straight onto
  * the response body, so an `aggregator:none` query over a wide range never
  * materializes on the driver (unlike the reference server, which merges the
- * whole response in its JVM — DataStore.java:748-788).
+ * whole response in its JVM — DataStore.java:748-788). The query is planned
+ * before the 200 goes out, so plan-time errors still get their status.
  *
  * HTTP error mapping mirrors the reference: unparseable request → 400
  * (TimelyExceptionHandler), no matching tags → 400 "No matching tags"
@@ -49,12 +52,12 @@ import graft.sources.{MetaSnapshot, PointStore}
  * and sets the `TSESSIONID` cookie (the reference's login handler mints the
  * session UUID and Set-Cookie the same way —
  * TimelyLoginRequestHandler.java:44-58), and every data route resolves the
- * request's cookie to the caller's authorizations, threading them into
- * [[QueryPlanner.plan]] — per-caller visibility enforcement. An absent or
- * expired session falls back to the anonymous principal or is refused with
- * 401 per the store's `allowAnonymous` policy
- * (SecurityProperties.allowAnonymousHttpAccess). Without a store, the
- * constructor `auths` apply process-wide (embedded mode).
+ * request's cookie to the caller's authorizations, threading them into the
+ * query plan — per-caller visibility enforcement. An absent or expired
+ * session falls back to the anonymous principal or is refused with 401 per
+ * the store's `allowAnonymous` policy
+ * (SecurityProperties.allowAnonymousHttpAccess). Without a store every
+ * caller is anonymous (no authorizations).
  *
  * TLS: with a [[Tls.Config]] the facade serves HTTPS (the reference fronts
  * its HTTP pipeline with an SslHandler — Server.java:490); `needClientAuth`
@@ -74,12 +77,9 @@ class HttpApi(
     spark: SparkSession,
     dataDir: String,
     metaDir: String,
-    auths: Seq[String] = Seq.empty,
-    internal: Option[graft.streaming.InternalMetrics] = None,
     nowMs: () => Long = () => System.currentTimeMillis(),
     metaRefreshMs: Long = 0L,
     sessions: Option[AuthSessions] = None,
-    cacheBoundaryMs: Option[Long] = None,
     tls: Option[Tls.Config] = None,
     staticRoot: Option[String] = None) {
 
@@ -120,47 +120,18 @@ class HttpApi(
 
   // ---- storage ----------------------------------------------------------
 
-  private val pointSchema = org.apache.spark.sql.Encoders.product[MetricPoint].schema
-
-  private def points: DataFrame =
-    if (new java.io.File(dataDir).list() == null ||
-        new java.io.File(dataDir).list().isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], pointSchema)
-    else PointStore.read(spark, dataDir)
-
-  private val metaSchema = StructType(Seq(
-    StructField("metric", StringType), StructField("tagk", StringType),
-    StructField("tagv", StringType)))
-
-  private def metaLoad(): DataFrame =
-    if (new java.io.File(metaDir).list() == null ||
-        new java.io.File(metaDir).list().isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], metaSchema)
-    else spark.read.parquet(metaDir)
+  private def points: DataFrame = PointStore.readOrEmpty(spark, dataDir)
 
   /** Meta-cache analog ([[graft.sources.MetaSnapshot]]): with
     * `metaRefreshMs > 0` the suggest/lookup/metrics routes serve a persisted
     * catalog snapshot instead of rescanning parquet per request; puts mark it
     * dirty so they stay immediately visible (the reference's ingest-side
     * cache add, DataStore.java:483). */
-  private val metaSnap = new MetaSnapshot(() => metaLoad(), metaRefreshMs, nowMs)
+  private val metaSnap =
+    new MetaSnapshot(() => PointStore.readMeta(spark, metaDir), metaRefreshMs, nowMs)
 
   private def meta: DataFrame =
-    if (metaRefreshMs > 0) metaSnap.frame() else metaLoad()
-
-  /** Append a put batch: points partitioned for pruning + meta catalog rows
-    * (the reference writes meta keys alongside every metric mutation —
-    * Meta.java:55-67). */
-  private def ingest(batch: Seq[MetricPoint]): Unit = if (batch.nonEmpty) {
-    import spark.implicits._
-    val df = batch.toDF()
-    PointStore.write(df, dataDir)
-    PointStore.metaProjection(df).write.mode("append").parquet(metaDir)
-    metaSnap.markDirty()
-    internal.foreach { im =>
-      im.incrementMetricsReceived(batch.size.toLong)
-    }
-  }
+    if (metaRefreshMs > 0) metaSnap.frame() else PointStore.readMeta(spark, metaDir)
 
   // ---- request parsing --------------------------------------------------
 
@@ -184,24 +155,6 @@ class HttpApi(
   private def parseMetricJson(json: String): MetricPoint =
     MetricJson.parse(JsonMethods.parse(json))
 
-  /** `metric{tagk=regex,...}` (the reference's SearchLookupRequest query
-    * grammar, DataStore.java:582-600). */
-  private def parseLookupQuery(q: String): (String, Map[String, String]) = {
-    val brace = q.indexOf('{')
-    if (brace < 0) (q, Map.empty)
-    else {
-      require(q.endsWith("}"), s"bad lookup query: $q")
-      val tags = q.substring(brace + 1, q.length - 1).split(",").toSeq
-        .filter(_.nonEmpty)
-        .map { t =>
-          val i = t.indexOf('=')
-          require(i > 0, s"bad lookup tag '$t'")
-          t.substring(0, i) -> t.substring(i + 1)
-        }.toMap
-      (q.substring(0, brace), tags)
-    }
-  }
-
   // ---- routing ----------------------------------------------------------
 
   /** The TLS-verified client-certificate subject (two-way SSL), if any. */
@@ -213,10 +166,10 @@ class HttpApi(
   }
 
   /** Resolve the caller's authorizations: client-cert DN first (two-way
-    * TLS), then cookie -> session, with the embedded-mode constructor
-    * `auths` when no session store is configured. None = refuse with 401. */
+    * TLS), then cookie -> session; no authorizations when no session store
+    * is configured. None = refuse with 401. */
   private def requestAuths(ex: HttpExchange): Option[Seq[String]] = sessions match {
-    case None => Some(auths)
+    case None => Some(Seq.empty)
     case Some(store) => store.resolveCert(peerDn(ex),
       AuthSessions.sessionFromCookie(Option(ex.getRequestHeaders.getFirst("Cookie"))))
   }
@@ -323,7 +276,7 @@ class HttpApi(
                  .getOrElse(throw new IllegalArgumentException("q required")),
                p.get("limit").flatMap(_.headOption).flatMap(_.toIntOption).getOrElse(25))
             }
-          val (metric, tags) = parseLookupQuery(q)
+          val (metric, tags) = TimelyApi.parseLookupQuery(q)
           respond(ex, 200, TimelyApi.lookupJson(meta, metric, tags, limit))
         case ("POST", "/api/put") =>
           val content = body(ex).trim
@@ -334,53 +287,33 @@ class HttpApi(
                   .getOrElse(throw new IllegalArgumentException(s"unparseable put line: $l"))
               }.toSeq
             else Seq(parseMetricJson(content))
-          ingest(batch)
+          PointStore.append(spark, batch, dataDir, metaDir)
+          metaSnap.markDirty()
           respond(ex, 200, "", "text/plain")
         case (m, "/api/query") =>
           val req =
             if (m == "POST") QueryJson.parseRequest(body(ex))
             else QueryJson.parseGetQuery(params(ex), nowMs)
-          // stream the spliced response straight to the socket: bounded
-          // driver memory even for aggregator:none over a wide range
-          val pts = points
-          req.queries.foreach(q => TimelyApi.requireMatchingTags(meta, q))
-          val t0 = System.currentTimeMillis()
-          // plan BEFORE the 200 goes out: plan-time validation (bad
-          // downsample/aggregator/tag regex) must still 400, and headers
-          // cannot be unsent — only execution errors after this line fall
-          // through to a truncated chunked body
-          val frames = QueryPlanner.plan(pts, req, callerAuths)
+          // plan BEFORE the 200 goes out: the meta check and plan-time
+          // validation (bad downsample/aggregator/tag regex) must still 400,
+          // and headers cannot be unsent — only execution errors after this
+          // line fall through to a truncated chunked body
+          val frames = TimelyApi.planQuery(points, req, callerAuths, Some(meta))
           ex.getResponseHeaders.set("Content-Type", "application/json")
           val gz = wantsGzip(ex)
           if (gz) ex.getResponseHeaders.set("Content-Encoding", "gzip")
+          // stream the spliced response straight to the socket: bounded
+          // driver memory even for aggregator:none over a wide range
           ex.sendResponseHeaders(200, 0) // chunked
           val sink =
             if (gz) new java.util.zip.GZIPOutputStream(ex.getResponseBody)
             else ex.getResponseBody
           val w = new OutputStreamWriter(sink, UTF_8)
-          val n = QueryJson.writeResponses(frames, w)
+          QueryJson.writeResponses(frames, w)
           w.flush(); w.close()
-          internal.foreach(_.addQueryResponse(n, System.currentTimeMillis() - t0))
         case (_, "/api/cache") =>
-          // M6: the reference's CacheResponse shape (CacheResponse.java:7-36,
-          // served by HttpCacheRequestHandler) — oldest/newest timestamp and
-          // the metric list of the hot (cached) window; the whole store when
-          // no hot/cold boundary is configured. Viz-filtered like any read.
-          // same range split as HotColdPoints.hotWindow, minus its .cache():
-          // a per-request cache() would pin a new block-store entry per call
-          val hot = points
-            .where(col("ts") >= cacheBoundaryMs.getOrElse(0L))
-            .where(graft.functions.VizFunctions.vizVisible(
-              col("viz"), lit(callerAuths.mkString(","))))
-          val agg = hot.agg(min("ts"), max("ts"),
-            sort_array(collect_set(col("metric")))).collect().head
-          val (oldest, newest, metrics) =
-            if (agg.isNullAt(0)) (JNull, JNull, JArray(Nil))
-            else (JLong(agg.getLong(0)), JLong(agg.getLong(1)),
-              JArray(agg.getSeq[String](2).map(JString(_)).toList))
-          respond(ex, 200, JsonMethods.compact(JsonMethods.render(JObject(
-            "oldestTimestamp" -> oldest, "newestTimestamp" -> newest,
-            "metrics" -> metrics))))
+          // M6: the reference's CacheResponse shape, viz-filtered per caller
+          respond(ex, 200, TimelyApi.cacheJson(points, callerAuths))
         case _ =>
           respond(ex, 404, "not found\n", "text/plain")
       }

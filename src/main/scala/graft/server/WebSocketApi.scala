@@ -30,9 +30,16 @@ import graft.streaming.{MetricResponseJson, Subscriptions}
  *    "tags":{...},"startTime":ms,"endTime":ms,"delayTime":ms}
  *   {"operation":"remove","subscriptionId":id,"metric":m}
  *   {"operation":"close","subscriptionId":id}
- * plus the timeseries operations the reference also serves over WS
- * (netty/websocket/timeseries/): version, aggregators, metrics, suggest,
- * lookup, query.
+ * plus `put` and the timeseries operations the reference also serves over
+ * WS (netty/websocket/timeseries/): version, aggregators, metrics, suggest,
+ * lookup, query, cache. This class holds framing, auth and close-code
+ * mapping only: a put lands through [[PointStore.append]], the same
+ * serialized append as every other transport's, and each timeseries
+ * operation is the library call the HTTP facade routes to ([[TimelyApi]],
+ * [[QueryPlanner.runQuery]] with the meta check), so a request gets the same
+ * body over WS as over HTTP. A malformed request (bad lookup query, no
+ * matching tags, unknown operation) closes the connection with 1008 and the
+ * operation's message.
  *
  * Delivery: each `add` starts a Structured Streaming tail over the
  * [[PointStore]] directory ([[Subscriptions.addMetric]]); matched points are
@@ -49,7 +56,8 @@ import graft.streaming.{MetricResponseJson, Subscriptions}
  * subscription plan and query then enforces them per-caller. No valid
  * session + anonymous disallowed refuses the upgrade with 401, the WS analog
  * of SecurityProperties.allowAnonymousWsAccess
- * (WebSocketClientIT.testClientAnonymousAccess).
+ * (WebSocketClientIT.testClientAnonymousAccess). Without a session store
+ * every connection is anonymous (no authorizations).
  *
  * TLS: with a [[Tls.Config]] the gateway serves WSS (the reference's WS
  * endpoint rides the same SslHandler as HTTP — Server.java:579); two-way
@@ -62,11 +70,8 @@ class WebSocketApi(
     dataDir: String,
     metaDir: String,
     sessions: Option[AuthSessions] = None,
-    defaultAuths: Seq[String] = Seq.empty,
     subscriptionBatchSize: Int = 100,
     flushIntervalMs: Long = 500L,
-    ageOffTtlMs: Option[Long] = None,
-    nowMs: () => Long = () => System.currentTimeMillis(),
     tls: Option[Tls.Config] = None) {
 
   private var server: ServerSocket = _
@@ -120,48 +125,13 @@ class WebSocketApi(
     flushPool.shutdown()
   }
 
-  // ---- frames the operations run against ---------------------------------
-
-  private val pointSchema = org.apache.spark.sql.types.StructType(
-    org.apache.spark.sql.Encoders.product[graft.model.MetricPoint].schema.fields ++ Seq(
-      org.apache.spark.sql.types.StructField("dt", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("hr", org.apache.spark.sql.types.IntegerType)))
-
   /** The streaming tail every subscription plans over: new parquet files in
     * the store directory become micro-batches (the MetricScanner re-scan
     * loop, minus the hand-rolled ranges — the file source tracks progress). */
   private def pointsStream(): DataFrame =
-    spark.readStream.schema(pointSchema).parquet(dataDir)
+    spark.readStream.schema(PointStore.Schema).parquet(dataDir)
 
-  private def pointsBatch(): DataFrame =
-    if (new java.io.File(dataDir).list() == null ||
-        new java.io.File(dataDir).list().isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.Encoders.product[graft.model.MetricPoint].schema)
-    else PointStore.read(spark, dataDir)
-
-  /** S4 WS put ingest: same storage append as the HTTP facade — points
-    * partitioned for pruning + meta catalog rows; a live subscription's
-    * streaming tail picks the new file up on its next trigger (the put ->
-    * subscribe round trip WSMetricPutHandler + MetricScanner serve in the
-    * reference). */
-  private def ingest(batch: Seq[graft.model.MetricPoint]): Unit = if (batch.nonEmpty) {
-    val s = spark
-    import s.implicits._
-    val df = batch.toDF()
-    PointStore.write(df, dataDir)
-    PointStore.metaProjection(df).write.mode("append").parquet(metaDir)
-  }
-
-  private def meta(): DataFrame =
-    if (new java.io.File(metaDir).list() == null ||
-        new java.io.File(metaDir).list().isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("metric", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("tagk", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("tagv", org.apache.spark.sql.types.StringType))))
-    else spark.read.parquet(metaDir)
+  private def meta(): DataFrame = PointStore.readMeta(spark, metaDir)
 
   // ---- one connection ----------------------------------------------------
 
@@ -195,7 +165,7 @@ class WebSocketApi(
           case _ => None
         }
         val auths: Seq[String] = sessions match {
-          case None => defaultAuths
+          case None => Seq.empty
           case Some(a) =>
             a.resolveCert(peerDn, AuthSessions.sessionFromCookie(headers.get("cookie"))) match {
               case Some(resolved) => resolved
@@ -295,8 +265,7 @@ class WebSocketApi(
                 subs.addMetric(id, pointsStream(), metric, tags, auths,
                   beginTimeMs = lng("startTime").getOrElse(0L),
                   endTimeMs = lng("endTime").getOrElse(0L),
-                  delayMs = lng("delayTime").getOrElse(1000L),
-                  ageOffTtlMs = ageOffTtlMs, nowMs = nowMs)
+                  delayMs = lng("delayTime").getOrElse(1000L))
                 true
             }
           case "remove" =>
@@ -307,9 +276,10 @@ class WebSocketApi(
             subId.flatMap(id => Option(created.remove(id))).foreach(s => s.close(subId.get))
             true
           // ---- put ingest over WS (@WebSocket(operation="put"),
-          // MetricRequest.java:26; WSMetricPutHandler.java:17-19) ----------
+          // MetricRequest.java:26; WSMetricPutHandler.java:17-19): a live
+          // subscription's streaming tail picks the new file up ----------
           case "put" =>
-            ingest(Seq(MetricJson.parse(jv \ "metric")))
+            PointStore.append(spark, Seq(MetricJson.parse(jv \ "metric")), dataDir, metaDir)
             true
           // ---- timeseries operations (netty/websocket/timeseries/) -------
           case "version" =>
@@ -328,45 +298,18 @@ class WebSocketApi(
               max = lng("max").map(_.toInt).getOrElse(25)))
             true
           case "lookup" =>
-            val q = str("query").getOrElse(throw new IllegalArgumentException("query required"))
-            val brace = q.indexOf('{')
-            val (metric, tags) =
-              if (brace < 0) (q, Map.empty[String, String])
-              else (q.substring(0, brace),
-                q.substring(brace + 1, q.length - 1).split(",").filter(_.nonEmpty).map { t =>
-                  val i = t.indexOf('='); t.substring(0, i) -> t.substring(i + 1)
-                }.toMap)
+            val (metric, tags) = TimelyApi.parseLookupQuery(
+              str("query").getOrElse(throw new IllegalArgumentException("query required")))
             sendText(TimelyApi.lookupJson(meta(), metric, tags,
               lng("limit").map(_.toInt).getOrElse(25)))
             true
           case "query" =>
-            val req = QueryJson.parseRequest(json)
-            val frames = QueryPlanner.plan(pointsBatch(), req, auths)
-            val w = new java.io.StringWriter()
-            QueryJson.writeResponses(frames, w)
-            sendText(w.toString)
+            sendText(QueryPlanner.runQuery(PointStore.readOrEmpty(spark, dataDir),
+              QueryJson.parseRequest(json), auths, meta = Some(meta())))
             true
           case "cache" =>
-            // the reference serves CacheRequest over WS too (CacheRequest.java
-            // @WebSocket(operation="cache")) — same CacheResponse shape as the
-            // HTTP route, viz-filtered for this session
-            val hot = pointsBatch()
-              .where(graft.functions.VizFunctions.vizVisible(
-                org.apache.spark.sql.functions.col("viz"),
-                org.apache.spark.sql.functions.lit(auths.mkString(","))))
-            val agg = hot.agg(
-              org.apache.spark.sql.functions.min("ts"),
-              org.apache.spark.sql.functions.max("ts"),
-              org.apache.spark.sql.functions.sort_array(
-                org.apache.spark.sql.functions.collect_set(
-                  org.apache.spark.sql.functions.col("metric")))).collect().head
-            val (oldest, newest, metrics) =
-              if (agg.isNullAt(0)) (JNull: JValue, JNull: JValue, JArray(Nil))
-              else (JLong(agg.getLong(0)): JValue, JLong(agg.getLong(1)): JValue,
-                JArray(agg.getSeq[String](2).map(JString(_)).toList))
-            sendText(JsonMethods.compact(JsonMethods.render(JObject(
-              "oldestTimestamp" -> oldest, "newestTimestamp" -> newest,
-              "metrics" -> metrics))))
+            // CacheRequest is a WS operation too (@WebSocket(operation="cache"))
+            sendText(TimelyApi.cacheJson(PointStore.readOrEmpty(spark, dataDir), auths))
             true
           case other =>
             writeLock.synchronized(

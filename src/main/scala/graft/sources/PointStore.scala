@@ -1,8 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
+import graft.model.MetricPoint
 import graft.streaming.PutLineIngest
 
 /**
@@ -65,6 +67,54 @@ object PointStore {
   def read(spark: SparkSession, dataDir: String): DataFrame =
     spark.read.parquet(dataDir)
 
+  /** The store as read back: the canonical point columns plus the `dt`/`hr`
+    * partition columns (also the schema a streaming tail of the store
+    * declares — a file source cannot infer one). */
+  val Schema: StructType = StructType(
+    Encoders.product[MetricPoint].schema.fields ++ Seq(
+      StructField("dt", StringType), StructField("hr", IntegerType)))
+
+  /** The meta catalog's (metric, tagk, tagv) rows. */
+  private val MetaSchema: StructType = StructType(Seq(
+    StructField("metric", StringType), StructField("tagk", StringType),
+    StructField("tagv", StringType)))
+
+  /** Serving read of the points: a store nothing has been put to yet reads
+    * as an empty frame instead of failing schema inference. */
+  def readOrEmpty(spark: SparkSession, dataDir: String): DataFrame =
+    orEmpty(spark, dataDir, Schema)(read(spark, dataDir))
+
+  /** Serving read of the meta catalog, empty-safe like [[readOrEmpty]]. */
+  def readMeta(spark: SparkSession, metaDir: String): DataFrame =
+    orEmpty(spark, metaDir, MetaSchema)(spark.read.parquet(metaDir))
+
+  private def orEmpty(spark: SparkSession, dir: String, schema: StructType)(
+      load: => DataFrame): DataFrame = {
+    val files = new java.io.File(dir).list()
+    if (files == null || files.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else load
+  }
+
+  private val appendLock = new Object
+
+  /**
+   * Append one put batch — the write every transport's put lands through:
+   * the points, partitioned for pruning, then their [[metaProjection]] rows
+   * (the reference writes meta keys alongside every metric mutation —
+   * Meta.java:55-67). Appends are serialized: concurrent parquet appends to
+   * one directory share its `_temporary` staging directory, and the first
+   * commit deletes it under the others, failing their jobs.
+   */
+  def append(spark: SparkSession, batch: Seq[MetricPoint],
+             dataDir: String, metaDir: String): Unit =
+    if (batch.nonEmpty) appendLock.synchronized {
+      import spark.implicits._
+      val df = batch.toDF()
+      write(df, dataDir)
+      metaProjection(df).write.mode(SaveMode.Append).parquet(metaDir)
+    }
+
   /** Partition census — the maintenance-pass visibility report: per
     * (metric, dt), hour-partition and row counts, the hour span, and a
     * small-files tell (files per hour partition; compaction wants ~1). One
@@ -106,8 +156,8 @@ object PointStore {
       .saveAsTable(table)
 
   /** The ONE points -> (metric, tagk, tagv) catalog projection (reference
-    * meta table, Meta.java:55-67) — shared by the batch rebuild and the HTTP
-    * ingest append so the two paths cannot drift. */
+    * meta table, Meta.java:55-67) — shared by the batch rebuild and the
+    * serving [[append]] so the two paths cannot drift. */
   def metaProjection(points: DataFrame): DataFrame =
     points
       .select(col("metric"), explode(col("tags")).as(Seq("tagk", "tagv")))

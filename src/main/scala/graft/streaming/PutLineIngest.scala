@@ -156,9 +156,7 @@ object PutLineIngest {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val b = if (internal.isDefined) batch.persist() else batch
         b.write.mode("append").partitionBy("metric", "dt", "hr").parquet(dataDir)
-        val meta = b
-          .select(col("metric"), explode(col("tags")).as(Seq("tagk", "tagv")))
-          .distinct()
+        val meta = graft.sources.PointStore.metaProjection(b)
         internal match {
           case Some(im) =>
             val metaCached = meta.persist()

@@ -15,32 +15,81 @@ import graft.SparkSpec
 /**
  * Whole-server integration: all four transports over ONE store, like the
  * reference's Server.java binds them — a put over TCP and a put over UDP are
- * queryable over HTTP, and a WebSocket subscription on the same server tails
+ * queryable over HTTP, a WebSocket subscription on the same server tails
  * the same store (the cross-transport shape the reference's integration
- * suites exercise transport-by-transport).
+ * suites exercise transport-by-transport), concurrent TCP connections each
+ * land every point exactly once, and HTTP and WS answer the same request
+ * with the same body.
  */
 class GraftServerSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll {
 
   private val T = 1704067200000L
   private lazy val dir = Files.createTempDirectory("graft-server").toFile
+  private lazy val auth = new AuthSessions(
+    Map("viz" -> AuthSessions.User("pw", Seq("A"))), allowAnonymous = true)
   private lazy val server = new GraftServer(spark,
     new java.io.File(dir, "data").getAbsolutePath,
-    new java.io.File(dir, "meta").getAbsolutePath)
+    new java.io.File(dir, "meta").getAbsolutePath,
+    sessions = Some(auth))
   private lazy val ports = server.start()
   private lazy val client = HttpClient.newHttpClient()
 
   override def beforeAll(): Unit = { super.beforeAll(); ports }
   override def afterAll(): Unit = { server.stop(); super.afterAll() }
 
-  private def httpGet(path: String): HttpResponse[String] =
-    client.send(HttpRequest.newBuilder(
-      URI.create(s"http://127.0.0.1:${ports.http}$path")).GET().build(),
-      HttpResponse.BodyHandlers.ofString())
+  private def httpGet(path: String, cookie: Option[String] = None): HttpResponse[String] = {
+    val b = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${ports.http}$path")).GET()
+    cookie.foreach(b.header("Cookie", _))
+    client.send(b.build(), HttpResponse.BodyHandlers.ofString())
+  }
 
-  private def httpPost(path: String, body: String): HttpResponse[String] =
-    client.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${ports.http}$path"))
-      .POST(HttpRequest.BodyPublishers.ofString(body, UTF_8)).build(),
-      HttpResponse.BodyHandlers.ofString())
+  private def httpPost(path: String, body: String,
+      cookie: Option[String] = None): HttpResponse[String] = {
+    val b = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${ports.http}$path"))
+      .POST(HttpRequest.BodyPublishers.ofString(body, UTF_8))
+    cookie.foreach(b.header("Cookie", _))
+    client.send(b.build(), HttpResponse.BodyHandlers.ofString())
+  }
+
+  /** A WebSocket connection to the server, upgraded with `cookie`. */
+  private final class Ws(cookie: Option[String] = None) {
+    private val socket = new Socket("127.0.0.1", ports.ws)
+    socket.setSoTimeout(500)
+    private val out = new java.io.BufferedOutputStream(socket.getOutputStream)
+    val in = new java.io.BufferedInputStream(socket.getInputStream)
+    out.write(WebSocketCodec.clientHandshake("/websocket", s"127.0.0.1:${ports.ws}",
+      "dGhlIHNhbXBsZSBub25jZQ==", cookie))
+    out.flush()
+    private val sb = new StringBuilder
+    private var done = false
+    while (!done) {
+      val c = in.read()
+      if (c == -1) done = true
+      else { sb.append(c.toChar); if (sb.endsWith("\r\n\r\n")) done = true }
+    }
+    assert(sb.toString.startsWith("HTTP/1.1 101"), sb.toString)
+
+    def send(json: String): Unit = WebSocketCodec.writeClientFrame(
+      out, WebSocketCodec.OpText, json.getBytes(UTF_8), Array[Byte](9, 8, 7, 6))
+
+    /** Send one operation and return the text frame that answers it. */
+    def ask(json: String): String = {
+      send(json)
+      val t0 = System.currentTimeMillis()
+      while (System.currentTimeMillis() - t0 < 60000L) {
+        try WebSocketCodec.readMessage(in) match {
+          case Some((WebSocketCodec.OpText, p)) => return new String(p, UTF_8)
+          case Some((WebSocketCodec.OpClose, p)) =>
+            fail(s"closed: ${new String(p, 2, p.length - 2, UTF_8)}")
+          case Some(_) => ()
+          case None => fail("connection ended")
+        } catch { case _: java.net.SocketTimeoutException => () }
+      }
+      fail(s"no answer to $json")
+    }
+
+    def close(): Unit = socket.close()
+  }
 
   private def awaitStored(n: Long): Unit = {
     val t0 = System.currentTimeMillis()
@@ -91,24 +140,8 @@ class GraftServerSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll 
     // subscribe over WS first, then put over TCP — the subscription must
     // deliver the socket-ingested point (reference: MetricScanner tails the
     // store every put handler writes)
-    val ws = new Socket("127.0.0.1", ports.ws)
-    ws.setSoTimeout(500)
-    val out = new java.io.BufferedOutputStream(ws.getOutputStream)
-    val in = new java.io.BufferedInputStream(ws.getInputStream)
-    out.write(WebSocketCodec.clientHandshake("/websocket", s"127.0.0.1:${ports.ws}",
-      "dGhlIHNhbXBsZSBub25jZQ=="))
-    out.flush()
-    val sb = new StringBuilder
-    var done = false
-    while (!done) {
-      val c = in.read()
-      if (c == -1) done = true
-      else { sb.append(c.toChar); if (sb.endsWith("\r\n\r\n")) done = true }
-    }
-    assert(sb.toString.startsWith("HTTP/1.1 101"), sb.toString)
-    val mask = Array[Byte](9, 8, 7, 6)
-    def send(json: String): Unit =
-      WebSocketCodec.writeClientFrame(out, WebSocketCodec.OpText, json.getBytes(UTF_8), mask)
+    val ws = new Ws()
+    import ws.{in, send}
     send("""{"operation":"create","subscriptionId":"xp"}""")
     send("""{"operation":"add","subscriptionId":"xp","metric":"live.metric","delayTime":200}""")
     Thread.sleep(2000) // tail running
@@ -135,5 +168,68 @@ class GraftServerSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll 
     send("""{"operation":"close","subscriptionId":"xp"}""")
     ws.close()
     assert(seen, "WS subscription must deliver the TCP-ingested point")
+  }
+
+  test("concurrent TCP connections store every point exactly once") {
+    // three agents stream disjoint series at once; their batches append to
+    // the same store concurrently and none may be lost or duplicated
+    val agents = 3
+    val perAgent = 3000
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val senders = (0 until agents).map { a =>
+      val t = new Thread(() => {
+        val s = new Socket("127.0.0.1", ports.tcp)
+        val out = new java.io.BufferedOutputStream(s.getOutputStream)
+        start.await()
+        (0 until perAgent).foreach(i =>
+          out.write(s"put conc.metric ${T + i} $i.0 agent=a$a\n".getBytes(UTF_8)))
+        out.flush(); s.close()
+      })
+      t.start(); t
+    }
+    start.countDown()
+    senders.foreach(_.join())
+    import org.apache.spark.sql.functions.col
+    def stored() = graft.sources.PointStore.readOrEmpty(spark,
+      new java.io.File(dir, "data").getAbsolutePath).where(col("metric") === "conc.metric")
+    val expected = agents.toLong * perAgent
+    val t0 = System.currentTimeMillis()
+    while (stored().count() < expected && System.currentTimeMillis() - t0 < 60000L)
+      Thread.sleep(500)
+    val perPoint = stored().groupBy(col("tags")("agent"), col("ts")).count()
+    assert(perPoint.count() == expected, "every (series, ts) stored")
+    assert(perPoint.where(col("count") =!= 1L).count() == 0, "no point stored twice")
+  }
+
+  test("HTTP and WS give the same body for the same request from the same caller") {
+    val sid = auth.login("viz", "pw").get
+    val cookie = Some(s"${AuthSessions.CookieName}=$sid")
+    val put = httpPost("/api/put", Seq(
+      s"put same.metric $T 1.0 rack=r1",
+      s"put same.metric ${T + 1000} 2.0 rack=r2",
+      s"put same.metric ${T + 2000} 4.0 rack=r2 viz=A").mkString("\n"), cookie)
+    assert(put.statusCode() == 200, put.body())
+    val query = s"""{"start":$T,"end":${T + 10000},"msResolution":true,""" +
+      """"queries":[{"aggregator":"sum","metric":"same.metric","tags":{"rack":"*"}}]}"""
+    val lookup = "same.metric{rack=r.*}"
+    val http = Seq(
+      httpPost("/api/query", query, cookie),
+      httpGet("/api/suggest?type=metrics&q=same&max=10", cookie),
+      httpGet("/api/search/lookup?q=" +
+        java.net.URLEncoder.encode(lookup, UTF_8) + "&limit=10", cookie),
+      httpGet("/api/metrics", cookie),
+      httpGet("/api/cache", cookie))
+    http.foreach(r => assert(r.statusCode() == 200, r.body()))
+    val ws = new Ws(cookie)
+    val overWs = try Seq(
+      ws.ask("""{"operation":"query",""" + query.drop(1)),
+      ws.ask("""{"operation":"suggest","type":"metrics","q":"same","max":10}"""),
+      ws.ask(s"""{"operation":"lookup","query":"$lookup","limit":10}"""),
+      ws.ask("""{"operation":"metrics"}"""),
+      ws.ask("""{"operation":"cache"}""")) finally ws.close()
+    http.map(_.body()).zip(overWs).zip(Seq("query", "suggest", "lookup", "metrics", "cache"))
+      .foreach { case ((h, w), op) => assert(h == w, s"$op over HTTP vs WS") }
+    // the caller's authorization applies: the viz=A point is in the answer
+    assert(overWs.head.contains(s""""${T + 2000}":4.0"""), overWs.head)
   }
 }

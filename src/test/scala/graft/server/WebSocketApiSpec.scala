@@ -116,6 +116,22 @@ class WebSocketApiSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
       (texts.toSeq, closed)
     }
 
+    /** Read until the server's close frame and return its (code, reason);
+      * None when the deadline passes or the stream ends first. */
+    def awaitClose(deadlineMs: Long = 30000L): Option[(Int, String)] = {
+      val t0 = System.currentTimeMillis()
+      while (System.currentTimeMillis() - t0 < deadlineMs) {
+        try WebSocketCodec.readMessage(in) match {
+          case Some((WebSocketCodec.OpClose, p)) =>
+            return Some((((p(0) & 0xFF) << 8) | (p(1) & 0xFF),
+              new String(p, 2, p.length - 2, UTF_8)))
+          case Some(_) => ()
+          case None => return None
+        } catch { case _: java.net.SocketTimeoutException => () }
+      }
+      None
+    }
+
     def close(): Unit = socket.close()
   }
 
@@ -198,6 +214,33 @@ class WebSocketApiSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
     // points, so newest is the T+2000 unlabeled one, not the viz-labeled rows
     assert(frames.exists(f => f.contains(s""""oldestTimestamp":$T""") &&
       f.contains(s""""newestTimestamp":${T + 2000}""")), frames.mkString("\n"))
+  }
+
+  test("lookup on a malformed query closes with 1008 and the parser's message") {
+    // HTTP answers 400 for both (the shared TimelyApi.parseLookupQuery)
+    for ((query, reason) <- Seq(
+        "m{host}" -> "requirement failed: bad lookup tag 'host'",
+        "m{host=a" -> "requirement failed: bad lookup query: m{host=a")) {
+      val c = new Client()
+      assert(c.handshake() == 101)
+      c.send(s"""{"operation":"lookup","query":"$query"}""")
+      val closed = c.awaitClose()
+      c.close()
+      assert(closed == Some((1008, reason)), s"lookup $query")
+    }
+  }
+
+  test("query whose tags match no catalog entry closes with 1008 No matching tags") {
+    // the reference's pre-scan meta check (DataStore.java:936-941), which
+    // HTTP answers with 400
+    val c = new Client()
+    assert(c.handshake() == 101)
+    c.send(s"""{"operation":"query","start":$T,"end":${T + 1000},""" +
+      """"queries":[{"aggregator":"sum","metric":"sys.cpu.user","tags":{"rack":"r99"}}]}""")
+    val closed = c.awaitClose()
+    c.close()
+    assert(closed.map(_._1).contains(1008), s"got $closed")
+    assert(closed.exists(_._2.startsWith("No matching tags")), s"got $closed")
   }
 
   test("MetricScanner batch semantics: size-bounded envelopes, sentinel flush, slow consumer") {
