@@ -34,6 +34,7 @@ object Quickstart {
     val pts = PutLineIngest.parse(lines)
     PointStore.write(pts.toDF(), s"$dir/store", SaveMode.Overwrite)
     val stored = PointStore.read(spark, s"$dir/store")
+    PointStore.writeMeta(stored, s"$dir/meta")
     println(s"STORED_ROWS=${stored.count()}")
 
     val req = QueryJson.parseRequest(
@@ -67,17 +68,19 @@ object Quickstart {
       excludedTags = Map("sys.mem" -> Set("secret"))).collect()
     println(s"EXCLUSIONS_TAGS=${stripped.head.tags.keySet.mkString(",")}")
 
-    // M1/M2 wire shapes
-    val meta = graft.operators.Points.meta(stored)
-    println("SUGGEST=" + graft.planner.TimelyApi.suggestJson(meta, "metrics", "cpu"))
-    println("LOOKUP=" + graft.planner.TimelyApi.lookupJson(meta, "sys.cpu.user", Map("host" -> "a")))
-
-    // S10: the engine reports its own counters back into the store
+    // S10: the engine reports its own counters back into the store and its
+    // meta catalog, through the same PointStore.append every put uses
     val im = new graft.streaming.InternalMetrics("quickstart", 1)
     im.incrementMetricsReceived(lines.count())
-    im.loopback(spark, s"$dir/store", T + 2000)
+    im.loopback(spark, s"$dir/store", s"$dir/meta", T + 2000)
     println("LOOPBACK_ROWS=" + PointStore.read(spark, s"$dir/store")
       .where($"metric".startsWith("timely.")).count())
+
+    // M1/M2 wire shapes over the served catalog, loopback metrics included
+    val meta = PointStore.readMeta(spark, s"$dir/meta")
+    println("SUGGEST=" + graft.planner.TimelyApi.suggestJson(meta, "metrics", "."))
+    println("LOOKUP=" + graft.planner.TimelyApi.lookupJson(
+      meta, "timely.metrics.received", Map("host" -> "quickstart.*")))
 
     // session-level enforcement: with GraftExtensions registered, even a RAW
     // read of a viz-bearing table is filtered by the session's auths — user

@@ -67,12 +67,4 @@ object Points {
       map(lit("user"), col("user_id").cast("string")).as("tags"),
       lit(null).cast("string").as("viz"))
   }
-
-  /** Derived meta catalog — the Spark analog of the reference's meta table
-    * rows `m:<metric>` / `t:<metric>` / `v:<metric>`
-    * (common/src/main/java/timely/model/Meta.java:55-67). */
-  def meta(points: DataFrame): DataFrame =
-    points
-      .select(col("metric"), explode(col("tags")).as(Seq("tagk", "tagv")))
-      .distinct()
 }

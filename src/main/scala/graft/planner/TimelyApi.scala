@@ -11,7 +11,8 @@ import org.json4s.jackson.JsonMethods
  *   server/src/main/java/timely/api/response/timeseries/AggregatorsResponse.java:21-30)
  * - version (/version — common/src/main/java/timely/api/request/VersionRequest.java:2-14)
  * - suggest / lookup / metrics-report over a meta frame (M1-M3; the query
- *   implementations live in graft.queries.TimelyQueries and Points.meta)
+ *   implementations live in graft.queries.TimelyQueries and
+ *   graft.sources.PointStore.metaProjection)
  * - the lookup-query grammar, the cache report (M6) and the query's
  *   meta-check-then-plan step.
  * Every transport (HTTP, WebSocket) serves these operations by calling them
@@ -114,12 +115,6 @@ object TimelyApi {
         }.toMap
       (q.substring(0, brace), tags)
     }
-  }
-
-  /** /api/search/lookup: tag-value regex lookup for one metric, with total. */
-  def lookup(meta: DataFrame, metric: String, tagvPattern: String, limit: Int = 25): (DataFrame, Long) = {
-    val matches = meta.where(col("metric") === metric && col("tagv").rlike(tagvPattern))
-    (matches.orderBy("metric", "tagk", "tagv").limit(limit), matches.count())
   }
 
   /**

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Points, TimeSeries}
+import graft.sources.PointStore
 
 /**
  * Timely-parity operator queries over the synthetic `events` table
@@ -161,7 +162,7 @@ object TimelyQueries {
     "meta_suggest" -> ((s, dir) => {
       // /api/suggest type=metrics: substring match + ordered limit
       // (reference DataStore.suggest, DataStore.java:528-580)
-      Points.meta(points(s, dir))
+      PointStore.metaProjection(points(s, dir))
         .select("metric").distinct()
         .where(col("metric").contains("e"))
         .orderBy("metric").limit(25)
@@ -169,14 +170,14 @@ object TimelyQueries {
     "meta_lookup" -> ((s, dir) => {
       // /api/search/lookup: tag regex lookup for one metric
       // (reference DataStore.lookup, DataStore.java:582-633)
-      Points.meta(points(s, dir))
+      PointStore.metaProjection(points(s, dir))
         .where(col("metric") === "purchase" && col("tagv").rlike("^1.*"))
         .orderBy("metric", "tagk", "tagv")
     }),
     "meta_cardinality" -> ((s, dir) => {
       // tag-cardinality stats used for predicate ordering
       // (reference DataStore.updateMetricCounts, DataStore.java:514-526)
-      Points.meta(points(s, dir))
+      PointStore.metaProjection(points(s, dir))
         .groupBy("metric", "tagk")
         .agg(countDistinct("tagv").as("cardinality"))
     }),
@@ -222,8 +223,8 @@ object TimelyQueries {
         "error" -> 3600000L,
         "si" -> 48L * 3600000,
         "s" -> 12L * 3600000)
-      val live = pts.where(col("ts") >= graft.sources.PointStore.horizonExpr(ttl, now))
-      graft.sources.PointStore.metaAgeOff(graft.operators.Points.meta(pts), live)
+      val live = pts.where(col("ts") >= PointStore.horizonExpr(ttl, now))
+      PointStore.metaAgeOff(PointStore.metaProjection(pts), live)
     })
   )
 

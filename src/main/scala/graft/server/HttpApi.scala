@@ -14,7 +14,7 @@ import org.json4s.jackson.JsonMethods
 
 import graft.model.{MetricParser, MetricPoint}
 import graft.planner.{QueryJson, TimelyApi}
-import graft.sources.{MetaSnapshot, PointStore}
+import graft.sources.PointStore
 
 /**
  * HTTP facade — the serving analog of the reference's Netty HTTP pipeline
@@ -28,7 +28,10 @@ import graft.sources.{MetaSnapshot, PointStore}
  * same answer here as over any other transport.
  *
  * Storage: puts append to a [[PointStore]] parquet directory (+ meta catalog)
- * through [[PointStore.append]]; queries re-read it, so the facade is
+ * through [[PointStore.append]], the one store write every writer (every
+ * transport, the streaming sink, the internal-metrics loopback) goes
+ * through; queries and catalog calls re-read the store through
+ * [[PointStore.readOrEmpty]] / [[PointStore.readMeta]], so the facade is
  * stateless between requests. Bulk ingest at scale should use
  * [[graft.streaming.PutLineIngest]] / [[PointStore]] directly; `/api/put`
  * exists for wire parity and integration tests, accepting both the
@@ -77,8 +80,6 @@ class HttpApi(
     spark: SparkSession,
     dataDir: String,
     metaDir: String,
-    nowMs: () => Long = () => System.currentTimeMillis(),
-    metaRefreshMs: Long = 0L,
     sessions: Option[AuthSessions] = None,
     tls: Option[Tls.Config] = None,
     staticRoot: Option[String] = None) {
@@ -115,23 +116,13 @@ class HttpApi(
     // HttpServer.stop does NOT shut down a user-supplied executor — without
     // this the 4 non-daemon pool threads outlive every server lifecycle
     if (pool != null) { pool.shutdown(); pool = null }
-    metaSnap.close()
   }
 
   // ---- storage ----------------------------------------------------------
 
   private def points: DataFrame = PointStore.readOrEmpty(spark, dataDir)
 
-  /** Meta-cache analog ([[graft.sources.MetaSnapshot]]): with
-    * `metaRefreshMs > 0` the suggest/lookup/metrics routes serve a persisted
-    * catalog snapshot instead of rescanning parquet per request; puts mark it
-    * dirty so they stay immediately visible (the reference's ingest-side
-    * cache add, DataStore.java:483). */
-  private val metaSnap =
-    new MetaSnapshot(() => PointStore.readMeta(spark, metaDir), metaRefreshMs, nowMs)
-
-  private def meta: DataFrame =
-    if (metaRefreshMs > 0) metaSnap.frame() else PointStore.readMeta(spark, metaDir)
+  private def meta: DataFrame = PointStore.readMeta(spark, metaDir)
 
   // ---- request parsing --------------------------------------------------
 
@@ -288,12 +279,11 @@ class HttpApi(
               }.toSeq
             else Seq(parseMetricJson(content))
           PointStore.append(spark, batch, dataDir, metaDir)
-          metaSnap.markDirty()
           respond(ex, 200, "", "text/plain")
         case (m, "/api/query") =>
           val req =
             if (m == "POST") QueryJson.parseRequest(body(ex))
-            else QueryJson.parseGetQuery(params(ex), nowMs)
+            else QueryJson.parseGetQuery(params(ex))
           // plan BEFORE the 200 goes out: the meta check and plan-time
           // validation (bad downsample/aggregator/tag regex) must still 400,
           // and headers cannot be unsent — only execution errors after this
@@ -380,11 +370,11 @@ class HttpApi(
       .flatMap(s => scala.util.Try(java.time.ZonedDateTime.parse(
         s, java.time.format.DateTimeFormatter.RFC_1123_DATE_TIME).toEpochSecond).toOption)
     if (ifModifiedSince.contains(lastModS)) {
-      ex.getResponseHeaders.set("Date", httpDate(nowMs()))
+      ex.getResponseHeaders.set("Date", httpDate(System.currentTimeMillis()))
       respond(ex, 304, "")
       return
     }
-    val now = nowMs()
+    val now = System.currentTimeMillis()
     val h = ex.getResponseHeaders
     h.set("Date", httpDate(now))
     h.set("Expires", httpDate(now + HttpCacheSeconds * 1000))

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 import graft.model.MetricPoint
-import graft.streaming.PutLineIngest
 
 /**
  * Partitioned-parquet point store — the storage layer replacing the
@@ -21,9 +20,23 @@ import graft.streaming.PutLineIngest
  */
 object PointStore {
 
+  /** Canonical points frame with derived partition columns. At cluster scale
+    * `(metric, dt, hr)` partitioning is the analog of the reference's
+    * (metric, hour-bucket) row keys — time+metric predicates become partition
+    * pruning (MetricAdapter.java:47-53,189-196).
+    *
+    * dt/hr derive from pure epoch arithmetic (UTC by construction), NOT from
+    * date_format/hour — those follow the session timezone, and a non-UTC
+    * writer would shift rows across day directories, corrupting
+    * partition-level maintenance (age-off drops compare UTC horizon days). */
+  def withPartitionColumns(points: DataFrame): DataFrame =
+    points
+      .withColumn("dt", date_add(to_date(lit("1970-01-01")), expr("ts div 86400000").cast("int")).cast("string"))
+      .withColumn("hr", expr("(ts div 3600000) % 24").cast("int"))
+
   /** Batch-write canonical points, partitioned for pruning. */
   def write(points: DataFrame, dataDir: String, mode: SaveMode = SaveMode.Append): Unit =
-    PutLineIngest.withPartitionColumns(points)
+    withPartitionColumns(points)
       .write.mode(mode).partitionBy("metric", "dt", "hr").parquet(dataDir)
 
   /**
@@ -54,7 +67,7 @@ object PointStore {
                     bits: Int = 8, numFiles: Int = 32,
                     mode: SaveMode = SaveMode.Append): Unit = {
     require(numFiles >= 1, "numFiles >= 1")
-    PutLineIngest.withPartitionColumns(points)
+    withPartitionColumns(points)
       .withColumn("_z", graft.operators.Layout.mortonKey(xCol, yCol, bits))
       .repartitionByRange(numFiles, col("metric"), col("dt"), col("hr"), col("_z"))
       .sortWithinPartitions(col("metric"), col("dt"), col("hr"), col("_z"))
@@ -99,20 +112,28 @@ object PointStore {
   private val appendLock = new Object
 
   /**
-   * Append one put batch — the write every transport's put lands through:
-   * the points, partitioned for pruning, then their [[metaProjection]] rows
-   * (the reference writes meta keys alongside every metric mutation —
-   * Meta.java:55-67). Appends are serialized: concurrent parquet appends to
-   * one directory share its `_temporary` staging directory, and the first
-   * commit deletes it under the others, failing their jobs.
+   * Append one batch of canonical points — the one write every serving
+   * store write lands through (HTTP/WS/TCP/UDP puts, the streaming storage
+   * sink's micro-batches, the internal-metrics loopback): the points,
+   * partitioned for pruning, then their [[metaProjection]] rows (the
+   * reference writes meta keys alongside every metric mutation —
+   * Meta.java:55-67, DataStore.java:415-433). Appends are serialized JVM-wide:
+   * concurrent parquet appends to one directory share its `_temporary`
+   * staging directory, and the first commit deletes it under the others,
+   * failing their jobs.
    */
+  def append(batch: DataFrame, dataDir: String, metaDir: String): Unit =
+    appendLock.synchronized {
+      write(batch, dataDir)
+      metaProjection(batch).write.mode(SaveMode.Append).parquet(metaDir)
+    }
+
+  /** [[append]] for a decoded put batch; an empty batch writes nothing. */
   def append(spark: SparkSession, batch: Seq[MetricPoint],
              dataDir: String, metaDir: String): Unit =
-    if (batch.nonEmpty) appendLock.synchronized {
+    if (batch.nonEmpty) {
       import spark.implicits._
-      val df = batch.toDF()
-      write(df, dataDir)
-      metaProjection(df).write.mode(SaveMode.Append).parquet(metaDir)
+      append(batch.toDF(), dataDir, metaDir)
     }
 
   /** Partition census — the maintenance-pass visibility report: per
@@ -149,7 +170,7 @@ object PointStore {
    * (saveAsTable), so callers pass a table name, not a path.
    */
   def writeBucketed(points: DataFrame, table: String, buckets: Int = 32): Unit =
-    PutLineIngest.withPartitionColumns(points)
+    withPartitionColumns(points)
       .write.mode(SaveMode.Overwrite)
       .bucketBy(buckets, "metric")
       .sortBy("metric", "ts")
@@ -197,9 +218,8 @@ object PointStore {
       outDir: String,
       ttlMsByPrefix: Map[String, Long],
       nowMs: Long): Unit =
-    read(spark, dataDir)
-      .where(col("ts") >= horizonExpr(ttlMsByPrefix, nowMs))
-      .write.mode(SaveMode.Overwrite).partitionBy("metric", "dt", "hr").parquet(outDir)
+    write(read(spark, dataDir).where(col("ts") >= horizonExpr(ttlMsByPrefix, nowMs)),
+      outDir, SaveMode.Overwrite)
 
   /** Scala-side retention horizon (same longest-prefix-wins resolution as
     * [[horizonExpr]]) for partition-level maintenance. */

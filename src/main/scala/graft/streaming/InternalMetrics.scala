@@ -5,12 +5,15 @@ import java.util.concurrent.atomic.DoubleAdder
 import org.apache.spark.sql.SparkSession
 
 import graft.model.MetricPoint
+import graft.sources.PointStore
 
 /**
  * S10 internal-metrics loopback — the engine reports its own operational
  * counters as ordinary metric points fed back into its own store (reference
  * server/src/main/java/timely/server/store/InternalMetrics.java:18-125;
- * reported on the cache maintenance tick, DataStoreCache.java:158,310).
+ * reported on the cache maintenance tick, DataStoreCache.java:158,310). The
+ * report is stored like any put: every store write goes through
+ * [[PointStore.append]], so the points land with their catalog rows.
  *
  * Names, tag shape (`host=<hostname>_<instance>`), emission order, which
  * counters reset on report, and the derived-value formulas all mirror
@@ -80,12 +83,11 @@ class InternalMetrics(hostName: String = InternalMetrics.localHost, instance: In
   }
 
   /** The loopback itself: snapshot-and-reset, then append to the same
-    * partitioned store every other metric lives in — the reported points are
-    * queryable through the ordinary planner with no special path. */
-  def loopback(spark: SparkSession, dataDir: String, tsMs: Long): Unit = {
-    import spark.implicits._
-    graft.sources.PointStore.write(metricsAndReset(tsMs).toDF(), dataDir)
-  }
+    * store and meta catalog every other metric lives in through
+    * [[PointStore.append]] — the reported points are suggestable and
+    * queryable through the ordinary serving paths with no special case. */
+  def loopback(spark: SparkSession, dataDir: String, metaDir: String, tsMs: Long): Unit =
+    PointStore.append(spark, metricsAndReset(tsMs), dataDir, metaDir)
 }
 
 object InternalMetrics {

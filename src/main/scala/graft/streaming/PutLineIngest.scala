@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.{Exclusions, MetricParser, MetricPoint, MetricsFlatBuffer}
+import graft.sources.PointStore
 
 /**
  * Streaming ingest of the put line protocol — the Spark re-expression of the
@@ -15,7 +16,9 @@ import graft.model.{Exclusions, MetricParser, MetricPoint, MetricsFlatBuffer}
  * the contract is a streaming Dataset[String] of put lines in, a canonical
  * points stream out. Malformed lines are dropped like the reference drops
  * unparseable messages — route them to a rejects sink by filtering on
- * `parsed IS NULL` before the flatMap if auditing is needed.
+ * `parsed IS NULL` before the flatMap if auditing is needed. The storage
+ * sink writes nothing itself: every store write goes through
+ * [[PointStore.append]].
  */
 object PutLineIngest {
 
@@ -125,50 +128,35 @@ object PutLineIngest {
       .as[MetricPoint]
   }
 
-  /** Canonical points frame with derived partition columns. At cluster scale
-    * `(metric, dt, hr)` partitioning is the analog of the reference's
-    * (metric, hour-bucket) row keys — time+metric predicates become partition
-    * pruning (MetricAdapter.java:47-53,189-196).
-    *
-    * dt/hr derive from pure epoch arithmetic (UTC by construction), NOT from
-    * date_format/hour — those follow the session timezone, and a non-UTC
-    * writer would shift rows across day directories, corrupting
-    * partition-level maintenance (age-off drops compare UTC horizon days). */
-  def withPartitionColumns(points: DataFrame): DataFrame =
-    points
-      .withColumn("dt", date_add(to_date(lit("1970-01-01")), expr("ts div 86400000").cast("int")).cast("string"))
-      .withColumn("hr", expr("(ts div 3600000) % 24").cast("int"))
-
-  /** Start a streaming write of parsed points to partitioned parquet, with the
-    * meta catalog maintained per micro-batch (the reference writes meta keys
-    * on every store — DataStore.java:415-433). With `internal` set, per-batch
-    * point/key counts feed the S10 loopback (reference DataStore.java:436-441
-    * increments the same counters on every store call). */
+  /** Start a streaming write of parsed points into the store. Each
+    * micro-batch goes through [[PointStore.append]] — the same serialized
+    * points + meta catalog write every other store writer uses (the
+    * reference writes meta keys on every store — DataStore.java:415-433) —
+    * so the sink can share its directories with a serving transport. With
+    * `internal` set, per-batch point/key counts feed the S10 loopback
+    * (reference DataStore.java:436-441 increments the same counters on every
+    * store call). */
   def startStorageSink(
       points: Dataset[MetricPoint],
       dataDir: String,
       metaDir: String,
       checkpointDir: String,
       internal: Option[InternalMetrics] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    withPartitionColumns(points.toDF())
+    points.toDF()
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = if (internal.isDefined) batch.persist() else batch
-        b.write.mode("append").partitionBy("metric", "dt", "hr").parquet(dataDir)
-        val meta = graft.sources.PointStore.metaProjection(b)
         internal match {
           case Some(im) =>
-            val metaCached = meta.persist()
-            metaCached.write.mode("append").parquet(metaDir)
+            val b = batch.persist()
+            PointStore.append(b, dataDir, metaDir)
             val n = b.count()
             im.incrementMetricsReceived(n)
             im.incrementMetricKeysInserted(n)
-            im.incrementMetaKeysInserted(metaCached.count())
-            metaCached.unpersist()
+            im.incrementMetaKeysInserted(PointStore.metaProjection(b).count())
             b.unpersist()
           case None =>
-            meta.write.mode("append").parquet(metaDir)
+            PointStore.append(batch, dataDir, metaDir)
         }
         ()
       }

@@ -31,11 +31,6 @@ class TimelyApiSpec extends AnyFunSuite with SparkSpec {
     intercept[IllegalArgumentException](TimelyApi.suggest(meta, "bogus", "x"))
   }
 
-  test("lookup: regex tag values for one metric + total count") {
-    val (rows, total) = TimelyApi.lookup(meta, "sys.cpu.user", "web.*", limit = 1)
-    assert(total == 2 && rows.count() == 1)
-  }
-
   test("suggest JSON is a bare array (SuggestResponse serializer shape)") {
     assert(TimelyApi.suggestJson(meta, "metrics", "cpu") ==
       """["sys.cpu.idle","sys.cpu.user"]""")

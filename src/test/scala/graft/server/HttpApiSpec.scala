@@ -198,30 +198,10 @@ class HttpApiSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll {
     assert(get("/version").headers().firstValue("Strict-Transport-Security").isEmpty)
   }
 
-  test("meta-cache mode: suggest serves the snapshot and puts stay visible") {
-    // a second server on the same storage with the snapshot ON; a put must
-    // show up in the very next suggest (markDirty = the reference's
-    // ingest-side cache add, DataStore.java:483)
-    val cached = new HttpApi(spark,
-      new java.io.File(dir, "data").getAbsolutePath,
-      new java.io.File(dir, "meta").getAbsolutePath,
-      metaRefreshMs = 3600000L)
-    val p2 = cached.start()
-    def get2(path: String): HttpResponse[String] =
-      client.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$p2$path")).GET().build(),
-        HttpResponse.BodyHandlers.ofString())
-    try {
-      assert(get2("/api/suggest?type=metrics&q=sys.cpu&max=10").body()
-        == """["sys.cpu.idle","sys.cpu.user"]""")
-      // cached: same answer again without a rescan (unit contract pinned in
-      // MetaSnapshotSpec; here we pin the wiring end to end)
-      assert(get2("/api/suggest?type=metrics&q=sys.cpu&max=10").statusCode() == 200)
-      val put = client.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$p2/api/put"))
-          .POST(HttpRequest.BodyPublishers.ofString(s"put sys.cpu.wait $T 1.0 tag1=value1", UTF_8)).build(),
-        HttpResponse.BodyHandlers.ofString())
-      assert(put.statusCode() == 200)
-      assert(get2("/api/suggest?type=metrics&q=sys.cpu&max=10").body()
-        == """["sys.cpu.idle","sys.cpu.user","sys.cpu.wait"]""")
-    } finally cached.stop()
+  test("a put shows up in the very next suggest (catalog re-read per request)") {
+    assert(get("/api/suggest?type=metrics&q=sys.disk&max=10").body() == "[]")
+    assert(post("/api/put", s"put sys.disk.free $T 1.0 tag1=value1").statusCode() == 200)
+    assert(get("/api/suggest?type=metrics&q=sys.disk&max=10").body() == """["sys.disk.free"]""")
+    assert(get("/api/suggest?type=tagk&q=sys.disk.free&max=10").body() == """["tag1"]""")
   }
 }

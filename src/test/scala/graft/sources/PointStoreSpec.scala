@@ -28,6 +28,49 @@ class PointStoreSpec extends AnyFunSuite with SparkSpec {
     assert(dirs.toSet == Set("metric=sys.cpu.user", "metric=sys.cpu.idle"))
   }
 
+  test("append(DataFrame): partitioned points plus their catalog rows") {
+    val base = Files.createTempDirectory("graft-append").toString
+    val pts = Seq(
+      MetricPoint("sys.cpu.user", T, 1.0, Map("host" -> "a", "rack" -> "r1"), None),
+      MetricPoint("sys.cpu.user", T + 1000L, 2.0, Map("host" -> "a", "rack" -> "r1"), None),
+      MetricPoint("sys.cpu.idle", T, 3.0, Map("host" -> "b"), None))
+    PointStore.append(pts.toDF(), s"$base/data", s"$base/meta")
+    PointStore.append(pts.take(1).toDF(), s"$base/data", s"$base/meta")
+    val back = PointStore.read(spark, s"$base/data")
+    assert(back.count() == 4)
+    assert(back.select("dt", "hr").distinct().as[(String, Int)].collect().toSeq
+      == Seq(("2024-01-01", 0)))
+    // one catalog row per (metric, tagk, tagv) of each batch
+    val meta = PointStore.readMeta(spark, s"$base/meta")
+      .as[(String, String, String)].collect()
+    assert(meta.toSet == Set(("sys.cpu.user", "host", "a"), ("sys.cpu.user", "rack", "r1"),
+      ("sys.cpu.idle", "host", "b")))
+    assert(meta.length == 3 + 2, "the second batch adds its own distinct rows")
+  }
+
+  test("append of an empty put batch writes neither points nor catalog") {
+    val base = Files.createTempDirectory("graft-append-empty").toString
+    PointStore.append(spark, Seq.empty[MetricPoint], s"$base/data", s"$base/meta")
+    assert(!new java.io.File(s"$base/data").exists())
+    assert(!new java.io.File(s"$base/meta").exists())
+    assert(PointStore.readOrEmpty(spark, s"$base/data").isEmpty)
+    assert(PointStore.readMeta(spark, s"$base/meta").isEmpty)
+  }
+
+  test("partition columns are UTC epoch arithmetic, whatever the session timezone") {
+    val late = T + 23 * 3600000L + 30 * 60000L // 2024-01-01 23:30 UTC
+    val early = T - 1L                          // 2023-12-31 23:59:59.999 UTC
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try {
+      val got = PointStore.withPartitionColumns(Seq(
+          MetricPoint("m", late, 1.0, Map("h" -> "a"), None),
+          MetricPoint("m", early, 2.0, Map("h" -> "a"), None)).toDF())
+        .select("ts", "dt", "hr").as[(Long, String, Int)].collect().toSet
+      assert(got == Set((late, "2024-01-01", 23), (early, "2023-12-31", 23)))
+    } finally spark.conf.set("spark.sql.session.timeZone", tz)
+  }
+
   test("partition-drop age-off deletes expired day dirs AND boundary-day hr dirs") {
     val dir = Files.createTempDirectory("graft-dropage").toString + "/data"
     val now = T + 10 * Day + 90 * 60000L // 1.5h into day 10
@@ -67,6 +110,25 @@ class PointStoreSpec extends AnyFunSuite with SparkSpec {
     val kept = PointStore.read(spark, s"$base/out")
       .select("metric", "ts").as[(String, Long)].collect().toSet
     assert(kept == Set(("keep.long", now - 5 * Day), ("other.m", now - 2 * Day)))
+  }
+
+  test("age-off output keeps the (metric, dt, hr) store layout") {
+    val base = Files.createTempDirectory("graft-ageoff-layout").toString
+    val now = T + 10 * Day
+    val pts = Seq(
+      MetricPoint("m", now - Day + 3600000L, 1.0, Map("h" -> "a"), None),
+      MetricPoint("m", now - 5 * Day, 2.0, Map("h" -> "a"), None))
+    PointStore.write(pts.toDF(), s"$base/data")
+    // an existing output is replaced, not appended to
+    PointStore.write(pts.toDF(), s"$base/out")
+    PointStore.ageOff(spark, s"$base/data", s"$base/out", Map("default" -> 3 * Day), now)
+    val out = new java.io.File(s"$base/out")
+    val days = new java.io.File(out, "metric=m").listFiles().map(_.getName).filter(_.startsWith("dt="))
+    assert(days.toSeq == Seq("dt=2024-01-10"))
+    assert(new java.io.File(out, "metric=m/dt=2024-01-10/hr=1").isDirectory)
+    val back = PointStore.read(spark, s"$base/out")
+      .select("metric", "ts", "dt", "hr").as[(String, Long, String, Int)].collect().toSeq
+    assert(back == Seq(("m", now - Day + 3600000L, "2024-01-10", 1)))
   }
 
   test("metric equality prunes partitions at the scan") {

@@ -40,7 +40,7 @@ class ZOrderStoreSpec extends AnyFunSuite with SparkSpec {
     val linDir = Files.createTempDirectory("graft-linstore").toString + "/data"
     PointStore.writeZOrdered(gridPoints, zDir, xDim, yDim, bits = 6, numFiles = 16)
     // time-major baseline: same partition layout, files split along ts only
-    graft.streaming.PutLineIngest.withPartitionColumns(gridPoints)
+    PointStore.withPartitionColumns(gridPoints)
       .repartitionByRange(16, col("ts"))
       .sortWithinPartitions(col("ts"))
       .write.partitionBy("metric", "dt", "hr").parquet(linDir)

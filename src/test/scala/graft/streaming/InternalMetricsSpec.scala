@@ -1,5 +1,8 @@
 package graft.streaming
 
+import java.net.URI
+import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
@@ -8,12 +11,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 import graft.planner.QueryPlanner
 import graft.planner.QueryPlanner.{SubQuery, TsQueryRequest}
+import graft.server.HttpApi
 
 /**
  * S10 internal-metrics loopback: counter semantics, the exact reference
  * emission (names, order, resets, derived-value quirks —
  * InternalMetrics.java:88-125), and the loopback being queryable through the
- * ordinary planner.
+ * ordinary planner and the served HTTP query/suggest routes.
  */
 class InternalMetricsSpec extends AnyFunSuite with SparkSpec {
 
@@ -60,15 +64,16 @@ class InternalMetricsSpec extends AnyFunSuite with SparkSpec {
     assert(v2("timely.cache.metric.total") == 500.0)
   }
 
-  test("loopback points land in the store and answer planner queries") {
+  test("loopback points land in the store and catalog and answer planner and HTTP queries") {
     val dir = Files.createTempDirectory("graft-s10").toString
+    val (data, meta) = (s"$dir/data", s"$dir/meta")
     val im = new InternalMetrics("testhost", 1)
     im.incrementMetricsReceived(42)
-    im.loopback(spark, s"$dir/data", T)
+    im.loopback(spark, data, meta, T)
     im.incrementMetricsReceived(13)
-    im.loopback(spark, s"$dir/data", T + 60000)
+    im.loopback(spark, data, meta, T + 60000)
 
-    val stored = graft.sources.PointStore.read(spark, s"$dir/data")
+    val stored = graft.sources.PointStore.read(spark, data)
     val req = TsQueryRequest(T, T + 60000, msResolution = true, queries = Seq(
       SubQuery(aggregator = "sum", metric = "timely.metrics.received",
         downsample = Some("1m-sum"))))
@@ -76,6 +81,27 @@ class InternalMetricsSpec extends AnyFunSuite with SparkSpec {
       .select("ts_out", "value").orderBy("ts_out")
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got == Seq((T, 42.0), (T + 60000, 13.0)))
+
+    // served like any put: the loopback wrote catalog rows, so the HTTP
+    // query passes the no-matching-tags check and suggest lists the metric
+    val api = new HttpApi(spark, data, meta)
+    val port = api.start()
+    try {
+      val client = HttpClient.newHttpClient()
+      def send(b: HttpRequest.Builder): HttpResponse[String] =
+        client.send(b.build(), HttpResponse.BodyHandlers.ofString())
+      val q = send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/api/query"))
+        .POST(HttpRequest.BodyPublishers.ofString(
+          s"""{"start":$T,"end":${T + 60000},"msResolution":true,
+             |"queries":[{"aggregator":"sum","metric":"timely.metrics.received",
+             |"downsample":"1m-sum","tags":{}}]}""".stripMargin, UTF_8)))
+      assert(q.statusCode() == 200, q.body())
+      assert(q.body().contains(s""""dps":{"$T":42.0,"${T + 60000}":13.0}"""), q.body())
+      val s = send(HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:$port/api/suggest?type=metrics&q=timely")).GET())
+      assert(s.statusCode() == 200)
+      assert(s.body().contains("\"timely.metrics.received\""), s.body())
+    } finally api.stop()
   }
 
   test("runQuery and the storage sink feed the loopback counters") {

@@ -133,6 +133,47 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       ("sys.cpu.idle", "host", "b")))
   }
 
+  test("storage sink and concurrent PointStore.append share one store exactly once") {
+    import java.util.concurrent.{Executors, TimeUnit}
+    val dir = Files.createTempDirectory("graft-shared").toString
+    val (data, meta) = (s"$dir/data", s"$dir/meta")
+    val input = MemoryStream[String]
+    val q = PutLineIngest.startStorageSink(PutLineIngest.parse(input.toDS()),
+      data, meta, s"$dir/ckpt")
+    val pool = Executors.newFixedThreadPool(3)
+    try {
+      // three server-side writers append while the sink's micro-batches run
+      val appends = (0 until 3).map { t =>
+        pool.submit(new Runnable {
+          def run(): Unit = (0 until 4).foreach { b =>
+            graft.sources.PointStore.append(spark,
+              (0 until 10).map(i => MetricPoint("put.m", T + b * 10 + i, i.toDouble,
+                Map("host" -> s"t$t"), None)),
+              data, meta)
+          }
+        })
+      }
+      (0 until 3).foreach { b =>
+        input.addData((0 until 20).map(i => s"put sink.m ${T + b * 20 + i} $i.0 host=s"))
+        q.processAllAvailable()
+      }
+      appends.foreach(_.get(2, TimeUnit.MINUTES))
+    } finally {
+      pool.shutdown()
+      q.stop()
+    }
+    assert(q.exception.isEmpty)
+
+    val stored = graft.sources.PointStore.read(spark, data)
+    val perPoint = stored.groupBy(col("metric"), col("tags")("host"), col("ts")).count()
+    assert(perPoint.count() == 3 * 20 + 3 * 4 * 10)
+    assert(perPoint.where(col("count") =!= 1).isEmpty, "every point stored exactly once")
+    val metaRows = graft.sources.PointStore.readMeta(spark, meta)
+      .as[(String, String, String)].collect().toSet
+    assert(metaRows == Set(("sink.m", "host", "s"),
+      ("put.m", "host", "t0"), ("put.m", "host", "t1"), ("put.m", "host", "t2")))
+  }
+
   test("streaming summarization equals the batch operator") {
     val pts = (0 until 20).map { i =>
       MetricPoint("m", T + i * 60000L, (i * 7 % 13).toDouble, Map("host" -> "a"), None)
