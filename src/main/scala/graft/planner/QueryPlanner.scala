@@ -218,7 +218,7 @@ object QueryPlanner {
       req: TsQueryRequest,
       auths: Seq[String],
       internal: Option[graft.streaming.InternalMetrics] = None,
-      meta: Option[DataFrame] = None): String = {
+      meta: Option[graft.sources.Catalog] = None): String = {
     val t0 = System.currentTimeMillis()
     val frames = TimelyApi.planQuery(points, req, auths, meta)
     // ONE spliced stream over all subqueries (reference DataStore.java:645-662)

@@ -1,18 +1,24 @@
 package graft.planner
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.regex.Pattern
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
+
+import graft.sources.Catalog
 
 /**
  * The small constant/catalog API endpoints of the reference, as library calls:
  * - aggregators list (/api/aggregators — reference
  *   server/src/main/java/timely/api/response/timeseries/AggregatorsResponse.java:21-30)
  * - version (/version — common/src/main/java/timely/api/request/VersionRequest.java:2-14)
- * - suggest / lookup / metrics-report over a meta frame (M1-M3; the query
- *   implementations live in graft.queries.TimelyQueries and
- *   graft.sources.PointStore.metaProjection)
+ * - suggest / lookup / metrics-report and the query's meta check over a
+ *   store's in-memory [[Catalog]] (M1-M3), plain Scala with no Spark job;
+ *   each keeps a `DataFrame` form that collects a meta frame into a
+ *   [[Catalog]] first (the batch query implementations live in
+ *   graft.queries.TimelyQueries and graft.sources.PointStore.metaProjection)
  * - the lookup-query grammar, the cache report (M6) and the query's
  *   meta-check-then-plan step.
  * Every transport (HTTP, WebSocket) serves these operations by calling them
@@ -25,29 +31,32 @@ object TimelyApi {
 
   val Version = "graft-0.1.0"
 
+  /** The row cap of a served /api/metrics report ([[metricsJson]]). */
+  val MetricsMaxRows = 100000
+
   def aggregatorsJson: String = Aggregators.mkString("[\"", "\",\"", "\"]")
 
   /** /api/suggest (DataStore.java:528-580): `metrics` = substring match on
     * the metric name; `tagk` = the tag keys of ONE metric; `tagv` = the tag
     * values of one (metric, tag key) PAIR — the reference requires both and
     * answers an empty suggestion list (not an error) when the scope params
-    * are missing (DataStore.java:558-573). Limited (default 25). */
+    * are missing (DataStore.java:558-573). At most `max` suggestions, in
+    * Spark's string order. */
   def suggest(
-      meta: DataFrame, kind: String, q: String,
-      tagKey: Option[String] = None, max: Int = 25): DataFrame = kind match {
-    case "metrics" =>
-      meta.select("metric").distinct().where(col("metric").contains(q)).orderBy("metric").limit(max)
-    case "tagk" =>
-      meta.where(col("metric") === q).select("tagk").distinct().orderBy("tagk").limit(max)
-    case "tagv" =>
-      tagKey match {
-        case Some(k) =>
-          meta.where(col("metric") === q && col("tagk") === k)
-            .select("tagv").distinct().orderBy("tagv").limit(max)
-        case None => // reference: missing scope -> empty suggestions
-          meta.select("tagv").where(lit(false)).limit(max)
+      catalog: Catalog, kind: String, q: String,
+      tagKey: Option[String], max: Int): Seq[String] = {
+    // a metric's entries are already in (tagk, tagv) order
+    def entries = catalog.byMetric.getOrElse(q, IndexedSeq.empty)
+    kind match {
+      case "metrics" =>
+        catalog.byMetric.keys.filter(_.contains(q)).toSeq.sorted(Catalog.StringOrder).take(max)
+      case "tagk" => entries.map(_._1).distinct.take(max)
+      case "tagv" => tagKey match {
+        case Some(k) => entries.collect { case (`k`, v) => v }.take(max)
+        case None => Nil // reference: missing scope -> empty suggestions
       }
-    case other => throw new IllegalArgumentException(s"unknown suggest type: $other")
+      case other => throw new IllegalArgumentException(s"unknown suggest type: $other")
+    }
   }
 
   /** The reference's 400 for a query whose tags match nothing
@@ -66,23 +75,34 @@ object TimelyApi {
    * TagFilter — and a tag-less subquery requires the metric to have catalog
    * entries at all (the reference scans the metric's first tag family; empty
    * only when the metric has no meta). Throws [[NoMatchingTagsException]]
-   * (HTTP 400) otherwise. The check reads the catalog-sized meta frame, never
-   * the points table.
+   * (HTTP 400) otherwise. The check reads the catalog, never the points
+   * table.
    */
-  def requireMatchingTags(meta: DataFrame, q: QueryPlanner.SubQuery): Unit = {
-    val scoped = meta.where(col("metric") === q.metric)
+  def requireMatchingTags(catalog: Catalog, q: QueryPlanner.SubQuery): Unit = {
+    val scoped = catalog.byMetric.getOrElse(q.metric, IndexedSeq.empty)
     val matched = q.tags.headOption match {
-      case None => scoped
+      case None => scoped.nonEmpty
       case Some((k, v)) =>
-        val tagv = col("tagv")
-        val valueMatch =
-          if (v == "*") tagv.isNotNull
-          else if (QueryPlanner.isRegexTagValue(v)) tagv.rlike(s"^(?:$v)$$")
-          else tagv === v
-        scoped.where(col("tagk") === k && valueMatch)
+        val valueMatch: String => Boolean =
+          if (v == "*") _ != null
+          else if (QueryPlanner.isRegexTagValue(v)) rlike(fullMatch(v))
+          else _ == v
+        scoped.exists { case (tagk, tagv) => tagk == k && valueMatch(tagv) }
     }
-    if (matched.isEmpty) throw new NoMatchingTagsException
+    if (!matched) throw new NoMatchingTagsException
   }
+
+  def requireMatchingTags(meta: DataFrame, q: QueryPlanner.SubQuery): Unit =
+    requireMatchingTags(Catalog.collect(meta), q)
+
+  /** A tag value pattern anchored to match the whole value (TagFilter's
+    * `Matcher.matches`), as the planner's tag predicate anchors it. */
+  private def fullMatch(re: String): Pattern = Pattern.compile(s"^(?:$re)$$")
+
+  /** Spark's `rlike` on a non-null value: `find`, here of an anchored
+    * pattern. */
+  private def rlike(p: Pattern)(value: String): Boolean =
+    value != null && p.matcher(value).find()
 
   /** The query's step before execution, shared by every transport and
     * [[QueryPlanner.runQuery]]: with a catalog, the [[requireMatchingTags]]
@@ -92,7 +112,7 @@ object TimelyApi {
       points: DataFrame,
       req: QueryPlanner.TsQueryRequest,
       auths: Seq[String],
-      meta: Option[DataFrame]): Seq[DataFrame] = {
+      meta: Option[Catalog]): Seq[DataFrame] = {
     meta.foreach(m => req.queries.foreach(q => requireMatchingTags(m, q)))
     QueryPlanner.plan(points, req, auths)
   }
@@ -124,19 +144,14 @@ object TimelyApi {
    * configured ignored tag keys (plus the visibility tag, always) excluded
    * from the tag lists while their metrics still appear. The reference emits
    * HashMap order; here metrics and tags are sorted for determinism. The
-   * collect is catalog-sized (metric cardinality), the same data the
-   * reference holds in its MetaCache — but hard-capped at `maxRows` sorted
-   * catalog rows so a pathological tag cardinality cannot flood the driver:
-   * past the cap the report is a deterministic (sorted) prefix of the
-   * catalog, the same bound lookup applies via its `limit`.
+   * report covers at most `maxRows` catalog rows ([[MetricsMaxRows]] when
+   * served), so a pathological tag cardinality cannot flood a response:
+   * past the cap it is a deterministic (sorted) prefix of the catalog, the
+   * same bound lookup applies via its `limit`.
    */
-  def metricsJson(meta: DataFrame, ignoredTags: Set[String] = Set.empty,
-                  maxRows: Int = 100000): String = {
+  def metricsJson(catalog: Catalog, ignoredTags: Set[String], maxRows: Int): String = {
     val ignored = ignoredTags + graft.model.MetricPoint.VisibilityTag
-    val rows = meta.select("metric", "tagk", "tagv")
-      .orderBy("metric", "tagk", "tagv").limit(maxRows).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2)))
-    val byMetric = rows.groupBy(_._1)
+    val byMetric = catalog.sorted.take(maxRows).groupBy(_._1)
     val metrics = JArray(byMetric.keys.toList.sorted.map { m =>
       val tags = byMetric(m).toList
         .filterNot { case (_, k, _) => ignored.contains(k) }
@@ -146,6 +161,10 @@ object TimelyApi {
     })
     JsonMethods.compact(JsonMethods.render(JObject("metrics" -> metrics)))
   }
+
+  def metricsJson(meta: DataFrame, ignoredTags: Set[String] = Set.empty,
+                  maxRows: Int = MetricsMaxRows): String =
+    metricsJson(Catalog.collect(meta), ignoredTags, maxRows)
 
   /** /api/cache wire shape — the reference's CacheResponse
     * (CacheResponse.java:7-36, served by HttpCacheRequestHandler and the WS
@@ -168,11 +187,15 @@ object TimelyApi {
     * (reference SuggestResponse.SuggestSerializer,
     * server/src/main/java/timely/api/response/timeseries/SuggestResponse.java:28-37). */
   def suggestJson(
+      catalog: Catalog, kind: String, q: String,
+      tagKey: Option[String], max: Int): String =
+    JsonMethods.compact(JsonMethods.render(
+      JArray(suggest(catalog, kind, q, tagKey, max).map(JString(_)).toList)))
+
+  def suggestJson(
       meta: DataFrame, kind: String, q: String,
-      tagKey: Option[String] = None, max: Int = 25): String = {
-    val vals = suggest(meta, kind, q, tagKey, max).collect().map(_.getString(0))
-    JsonMethods.compact(JsonMethods.render(JArray(vals.map(JString(_)).toList)))
-  }
+      tagKey: Option[String] = None, max: Int = 25): String =
+    suggestJson(Catalog.collect(meta), kind, q, tagKey, max)
 
   /**
    * /api/search/lookup wire shape — the exact SearchLookupResponse envelope
@@ -190,20 +213,17 @@ object TimelyApi {
    *               deterministic under test (the reference stamps wall time)
    */
   def lookupJson(
-      meta: DataFrame,
+      catalog: Catalog,
       metric: String,
       tags: Map[String, String],
-      limit: Int = 25,
-      timeMs: Int = 0): String = {
-    val cond = tags
-      .map { case (k, re) => col("tagk") === k && col("tagv").rlike(s"^(?:$re)$$") }
-      .reduceOption(_ || _).getOrElse(lit(false))
-    val matches = meta.where(col("metric") === metric && cond)
-    val total = matches.count()
-    val rows = matches.orderBy("tagk", "tagv").limit(limit).select("tagk", "tagv").collect()
-    val results = JArray(rows.toList.map { r =>
+      limit: Int,
+      timeMs: Int): String = {
+    val patterns = tags.map { case (k, re) => k -> rlike(fullMatch(re)) _ }
+    val matches = catalog.byMetric.getOrElse(metric, IndexedSeq.empty)
+      .filter { case (tagk, tagv) => patterns.get(tagk).exists(_(tagv)) }
+    val results = JArray(matches.take(limit).toList.map { case (tagk, tagv) =>
       JObject(
-        "tags" -> JObject(r.getString(0) -> JString(r.getString(1))),
+        "tags" -> JObject(tagk -> JString(tagv)),
         "metric" -> JNull,
         "tsuid" -> JNull)
     })
@@ -213,8 +233,16 @@ object TimelyApi {
       "tags" -> JObject(tags.toList.sorted.map { case (k, v) => JField(k, JString(v)) }),
       "limit" -> JInt(limit),
       "time" -> JInt(timeMs),
-      "totalResults" -> JInt(total),
+      "totalResults" -> JInt(matches.size),
       "results" -> results)
     JsonMethods.compact(JsonMethods.render(envelope))
   }
+
+  def lookupJson(
+      meta: DataFrame,
+      metric: String,
+      tags: Map[String, String],
+      limit: Int = 25,
+      timeMs: Int = 0): String =
+    lookupJson(Catalog.collect(meta), metric, tags, limit, timeMs)
 }

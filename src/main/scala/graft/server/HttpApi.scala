@@ -14,7 +14,7 @@ import org.json4s.jackson.JsonMethods
 
 import graft.model.{MetricParser, MetricPoint}
 import graft.planner.{QueryJson, TimelyApi}
-import graft.sources.PointStore
+import graft.sources.{Catalog, PointStore}
 
 /**
  * HTTP facade — the serving analog of the reference's Netty HTTP pipeline
@@ -30,9 +30,11 @@ import graft.sources.PointStore
  * Storage: puts append to a [[PointStore]] parquet directory (+ meta catalog)
  * through [[PointStore.append]], the one store write every writer (every
  * transport, the streaming sink, the internal-metrics loopback) goes
- * through; queries and catalog calls re-read the store through
- * [[PointStore.readOrEmpty]] / [[PointStore.readMeta]], so the facade is
- * stateless between requests. Bulk ingest at scale should use
+ * through; queries and catalog calls ask the store's entry for the served
+ * points relation and the in-memory catalog ([[PointStore.points]] /
+ * [[PointStore.catalog]]), which `append` and the other store writers keep
+ * current, so a request lists no files and runs no catalog job that an
+ * earlier one already did. Bulk ingest at scale should use
  * [[graft.streaming.PutLineIngest]] / [[PointStore]] directly; `/api/put`
  * exists for wire parity and integration tests, accepting both the
  * reference's flattened Metric JSON
@@ -120,9 +122,9 @@ class HttpApi(
 
   // ---- storage ----------------------------------------------------------
 
-  private def points: DataFrame = PointStore.readOrEmpty(spark, dataDir)
+  private def points: DataFrame = PointStore.points(spark, dataDir)
 
-  private def meta: DataFrame = PointStore.readMeta(spark, metaDir)
+  private def catalog: Catalog = PointStore.catalog(spark, metaDir)
 
   // ---- request parsing --------------------------------------------------
 
@@ -240,13 +242,13 @@ class HttpApi(
         case (_, "/api/aggregators") =>
           respond(ex, 200, TimelyApi.aggregatorsJson)
         case (_, "/api/metrics") =>
-          respond(ex, 200, TimelyApi.metricsJson(meta))
+          respond(ex, 200, TimelyApi.metricsJson(catalog, Set.empty, TimelyApi.MetricsMaxRows))
         case (_, "/api/suggest") =>
           val p = params(ex)
           def one(k: String) = p.get(k).flatMap(_.headOption)
           val kind = one("type").getOrElse("metrics")
           respond(ex, 200, TimelyApi.suggestJson(
-            meta, kind, one("q").orElse(one("m")).getOrElse(""),
+            catalog, kind, one("q").orElse(one("m")).getOrElse(""),
             tagKey = one("tagk"),
             max = one("max").flatMap(_.toIntOption).getOrElse(25)))
         case (_, "/api/search/lookup") =>
@@ -268,7 +270,7 @@ class HttpApi(
                p.get("limit").flatMap(_.headOption).flatMap(_.toIntOption).getOrElse(25))
             }
           val (metric, tags) = TimelyApi.parseLookupQuery(q)
-          respond(ex, 200, TimelyApi.lookupJson(meta, metric, tags, limit))
+          respond(ex, 200, TimelyApi.lookupJson(catalog, metric, tags, limit, 0))
         case ("POST", "/api/put") =>
           val content = body(ex).trim
           val batch =
@@ -288,7 +290,7 @@ class HttpApi(
           // validation (bad downsample/aggregator/tag regex) must still 400,
           // and headers cannot be unsent — only execution errors after this
           // line fall through to a truncated chunked body
-          val frames = TimelyApi.planQuery(points, req, callerAuths, Some(meta))
+          val frames = TimelyApi.planQuery(points, req, callerAuths, Some(catalog))
           ex.getResponseHeaders.set("Content-Type", "application/json")
           val gz = wantsGzip(ex)
           if (gz) ex.getResponseHeaders.set("Content-Encoding", "gzip")

@@ -13,7 +13,7 @@ import org.json4s._
 import org.json4s.jackson.JsonMethods
 
 import graft.planner.{QueryJson, QueryPlanner, TimelyApi}
-import graft.sources.PointStore
+import graft.sources.{Catalog, PointStore}
 import graft.streaming.{MetricResponseJson, Subscriptions}
 
 /**
@@ -36,8 +36,10 @@ import graft.streaming.{MetricResponseJson, Subscriptions}
  * mapping only: a put lands through [[PointStore.append]], the same
  * serialized append as every other transport's, and each timeseries
  * operation is the library call the HTTP facade routes to ([[TimelyApi]],
- * [[QueryPlanner.runQuery]] with the meta check), so a request gets the same
- * body over WS as over HTTP. A malformed request (bad lookup query, no
+ * [[QueryPlanner.runQuery]] with the meta check) over the store entry's
+ * points relation and in-memory catalog ([[PointStore.points]] /
+ * [[PointStore.catalog]]), so a request gets the same body over WS as over
+ * HTTP. A malformed request (bad lookup query, no
  * matching tags, unknown operation) closes the connection with 1008 and the
  * operation's message.
  *
@@ -84,7 +86,9 @@ class WebSocketApi(
 
   def start(port: Int = 0): Int = synchronized {
     require(server == null, "already started")
-    new java.io.File(dataDir).mkdirs() // the streaming tail needs the dir to exist
+    // the streaming tail needs the dir to exist
+    val root = new org.apache.hadoop.fs.Path(dataDir)
+    root.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(root)
     server = tls match {
       case None =>
         val s = new ServerSocket()
@@ -131,7 +135,7 @@ class WebSocketApi(
   private def pointsStream(): DataFrame =
     spark.readStream.schema(PointStore.Schema).parquet(dataDir)
 
-  private def meta(): DataFrame = PointStore.readMeta(spark, metaDir)
+  private def catalog(): Catalog = PointStore.catalog(spark, metaDir)
 
   // ---- one connection ----------------------------------------------------
 
@@ -289,10 +293,10 @@ class WebSocketApi(
             sendText(TimelyApi.aggregatorsJson)
             true
           case "metrics" =>
-            sendText(TimelyApi.metricsJson(meta()))
+            sendText(TimelyApi.metricsJson(catalog(), Set.empty, TimelyApi.MetricsMaxRows))
             true
           case "suggest" =>
-            sendText(TimelyApi.suggestJson(meta(),
+            sendText(TimelyApi.suggestJson(catalog(),
               str("type").getOrElse("metrics"), str("q").orElse(str("m")).getOrElse(""),
               tagKey = str("tagk"),
               max = lng("max").map(_.toInt).getOrElse(25)))
@@ -300,16 +304,16 @@ class WebSocketApi(
           case "lookup" =>
             val (metric, tags) = TimelyApi.parseLookupQuery(
               str("query").getOrElse(throw new IllegalArgumentException("query required")))
-            sendText(TimelyApi.lookupJson(meta(), metric, tags,
-              lng("limit").map(_.toInt).getOrElse(25)))
+            sendText(TimelyApi.lookupJson(catalog(), metric, tags,
+              lng("limit").map(_.toInt).getOrElse(25), 0))
             true
           case "query" =>
-            sendText(QueryPlanner.runQuery(PointStore.readOrEmpty(spark, dataDir),
-              QueryJson.parseRequest(json), auths, meta = Some(meta())))
+            sendText(QueryPlanner.runQuery(PointStore.points(spark, dataDir),
+              QueryJson.parseRequest(json), auths, meta = Some(catalog())))
             true
           case "cache" =>
             // CacheRequest is a WS operation too (@WebSocket(operation="cache"))
-            sendText(TimelyApi.cacheJson(PointStore.readOrEmpty(spark, dataDir), auths))
+            sendText(TimelyApi.cacheJson(PointStore.points(spark, dataDir), auths))
             true
           case other =>
             writeLock.synchronized(

@@ -1,5 +1,9 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
@@ -17,6 +21,24 @@ import graft.model.MetricPoint
  * partition pruning then plays the role of `DataStore.getQueryRanges`
  * (server/src/main/java/timely/server/store/DataStore.java:997-1039): a query
  * `metric = m AND ts BETWEEN a AND b` touches only the matching directories.
+ *
+ * Serving state: each store directory has one in-JVM entry, looked up by its
+ * qualified Hadoop path (so `/x` and `file:/x` share one). It holds the
+ * served points relation ([[points]]: one listing of the store, which every
+ * query's partition pruning then runs over) and the in-memory catalog
+ * ([[catalog]]), each loaded on first use. Every write into a directory
+ * through this object — [[append]], [[write]], [[writeZOrdered]],
+ * [[writeMeta]], [[ageOff]], [[metaAgeOff]], [[ageOffDropPartitions]] —
+ * moves that directory's generation on once its files are in place. A reader
+ * tags what it loads with the generation it read before listing and reloads
+ * when the generation has moved, so a load that raced a write is never kept
+ * as current. [[append]] keeps the catalog current itself: it adds the
+ * triples it writes to the in-memory catalog instead of re-reading it.
+ *
+ * Contract: one process writes a store — the one that holds the append lock.
+ * A write by another process, or by hand into the directories, is not seen
+ * by this process's serving reads until one of the writers above touches
+ * the same directory.
  */
 object PointStore {
 
@@ -36,8 +58,10 @@ object PointStore {
 
   /** Batch-write canonical points, partitioned for pruning. */
   def write(points: DataFrame, dataDir: String, mode: SaveMode = SaveMode.Append): Unit =
-    withPartitionColumns(points)
-      .write.mode(mode).partitionBy("metric", "dt", "hr").parquet(dataDir)
+    writing(points.sparkSession, dataDir) {
+      withPartitionColumns(points)
+        .write.mode(mode).partitionBy("metric", "dt", "hr").parquet(dataDir)
+    }
 
   /**
    * Z-ORDERED batch write: same `(metric, dt, hr)` directory layout, but the
@@ -67,12 +91,14 @@ object PointStore {
                     bits: Int = 8, numFiles: Int = 32,
                     mode: SaveMode = SaveMode.Append): Unit = {
     require(numFiles >= 1, "numFiles >= 1")
-    withPartitionColumns(points)
-      .withColumn("_z", graft.operators.Layout.mortonKey(xCol, yCol, bits))
-      .repartitionByRange(numFiles, col("metric"), col("dt"), col("hr"), col("_z"))
-      .sortWithinPartitions(col("metric"), col("dt"), col("hr"), col("_z"))
-      .drop("_z")
-      .write.mode(mode).partitionBy("metric", "dt", "hr").parquet(dataDir)
+    writing(points.sparkSession, dataDir) {
+      withPartitionColumns(points)
+        .withColumn("_z", graft.operators.Layout.mortonKey(xCol, yCol, bits))
+        .repartitionByRange(numFiles, col("metric"), col("dt"), col("hr"), col("_z"))
+        .sortWithinPartitions(col("metric"), col("dt"), col("hr"), col("_z"))
+        .drop("_z")
+        .write.mode(mode).partitionBy("metric", "dt", "hr").parquet(dataDir)
+    }
   }
 
   /** Read the store back as the canonical schema (partition cols retained for
@@ -92,21 +118,83 @@ object PointStore {
     StructField("metric", StringType), StructField("tagk", StringType),
     StructField("tagv", StringType)))
 
-  /** Serving read of the points: a store nothing has been put to yet reads
-    * as an empty frame instead of failing schema inference. */
+  /** The store's points read afresh: a store nothing has been put to yet
+    * reads as an empty frame instead of failing schema inference. */
   def readOrEmpty(spark: SparkSession, dataDir: String): DataFrame =
     orEmpty(spark, dataDir, Schema)(read(spark, dataDir))
 
-  /** Serving read of the meta catalog, empty-safe like [[readOrEmpty]]. */
+  /** The meta catalog read afresh, empty-safe like [[readOrEmpty]]. */
   def readMeta(spark: SparkSession, metaDir: String): DataFrame =
     orEmpty(spark, metaDir, MetaSchema)(spark.read.parquet(metaDir))
 
+  /** Emptiness is asked of the directory's own Hadoop `FileSystem`, so a
+    * store given as a URI (`file:/x`, `hdfs://…`) reads like a plain path. */
   private def orEmpty(spark: SparkSession, dir: String, schema: StructType)(
       load: => DataFrame): DataFrame = {
-    val files = new java.io.File(dir).list()
-    if (files == null || files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else load
+    val path = new Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(path) && fs.listStatus(path).nonEmpty) load
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+  }
+
+  // ---- the per-directory serving entries ----------------------------------
+
+  /** A value loaded from a directory, tagged with the directory generation
+    * read before loading it. */
+  private final class Slot[A] {
+    @volatile private var held: Option[(Long, A)] = None
+
+    def get(generation: Long, usable: A => Boolean)(load: => A): A = held match {
+      case Some((`generation`, v)) if usable(v) => v
+      case _ =>
+        val v = load
+        keep(generation, v)
+        v
+    }
+
+    /** Keep `v` unless a load tagged with a later generation is held. */
+    def keep(generation: Long, v: A): Unit = synchronized {
+      if (held.forall(_._1 <= generation)) held = Some((generation, v))
+    }
+  }
+
+  /** One store directory's entry (see the object doc). */
+  private final class Dir {
+    val generation = new AtomicLong
+    val points = new Slot[DataFrame]
+    val catalog = new Slot[Catalog]
+  }
+
+  private val dirs = new ConcurrentHashMap[String, Dir]
+
+  private def dir(spark: SparkSession, path: String): Dir = {
+    val p = new Path(path)
+    val qualified = p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
+    dirs.computeIfAbsent(qualified.toString, _ => new Dir)
+  }
+
+  /** Run a write into `path`, then move the directory's generation on — also
+    * when the write fails, since it may have left files. Returns the new
+    * generation. */
+  private def writing(spark: SparkSession, path: String)(write: => Unit): Long = {
+    val d = dir(spark, path)
+    try write catch { case e: Throwable => d.generation.incrementAndGet(); throw e }
+    d.generation.incrementAndGet()
+  }
+
+  /** The served points relation of a store: [[readOrEmpty]], listed once per
+    * generation of the directory, so a query prunes partitions over the
+    * cached listing instead of re-listing the store. */
+  def points(spark: SparkSession, dataDir: String): DataFrame = {
+    val d = dir(spark, dataDir)
+    d.points.get(d.generation.get, _.sparkSession eq spark)(readOrEmpty(spark, dataDir))
+  }
+
+  /** The store's catalog in memory: read from `metaDir` once per generation
+    * of the directory and extended by [[append]]. */
+  def catalog(spark: SparkSession, metaDir: String): Catalog = {
+    val d = dir(spark, metaDir)
+    d.catalog.get(d.generation.get, _ => true)(Catalog.collect(readMeta(spark, metaDir)))
   }
 
   private val appendLock = new Object
@@ -114,18 +202,21 @@ object PointStore {
   /**
    * Append one batch of canonical points — the one write every serving
    * store write lands through (HTTP/WS/TCP/UDP puts, the streaming storage
-   * sink's micro-batches, the internal-metrics loopback): the points,
-   * partitioned for pruning, then their [[metaProjection]] rows (the
-   * reference writes meta keys alongside every metric mutation —
-   * Meta.java:55-67, DataStore.java:415-433). Appends are serialized JVM-wide:
-   * concurrent parquet appends to one directory share its `_temporary`
-   * staging directory, and the first commit deletes it under the others,
-   * failing their jobs.
+   * sink's micro-batches, the internal-metrics loopback). The catalog rows
+   * go first: only the batch's `(metric, tagk, tagv)` triples the catalog
+   * lacks are written (the reference writes a meta key only when its
+   * MetaCache lacks it — DataStore.java:415-483), then the points,
+   * partitioned for pruning. A failure between the two writes therefore
+   * leaves an unused catalog row, never points their catalog cannot find.
+   * Appends are serialized JVM-wide: concurrent parquet appends to one
+   * directory share its `_temporary` staging directory, and the first
+   * commit deletes it under the others, failing their jobs.
    */
   def append(batch: DataFrame, dataDir: String, metaDir: String): Unit =
     appendLock.synchronized {
-      write(batch, dataDir)
-      metaProjection(batch).write.mode(SaveMode.Append).parquet(metaDir)
+      val triples = metaProjection(batch).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+      appendWith(batch.sparkSession, triples, dataDir, metaDir)(write(batch, dataDir))
     }
 
   /** [[append]] for a decoded put batch; an empty batch writes nothing. */
@@ -133,8 +224,28 @@ object PointStore {
              dataDir: String, metaDir: String): Unit =
     if (batch.nonEmpty) {
       import spark.implicits._
-      append(batch.toDF(), dataDir, metaDir)
+      val triples = batch.flatMap(p => p.tags.map { case (k, v) => (p.metric, k, v) })
+      appendLock.synchronized {
+        appendWith(spark, triples, dataDir, metaDir)(write(batch.toDF(), dataDir))
+      }
     }
+
+  /** Under the append lock: write the triples the catalog lacks, add them to
+    * the in-memory catalog, then write the points. */
+  private def appendWith(spark: SparkSession, triples: Iterable[Catalog.Triple],
+                         dataDir: String, metaDir: String)(writePoints: => Unit): Unit = {
+    val known = catalog(spark, metaDir)
+    val added = triples.iterator.filterNot(known.triples.contains).toSet
+    if (added.nonEmpty) {
+      val rows = added.toSeq.map { case (m, k, v) => Row(m, k, v) }
+      val generation = writing(spark, metaDir) {
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), MetaSchema)
+          .write.mode(SaveMode.Append).parquet(metaDir)
+      }
+      dir(spark, metaDir).catalog.keep(generation, known ++ added)
+    }
+    writePoints
+  }
 
   /** Partition census — the maintenance-pass visibility report: per
     * (metric, dt), hour-partition and row counts, the hour span, and a
@@ -186,7 +297,9 @@ object PointStore {
 
   /** Derive/refresh the meta catalog. */
   def writeMeta(points: DataFrame, metaDir: String): Unit =
-    metaProjection(points).write.mode(SaveMode.Overwrite).parquet(metaDir)
+    writing(points.sparkSession, metaDir) {
+      metaProjection(points).write.mode(SaveMode.Overwrite).parquet(metaDir)
+    }
 
   /** Retention horizon for a metric as a codegen'd when-chain (longest prefix
     * wins, 'default' fallback) — no UDF, so the resulting `ts >= horizon`
@@ -253,12 +366,12 @@ object PointStore {
       ttlMsByPrefix: Map[String, Long],
       nowMs: Long,
       dryRun: Boolean = false): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(dataDir)
+    val root = new Path(dataDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd")
       .withZone(java.time.ZoneOffset.UTC)
     val dropped = Seq.newBuilder[String]
-    if (fs.exists(root)) {
+    def drop(): Unit = if (fs.exists(root)) {
       for (metricDir <- fs.listStatus(root) if metricDir.getPath.getName.startsWith("metric=")) {
         // the true inverse of Spark's partition-path escaping (URLDecoder is
         // NOT: it would turn '+' in a metric name into a space and resolve
@@ -290,6 +403,7 @@ object PointStore {
         }
       }
     }
+    if (dryRun) drop() else writing(spark, dataDir)(drop())
     dropped.result().sorted
   }
 
@@ -307,8 +421,10 @@ object PointStore {
   /** File-level meta maintenance paired with [[ageOff]]: rewrite the meta dir
     * keeping only metrics that survive in the aged data dir. */
   def metaAgeOff(spark: SparkSession, metaDir: String, agedDataDir: String, outMetaDir: String): Unit =
-    metaAgeOff(spark.read.parquet(metaDir), read(spark, agedDataDir))
-      .write.mode(SaveMode.Overwrite).parquet(outMetaDir)
+    writing(spark, outMetaDir) {
+      metaAgeOff(spark.read.parquet(metaDir), read(spark, agedDataDir))
+        .write.mode(SaveMode.Overwrite).parquet(outMetaDir)
+    }
 
   /** Query-time age-off clamp: like the reference's cache iterator clamping
     * the scan start to the retention horizon (cache/DataStoreCache.java:748-752). */

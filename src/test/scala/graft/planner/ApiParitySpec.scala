@@ -91,9 +91,9 @@ class ApiParitySpec extends AnyFunSuite with SparkSpec {
       s"put sys.cpu.idle ${T + 2} 1.0 tag3=value3 tag4=value4 rack=r1",
       s"put sys.cpu.idle ${T + 1000} 3.0 tag3=value3 tag4=value4 rack=r2")
       .flatMap(MetricParser.parse).toDF()
-    val meta = pts.select(org.apache.spark.sql.functions.col("metric"),
+    val meta = graft.sources.Catalog.collect(pts.select(org.apache.spark.sql.functions.col("metric"),
       org.apache.spark.sql.functions.explode(org.apache.spark.sql.functions.col("tags"))
-        .as(Seq("tagk", "tagv"))).distinct()
+        .as(Seq("tagk", "tagv"))).distinct())
     def req(tags: Map[String, String], metric: String = "sys.cpu.idle") =
       TsQueryRequest(T, T + 6000, msResolution = false,
         Seq(SubQuery("sum", metric, downsample = Some("1s-max"), tags = tags)))

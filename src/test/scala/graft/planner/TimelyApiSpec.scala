@@ -3,6 +3,7 @@ package graft.planner
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
+import graft.sources.Catalog
 
 /** Catalog endpoints: suggest/lookup/aggregators over a meta frame. */
 class TimelyApiSpec extends AnyFunSuite with SparkSpec {
@@ -15,20 +16,30 @@ class TimelyApiSpec extends AnyFunSuite with SparkSpec {
     ("net.bytes", "iface", "eth0")).toDF("metric", "tagk", "tagv")
 
   test("suggest: metrics substring, tagk/tagv scoping, limit") {
-    assert(TimelyApi.suggest(meta, "metrics", "cpu").as[String].collect().toSeq ==
+    val cat = Catalog.collect(meta)
+    assert(TimelyApi.suggest(cat, "metrics", "cpu", None, 25) ==
       Seq("sys.cpu.idle", "sys.cpu.user"))
-    assert(TimelyApi.suggest(meta, "metrics", "cpu", max = 1).as[String].collect().toSeq ==
+    assert(TimelyApi.suggest(cat, "metrics", "cpu", None, 1) ==
       Seq("sys.cpu.idle"))
-    assert(TimelyApi.suggest(meta, "tagk", "sys.cpu.user").as[String].collect().toSeq ==
+    assert(TimelyApi.suggest(cat, "tagk", "sys.cpu.user", None, 25) ==
       Seq("host", "rack"))
     // tagv scopes by BOTH metric and tag key (DataStore.java:558-573) — and
     // a missing scope answers empty suggestions, not an error
-    assert(TimelyApi.suggest(meta, "tagv", "sys.cpu.user", Some("host")).as[String].collect().toSeq ==
+    assert(TimelyApi.suggest(cat, "tagv", "sys.cpu.user", Some("host"), 25) ==
       Seq("web01", "web02"))
-    assert(TimelyApi.suggest(meta, "tagv", "sys.cpu.idle", Some("host")).as[String].collect().toSeq ==
+    assert(TimelyApi.suggest(cat, "tagv", "sys.cpu.idle", Some("host"), 25) ==
       Seq("web01"))
-    assert(TimelyApi.suggest(meta, "tagv", "sys.cpu.user").as[String].collect().isEmpty)
-    intercept[IllegalArgumentException](TimelyApi.suggest(meta, "bogus", "x"))
+    assert(TimelyApi.suggest(cat, "tagv", "sys.cpu.user", None, 25).isEmpty)
+    intercept[IllegalArgumentException](TimelyApi.suggest(cat, "bogus", "x", None, 25))
+  }
+
+  test("catalog answers order strings as Spark's orderBy does (UTF-8 bytes, not UTF-16)") {
+    // U+FB01 sorts before U+1F600 in UTF-8 but after its surrogate pair in UTF-16
+    val names = Seq("m.\uD83D\uDE00", "m.\uFB01", "m.z", "m.A")
+    val frame = names.map(m => (m, "host", "a")).toDF("metric", "tagk", "tagv")
+    val sparkOrder = frame.select("metric").orderBy("metric").as[String].collect().toSeq
+    assert(sparkOrder.head == "m.A" && sparkOrder.last == "m.\uD83D\uDE00")
+    assert(TimelyApi.suggest(Catalog.collect(frame), "metrics", "m.", None, 25) == sparkOrder)
   }
 
   test("suggest JSON is a bare array (SuggestResponse serializer shape)") {

@@ -170,6 +170,27 @@ class GraftServerSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll 
     assert(seen, "WS subscription must deliver the TCP-ingested point")
   }
 
+  test("a TCP put shows on the very next HTTP request after the store was served") {
+    val query = s"""{"start":$T,"end":${T + 6000},"msResolution":true,""" +
+      """"queries":[{"aggregator":"max","metric":"served.metric"}]}"""
+    // serve the store first, so the HTTP facade's entry is loaded
+    assert(httpGet("/api/suggest?type=metrics&q=served.metric").body() == "[]")
+    assert(httpPost("/api/query", query).statusCode() == 400) // no catalog entry yet
+    // the listener appends a connection's last batch at EOF and closes the
+    // socket only after the append returns: read to EOF to wait for it
+    val s = new Socket("127.0.0.1", ports.tcp)
+    s.getOutputStream.write(s"put served.metric $T 3.0 src=tcp\n".getBytes(UTF_8))
+    s.getOutputStream.flush()
+    s.shutdownOutput()
+    s.setSoTimeout(60000)
+    assert(s.getInputStream.read() == -1)
+    s.close()
+    val q = httpPost("/api/query", query)
+    assert(q.statusCode() == 200, q.body())
+    assert(q.body().contains(s""""$T":3.0"""), q.body())
+    assert(httpGet("/api/suggest?type=metrics&q=served.metric").body() == """["served.metric"]""")
+  }
+
   test("concurrent TCP connections store every point exactly once") {
     // three agents stream disjoint series at once; their batches append to
     // the same store concurrently and none may be lost or duplicated

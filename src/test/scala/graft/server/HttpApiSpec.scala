@@ -28,14 +28,32 @@ class HttpApiSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll {
   private lazy val port = api.start()
   private lazy val client = HttpClient.newHttpClient()
 
-  private def get(path: String): HttpResponse[String] =
-    client.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path")).GET().build(),
-      HttpResponse.BodyHandlers.ofString())
+  /** Requests to the [[HttpApi]] listening on `port`. */
+  private final class Client(port: Int) {
+    def get(path: String): HttpResponse[String] =
+      client.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path")).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
 
-  private def post(path: String, body: String): HttpResponse[String] =
-    client.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
-        .POST(HttpRequest.BodyPublishers.ofString(body, UTF_8)).build(),
-      HttpResponse.BodyHandlers.ofString())
+    def post(path: String, body: String): HttpResponse[String] =
+      client.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
+          .POST(HttpRequest.BodyPublishers.ofString(body, UTF_8)).build(),
+        HttpResponse.BodyHandlers.ofString())
+  }
+
+  private lazy val shared = new Client(port)
+  private def get(path: String): HttpResponse[String] = shared.get(path)
+  private def post(path: String, body: String): HttpResponse[String] = shared.post(path, body)
+
+  /** `f` against an [[HttpApi]] of its own over `dataDir` / `metaDir`. */
+  private def withApi(dataDir: String, metaDir: String)(f: Client => Unit): Unit = {
+    val own = new HttpApi(spark, dataDir, metaDir)
+    try f(new Client(own.start())) finally own.stop()
+  }
+
+  /** A raw-points query of `metric` over [T, T + spanMs], ms-keyed dps. */
+  private def rawQuery(metric: String, spanMs: Long = 6000L): String =
+    s"""{"start":$T,"end":${T + spanMs},"msResolution":true,""" +
+      s""""queries":[{"aggregator":"max","metric":"$metric"}]}"""
 
   override def afterAll(): Unit = {
     api.stop()
@@ -198,10 +216,95 @@ class HttpApiSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll {
     assert(get("/version").headers().firstValue("Strict-Transport-Security").isEmpty)
   }
 
-  test("a put shows up in the very next suggest (catalog re-read per request)") {
+  test("a put shows up in the very next suggest (catalog kept current by append)") {
     assert(get("/api/suggest?type=metrics&q=sys.disk&max=10").body() == "[]")
     assert(post("/api/put", s"put sys.disk.free $T 1.0 tag1=value1").statusCode() == 200)
     assert(get("/api/suggest?type=metrics&q=sys.disk&max=10").body() == """["sys.disk.free"]""")
     assert(get("/api/suggest?type=tagk&q=sys.disk.free&max=10").body() == """["tag1"]""")
+  }
+
+  test("a store given as file: URIs answers its puts on query and suggest") {
+    val base = Files.createTempDirectory("graft-http-uri").toUri
+    val (data, meta) = (base.resolve("data").toString, base.resolve("meta").toString)
+    assert(data.startsWith("file:"))
+    withApi(data, meta) { c =>
+      assert(c.post("/api/put", s"put uri.metric $T 5.0 host=a").statusCode() == 200)
+      val q = c.post("/api/query", rawQuery("uri.metric"))
+      assert(q.statusCode() == 200, q.body())
+      assert(q.body().contains(s""""$T":5.0"""), q.body())
+      assert(c.get("/api/suggest?type=metrics&q=uri").body() == """["uri.metric"]""")
+    }
+  }
+
+  test("a direct PointStore.write + writeMeta shows on the very next request") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-http-write").toString
+    val (data, meta) = (s"$base/data", s"$base/meta")
+    withApi(data, meta) { c =>
+      assert(c.post("/api/put", s"put direct.metric $T 1.0 host=a").statusCode() == 200)
+      // served once: the facade's store entry holds this listing and catalog
+      assert(c.post("/api/query", rawQuery("direct.metric")).body().contains(s""""$T":1.0"""))
+      assert(c.get("/api/suggest?type=tagv&q=direct.metric&tagk=host").body() == """["a"]""")
+      val more = Seq(graft.model.MetricPoint("direct.metric", T + 1000, 2.0,
+        Map("host" -> "b"), None)).toDF()
+      graft.sources.PointStore.write(more, data)
+      graft.sources.PointStore.writeMeta(more, meta) // overwrites: host=b only
+      val q = c.post("/api/query", rawQuery("direct.metric")).body()
+      assert(q.contains(s""""$T":1.0""") && q.contains(s""""${T + 1000}":2.0"""), q)
+      assert(c.get("/api/suggest?type=tagv&q=direct.metric&tagk=host").body() == """["b"]""")
+    }
+  }
+
+  test("ageOffDropPartitions on the served store shows on the very next request") {
+    val day = 86400000L
+    val base = Files.createTempDirectory("graft-http-ageoff").toString
+    val (data, meta) = (s"$base/data", s"$base/meta")
+    withApi(data, meta) { c =>
+      assert(c.post("/api/put", Seq(
+        s"put aged.metric $T 1.0 host=a",
+        s"put aged.metric ${T + 10 * day} 2.0 host=a").mkString("\n")).statusCode() == 200)
+      val before = c.post("/api/query", rawQuery("aged.metric", 11 * day)).body()
+      assert(before.contains(s""""$T":1.0""") && before.contains(s""""${T + 10 * day}":2.0"""), before)
+      assert(graft.sources.PointStore.ageOffDropPartitions(spark, data,
+        Map("default" -> 5 * day), nowMs = T + 10 * day) == Seq("aged.metric/2024-01-01"))
+      // the dropped day's files are gone: a stale listing would fail the scan
+      val after = c.post("/api/query", rawQuery("aged.metric", 11 * day))
+      assert(after.statusCode() == 200, after.body())
+      assert(!after.body().contains(s""""$T":1.0""") &&
+        after.body().contains(s""""${T + 10 * day}":2.0"""), after.body())
+    }
+  }
+
+  test("every append that has returned shows in the next query, while queries run") {
+    val base = Files.createTempDirectory("graft-http-race").toString
+    val (data, meta) = (s"$base/data", s"$base/meta")
+    def batch(i: Int) = Seq(graft.model.MetricPoint("race.metric", T + i * 1000L, i.toDouble,
+      Map("host" -> "a"), None))
+    graft.sources.PointStore.append(spark, batch(0), data, meta)
+    val returned = new java.util.concurrent.atomic.AtomicInteger(1)
+    @volatile var failure: Option[Throwable] = None
+    val writer = new Thread(() =>
+      try (1 to 20).foreach { i =>
+        graft.sources.PointStore.append(spark, batch(i), data, meta)
+        returned.set(i + 1)
+      } catch { case e: Throwable => failure = Some(e) })
+    withApi(data, meta) { c =>
+      def check(): Unit = {
+        val n = returned.get
+        val q = c.post("/api/query", rawQuery("race.metric", 30000L))
+        assert(q.statusCode() == 200, q.body())
+        (0 until n).foreach { i =>
+          assert(q.body().contains(s""""${T + i * 1000L}":$i.0"""),
+            s"batch $i returned before the query was sent but is missing: ${q.body()}")
+        }
+      }
+      writer.start()
+      var queries = 0
+      while (writer.isAlive) { check(); queries += 1 }
+      writer.join()
+      check()
+      assert(failure.isEmpty, failure.toString)
+      assert(queries > 0, "no query overlapped the appends")
+    }
   }
 }

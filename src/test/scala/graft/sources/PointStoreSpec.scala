@@ -40,12 +40,12 @@ class PointStoreSpec extends AnyFunSuite with SparkSpec {
     assert(back.count() == 4)
     assert(back.select("dt", "hr").distinct().as[(String, Int)].collect().toSeq
       == Seq(("2024-01-01", 0)))
-    // one catalog row per (metric, tagk, tagv) of each batch
+    // one catalog row per (metric, tagk, tagv) the store has seen
     val meta = PointStore.readMeta(spark, s"$base/meta")
       .as[(String, String, String)].collect()
     assert(meta.toSet == Set(("sys.cpu.user", "host", "a"), ("sys.cpu.user", "rack", "r1"),
       ("sys.cpu.idle", "host", "b")))
-    assert(meta.length == 3 + 2, "the second batch adds its own distinct rows")
+    assert(meta.length == 3, "the second batch's triples are known, so none is rewritten")
   }
 
   test("append of an empty put batch writes neither points nor catalog") {
@@ -55,6 +55,37 @@ class PointStoreSpec extends AnyFunSuite with SparkSpec {
     assert(!new java.io.File(s"$base/meta").exists())
     assert(PointStore.readOrEmpty(spark, s"$base/data").isEmpty)
     assert(PointStore.readMeta(spark, s"$base/meta").isEmpty)
+  }
+
+  test("append writes the catalog first: a failed catalog write stores no point") {
+    val base = Files.createTempDirectory("graft-append-order").toString
+    val metaFile = new java.io.File(base, "meta")
+    Files.write(metaFile.toPath, "not a catalog".getBytes("UTF-8"))
+    intercept[Exception](PointStore.append(spark,
+      Seq(MetricPoint("sys.cpu.user", T, 1.0, Map("host" -> "a"), None)),
+      s"$base/data", metaFile.getPath))
+    assert(PointStore.readOrEmpty(spark, s"$base/data").isEmpty,
+      "points must not be stored without their catalog rows")
+  }
+
+  test("append writes only the triples the catalog lacks") {
+    val base = Files.createTempDirectory("graft-append-dedup").toString
+    val (data, meta) = (s"$base/data", s"$base/meta")
+    val series = Seq(MetricPoint("sys.cpu.user", T, 1.0, Map("host" -> "a", "rack" -> "r1"), None))
+    def metaFiles(): Set[String] =
+      Files.walk(java.nio.file.Paths.get(meta)).toArray.map(_.toString).toSet
+    PointStore.append(spark, series, data, meta)
+    val first = metaFiles()
+    PointStore.append(spark, series.map(_.copy(ts = T + 1000L)), data, meta)
+    assert(metaFiles() == first, "a known series adds no catalog file")
+    val rows = PointStore.readMeta(spark, meta).as[(String, String, String)].collect()
+    assert(rows.sorted.toSeq == Seq(("sys.cpu.user", "host", "a"), ("sys.cpu.user", "rack", "r1")))
+    assert(PointStore.read(spark, data).count() == 2)
+    // a new tag value is the only triple the next append writes
+    PointStore.append(spark, series.map(_.copy(tags = Map("host" -> "b", "rack" -> "r1"))), data, meta)
+    assert(PointStore.readMeta(spark, meta).count() == 3)
+    assert(PointStore.catalog(spark, meta).triples ==
+      PointStore.readMeta(spark, meta).as[(String, String, String)].collect().toSet)
   }
 
   test("partition columns are UTC epoch arithmetic, whatever the session timezone") {

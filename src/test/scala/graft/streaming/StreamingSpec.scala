@@ -133,6 +133,38 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       ("sys.cpu.idle", "host", "b")))
   }
 
+  test("a storage-sink micro-batch shows on the very next served request") {
+    val dir = Files.createTempDirectory("graft-sink-served").toString
+    val (data, meta) = (s"$dir/data", s"$dir/meta")
+    graft.sources.PointStore.append(spark,
+      Seq(MetricPoint("sink.served", T, 1.0, Map("host" -> "a"), None)), data, meta)
+    val api = new graft.server.HttpApi(spark, data, meta)
+    val port = api.start()
+    val client = java.net.http.HttpClient.newHttpClient()
+    def get(path: String): String = client.send(
+      java.net.http.HttpRequest.newBuilder(java.net.URI.create(s"http://127.0.0.1:$port$path")).build(),
+      java.net.http.HttpResponse.BodyHandlers.ofString()).body()
+    val query = s"/api/query?start=$T&end=${T + 6000}&m=max:sink.served"
+    val input = MemoryStream[String]
+    val q = PutLineIngest.startStorageSink(PutLineIngest.parse(input.toDS()),
+      data, meta, s"$dir/ckpt")
+    try {
+      // served once: the facade's store entry holds this listing and catalog
+      assert(get(query).contains(s""""${T / 1000}":1.0"""))
+      assert(get("/api/suggest?type=tagv&q=sink.served&tagk=host") == """["a"]""")
+      input.addData(s"put sink.served ${T + 1000} 2.0 host=b")
+      q.processAllAvailable()
+      val after = get(query)
+      assert(after.contains(s""""${T / 1000}":1.0""") &&
+        after.contains(s""""${T / 1000 + 1}":2.0"""), after)
+      assert(get("/api/suggest?type=tagv&q=sink.served&tagk=host") == """["a","b"]""")
+    } finally {
+      q.stop()
+      api.stop()
+    }
+    assert(q.exception.isEmpty)
+  }
+
   test("storage sink and concurrent PointStore.append share one store exactly once") {
     import java.util.concurrent.{Executors, TimeUnit}
     val dir = Files.createTempDirectory("graft-shared").toString
