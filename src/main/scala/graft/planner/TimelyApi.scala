@@ -162,10 +162,6 @@ object TimelyApi {
     JsonMethods.compact(JsonMethods.render(JObject("metrics" -> metrics)))
   }
 
-  def metricsJson(meta: DataFrame, ignoredTags: Set[String] = Set.empty,
-                  maxRows: Int = MetricsMaxRows): String =
-    metricsJson(Catalog.collect(meta), ignoredTags, maxRows)
-
   /** /api/cache wire shape — the reference's CacheResponse
     * (CacheResponse.java:7-36, served by HttpCacheRequestHandler and the WS
     * `cache` operation): the oldest and newest timestamp and the sorted metric

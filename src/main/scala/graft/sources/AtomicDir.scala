@@ -29,8 +29,9 @@ private[graft] object AtomicDir {
     * function; a no-op when `target` exists. */
   def recover(fs: FileSystem, target: Path): Unit = {
     val bak = new Path(target.toString + ".bak")
-    if (!fs.exists(target) && fs.exists(bak))
+    if (!fs.exists(target) && fs.exists(bak)) PointStore.writing(fs, target) {
       require(fs.rename(bak, target), s"crash recovery: rename $bak -> $target failed")
+    }
   }
 
   /** Crash-safe directory swap: `old -> .bak`, `tmp -> target`, delete
@@ -39,8 +40,9 @@ private[graft] object AtomicDir {
     * where a crash loses BOTH). A leftover `.bak` after a crash is the old
     * data (auto-restored by [[recover]] on the next pass); a leftover
     * `.tmp` is an incomplete rewrite — safe to resolve by hand, never data
-    * loss. */
-  def swap(fs: FileSystem, tmp: Path, target: Path): Unit = {
+    * loss. Like [[recover]]'s rename, it moves `target`'s [[PointStore]]
+    * generation, so a server in this process re-reads a swapped store. */
+  def swap(fs: FileSystem, tmp: Path, target: Path): Unit = PointStore.writing(fs, target) {
     recover(fs, target) // never delete a .bak that is the only copy
     val bak = new Path(target.toString + ".bak")
     if (fs.exists(bak)) fs.delete(bak, true)

@@ -3,7 +3,7 @@ package graft.sources
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
@@ -28,17 +28,22 @@ import graft.model.MetricPoint
  * query's partition pruning then runs over) and the in-memory catalog
  * ([[catalog]]), each loaded on first use. Every write into a directory
  * through this object — [[append]], [[write]], [[writeZOrdered]],
- * [[writeMeta]], [[ageOff]], [[metaAgeOff]], [[ageOffDropPartitions]] —
- * moves that directory's generation on once its files are in place. A reader
- * tags what it loads with the generation it read before listing and reloads
- * when the generation has moved, so a load that raced a write is never kept
- * as current. [[append]] keeps the catalog current itself: it adds the
- * triples it writes to the in-memory catalog instead of re-reading it.
+ * [[writeMeta]], [[ageOff]], [[metaAgeOff]], [[ageOffDropPartitions]] — and
+ * every [[AtomicDir]] swap (the maintenance passes' rewrites) moves that
+ * directory's generation on once its files are in place. A reader tags what
+ * it loads with the generation, and the directory's modification time, read
+ * before listing, and reloads when either has moved, so a load that raced a
+ * write is never kept as current. [[append]] keeps the catalog current
+ * itself: it adds the triples it writes to the in-memory catalog instead of
+ * re-reading it.
  *
- * Contract: one process writes a store — the one that holds the append lock.
- * A write by another process, or by hand into the directories, is not seen
- * by this process's serving reads until one of the writers above touches
- * the same directory.
+ * Contract: one process appends to a store — the one that holds the append
+ * lock. A maintenance pass may run in another process (`graft.tools.
+ * Maintenance` on the served directories): its swaps replace a directory and
+ * [[ageOffDropPartitions]] touches the data directory's modification time,
+ * so the serving process sees the pass on its next request. A write by hand
+ * into the directories, which moves neither, is not seen until one of the
+ * writers above touches the same directory.
  */
 object PointStore {
 
@@ -139,22 +144,26 @@ object PointStore {
 
   // ---- the per-directory serving entries ----------------------------------
 
-  /** A value loaded from a directory, tagged with the directory generation
-    * read before loading it. */
-  private final class Slot[A] {
-    @volatile private var held: Option[(Long, A)] = None
+  /** What a load from a directory is tagged with: the directory's in-JVM
+    * generation, then its modification time (moved by another process's
+    * maintenance pass, see the object doc), both read before loading. */
+  private type Stamp = (Long, Long)
 
-    def get(generation: Long, usable: A => Boolean)(load: => A): A = held match {
-      case Some((`generation`, v)) if usable(v) => v
+  /** A value loaded from a directory, tagged with its [[Stamp]]. */
+  private final class Slot[A] {
+    @volatile private var held: Option[(Stamp, A)] = None
+
+    def get(stamp: Stamp)(load: => A): A = held match {
+      case Some((`stamp`, v)) => v
       case _ =>
         val v = load
-        keep(generation, v)
+        keep(stamp, v)
         v
     }
 
     /** Keep `v` unless a load tagged with a later generation is held. */
-    def keep(generation: Long, v: A): Unit = synchronized {
-      if (held.forall(_._1 <= generation)) held = Some((generation, v))
+    def keep(stamp: Stamp, v: A): Unit = synchronized {
+      if (held.forall(_._1._1 <= stamp._1)) held = Some((stamp, v))
     }
   }
 
@@ -167,34 +176,48 @@ object PointStore {
 
   private val dirs = new ConcurrentHashMap[String, Dir]
 
-  private def dir(spark: SparkSession, path: String): Dir = {
+  private def dir(fs: FileSystem, path: Path): Dir =
+    dirs.computeIfAbsent(fs.makeQualified(path).toString, _ => new Dir)
+
+  /** `path`'s entry and its current [[Stamp]], the generation read first. */
+  private def stamped(spark: SparkSession, path: String): (Dir, Stamp) = {
     val p = new Path(path)
-    val qualified = p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
-    dirs.computeIfAbsent(qualified.toString, _ => new Dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val d = dir(fs, p)
+    val generation = d.generation.get
+    val modified =
+      try fs.getFileStatus(p).getModificationTime
+      catch { case _: java.io.FileNotFoundException => -1L }
+    (d, (generation, modified))
   }
 
   /** Run a write into `path`, then move the directory's generation on — also
     * when the write fails, since it may have left files. Returns the new
     * generation. */
-  private def writing(spark: SparkSession, path: String)(write: => Unit): Long = {
-    val d = dir(spark, path)
+  private[sources] def writing(fs: FileSystem, path: Path)(write: => Unit): Long = {
+    val d = dir(fs, path)
     try write catch { case e: Throwable => d.generation.incrementAndGet(); throw e }
     d.generation.incrementAndGet()
   }
 
-  /** The served points relation of a store: [[readOrEmpty]], listed once per
-    * generation of the directory, so a query prunes partitions over the
-    * cached listing instead of re-listing the store. */
-  def points(spark: SparkSession, dataDir: String): DataFrame = {
-    val d = dir(spark, dataDir)
-    d.points.get(d.generation.get, _.sparkSession eq spark)(readOrEmpty(spark, dataDir))
+  private def writing(spark: SparkSession, path: String)(write: => Unit): Long = {
+    val p = new Path(path)
+    writing(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)(write)
   }
 
-  /** The store's catalog in memory: read from `metaDir` once per generation
+  /** The served points relation of a store: [[readOrEmpty]], listed once per
+    * [[Stamp]] of the directory, so a query prunes partitions over the
+    * cached listing instead of re-listing the store. */
+  def points(spark: SparkSession, dataDir: String): DataFrame = {
+    val (d, stamp) = stamped(spark, dataDir)
+    d.points.get(stamp)(readOrEmpty(spark, dataDir))
+  }
+
+  /** The store's catalog in memory: read from `metaDir` once per [[Stamp]]
     * of the directory and extended by [[append]]. */
   def catalog(spark: SparkSession, metaDir: String): Catalog = {
-    val d = dir(spark, metaDir)
-    d.catalog.get(d.generation.get, _ => true)(Catalog.collect(readMeta(spark, metaDir)))
+    val (d, stamp) = stamped(spark, metaDir)
+    d.catalog.get(stamp)(Catalog.collect(readMeta(spark, metaDir)))
   }
 
   private val appendLock = new Object
@@ -242,7 +265,8 @@ object PointStore {
         spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), MetaSchema)
           .write.mode(SaveMode.Append).parquet(metaDir)
       }
-      dir(spark, metaDir).catalog.keep(generation, known ++ added)
+      val (d, (_, modified)) = stamped(spark, metaDir)
+      d.catalog.keep((generation, modified), known ++ added)
     }
     writePoints
   }
@@ -358,7 +382,9 @@ object PointStore {
    * mirrors the reference row key's hour rounding (MetricAdapter.java:47-53),
    * so only the horizon HOUR retains expired rows (bounded slack < 1 hour) —
    * the query-time [[clampStart]] keeps those invisible, like the
-   * reference's scan-time age-off iterator.
+   * reference's scan-time age-off iterator. A pass that drops anything
+   * touches `dataDir`'s modification time, so a server over the store in
+   * another process re-lists it (see the object doc).
    */
   def ageOffDropPartitions(
       spark: SparkSession,
@@ -403,7 +429,11 @@ object PointStore {
         }
       }
     }
-    if (dryRun) drop() else writing(spark, dataDir)(drop())
+    if (dryRun) drop()
+    else writing(spark, dataDir) {
+      drop()
+      if (dropped.result().nonEmpty) fs.setTimes(root, System.currentTimeMillis(), -1L)
+    }
     dropped.result().sorted
   }
 

@@ -42,6 +42,22 @@ class TimelyApiSpec extends AnyFunSuite with SparkSpec {
     assert(TimelyApi.suggest(Catalog.collect(frame), "metrics", "m.", None, 25) == sparkOrder)
   }
 
+  test("a catalog extended with ++ answers as one collected from all its triples") {
+    val more = Seq(("sys.cpu.user", "host", "web00"), ("sys.cpu.user", "host", "web01"),
+      ("sys", "k", "v"), ("sys.cpu.user", "a", "\uD83D\uDE00"), ("sys.cpu.user", "a", "\uFB01"))
+    val extended = Catalog.collect(meta) ++ more
+    val whole = Catalog.collect(meta.union(more.toDF("metric", "tagk", "tagv")))
+    assert(extended.triples == whole.triples)
+    assert(extended.byMetric == whole.byMetric)
+    assert(extended.sorted == whole.sorted)
+    assert(whole.sorted == whole.sorted.sorted(
+      Ordering.Tuple3(Catalog.StringOrder, Catalog.StringOrder, Catalog.StringOrder)))
+    assert(TimelyApi.suggest(extended, "metrics", "sys", None, 25) ==
+      Seq("sys", "sys.cpu.idle", "sys.cpu.user"))
+    assert(TimelyApi.suggest(extended, "tagv", "sys.cpu.user", Some("a"), 25) ==
+      Seq("\uFB01", "\uD83D\uDE00"))
+  }
+
   test("suggest JSON is a bare array (SuggestResponse serializer shape)") {
     assert(TimelyApi.suggestJson(meta, "metrics", "cpu") ==
       """["sys.cpu.idle","sys.cpu.user"]""")
@@ -69,7 +85,7 @@ class TimelyApiSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("metrics report JSON matches the MetricsResponse shape, ignoring configured tags") {
-    assert(TimelyApi.metricsJson(meta, ignoredTags = Set("rack")) ==
+    assert(TimelyApi.metricsJson(Catalog.collect(meta), Set("rack"), TimelyApi.MetricsMaxRows) ==
       """{"metrics":[""" +
       """{"metric":"net.bytes","tags":[{"key":"iface","value":"eth0"}]},""" +
       """{"metric":"sys.cpu.idle","tags":[{"key":"host","value":"web01"}]},""" +
@@ -80,7 +96,7 @@ class TimelyApiSpec extends AnyFunSuite with SparkSpec {
   test("metrics report collect is hard-capped (pathological tag cardinality)") {
     // cap 2: the report becomes the sorted 2-row catalog prefix — the
     // driver-side collect is bounded no matter the tag cardinality
-    assert(TimelyApi.metricsJson(meta, maxRows = 2) ==
+    assert(TimelyApi.metricsJson(Catalog.collect(meta), Set.empty, 2) ==
       """{"metrics":[""" +
       """{"metric":"net.bytes","tags":[{"key":"iface","value":"eth0"}]},""" +
       """{"metric":"sys.cpu.idle","tags":[{"key":"host","value":"web01"}]}]}""")

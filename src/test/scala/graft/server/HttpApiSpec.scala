@@ -275,6 +275,71 @@ class HttpApiSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll {
     }
   }
 
+  test("a Maintenance pass and a compaction on the served store show on the very next request") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val day = 86400000L
+    val base = Files.createTempDirectory("graft-http-maint").toString
+    val (data, meta) = (s"$base/data", s"$base/meta")
+    withApi(data, meta) { c =>
+      assert(c.post("/api/put", Seq(
+        s"put kept.metric $T 1.0 host=a",
+        s"put kept.metric ${T + 10 * day} 2.0 host=a",
+        s"put gone.metric $T 3.0 host=a").mkString("\n")).statusCode() == 200)
+      assert(c.post("/api/query", rawQuery("kept.metric", 11 * day)).body().contains(s""""$T":1.0"""))
+      assert(c.get("/api/suggest?type=metrics&q=.metric").body() == """["gone.metric","kept.metric"]""")
+      def onlyLatestKept(): Unit = {
+        val q = c.post("/api/query", rawQuery("kept.metric", 11 * day))
+        assert(q.statusCode() == 200, q.body())
+        assert(!q.body().contains(s""""$T":1.0""") &&
+          q.body().contains(s""""${T + 10 * day}":2.0"""), q.body())
+      }
+      val report = graft.tools.Maintenance.run(spark, data, meta,
+        Map("default" -> 5 * day), nowMs = T + 10 * day)
+      assert(report.droppedPartitions == Seq("gone.metric/2024-01-01", "kept.metric/2024-01-01"))
+      onlyLatestKept()
+      // the swapped-in catalog no longer holds the aged-off metric
+      assert(c.get("/api/suggest?type=metrics&q=.metric").body() == """["kept.metric"]""")
+      assert(c.post("/api/query", rawQuery("gone.metric")).statusCode() == 400)
+      // the compaction swap replaces every file the served listing named
+      graft.tools.Maintenance.compactZOrder(spark, data, col("value").cast("long"), lit(0L),
+        bits = 2, numFiles = 1, auditXLo = 0L, auditXHi = 3L)
+      onlyLatestKept()
+    }
+  }
+
+  test("a maintenance pass by another process shows on the next request") {
+    // what such a pass leaves, made here without this JVM's PointStore: day
+    // dirs deleted under a data dir whose modification time moved (as
+    // ageOffDropPartitions leaves it) and a catalog dir swapped in by rename
+    // (as AtomicDir.swap leaves it)
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.functions.col
+    val day = 86400000L
+    val base = Files.createTempDirectory("graft-http-otherproc").toString
+    val (data, meta) = (s"$base/data", s"$base/meta")
+    val fs = new Path(data).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    withApi(data, meta) { c =>
+      assert(c.post("/api/put", Seq(
+        s"put kept.metric $T 1.0 host=a",
+        s"put kept.metric ${T + 10 * day} 2.0 host=a",
+        s"put gone.metric $T 3.0 host=a").mkString("\n")).statusCode() == 200)
+      assert(c.post("/api/query", rawQuery("kept.metric", 11 * day)).body().contains(s""""$T":1.0"""))
+      assert(c.get("/api/suggest?type=metrics&q=.metric").body() == """["gone.metric","kept.metric"]""")
+      Seq("kept.metric", "gone.metric").foreach(m =>
+        assert(fs.delete(new Path(s"$data/metric=$m/dt=2024-01-01"), true)))
+      fs.setTimes(new Path(data), System.currentTimeMillis(), -1L)
+      spark.read.parquet(meta).where(col("metric") === "kept.metric")
+        .write.parquet(s"$meta.tmp")
+      assert(fs.rename(new Path(meta), new Path(s"$meta.bak")) &&
+        fs.rename(new Path(s"$meta.tmp"), new Path(meta)))
+      val q = c.post("/api/query", rawQuery("kept.metric", 11 * day))
+      assert(q.statusCode() == 200, q.body())
+      assert(!q.body().contains(s""""$T":1.0""") &&
+        q.body().contains(s""""${T + 10 * day}":2.0"""), q.body())
+      assert(c.get("/api/suggest?type=metrics&q=.metric").body() == """["kept.metric"]""")
+    }
+  }
+
   test("every append that has returned shows in the next query, while queries run") {
     val base = Files.createTempDirectory("graft-http-race").toString
     val (data, meta) = (s"$base/data", s"$base/meta")

@@ -127,6 +127,22 @@ class PointStoreSpec extends AnyFunSuite with SparkSpec {
     assert(clamped > T + 7 * Day + 3600000L, "the surviving expired row is clamp-hidden")
   }
 
+  test("a partition drop moves the data directory's modification time, a dry run does not") {
+    val dir = Files.createTempDirectory("graft-dropmtime").toString + "/data"
+    PointStore.write(Seq(MetricPoint("sys.a", T, 1.0, Map("h" -> "a"), None)).toDF(), dir)
+    val root = new java.io.File(dir)
+    val written = root.lastModified()
+    Thread.sleep(10)
+    val ttl = Map("default" -> Day)
+    assert(PointStore.ageOffDropPartitions(spark, dir, ttl, T + 3 * Day, dryRun = true) ==
+      Seq("sys.a/2024-01-01"))
+    assert(root.lastModified() == written)
+    // the deleted day dir sits two levels down: only the explicit touch moves
+    // the root, which a server over the store in another process checks
+    assert(PointStore.ageOffDropPartitions(spark, dir, ttl, T + 3 * Day) == Seq("sys.a/2024-01-01"))
+    assert(root.lastModified() > written)
+  }
+
   test("age-off drops per-metric-prefix expired data, longest prefix wins") {
     val base = Files.createTempDirectory("graft-ageoff").toString
     val now = T + 10 * Day
