@@ -6,19 +6,12 @@ import org.apache.spark.storage.StorageLevel
 /** Shared frame utilities for the operator package. */
 private[graft] object Frames {
 
-  /** Dev-only A/B switch for the scale-smoke harnesses: when true,
-    * [[cached]] is a no-op, so the reuse×recompute trade of every
-    * operator-internal cache can be measured against the uncached form
-    * without maintaining forked operator copies. Never set by any
-    * production or driver path. */
-  @volatile private[graft] var disableForAb: Boolean = false
-
   /** Idempotent cache: several operators share sub-frames (signatures,
     * count tables, scored pairs) across calls in one session, so the same
     * logical plan can reach a cache() site twice. Caching an already-cached
     * plan is a no-op that still logs a CacheManager warning per call — check
-    * first. The ONE copy of this guard — Dedup, Curation and TextAnalysis
-    * all route through it.
+    * first. The ONE copy of this guard — every operator-internal cache
+    * routes through it.
     *
     * LIFETIME CONTRACT (session-scoped, audited round 14): an operator-
     * internal cache cannot unpersist itself — the operator returns a LAZY
@@ -27,7 +20,7 @@ private[graft] object Frames {
     * releases them. The contract that keeps this bounded:
     *
     *  1. Every site caches a NARROW projection or an aggregate result it
-    *     built itself (never a caller's frame — see kAnonymitySweep), so
+    *     built itself (never a caller's frame), so
     *     each entry is small relative to its corpus pass.
     *  2. Entries are MEMORY_AND_DISK and LRU-evicted under executor memory
     *     pressure — a full cache never OOMs an executor, it spills/evicts.
@@ -38,6 +31,5 @@ private[graft] object Frames {
     *     sweeps; graft.Bench calls it before every pass.
     */
   def cached(df: DataFrame): DataFrame =
-    if (disableForAb) df
-    else if (df.storageLevel == StorageLevel.NONE) df.cache() else df
+    if (df.storageLevel == StorageLevel.NONE) df.cache() else df
 }

@@ -29,13 +29,19 @@ import graft.streaming.PutLineIngest
  * when the connection pauses for `lingerMs` (so an interactive `telnet put`
  * still lands promptly) — the socket-side analog of the ingest pipeline's
  * micro-batching. Malformed lines are dropped exactly like the reference
- * drops unparseable messages.
+ * drops unparseable messages. A failure that ends a connection or a
+ * datagram (a sink that throws, a frame that does not decode) prints one
+ * stderr line naming the peer, the exception and the parsed points that
+ * were not stored.
  */
 object PutListeners {
 
   /** Decode a batch of text put lines through the shared ingest parser. */
   private def parseLines(lines: Seq[String]): Seq[MetricPoint] =
     lines.flatMap(l => graft.model.MetricParser.parse(l))
+
+  private def reportFailure(peer: String, e: Throwable, unstored: Int): Unit =
+    System.err.println(s"[graft] put from $peer failed: $e; $unstored parsed point(s) not stored")
 
   final class Tcp(sink: Seq[MetricPoint] => Unit,
                   batchSize: Int = 1000, lingerMs: Int = 100) {
@@ -71,6 +77,12 @@ object PutListeners {
     }
 
     private def serve(socket: Socket): Unit = {
+      var unstored = 0 // points of the sink call in progress
+      def store(pts: Seq[MetricPoint]): Unit = if (pts.nonEmpty) {
+        unstored = pts.size
+        sink(pts)
+        unstored = 0
+      }
       try {
         val in = new PushbackInputStream(new BufferedInputStream(socket.getInputStream), 8)
         val head = new Array[Byte](8)
@@ -79,21 +91,20 @@ object PutListeners {
         if (n == 8 && MetricsFlatBuffer.hasIdentifier(head)) {
           // binary batch: one frame per connection, read to EOF
           // (MetricsBufferDecoder's TMFB branch)
-          val frame = in.readAllBytes()
-          val pts = PutLineIngest.decodeFrame(frame)
-          if (pts.nonEmpty) sink(pts)
-        } else serveText(socket, in)
-      } catch { case NonFatal(_) => () }
+          store(PutLineIngest.decodeFrame(in.readAllBytes()))
+        } else serveText(socket, in, store)
+      } catch { case NonFatal(e) => reportFailure(String.valueOf(socket.getRemoteSocketAddress), e, unstored) }
       finally { try socket.close() catch { case NonFatal(_) => () } }
     }
 
-    private def serveText(socket: Socket, in: PushbackInputStream): Unit = {
+    private def serveText(socket: Socket, in: PushbackInputStream,
+                          store: Seq[MetricPoint] => Unit): Unit = {
       socket.setSoTimeout(lingerMs)
       val batch = new ArrayBuffer[String]()
       def flush(): Unit = if (batch.nonEmpty) {
         val pts = parseLines(batch.toSeq)
         batch.clear()
-        if (pts.nonEmpty) sink(pts)
+        store(pts)
       }
       val line = new java.io.ByteArrayOutputStream()
       var open = true
@@ -149,6 +160,7 @@ object PutListeners {
         val buf = new Array[Byte](maxPacket)
         val packet = new DatagramPacket(buf, buf.length)
         while (running) {
+          var unstored = 0
           try {
             socket.receive(packet)
             // one datagram = one frame (text lines or a TMFB batch), exactly
@@ -157,11 +169,14 @@ object PutListeners {
               packet.getData, packet.getOffset, packet.getOffset + packet.getLength)
             if (frame.nonEmpty) {
               val pts = PutLineIngest.decodeFrame(frame)
+              unstored = pts.size
               if (pts.nonEmpty) sink(pts)
             }
           } catch {
             case _: Throwable if !running => ()
-            case NonFatal(_) => ()
+            // the packet's address, not getSocketAddress: that throws
+            // before the first datagram has arrived
+            case NonFatal(e) => reportFailure(s"${packet.getAddress}:${packet.getPort}", e, unstored)
           }
         }
       }, "graft-udp-put-rx")

@@ -174,4 +174,26 @@ class PutListenersSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
       assert(w.toString.contains(s""""${T + 1000}":3.0"""), w.toString)
     } finally tcp.stop()
   }
+
+  test("TCP put whose sink throws reports the peer, the exception and the lost points") {
+    val tcp = new PutListeners.Tcp(_ => throw new RuntimeException("boom"))
+    val port = tcp.start()
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    try {
+      val s = new Socket("127.0.0.1", port)
+      s.getOutputStream.write(s"put sys.cpu.user $T 1.0 tag1=value1\n".getBytes(UTF_8))
+      s.getOutputStream.flush()
+      s.close()
+      def report = err.synchronized(err.toString("UTF-8")).linesIterator.find(_.contains("boom"))
+      val t0 = System.currentTimeMillis()
+      while (report.isEmpty && System.currentTimeMillis() - t0 < 15000L) Thread.sleep(20)
+      val line = report.getOrElse(fail(s"no failure report on stderr: $err"))
+      assert(line.contains("127.0.0.1") && line.contains("1 parsed point(s) not stored"), line)
+    } finally {
+      System.setErr(saved)
+      tcp.stop()
+    }
+  }
 }
