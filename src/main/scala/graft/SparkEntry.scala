@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.queries._
 
-/** Driver contract — see SURVEY.md §7. */
+/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
@@ -13,10 +13,19 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    TimelyQueries.queries ++ ApiQueries.queries
+    TimelyQueries.queries ++ TpchQueries.queries ++ LlmQueries.queries ++
+      ApiQueries.queries ++ AuditQueries.queries
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    TimelyQueries.oracles ++ ApiQueries.oracles
+    TimelyQueries.oracles ++ TpchQueries.oracles ++ LlmQueries.oracles ++
+      ApiQueries.oracles ++ AuditQueries.oracles
+
+  /** Shared-frame builders Bench forces (and times) at the start of each
+    * cache-cold pass, in dependency order — NOT gates (no oracle): pure
+    * bench attribution so a family's memoized build cost is its own line
+    * item instead of landing on its first consumer. */
+  def sharedBuilds: Seq[(String, (SparkSession, String) => Unit)] =
+    LlmQueries.sharedBuilds ++ TpchQueries.sharedBuilds ++ AuditQueries.sharedBuilds
 }

@@ -215,7 +215,7 @@ object Dedup {
   /**
    * Derive a skew cap from the OBSERVED bucket-size distribution instead of a
    * hand-tuned constant — the sizing rule the hand-tuned caps followed
-   * ("below the duplication factor": ScaleSmoke's 100x row showed cap=50
+   * ("below the duplication factor": a 100x replica scale run showed cap=50
    * finishing in 16 s where cap=200 took 100 s on a 100-replica corpus)
    * becomes a property of the data: cap = `factor` x the `quantile`th bucket
    * size, floored at `floor`.

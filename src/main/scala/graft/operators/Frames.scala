@@ -10,8 +10,8 @@ private[graft] object Frames {
     * count tables, scored pairs) across calls in one session, so the same
     * logical plan can reach a cache() site twice. Caching an already-cached
     * plan is a no-op that still logs a CacheManager warning per call — check
-    * first. The ONE copy of this guard — every operator-internal cache
-    * routes through it.
+    * first. The ONE copy of this guard — Dedup, Curation and TextAnalysis
+    * all route through it.
     *
     * LIFETIME CONTRACT (session-scoped, audited round 14): an operator-
     * internal cache cannot unpersist itself — the operator returns a LAZY
@@ -20,7 +20,7 @@ private[graft] object Frames {
     * releases them. The contract that keeps this bounded:
     *
     *  1. Every site caches a NARROW projection or an aggregate result it
-    *     built itself (never a caller's frame), so
+    *     built itself (never a caller's frame — see kAnonymitySweep), so
     *     each entry is small relative to its corpus pass.
     *  2. Entries are MEMORY_AND_DISK and LRU-evicted under executor memory
     *     pressure — a full cache never OOMs an executor, it spills/evicts.

@@ -331,7 +331,8 @@ object TimeSeries {
    * window funnels them through few tasks. Two-level instead: a rank
    * window per (metric, md5-shard) keeps only each shard's top k (bounded
    * input per task at any cardinality), then the final rank runs over ≤
-   * nShards·k survivors. The shard function is engine-reproducible
+   * nShards·k survivors — the [[graft.operators.Curation.topKByLanguage]]
+   * shape on the series key. The shard function is engine-reproducible
    * ([[seriesShard]]), so the oracle replays the exact same two levels.
    *
    * @return (metric, rank, series, value) with rank 1..k per metric,
@@ -464,7 +465,7 @@ object TimeSeries {
    * the [[seasonalError]] baseline choice: r(24) ≈ 1 on an hourly grid says
    * "daily cycle, use the seasonal-naive baseline"; r(k) ≈ 0 everywhere
    * says the metric is noise and banding thresholds should come from
-   * robust (median/MAD) stats instead. Standard ACF:
+   * [[graft.operators.Anomaly]]'s robust stats instead. Standard ACF:
    * `r_k = Σ_{t≤n−k}(x_t−x̄)(x_{t+k}−x̄) / Σ(x_t−x̄)²` over the per-metric
    * hourly cross-series average.
    *
@@ -562,8 +563,8 @@ object TimeSeries {
   /**
    * Single CHANGEPOINT per metric — the split of the bucket series that
    * maximizes the |mean after − mean before| level shift: "when did this
-   * metric step, and by how much" — the breakpoint a CUSUM drift detector
-   * accumulates toward, returned as one row per
+   * metric step, and by how much" — the breakpoint [[graft.operators
+   * .Anomaly.cusumDrift]] accumulates toward, returned as one row per
    * metric with the break time and both side means (binary segmentation's
    * first step; re-run on the halves for more breaks).
    *
@@ -903,6 +904,68 @@ object TimeSeries {
           + element_at(col("st"), 3)).as("forecast_1h"),
         (element_at(col("st"), 1) + lit(m.toDouble) * element_at(col("st"), 2)
           + element_at(col("st"), m + 2)).as("forecast_24h"))
+  }
+
+  /**
+   * STREAMING twin of [[holtForecast]]: per metric, a
+   * `flatMapGroupsWithState` fold whose state is (closed-bucket count, y₁,
+   * level, trend, open bucket, open count) — six numbers, BOUNDED per
+   * metric regardless of volume — updating Holt state each time an hourly
+   * bucket CLOSES (an event arrives for a later bucket). The open bucket
+   * stays pending: its count may still grow, so the emitted state always
+   * covers exactly the closed prefix — feed a sentinel event in a later
+   * bucket to flush the last real bucket, and the emitted row equals
+   * [[holtForecast]] over the closed buckets bit-for-bit (the Scala fold
+   * reuses the identical expression tree: l′ = α·y + (1−α)·(l+b),
+   * b′ = β·(l′−l) + (1−β)·b with α=0.5, β=0.25). Within a batch, buckets
+   * fold in ascending order; events for a bucket BELOW the open one are
+   * late beyond the model's memory and are dropped (the documented tailing
+   * assumption, as in the z-score/CMS twins).
+   *
+   * @return per batch and metric with ≥ 2 closed buckets:
+   *         (metric, n_buckets, level, trend, forecast_1h).
+   */
+  def holtStream(events: DataFrame, bucketMs: Long = 3600000L): DataFrame = {
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    val spark = events.sparkSession
+    import spark.implicits._
+    val a = 0.5d; val ca = 0.5d; val b = 0.25d; val cb = 0.75d
+    val ds = events
+      .select(col("metric").cast("string"), (col("ts") - (col("ts") % lit(bucketMs))).as("b"))
+      .as[(String, Long)]
+    ds.groupByKey(_._1)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (metric: String, rows: Iterator[(String, Long)],
+         state: GroupState[(Long, Double, Double, Double, Long, Long)]) =>
+          var (nClosed, y1, level, trend, openB, openCnt) =
+            state.getOption.getOrElse((0L, 0.0, 0.0, 0.0, Long.MinValue, 0L))
+          def close(y: Double): Unit = {
+            if (nClosed == 0L) y1 = y
+            else if (nClosed == 1L) { level = y1; trend = y - y1 }
+            else {
+              val lNew = a * y + ca * (level + trend)
+              trend = b * (lNew - level) + cb * trend
+              level = lNew
+            }
+            nClosed += 1
+          }
+          // fold this batch's buckets in ascending event-time order
+          val counts = scala.collection.mutable.TreeMap.empty[Long, Long]
+          rows.foreach { case (_, bk) =>
+            if (bk >= openB) counts(bk) = counts.getOrElse(bk, 0L) + 1L
+          } // bk < openB: late beyond memory, dropped
+          counts.foreach { case (bk, c) =>
+            if (bk == openB) openCnt += c
+            else { // a later bucket: close the open one first
+              if (openB != Long.MinValue) close(openCnt.toDouble)
+              openB = bk; openCnt = c
+            }
+          }
+          state.update((nClosed, y1, level, trend, openB, openCnt))
+          if (nClosed < 2L) Iterator.empty
+          else Iterator.single((metric, nClosed, level, trend, level + trend))
+      }
+      .toDF("metric", "n_buckets", "level", "trend", "forecast_1h")
   }
 
   /**

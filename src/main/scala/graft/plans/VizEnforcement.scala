@@ -67,22 +67,88 @@ class VizEnforcementRule extends Rule[LogicalPlan] {
 /** Extension entry point: `.withExtensions(new GraftExtensions)` (or
   * `spark.sql.extensions=graft.plans.GraftExtensions` on a cluster submit —
   * the class is config-instantiable). Besides the enforcement rule it
-  * registers `viz_visible(viz, 'A,B')`, the visibility-label check, as a
-  * named SQL function, so a pure-SQL user gets the same codegen'd check the
-  * Column API uses. */
+  * registers every graft custom expression as a named SQL function, so a
+  * pure-SQL user gets the same codegen'd primitives the Column API uses:
+  *
+  *  - `viz_visible(viz, 'A,B')`        — visibility-label check
+  *  - `float_dot(a, b)`                — sequential double dot of float arrays
+  *  - `simhash_bits(md5_array)`        — packed 64-bit SimHash signature
+  *  - `quant_int8(float_array)`        — int8 max-abs quantization stats struct
+  *  - `lexicon_hits(text, 'w1,w2')`    — lowercased whitespace-token set hits
+  *  - `lexicon_hits_all(text, 'a,b|c')`— all lexicons' hits (|-separated) in one pass
+  *  - `regex_count(text, 'pat')`       — non-overlapping match count, no array
+  *  - `gopher_rep_stats(text)`         — dup-line/top-n-gram repetition struct
+  *  - `min_gram_md5(text, 12)`         — min md5 over character n-grams
+  *  - `bitset_or_agg(pos, 16384)`      — Bloom/bitset OR-fold aggregate
+  *
+  * Lexicon/gram-length arguments configure codegen, so they must be literals
+  * (same restriction Spark's own `format_string` places on its format). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+  import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+
+  private def strLit(e: Expression, usage: String): String = e match {
+    case Literal(s: UTF8String, org.apache.spark.sql.types.StringType) => s.toString
+    case _ => throw new IllegalArgumentException(s"$usage requires a string literal here, got $e")
+  }
+
+  private def intLit(e: Expression, usage: String): Int = e match {
+    case Literal(i: Int, org.apache.spark.sql.types.IntegerType) => i
+    // SQL integer literals past Int range parse as Long — reject rather than
+    // silently truncate (4294967299L.toInt would be gram length 3)
+    case Literal(l: Long, org.apache.spark.sql.types.LongType)
+        if l >= Int.MinValue && l <= Int.MaxValue => l.toInt
+    case _ => throw new IllegalArgumentException(s"$usage requires an Int-range integer literal here, got $e")
+  }
+
+  private def fn(name: String, clazz: Class[_], arity: Int, usage: String)(
+      builder: Seq[Expression] => Expression) = (
+    new FunctionIdentifier(name),
+    new ExpressionInfo(clazz.getName, name),
+    (children: Seq[Expression]) => {
+      require(children.length == arity, usage)
+      builder(children)
+    })
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectResolutionRule(_ => new VizEnforcementRule)
-    ext.injectFunction((
-      new FunctionIdentifier("viz_visible"),
-      new ExpressionInfo(classOf[VizVisible].getName, "viz_visible"),
-      (c: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(c.length == 2, "viz_visible(viz, auths_csv)")
-        VizVisible(c.head, c(1))
-      }))
+    ext.injectFunction(fn("viz_visible", classOf[VizVisible], 2,
+      "viz_visible(viz, auths_csv)")(c => VizVisible(c.head, c(1))))
+    ext.injectFunction(fn("float_dot", classOf[graft.functions.FloatVectorDot], 2,
+      "float_dot(a ARRAY<FLOAT>, b ARRAY<FLOAT>)")(c =>
+      graft.functions.FloatVectorDot(c.head, c(1))))
+    ext.injectFunction(fn("simhash_bits", classOf[graft.functions.SimHashBits], 1,
+      "simhash_bits(md5s ARRAY<STRING>)")(c => graft.functions.SimHashBits(c.head)))
+    ext.injectFunction(fn("quant_int8", classOf[graft.functions.FloatQuantStats], 1,
+      "quant_int8(v ARRAY<FLOAT>)")(c => graft.functions.FloatQuantStats(c.head)))
+    ext.injectFunction(fn("quant_int8_vec", classOf[graft.functions.QuantizeInt8Vec], 1,
+      "quant_int8_vec(v ARRAY<FLOAT>)")(c => graft.functions.QuantizeInt8Vec(c.head)))
+    ext.injectFunction(fn("int8_dot", classOf[graft.functions.Int8DotProduct], 2,
+      "int8_dot(a ARRAY<TINYINT>, b ARRAY<TINYINT>)")(c =>
+      graft.functions.Int8DotProduct(c.head, c(1))))
+    ext.injectFunction(fn("lexicon_hits", classOf[graft.functions.LexiconHits], 2,
+      "lexicon_hits(text, 'w1,w2,...')")(c =>
+      graft.functions.LexiconHits(c.head,
+        strLit(c(1), "lexicon_hits(text, 'w1,w2,...')").split(",").toSeq)))
+    ext.injectFunction(fn("min_gram_md5", classOf[graft.functions.MinGramMd5], 2,
+      "min_gram_md5(text, gram_len)")(c =>
+      graft.functions.MinGramMd5(c.head, intLit(c(1), "min_gram_md5(text, gram_len)"))))
+    ext.injectFunction(fn("nfc_normalize", classOf[graft.functions.NfcNormalize], 1,
+      "nfc_normalize(text)")(c => graft.functions.NfcNormalize(c.head)))
+    ext.injectFunction(fn("regex_count", classOf[graft.functions.RegexCount], 2,
+      "regex_count(text, 'pattern')")(c =>
+      graft.functions.RegexCount(c.head, strLit(c(1), "regex_count(text, 'pattern')"))))
+    ext.injectFunction(fn("lexicon_hits_all", classOf[graft.functions.LexiconHitsAll], 2,
+      "lexicon_hits_all(text, 'w1,w2|w3,w4|...')")(c =>
+      graft.functions.LexiconHitsAll(c.head,
+        strLit(c(1), "lexicon_hits_all(text, 'w1,w2|w3,w4|...')")
+          .split("\\|", -1).toSeq.map(_.split(",").toSeq))))
+    ext.injectFunction(fn("gopher_rep_stats", classOf[graft.functions.GopherRepStats], 1,
+      "gopher_rep_stats(text)")(c => graft.functions.GopherRepStats(c.head)))
+    ext.injectFunction(fn("bitset_or_agg", classOf[graft.functions.BitsetOrAgg], 2,
+      "bitset_or_agg(pos BIGINT, num_words)")(c =>
+      graft.functions.BitsetOrAgg(c.head,
+        intLit(c(1), "bitset_or_agg(pos, num_words)")).toAggregateExpression()))
   }
 }

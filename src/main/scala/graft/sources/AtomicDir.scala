@@ -4,10 +4,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 /**
  * Crash-safe directory publication primitives shared by every maintained
- * store directory (the points store and its meta catalog): stage a rewrite
- * into a `.tmp` sibling, then [[swap]] it into place so that at every
- * instant either the old or the new directory exists under a recoverable
- * name. The reference
+ * store artifact (points/meta catalog, SCD2 dimension, IVF index, BM25
+ * postings, LSH signatures, DP releases): stage a rewrite into a `.tmp`
+ * sibling, then [[swap]] it into place so that at every instant either the
+ * old or the new directory exists under a recoverable name. The reference
  * gets the same guarantee from Accumulo's RFile compaction commit protocol
  * (server/src/main/java/timely/server/store/compaction/ — a tablet's files
  * are swapped atomically in the metadata table); on a plain filesystem the

@@ -8,7 +8,7 @@ import graft.SparkSpec
 /**
  * Auto-sized skew caps ([[Dedup.autoBucketCap]] and friends): the hand-tuned
  * cap contract — "size the cap below the corpus's duplication factor"
- * (ScaleSmoke's 100x row: cap=50 -> 16 s, cap=200 -> 100 s on a 100-replica
+ * (a 100x replica scale run: cap=50 -> 16 s, cap=200 -> 100 s on a 100-replica
  * corpus) — derived from the observed bucket-size distribution instead of a
  * constant, so a corpus change cannot silently violate it.
  */
@@ -25,7 +25,7 @@ class AutoCapSpec extends AnyFunSuite with SparkSpec {
     assert(Dedup.autoBucketCap(uniform, "bn", quantile = 0.99, factor = 0.5, floor = 8L) == 8L)
   }
 
-  /** Replica corpus like ScaleSmoke's: `reps` near-identical siblings per
+  /** Replica corpus like that scale run's: `reps` near-identical siblings per
     * base doc — every LSH bucket is a reps-clique. */
   private def replicaCorpus(reps: Int): DataFrame =
     (0L until 8L).flatMap { i =>

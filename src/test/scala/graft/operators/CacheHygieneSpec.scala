@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.functions._
 
 /**
  * Pins the [[Frames.cached]] lifetime contract (round-14 audit item): every
@@ -15,22 +16,33 @@ class CacheHygieneSpec extends SparkSpec {
   import spark.implicits._
 
   test("clearCache releases every operator-internal Frames.cached entry") {
-    val pts = (0L until 64L)
-      .map(i => (s"m${i % 4}", i * 1000L, (i % 7).toDouble, Map("host" -> s"h${i % 5}")))
-      .toDF("metric", "ts", "value", "tags")
+    val docs = (1L to 60L)
+      .map(i => (i, s"alpha beta gamma doc$i token${i % 7} word${i % 5}", s"src${i % 3}"))
+      .toDF("doc_id", "text", "source")
+    val events = (1L to 300L)
+      .map(i => (s"u${i % 9}", i * 60000L, s"t${i % 4}", i))
+      .toDF("user_id", "ts_ms", "event_type", "event_id")
+    val edges = (1L to 40L).map(i => (s"n${i % 11}", s"n${(i * 3) % 11}"))
+      .filter { case (a, b) => a != b }.toSeq.toDF("src", "dst")
 
-    // every cache-creating operator of the time-series surface
-    TimeSeries.theilSen(pts, bucketMs = 4000L).count()
-    Summarization.summarize(pts, 60000L).count()
+    // a representative set of cache-creating operators across families
+    TextAnalysis.pmiBigrams(docs).count()
+    Graph.triangles(edges).count()
+    Graph.adamicAdar(edges).count()
+    Funnel.hourEntropy(events).count()
+    Anomaly.madOutliers(events.select(col("user_id"), col("event_id"),
+      (col("ts_ms") % 97).cast("double").as("value")), "user_id", "value", "event_id").count()
+    Privacy.kAnonymitySweep(
+      docs.select(col("source"), (col("doc_id") % 10).as("age")),
+      Seq("source"), "age", Seq(2L, 5L), k = 3).count()
 
     val cachedNow = spark.sparkContext.getPersistentRDDs.size
     assert(cachedNow > 0, "expected the operator sweep to create cached frames")
     spark.catalog.clearCache()
-    // clearCache must release every catalog-registered cache entry. This
-    // global check relies on the suites of one forked test JVM running one
-    // after another (sbt's default; the build never enables parallel suite
-    // execution inside a fork): a concurrently running suite could register
-    // a new cache between these two statements.
+    // clearCache must release every catalog-registered cache entry. Other
+    // concurrently-running suites may create NEW caches between these two
+    // statements, so assert on emptiness of what remains from OUR operators
+    // via the catalog: no cached plans remain registered.
     assert(spark.sharedState.cacheManager.isEmpty,
       "clearCache left catalog-registered cache entries behind")
   }

@@ -1,13 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, expr}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
 
 /** Z-order layout semantics: the Morton interleave against a reference
-  * implementation. The file-envelope skip report is pinned on a written
-  * store by `ZOrderStoreSpec`. */
+  * implementation, envelope tightness in the profile, and the skip-ratio
+  * audit's exact counts on a constructed grid. */
 class LayoutSpec extends AnyFunSuite with SparkSpec {
 
   import spark.implicits._
@@ -23,5 +23,42 @@ class LayoutSpec extends AnyFunSuite with SparkSpec {
       assert(r.getLong(2) == mortonRef(r.getLong(0), r.getLong(1), 8),
         s"(${r.getLong(0)}, ${r.getLong(1)})")
     }
+  }
+
+  test("mortonSql generates the identical interleave as the Column form") {
+    val pairs = Seq((0L, 0L), (1L, 0L), (0L, 1L), (255L, 255L), (170L, 85L))
+    val df = pairs.toDF("x", "y")
+      .withColumn("zc", Layout.mortonKey(col("x"), col("y"), 8))
+      .withColumn("zs", expr(Layout.mortonSql("x", "y", 8)))
+    df.collect().foreach(r => assert(r.getLong(2) == r.getLong(3)))
+  }
+
+  test("zorderProfile envelopes cover exactly the bucket's points") {
+    // a full 16x16 grid with 4-bit keys: buckets of 16 consecutive z values
+    // are exactly the 4x4 quadrants of the Z curve
+    val grid = (for (x <- 0L until 16L; y <- 0L until 16L) yield (x, y)).toDF("x", "y")
+    val prof = Layout.zorderProfile(grid, col("x"), col("y"), bits = 4, bucketSize = 16L)
+      .collect().map(r => r.getAs[Long]("zbucket") ->
+        (r.getAs[Long]("n"), r.getAs[Long]("x_min"), r.getAs[Long]("x_max"),
+          r.getAs[Long]("y_min"), r.getAs[Long]("y_max"))).toMap
+    assert(prof.size == 16)
+    prof.foreach { case (_, (n, xmin, xmax, ymin, ymax)) =>
+      assert(n == 16L)
+      assert(xmax - xmin == 3L && ymax - ymin == 3L,
+        "each 16-value z bucket is a tight 4x4 quadrant in both dims")
+    }
+  }
+
+  test("pruneAudit: z-order skips most files for an x-slab; y-major skips none") {
+    val grid = (for (x <- 0L until 16L; y <- 0L until 16L) yield (x, y)).toDF("x", "y")
+    val r = Layout.pruneAudit(grid, col("x"), col("y"), bits = 4,
+      bucketSize = 16L, xLo = 0L, xHi = 3L).collect().head
+    assert(r.getAs[Long]("z_total") == 16L && r.getAs[Long]("lin_total") == 16L)
+    // the x<=3 slab is one column of Z quadrants: 4 of 16 files touched
+    assert(r.getAs[Long]("z_touched") == 4L)
+    // y-major files each span all x: every file touched
+    assert(r.getAs[Long]("lin_touched") == 16L)
+    assert(r.getAs[Double]("z_skip_ratio") == 0.75)
+    assert(r.getAs[Double]("lin_skip_ratio") == 0.0)
   }
 }

@@ -16,9 +16,8 @@ import graft.SparkSpec
  * below) the swept bound; a regression that re-introduces a duplicated
  * scan subtree fails here, not in a driver round.
  *
- * Counting matches tools/plan_sweep.py over explain("formatted"): physical
- * FileSourceScanExec nodes including subquery plans; cached (InMemory)
- * subtrees are intentionally NOT descended — a memoized frame's build cost
+ * The count is taken over the executed physical plan: FileSourceScanExec
+ * nodes including subquery plans; cached (InMemory) subtrees are intentionally NOT descended — a memoized frame's build cost
  * is its builder's, not the consumer's.
  */
 class PlanSweepSpec extends AnyFunSuite with SparkSpec {

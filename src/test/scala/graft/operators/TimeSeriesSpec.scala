@@ -297,183 +297,4 @@ class TimeSeriesSpec extends AnyFunSuite with SparkSpec {
     // single-bucket series: grid is just itself
     assert(out.keys.count(_._1 == "host=h2") == 1)
   }
-
-  private def pts(vals: Seq[Double]) =
-    vals.zipWithIndex.map { case (v, i) =>
-      ("m", Map("user" -> "1"), i.toLong, v)
-    }.toDF("metric", "tags", "ts", "value")
-
-  private def windowExecs(df: org.apache.spark.sql.DataFrame) =
-    df.queryExecution.executedPlan.collect {
-      case w: org.apache.spark.sql.execution.window.WindowExec => w
-    }
-
-  test("holtForecast replays the level/trend recursion exactly") {
-    val hour = 3600000L
-    // metric m: hourly counts 1, 2, 4 (buckets 0, 1, 2)
-    val pts = (Seq.fill(1)(0L) ++ Seq.fill(2)(hour) ++ Seq.fill(4)(2 * hour))
-      .map(ts => ("m", "s", ts, 1.0)).toDF("metric", "series", "ts", "value")
-    val out = TimeSeries.holtForecast(pts).collect().head
-    // init l=1, b=2-1=1; fold y=4: l' = .5*4 + .5*(1+1) = 3; b' = .25*(3-1) + .75*1 = 1.25
-    assert(out.getLong(1) == 3L)
-    assert(out.getDouble(2) == 3.0 && out.getDouble(3) == 1.25)
-    assert(out.getDouble(4) == 4.25 && out.getDouble(5) == 3.0 + 24.0 * 1.25)
-  }
-
-  test("holtForecast with exactly two buckets returns the init state") {
-    val hour = 3600000L
-    val pts = (Seq.fill(2)(0L) ++ Seq.fill(5)(hour))
-      .map(ts => ("m", "s", ts, 1.0)).toDF("metric", "series", "ts", "value")
-    val out = TimeSeries.holtForecast(pts).collect().head
-    assert(out.getLong(1) == 2L && out.getDouble(2) == 2.0 && out.getDouble(3) == 3.0)
-  }
-
-  test("holtWinters: a perfectly periodic series is absorbed by the seasonal state") {
-    val hour = 3600000L
-    // period 4, pattern (1,2,3,4) x 3 seasons: l0 = 2.5, s = (-1.5,-.5,.5,1.5);
-    // every fold step sees y - s_{t-4} = 2.5 -> level pinned at 2.5, trend 0,
-    // seasonal slots unchanged, 1-step forecast = the true next value (1)
-    val counts = Seq(1, 2, 3, 4, 1, 2, 3, 4, 1, 2, 3, 4)
-    val pts = counts.zipWithIndex.flatMap { case (c, h) =>
-      Seq.fill(c)(("m", "s", h * hour, 1.0))
-    }.toDF("metric", "series", "ts", "value")
-    val out = TimeSeries.holtWintersForecast(pts, period = 4).collect().head
-    assert(out.getAs[Long]("n_buckets") == 12L)
-    assert(out.getAs[Double]("level") == 2.5 && out.getAs[Double]("trend") == 0.0)
-    assert(out.getAs[Double]("seasonal_next") == -1.5)
-    assert(out.getAs[Double]("forecast_1h") == 1.0)
-    // h = period uses the freshest slot: 2.5 + 4*0 + 1.5 = 4
-    assert(out.getAs[Double]("forecast_24h") == 4.0)
-  }
-
-  test("holtWinters: below period+1 buckets excluded; one step replays by hand") {
-    val hour = 3600000L
-    // period 2, counts 1, 3, 5: l0 = 2, b0 = 0, s = (-1, 1); fold y = 5:
-    // l' = .5*(5 - (-1)) + .5*(2 + 0) = 4; b' = .25*(4-2) + .75*0 = 0.5;
-    // s' = .25*(5-4) + .75*(-1) = -0.5 -> state [4, .5, s2=1, s'=-0.5]
-    val counts = Seq(1, 3, 5)
-    val pts = counts.zipWithIndex.flatMap { case (c, h) =>
-      Seq.fill(c)(("m", "s", h * hour, 1.0))
-    }.toDF("metric", "series", "ts", "value")
-    val out = TimeSeries.holtWintersForecast(pts, period = 2).collect().head
-    assert(out.getAs[Double]("level") == 4.0 && out.getAs[Double]("trend") == 0.5)
-    assert(out.getAs[Double]("seasonal_next") == 1.0)  // slot for t+1 (rotated)
-    assert(out.getAs[Double]("forecast_1h") == 5.5)
-    // too-short series produce no row
-    val short = Seq(1, 2).zipWithIndex.flatMap { case (c, h) =>
-      Seq.fill(c)(("m", "s", h * hour, 1.0))
-    }.toDF("metric", "series", "ts", "value")
-    assert(TimeSeries.holtWintersForecast(short, period = 2).count() == 0L)
-  }
-
-  test("theilSen recovers a clean linear trend and shrugs off an outlier bucket") {
-    val hour = 3600000L
-    // metric m: counts 1, 2, 3, ..., 8 (slope exactly 1), with bucket 5
-    // replaced by a 100-count outlier
-    val pts = (0 until 8).flatMap { h =>
-      val n = if (h == 5) 100 else h + 1
-      Seq.fill(n)(("m", "s", h * hour, 1.0))
-    }.toDF("metric", "series", "ts", "value")
-    val out = TimeSeries.theilSen(pts).collect().head
-    assert(out.getLong(1) == 8L && out.getLong(2) == 28L) // C(8,2) pairs
-    assert(out.getDouble(3) == 1.0)   // median slope survives the outlier
-  }
-
-  test("seasonalError: exact-lag pairs only, MAE/WMAPE, zero-actual NULL") {
-    val p = 1000L
-    val pts = Seq(
-      ("m", "s", 0L, 2.0), ("m", "s", p, 3.0), ("m", "s", 2 * p, 1.0),
-      ("m", "s", 3 * p + 1, 9.0), // off-grid: no partner either way
-      ("m", "z", 0L, 0.0), ("m", "z", p, 0.0))
-      .toDF("metric", "series", "ts", "value")
-    val out = TimeSeries.seasonalError(pts, p).collect()
-      .map(r => r.getString(1) -> r).toMap
-    val s = out("s") // pairs: (3,2), (1,3) -> abs errs 1, 2; actuals 3, 1
-    assert(s.getLong(2) == 2L && s.getDouble(3) == 1.5)
-    assert(s.getDouble(4) == 3.0 / 4.0)
-    val z = out("z") // one pair of zeros: mae 0, wmape NULL
-    assert(z.getLong(2) == 1L && z.getDouble(3) == 0.0 && z.isNullAt(4))
-  }
-
-  test("topSeries: two-level prune equals the global top-k, ties on series") {
-    val pts = (0L until 60L).map { i =>
-      ("m", Map("h" -> s"h${i % 12}"), i, (i % 12).toDouble) // series h11 sums highest
-    }.toDF("metric", "tags", "ts", "value")
-    val out = TimeSeries.topSeries(pts, "sum", k = 3, nShards = 4).collect()
-      .map(r => (r.getLong(1), r.getString(2), r.getDouble(3)))
-    assert(out.length == 3)
-    assert(out.map(_._1).toSeq == Seq(1L, 2L, 3L))
-    assert(out.head._2 == "h=h11" && out.head._3 == 55.0)
-    // sharding must not change the answer
-    val wide = TimeSeries.topSeries(pts, "sum", k = 3, nShards = 1).collect()
-      .map(r => (r.getLong(1), r.getString(2), r.getDouble(3)))
-    assert(wide.toSeq == out.toSeq)
-  }
-
-  test("gapReport: max gap, bucket coverage, single-point series") {
-    val p = 3600000L
-    val pts = Seq(
-      ("m", "s", 0L, 1.0), ("m", "s", 1000L, 1.0),      // same bucket
-      ("m", "s", 3 * p, 1.0),                            // skips buckets 1-2
-      ("m", "z", 42L, 1.0))                              // single point
-      .toDF("metric", "series", "ts", "value")
-    val out = TimeSeries.gapReport(pts, p).collect().map(r => r.getString(1) -> r).toMap
-    val s = out("s")
-    assert(s.getLong(2) == 3L && s.getLong(6) == 3 * p - 1000L) // max gap
-    assert(s.getLong(7) == 2L && s.getLong(8) == 4L)            // 2 of 4 buckets
-    assert(s.getDouble(9) == 0.5)
-    val z = out("z")
-    assert(z.getLong(2) == 1L && z.isNullAt(6) && z.getDouble(9) == 1.0)
-  }
-
-  test("downsamplePercentile: nearest-rank pick, p=1 max, small-n floor") {
-    val d = pts((1 to 100).map(_.toDouble))
-    def v(p: Double) =
-      TimeSeries.downsamplePercentile(d, 3600000L, p).collect()(0).getDouble(3)
-    assert(v(0.95) == 95.0) // ceil(0.95*100)=95
-    assert(v(1.0) == 100.0)
-    assert(v(0.001) == 1.0) // ceil rounds up to rank 1
-    val one = pts(Seq(42.0))
-    assert(TimeSeries.downsamplePercentile(one, 3600000L, 0.5).collect()(0).getDouble(3) == 42.0)
-  }
-
-  test("downsamplePercentile: buckets and series are independent") {
-    val d = Seq(
-      ("m", Map("user" -> "1"), 0L, 1.0),
-      ("m", Map("user" -> "1"), 1L, 9.0),
-      ("m", Map("user" -> "1"), 3600000L, 5.0),
-      ("m", Map("user" -> "2"), 0L, 7.0)).toDF("metric", "tags", "ts", "value")
-    val out = TimeSeries.downsamplePercentile(d, 3600000L, 0.95).collect()
-      .map(r => (r.getString(1), r.getLong(2)) -> r.getDouble(3)).toMap
-    assert(out == Map(("user=1", 0L) -> 9.0, ("user=1", 3600000L) -> 5.0,
-      ("user=2", 0L) -> 7.0))
-    intercept[IllegalArgumentException] {
-      TimeSeries.downsamplePercentile(d, 3600000L, 0.0)
-    }
-  }
-
-  test("plan: downsamplePercentile runs without window functions") {
-    val d = pts(Seq(1.0, 2.0))
-    assert(windowExecs(TimeSeries.downsamplePercentile(d, 3600000L, 0.5)).isEmpty,
-      "percentile downsample must be a bounded per-group pick, not a corpus window")
-  }
-
-  test("TimeSeries operators survive degenerate inputs") {
-    // seasonalError: single-point series have no lag partner -> absent
-    val onePt = Seq(("m", "s", 0L, 1.0)).toDF("metric", "series", "ts", "value")
-    assert(TimeSeries.seasonalError(onePt, 1000L).count() == 0)
-    // downsamplePercentile: empty input; NULL-free single bucket
-    val noPts = Seq.empty[(String, Map[String, String], Long, Double)]
-      .toDF("metric", "tags", "ts", "value")
-    assert(TimeSeries.downsamplePercentile(noPts, 1000L, 0.5).count() == 0)
-    // autocorrelation: single-bucket series -> 0 pairs, NULL acf, no throw
-    val oneSeriesPt = Seq(("m", 0L, 1.0)).toDF("metric", "ts", "value")
-    val ac = TimeSeries.autocorrelation(oneSeriesPt).collect()
-    assert(ac.length == 3 && ac.forall(r => r.getLong(3) == 0L && r.isNullAt(4)))
-    assert(TimeSeries.crossCorrelation(
-      Seq(("m", 0L, 1.0)).toDF("metric", "ts", "value")).count() == 0)
-    // trendReport on an empty points frame -> empty
-    assert(TimeSeries.trendReport(
-      Seq.empty[(String, Long, Double)].toDF("metric", "ts", "value")).count() == 0)
-  }
 }

@@ -10,8 +10,8 @@ import graft.model.MetricPoint
 
 /**
  * The `SparkSessionExtensions` entry point end-to-end: a session built
- * `.withExtensions(new GraftExtensions)` exposes `viz_visible` as a SQL
- * function and injects the visibility-enforcement rule —
+ * `.withExtensions(new GraftExtensions)` exposes every graft custom
+ * expression as a SQL function and injects the visibility-enforcement rule —
  * the pure-SQL user's surface (`spark.sql.extensions=graft.plans.GraftExtensions`).
  */
 class GraftExtensionsSpec extends AnyFunSuite with SparkSpec {
@@ -38,6 +38,79 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkSpec {
     val r = ext.sql(
       "SELECT viz_visible('A', 'A,B') AS yes, viz_visible('A&C', 'A,B') AS no").head()
     assert(r.getBoolean(0) && !r.getBoolean(1))
+  }
+
+  test("float_dot is SQL-callable and sums sequentially") {
+    val r = ext.sql(
+      """SELECT float_dot(array(cast(1.0 as float), cast(2.0 as float)),
+        |                 array(cast(3.0 as float), cast(4.0 as float))) AS d""".stripMargin).head()
+    assert(r.getDouble(0) == 11.0)
+  }
+
+  test("simhash_bits matches the Column API") {
+    val viaSql = ext.sql("SELECT simhash_bits(array(md5('a'), md5('b'), md5('c'))) AS s").head().getLong(0)
+    val viaCol = {
+      import org.apache.spark.sql.functions._
+      spark.range(1).select(
+        graft.functions.VectorFunctions.simhashBits(array(md5(lit("a")), md5(lit("b")), md5(lit("c")))))
+        .head().getLong(0)
+    }
+    assert(viaSql == viaCol)
+  }
+
+  test("lexicon_hits counts lowercased token membership; lexicon must be a literal") {
+    val r = ext.sql("SELECT lexicon_hits('The cat AND the dog', 'the,and') AS h").head()
+    assert(r.getInt(0) == 3)
+    val e = intercept[Exception](ext.sql("SELECT lexicon_hits('x', upper('a'))").collect())
+    assert(e.getMessage.contains("literal"))
+  }
+
+  test("regex_count, lexicon_hits_all, gopher_rep_stats are SQL-callable") {
+    val r = ext.sql(
+      "SELECT regex_count('a!b?c', '[^A-Za-z0-9 ]') AS c, " +
+      "lexicon_hits_all('the cat und der hund', 'the,a|und,der') AS h").head()
+    assert(r.getInt(0) == 2)
+    assert(r.getSeq[Int](1) == Seq(1, 2))
+    val e = intercept[Exception](ext.sql("SELECT regex_count('x', upper('a'))").collect())
+    assert(e.getMessage.contains("literal"))
+    val g = ext.sql("SELECT gopher_rep_stats('x y\nz\nz').n_lines AS nl, " +
+      "gopher_rep_stats('x y\nz\nz').dup_line_occ AS d").head()
+    assert(g.getInt(0) == 3 && g.getInt(1) == 2)
+  }
+
+  test("min_gram_md5 equals the min md5 over character n-grams") {
+    val expected = "abcdef".sliding(3).map { g =>
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(g.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    }.min
+    val r = ext.sql("SELECT min_gram_md5('abcdef', 3) AS f, min_gram_md5('ab', 3) AS short").head()
+    assert(r.getString(0) == expected)
+    assert(r.isNullAt(1)) // shorter than the gram -> null, like array_min([])
+    // a Long SQL literal in Int range is accepted; past Int range it is
+    // rejected, not silently truncated (4294967299 would otherwise become 3)
+    assert(ext.sql("SELECT min_gram_md5('abcdef', 3L) AS f").head().getString(0) == expected)
+    val e = intercept[Exception](ext.sql("SELECT min_gram_md5('abcdef', 4294967299)").collect())
+    assert(e.getMessage.contains("Int-range"))
+  }
+
+  test("nfc_normalize is SQL-callable: composes the decomposed form") {
+    // 'e' + U+0301 (combining acute) must compose to U+00E9 (Spark's chr()
+    // is ASCII-mod-256, so the combining char goes in as a string literal)
+    val r = ext.sql("SELECT nfc_normalize('é') AS n, nfc_normalize('plain') AS p").head()
+    assert(r.getString(0) == "é")
+    assert(r.getString(1) == "plain")
+  }
+
+  test("bitset_or_agg is SQL-callable and matches the Column API build") {
+    // positions 0, 1, 64, 127 -> word0 bits 0+1 = 3, word1 bits 0+63
+    val r = ext.sql(
+      "SELECT bitset_or_agg(pos, 2) AS bits FROM VALUES (0L), (1L), (64L), (127L) AS t(pos)")
+      .head().getSeq[Long](0)
+    assert(r == Seq(3L, 1L | (1L << 63)))
+    // num_words must be a literal (it sizes the aggregation buffer)
+    val e = intercept[Exception](
+      ext.sql("SELECT bitset_or_agg(pos, pos) FROM VALUES (0L) AS t(pos)").collect())
+    assert(e.getMessage.contains("integer literal"))
   }
 
   test("the enforcement rule rides the extension session") {

@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -425,5 +426,196 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     q.processAllAvailable()
     subs.close("s")
     assert(received.size() == 1 && received.peek() == T + 50000)
+  }
+
+  test("streaming bloom screen: micro-batches probe one prebuilt history bitset") {
+    import graft.operators.Dedup
+    // history built ONCE (the bloomBits build/probe split's whole point) and
+    // reused by every micro-batch through the stream-static broadcast join
+    val history = Seq((0L, "seen doc alpha"), (1L, "seen doc beta"))
+      .toDF("doc_id", "text")
+    val bits = Dedup.bloomBits(history).cache()
+    val input = MemoryStream[(Long, String)]
+    val screened = Dedup.bloomFlag(
+      input.toDS().toDF("doc_id", "text"), bits)
+    val q = screened.writeStream.format("memory").queryName("bloom_stream").start()
+    input.addData((10L, "seen doc alpha"), (11L, "fresh doc gamma"))
+    q.processAllAvailable()
+    input.addData((12L, "seen doc beta"), (13L, "fresh doc delta"))
+    q.processAllAvailable()
+    val rows = spark.table("bloom_stream")
+      .select("doc_id", "dup_hit").as[(Long, Boolean)].collect().toMap
+    q.stop()
+    // no false negatives across batches; the fresh docs pass (this fixture
+    // has no FP collision — pinned by the equality spec in PipelineOpsSpec)
+    assert(rows == Map(10L -> true, 11L -> false, 12L -> true, 13L -> false))
+    // flag and filter share one predicate: hits == bloomProbe's row set
+    val hits = Dedup.bloomProbe(
+      Seq((10L, "seen doc alpha"), (11L, "fresh doc gamma"),
+        (12L, "seen doc beta"), (13L, "fresh doc delta")).toDF("doc_id", "text"),
+      bits).select("doc_id").as[Long].collect().toSet
+    assert(hits == rows.filter(_._2).keySet)
+    bits.unpersist()
+  }
+
+  test("streaming simhash screen: one-batch stream rollup == batch near-dup screen") {
+    import graft.operators.Dedup
+    val ws = (0 until 100).map(i => s"w$i")
+    val corpus = ((0L, ws.mkString(" ")) +:
+      (1L to 6L).map(i => (i, ws.updated(5 * i.toInt, s"changed$i").mkString(" "))) :+
+      (50L, (0 until 100).map(i => s"zzz$i").mkString(" ")))
+    val input = MemoryStream[(Long, String)]
+    val screened = Dedup.simhashStreamScreen(
+      input.toDS().toDF("doc_id", "text"), maxHamming = 6, maxPerBucket = 4)
+    val q = screened.writeStream.format("memory").queryName("simhash_stream")
+      .outputMode("append").start()
+    input.addData(corpus: _*)
+    q.processAllAvailable()
+    // per-doc rollup over the 28 bucket verdicts: flag = OR, best match =
+    // min (hamming, match_id) — the cmsStream per-lane pattern
+    val rolled = spark.table("simhash_stream")
+      .groupBy("doc_id")
+      .agg(org.apache.spark.sql.functions.max("near_dup").as("near_dup"),
+        org.apache.spark.sql.functions.min(
+          org.apache.spark.sql.functions.when(col("near_dup") === 1L,
+            org.apache.spark.sql.functions.struct(col("hamming"), col("match_id")))).as("m"))
+      .select(col("doc_id"), col("near_dup"), col("m.match_id"), col("m.hamming"))
+      .collect().map(r => r.getLong(0) -> ((r.getLong(1),
+        if (r.isNullAt(2)) None else Some(r.getLong(2)),
+        if (r.isNullAt(3)) None else Some(r.getLong(3))))).toMap
+    val batch = Dedup.simhashScreen(corpus.toDF("doc_id", "text"),
+        maxHamming = 6, maxPerBucket = 4)
+      .collect().map(r => r.getLong(0) -> ((r.getLong(1),
+        if (r.isNullAt(2)) None else Some(r.getLong(2)),
+        if (r.isNullAt(3)) None else Some(r.getLong(3))))).toMap
+    assert(rolled == batch, "one-batch stream must reproduce the batch screen exactly")
+    // cross-batch state: a later batch's near-dup of doc 0 still flags
+    input.addData((100L, ws.updated(3, "later").mkString(" ")))
+    q.processAllAvailable()
+    val later = spark.table("simhash_stream").where(col("doc_id") === 100L)
+      .agg(org.apache.spark.sql.functions.max("near_dup")).collect().head.getLong(0)
+    q.stop()
+    assert(later == 1L, "representatives persist across micro-batches")
+  }
+
+  test("holt stream: closed-prefix state == batch holtForecast, open bucket pending") {
+    import graft.operators.TimeSeries
+    val hour = 3600000L
+    // hourly counts 1, 2, 4 (buckets 0-2); a sentinel in bucket 3 closes
+    // bucket 2 so the closed prefix is exactly the batch fixture
+    val real = (Seq.fill(1)(0L) ++ Seq.fill(2)(hour) ++ Seq.fill(4)(2 * hour))
+      .map(ts => ("m", ts))
+    val input = MemoryStream[(String, Long)]
+    val out = TimeSeries.holtStream(input.toDS().toDF("metric", "ts"))
+    val q = out.writeStream.format("memory").queryName("holt_stream")
+      .outputMode("append").start()
+    input.addData(real :+ ("m", 3 * hour): _*)
+    q.processAllAvailable()
+    val last = spark.table("holt_stream").orderBy(col("n_buckets").desc)
+      .collect().head
+    val batch = TimeSeries.holtForecast(
+      real.map { case (m, ts) => (m, "s", ts, 1.0) }.toDF("metric", "series", "ts", "value"))
+      .collect().head
+    assert(last.getLong(1) == batch.getLong(1))                 // n_buckets
+    assert(last.getDouble(2) == batch.getDouble(2))             // level, bit-exact
+    assert(last.getDouble(3) == batch.getDouble(3))             // trend
+    assert(last.getDouble(4) == batch.getDouble(4))             // forecast_1h
+
+    // cross-batch: more events in bucket 3 GROW the open bucket, then a
+    // bucket-4 sentinel closes it — state carried between micro-batches
+    input.addData(Seq.fill(7)(("m", 3 * hour)) :+ ("m", 4 * hour): _*)
+    q.processAllAvailable()
+    val later = spark.table("holt_stream").orderBy(col("n_buckets").desc).collect().head
+    q.stop()
+    val batch2 = TimeSeries.holtForecast(
+      (real ++ Seq.fill(8)(("m", 3 * hour)))
+        .map { case (m, ts) => (m, "s", ts, 1.0) }.toDF("metric", "series", "ts", "value"))
+      .collect().head
+    assert(later.getLong(1) == 4L && later.getDouble(2) == batch2.getDouble(2)
+      && later.getDouble(3) == batch2.getDouble(3))
+  }
+
+  test("volume-bands stream: sentinel-flushed one-batch stream == batch bands exactly") {
+    import graft.operators.Anomaly
+    val hour = 3600000L
+    // 8 buckets at 10 events, then a 30-event spike, then 2 normal buckets
+    // (window = 4 keeps the fixture small); a final sentinel closes the tail
+    val counts = Seq.fill(8)(10) ++ Seq(30) ++ Seq(11, 9)
+    val real = counts.zipWithIndex.flatMap { case (c, h) =>
+      Seq.fill(c)(("A", h * hour, 1L))
+    }
+    val input = MemoryStream[(String, Long, Long)]
+    val out = Anomaly.volumeBandsStream(
+      input.toDS().toDF("event_type", "ts_ms", "user_id"), window = 4)
+    val q = out.writeStream.format("memory").queryName("bands_stream")
+      .outputMode("append").start()
+    input.addData(real :+ (("A", 100 * hour, 1L)): _*)
+    q.processAllAvailable()
+    q.stop()
+    val streamed = spark.table("bands_stream")
+      .where(col("bucket") < 100) // the sentinel bucket itself never scores
+      .orderBy("bucket").collect()
+      .map(r => (r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4), r.getLong(5)))
+    val batch = Anomaly.volumeBands(
+      real.toDF("event_type", "ts_ms", "user_id"), window = 4)
+      .orderBy("bucket").collect()
+      .map(r => (r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4), r.getLong(5)))
+    assert(streamed.toSeq == batch.toSeq,
+      "one-batch stream must reproduce the batch band frame bit-for-bit")
+    // the spike bucket flags, its normal neighbors don't
+    val byBucket = streamed.map(t => t._1 -> t._5).toMap
+    assert(byBucket(8L) == 1L && byBucket(7L) == 0L && byBucket(9L) == 0L)
+  }
+
+  test("funnel stream: one-batch snapshot == batch funnel; cross-batch advance") {
+    import graft.operators.Funnel
+    val h = 7200000L // 2h horizon
+    val steps = Seq("view", "cart", "buy")
+    // u1 completes in order; u2's cart shares t1's timestamp (strict > blocks
+    // it) and its buy has no qualifying cart; u4's cart falls past the
+    // horizon; u3 never does step 1 -> absent
+    val real = Seq(
+      (1L, 1000L, "view"), (1L, 2000L, "cart"), (1L, 3000L, "buy"),
+      (2L, 5000L, "view"), (2L, 5000L, "cart"), (2L, 6000L, "buy"),
+      (3L, 1000L, "cart"), (3L, 2000L, "buy"),
+      (4L, 10000L, "view"), (4L, 10000L + h + 1L, "cart"))
+    val input = MemoryStream[(Long, Long, String)]
+    val out = Funnel.funnelStream(
+      input.toDS().toDF("user_id", "ts", "event_type"),
+      "user_id", "ts", "event_type", steps, h)
+    val q = out.writeStream.format("memory").queryName("funnel_stream")
+      .outputMode("append").start()
+    input.addData(real: _*)
+    q.processAllAvailable()
+    def snap(): Map[String, (Seq[Option[Long]], Long)] = {
+      val w = Window.partitionBy("user_id").orderBy(col("steps_reached").desc)
+      spark.table("funnel_stream")
+        .withColumn("rn", row_number().over(w)).where(col("rn") === 1)
+        .collect()
+        .map(r => r.getString(0) ->
+          (r.getSeq[Any](1).map(Option(_).map(_.asInstanceOf[Long])).toSeq,
+            r.getLong(2))).toMap
+    }
+    val streamed = snap()
+    val batch = Funnel.funnel(real.toDF("user_id", "ts", "event_type"),
+        "user_id", "ts", "event_type", steps, h)
+      .collect()
+      .map(r => r.getLong(0).toString ->
+        (Seq(1, 2, 3).map(i => if (r.isNullAt(i)) None else Some(r.getLong(i))),
+          r.getAs[Long]("steps_reached"))).toMap
+    assert(streamed == batch,
+      "one-batch stream snapshot must equal the batch funnel exactly")
+    assert(streamed("1")._2 == 3L && streamed("2")._2 == 1L &&
+      streamed("4")._2 == 1L && !streamed.contains("3"))
+
+    // cross-batch: u2's qualifying cart then buy arrive later — state
+    // carried, funnel advances to 3; u4 stays stalled
+    input.addData((2L, 6000L, "cart"), (2L, 7000L, "buy"))
+    q.processAllAvailable()
+    q.stop()
+    val later = snap()
+    assert(later("2")._1 == Seq(Some(5000L), Some(6000L), Some(7000L)) &&
+      later("2")._2 == 3L)
+    assert(later("4")._2 == 1L)
   }
 }
