@@ -85,8 +85,14 @@ object Bench {
     val bootstrapTotal = bootstrap.map(_._2).sum
     val bootJson = bootstrap.map { case (k, v, _) => jstr(k) + ":" + f"$v%.3f" }
       .mkString("{", ",", "}")
+    // a failed build is named here, not only by the queries it breaks later
+    def errors(results: Seq[(String, Double, Option[String])]): Seq[String] =
+      results.collect { case (k, _, Some(e)) => jstr(k) + ":" + jstr(e) }
+    def errField(errs: Seq[String]): String =
+      if (errs.isEmpty) "" else errs.mkString(""","errors":{""", ",", "}")
+    val bootErrs = errors(bootstrap)
     println(f"""{"metric":"bootstrap","value":$bootstrapTotal%.3f,"unit":"sec",""" +
-      s""""builds":$bootJson,"sf":"$sfDir"}""")
+      s""""builds":$bootJson${errField(bootErrs)},"sf":"$sfDir"}""")
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.length % 2 == 1) s(s.length / 2) else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
@@ -106,8 +112,7 @@ object Bench {
         val samples = passes.map(_.find(_._1 == name).get)
         (name, median(samples.map(_._2)), samples.flatMap(_._3).headOption)
       }
-      val errs = results.collect { case (k, _, Some(e)) => jstr(k) + ":" + jstr(e) }
-      val errField = if (errs.isEmpty) "" else errs.mkString(""","errors":{""", ",", "}")
+      val errs = errors(results)
       val qs = results.map { case (k, v, _) => jstr(k) + ":" + v }
         .mkString("{", ",", "}")
       val total = results.map(_._2).sum
@@ -116,7 +121,7 @@ object Bench {
       println(s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,""" +
         s""""passes_done":${passes.length},$partialField""" +
         f""""bootstrap_total":$bootstrapTotal%.3f,""" +
-        s""""pass_totals":$passTotals,"notes":$notes,"queries":$qs$errField,"sf":"$sfDir"}""")
+        s""""pass_totals":$passTotals,"notes":$notes,"queries":$qs${errField(errs)},"sf":"$sfDir"}""")
       (results, errs)
     }
     // a failed query must be visible as a failure, not a fast timing:
@@ -177,8 +182,9 @@ object Bench {
       s""""n_queries":${results.size},"n_errors":${errs.size},""" +
       s""""pass_totals":$passTotals,"queries":$qsTop,"sf":"$sfDir"}""")
     spark.stop()
-    if (errs.nonEmpty) {
-      System.err.println(s"bench: ${errs.size} quer${if (errs.size == 1) "y" else "ies"} failed")
+    if (errs.nonEmpty || bootErrs.nonEmpty) {
+      System.err.println(s"bench: ${errs.size} quer${if (errs.size == 1) "y" else "ies"} " +
+        s"and ${bootErrs.size} bootstrap build(s) failed")
       sys.exit(1)
     }
   }

@@ -21,8 +21,9 @@ import graft.sources.Catalog
  *   graft.queries.TimelyQueries and graft.sources.PointStore.metaProjection)
  * - the lookup-query grammar, the cache report (M6) and the query's
  *   meta-check-then-plan step.
- * Every transport (HTTP, WebSocket) serves these operations by calling them
- * here, so an answer does not depend on the socket a request arrives on.
+ * HTTP and WebSocket serve these operations through one table that calls
+ * them here (`graft.server.Operations`), so an answer does not depend on the
+ * socket a request arrives on.
  */
 object TimelyApi {
 

@@ -95,6 +95,21 @@ object AuthSessions {
     new javax.security.auth.x500.X500Principal(dn)
       .getName(javax.security.auth.x500.X500Principal.CANONICAL)
 
+  /** The caller's authorizations, the one resolution every transport uses:
+    * the TLS session's verified client-certificate subject first, then the
+    * `Cookie` header's session. Without a store every caller is anonymous
+    * (no authorizations). None = refuse (HTTP 401). */
+  def caller(sessions: Option[AuthSessions], tls: Option[javax.net.ssl.SSLSession],
+             cookieHeader: Option[String]): Option[Seq[String]] = sessions match {
+    case None => Some(Seq.empty)
+    case Some(store) =>
+      val peerDn = tls.flatMap { s =>
+        try Option(s.getPeerPrincipal).map(_.getName)
+        catch { case _: javax.net.ssl.SSLPeerUnverifiedException => None }
+      }
+      store.resolveCert(peerDn, sessionFromCookie(cookieHeader))
+  }
+
   /** Extract the session id from a `Cookie` header value (first TSESSIONID,
     * like HttpRequestDecoder.getSessionId). */
   def sessionFromCookie(cookieHeader: Option[String]): Option[String] =

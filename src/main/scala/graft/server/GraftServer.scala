@@ -15,9 +15,9 @@ import graft.sources.PointStore
  * which serializes appends, so concurrent puts from many connections are
  * each stored exactly once and are immediately queryable over every other
  * transport; live subscriptions tail the same store. HTTP and WS serve the
- * same operations through the same library calls ([[graft.planner.TimelyApi]],
- * [[graft.planner.QueryPlanner.runQuery]]), so a request gets the same body
- * on either. An optional [[AuthSessions]] store gives the HTTP and WS
+ * same operations through one table ([[Operations]]), each transport only
+ * framing its requests and answers, so a request gets the same body on
+ * either. An optional [[AuthSessions]] store gives the HTTP and WS
  * surfaces per-caller authorization (the TCP/UDP line protocol is
  * unauthenticated in the reference too — it binds those listeners to trusted
  * interfaces).

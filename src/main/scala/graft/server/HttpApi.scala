@@ -8,50 +8,37 @@ import java.util.concurrent.Executors
 import scala.util.control.NonFatal
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer, HttpsConfigurator, HttpsExchange, HttpsParameters, HttpsServer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
-import graft.model.{MetricParser, MetricPoint}
-import graft.planner.{QueryJson, TimelyApi}
-import graft.sources.{Catalog, PointStore}
+import graft.planner.TimelyApi
 
 /**
  * HTTP facade — the serving analog of the reference's Netty HTTP pipeline
  * (Server.java:520-527: aggregators, metrics, query, search/lookup, suggest,
  * version, put). This class holds HTTP framing, auth and error mapping only:
- * every operation it routes is a library call shared with the WebSocket
- * gateway — [[TimelyApi]] for suggest, lookup (and its query grammar),
- * metrics, cache and the query's meta-check-then-plan step, [[QueryJson]]
- * for the query wire format, and [[PointStore]] for the store reads and the
- * one serialized put append — so an OpenTSDB/Grafana-style client gets the
- * same answer here as over any other transport.
+ * it maps each API path to its entry in the [[Operations]] table, the one
+ * path of every operation the WebSocket gateway serves too, and hands it the
+ * POST body or the URL parameters, so an OpenTSDB/Grafana-style client gets
+ * the same answer here as over any other transport. `/api/put` takes the
+ * reference's flattened Metric JSON (Metric.java:19, HTTP body shape
+ * MetricRequest.java:56-60) or newline-separated `put <metric> <ts> <value>
+ * k=v...` lines (the TCP wire format, which the reference's own ITs use for
+ * seeding — ITBase.java:183-198); bulk ingest at scale should use
+ * [[graft.streaming.PutLineIngest]] or [[graft.sources.PointStore]] directly.
  *
- * Storage: puts append to a [[PointStore]] parquet directory (+ meta catalog)
- * through [[PointStore.append]], the one store write every writer (every
- * transport, the streaming sink, the internal-metrics loopback) goes
- * through; queries and catalog calls ask the store's entry for the served
- * points relation and the in-memory catalog ([[PointStore.points]] /
- * [[PointStore.catalog]]), which `append` and the other store writers keep
- * current, so a request lists no files and runs no catalog job that an
- * earlier one already did. Bulk ingest at scale should use
- * [[graft.streaming.PutLineIngest]] / [[PointStore]] directly; `/api/put`
- * exists for wire parity and integration tests, accepting both the
- * reference's flattened Metric JSON
- * (`{"name":"m1","timestamp":1,"measure":1.0,"tags":[{"k1":"v1"}]}` —
- * Metric.java:19, HTTP body shape MetricRequest.java:56-60) and newline-
- * separated `put <metric> <ts> <value> k=v...` lines (the TCP wire format,
- * which the reference's own ITs use for seeding — ITBase.java:183-198).
- *
- * Query responses stream through [[QueryJson.writeResponses]] straight onto
- * the response body, so an `aggregator:none` query over a wide range never
- * materializes on the driver (unlike the reference server, which merges the
- * whole response in its JVM — DataStore.java:748-788). The query is planned
- * before the 200 goes out, so plan-time errors still get their status.
+ * A query answer streams chunked straight onto the response body, so an
+ * `aggregator:none` query over a wide range never materializes on the
+ * driver (unlike the reference server, which merges the whole response in
+ * its JVM — DataStore.java:748-788); every other answer goes out with a
+ * Content-Length. The table parses, checks and plans before the 200 goes
+ * out, so those errors still get their status.
  *
  * HTTP error mapping mirrors the reference: unparseable request → 400
  * (TimelyExceptionHandler), no matching tags → 400 "No matching tags"
- * (HttpQueryRequestHandler.java:36), unknown path → 404, internal error → 500.
+ * (HttpQueryRequestHandler.java:36), unknown path → 404, internal error → 500,
+ * which also prints one stderr line (method, path, exception).
  *
  * Auth: with a [[AuthSessions]] store configured, `POST /login` authenticates
  * and sets the `TSESSIONID` cookie (the reference's login handler mints the
@@ -68,7 +55,7 @@ import graft.sources.{Catalog, PointStore}
  * its HTTP pipeline with an SslHandler — Server.java:490); `needClientAuth`
  * additionally REQUIRES a client certificate (two-way SSL, TwoWaySSLIT) and
  * the verified subject DN becomes the caller's identity via
- * [[AuthSessions.resolveCert]] — no login round trip, like the reference's
+ * [[AuthSessions.caller]] — no login round trip, like the reference's
  * X509 login path. Over TLS the facade also emits
  * `Strict-Transport-Security` (HTTPStrictTransportSecurityIT) and marks the
  * session cookie `Secure`.
@@ -120,11 +107,7 @@ class HttpApi(
     if (pool != null) { pool.shutdown(); pool = null }
   }
 
-  // ---- storage ----------------------------------------------------------
-
-  private def points: DataFrame = PointStore.points(spark, dataDir)
-
-  private def catalog: Catalog = PointStore.catalog(spark, metaDir)
+  private val ops = new Operations(spark, dataDir, metaDir)
 
   // ---- request parsing --------------------------------------------------
 
@@ -143,29 +126,7 @@ class HttpApi(
   private def body(ex: HttpExchange): String =
     new String(ex.getRequestBody.readAllBytes(), UTF_8)
 
-  /** The reference's flattened Metric JSON (Metric.java:19) -> MetricPoint
-    * ([[MetricJson.parse]], shared with the WS `put` operation). */
-  private def parseMetricJson(json: String): MetricPoint =
-    MetricJson.parse(JsonMethods.parse(json))
-
   // ---- routing ----------------------------------------------------------
-
-  /** The TLS-verified client-certificate subject (two-way SSL), if any. */
-  private def peerDn(ex: HttpExchange): Option[String] = ex match {
-    case hx: HttpsExchange =>
-      try Option(hx.getSSLSession.getPeerPrincipal).map(_.getName)
-      catch { case _: javax.net.ssl.SSLPeerUnverifiedException => None }
-    case _ => None
-  }
-
-  /** Resolve the caller's authorizations: client-cert DN first (two-way
-    * TLS), then cookie -> session; no authorizations when no session store
-    * is configured. None = refuse with 401. */
-  private def requestAuths(ex: HttpExchange): Option[Seq[String]] = sessions match {
-    case None => Some(Seq.empty)
-    case Some(store) => store.resolveCert(peerDn(ex),
-      AuthSessions.sessionFromCookie(Option(ex.getRequestHeaders.getFirst("Cookie"))))
-  }
 
   /** Transport headers on EVERY response: HSTS over TLS
     * (HTTPStrictTransportSecurityIT pins the header on each exchange) and
@@ -222,93 +183,59 @@ class HttpApi(
           // the one URLDecoder.decode the reference does — decoding twice
           // would 404 filenames containing literal '%' or '+'
           serveStatic(ex, m, ex.getRequestURI.getRawPath)
-        case _ => requestAuths(ex) match {
-          case None => respond(ex, 401, "unauthorized\n", "text/plain")
-          case Some(callerAuths) => routeAuthed(ex, callerAuths)
-        }
+        case _ =>
+          val ssl = ex match { case hx: HttpsExchange => Some(hx.getSSLSession); case _ => None }
+          AuthSessions.caller(sessions, ssl, Option(ex.getRequestHeaders.getFirst("Cookie"))) match {
+            case None => respond(ex, 401, "unauthorized\n", "text/plain")
+            case Some(callerAuths) => routeAuthed(ex, callerAuths)
+          }
       }
     } catch {
-      case e: TimelyApi.NoMatchingTagsException =>
-        respond(ex, 400, e.getMessage + "\n", "text/plain")
       case e: IllegalArgumentException =>
         respond(ex, 400, Option(e.getMessage).getOrElse("bad request") + "\n", "text/plain")
       case NonFatal(e) =>
+        Operations.reportFailure(s"${ex.getRequestMethod} ${ex.getRequestURI.getPath}", e)
         respond(ex, 500, e.toString + "\n", "text/plain")
     } finally ex.close()
   }
 
+  /** API path -> the [[Operations]] entry it serves. */
+  private val Routes = Map(
+    "/api/aggregators" -> "aggregators", "/api/metrics" -> "metrics",
+    "/api/suggest" -> "suggest", "/api/search/lookup" -> "lookup",
+    "/api/query" -> "query", "/api/cache" -> "cache", "/api/put" -> "put")
+
+  /** Run the path's operation over the POST body, or over the URL parameters
+    * when there is none. It has parsed, checked and planned before any
+    * status goes out; a query then streams chunked, so an
+    * `aggregator:none` query over a wide range never sits on the driver,
+    * and an execution error past this point truncates the chunked body. */
   private def routeAuthed(ex: HttpExchange, callerAuths: Seq[String]): Unit = {
-      (ex.getRequestMethod, ex.getRequestURI.getPath) match {
-        case (_, "/api/aggregators") =>
-          respond(ex, 200, TimelyApi.aggregatorsJson)
-        case (_, "/api/metrics") =>
-          respond(ex, 200, TimelyApi.metricsJson(catalog, Set.empty, TimelyApi.MetricsMaxRows))
-        case (_, "/api/suggest") =>
-          val p = params(ex)
-          def one(k: String) = p.get(k).flatMap(_.headOption)
-          val kind = one("type").getOrElse("metrics")
-          respond(ex, 200, TimelyApi.suggestJson(
-            catalog, kind, one("q").orElse(one("m")).getOrElse(""),
-            tagKey = one("tagk"),
-            max = one("max").flatMap(_.toIntOption).getOrElse(25)))
-        case (_, "/api/search/lookup") =>
-          val (q, limit) =
-            if (ex.getRequestMethod == "POST") {
-              val jv = JsonMethods.parse(body(ex))
-              val qs = jv \ "query" match {
-                case JString(s) => s
-                case _ => throw new IllegalArgumentException("query required")
-              }
-              val lim = jv \ "limit" match {
-                case JInt(i) => i.toInt; case JLong(l) => l.toInt; case _ => 25
-              }
-              (qs, lim)
-            } else {
-              val p = params(ex)
-              (p.get("q").orElse(p.get("query")).flatMap(_.headOption)
-                 .getOrElse(throw new IllegalArgumentException("q required")),
-               p.get("limit").flatMap(_.headOption).flatMap(_.toIntOption).getOrElse(25))
-            }
-          val (metric, tags) = TimelyApi.parseLookupQuery(q)
-          respond(ex, 200, TimelyApi.lookupJson(catalog, metric, tags, limit, 0))
-        case ("POST", "/api/put") =>
-          val content = body(ex).trim
-          val batch =
-            if (content.startsWith("put ") || content.startsWith("put\t"))
-              content.linesIterator.filter(_.trim.nonEmpty).map { l =>
-                MetricParser.parse(l)
-                  .getOrElse(throw new IllegalArgumentException(s"unparseable put line: $l"))
-              }.toSeq
-            else Seq(parseMetricJson(content))
-          PointStore.append(spark, batch, dataDir, metaDir)
-          respond(ex, 200, "", "text/plain")
-        case (m, "/api/query") =>
-          val req =
-            if (m == "POST") QueryJson.parseRequest(body(ex))
-            else QueryJson.parseGetQuery(params(ex))
-          // plan BEFORE the 200 goes out: the meta check and plan-time
-          // validation (bad downsample/aggregator/tag regex) must still 400,
-          // and headers cannot be unsent — only execution errors after this
-          // line fall through to a truncated chunked body
-          val frames = TimelyApi.planQuery(points, req, callerAuths, Some(catalog))
-          ex.getResponseHeaders.set("Content-Type", "application/json")
-          val gz = wantsGzip(ex)
-          if (gz) ex.getResponseHeaders.set("Content-Encoding", "gzip")
-          // stream the spliced response straight to the socket: bounded
-          // driver memory even for aggregator:none over a wide range
-          ex.sendResponseHeaders(200, 0) // chunked
-          val sink =
-            if (gz) new java.util.zip.GZIPOutputStream(ex.getResponseBody)
-            else ex.getResponseBody
-          val w = new OutputStreamWriter(sink, UTF_8)
-          QueryJson.writeResponses(frames, w)
-          w.flush(); w.close()
-        case (_, "/api/cache") =>
-          // M6: the reference's CacheResponse shape, viz-filtered per caller
-          respond(ex, 200, TimelyApi.cacheJson(points, callerAuths))
-        case _ =>
-          respond(ex, 404, "not found\n", "text/plain")
-      }
+    val method = ex.getRequestMethod
+    Routes.get(ex.getRequestURI.getPath).filter(_ != "put" || method == "POST") match {
+      case None => respond(ex, 404, "not found\n", "text/plain")
+      case Some("query") =>
+        val answer = ops.table("query")(fields(ex, method), callerAuths)
+        ex.getResponseHeaders.set("Content-Type", "application/json")
+        val gz = wantsGzip(ex)
+        if (gz) ex.getResponseHeaders.set("Content-Encoding", "gzip")
+        ex.sendResponseHeaders(200, 0) // chunked
+        val sink =
+          if (gz) new java.util.zip.GZIPOutputStream(ex.getResponseBody)
+          else ex.getResponseBody
+        val w = new OutputStreamWriter(sink, UTF_8)
+        answer(w)
+        w.flush(); w.close()
+      case Some(op) =>
+        val w = new java.io.StringWriter()
+        ops.table(op)(fields(ex, method), callerAuths)(w)
+        respond(ex, 200, w.toString, if (op == "put") "text/plain" else "application/json")
+    }
+  }
+
+  private def fields(ex: HttpExchange, method: String): Operations.Fields = {
+    val content = if (method == "POST") body(ex).trim else ""
+    if (content.nonEmpty) Operations.Body(content) else Operations.Params(params(ex))
   }
 
   // ---- static files ------------------------------------------------------

@@ -19,7 +19,7 @@ import javax.net.ssl.{KeyManagerFactory, SSLContext, TrustManagerFactory}
  *    a client certificate chaining to `truststore`; an untrusted client cert
  *    fails the handshake outright (TwoWaySSLFailureIT), and the verified
  *    subject DN becomes the caller's identity
- *    ([[AuthSessions.resolveCert]] — the FileUserDetailsService analog).
+ *    ([[AuthSessions.caller]] — the FileUserDetailsService analog).
  *
  * Key material is standard JDK keystore files (PKCS12) — what `keytool`
  * emits and what every JVM deployment already manages; no custom cert

@@ -10,10 +10,8 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s._
-import org.json4s.jackson.JsonMethods
 
-import graft.planner.{QueryJson, QueryPlanner, TimelyApi}
-import graft.sources.{Catalog, PointStore}
+import graft.sources.PointStore
 import graft.streaming.{MetricResponseJson, Subscriptions}
 
 /**
@@ -33,15 +31,15 @@ import graft.streaming.{MetricResponseJson, Subscriptions}
  * plus `put` and the timeseries operations the reference also serves over
  * WS (netty/websocket/timeseries/): version, aggregators, metrics, suggest,
  * lookup, query, cache. This class holds framing, auth and close-code
- * mapping only: a put lands through [[PointStore.append]], the same
- * serialized append as every other transport's, and each timeseries
- * operation is the library call the HTTP facade routes to ([[TimelyApi]],
- * [[QueryPlanner.runQuery]] with the meta check) over the store entry's
- * points relation and in-memory catalog ([[PointStore.points]] /
- * [[PointStore.catalog]]), so a request gets the same body over WS as over
- * HTTP. A malformed request (bad lookup query, no
- * matching tags, unknown operation) closes the connection with 1008 and the
- * operation's message.
+ * mapping only: each of those operations is its entry in the
+ * [[Operations]] table, the one path the HTTP facade serves too, with the
+ * frame's fields as its request, so a request gets the same body over WS
+ * as over HTTP; an answer goes out as one text frame, and a put answers
+ * none. A malformed request (bad lookup query, no matching tags, unknown
+ * operation) closes the connection with 1008 and the operation's message.
+ * An operation that fails otherwise closes it with 1011, and that failure,
+ * like a connection that ends on an exception, prints one stderr line
+ * (peer, operation, exception).
  *
  * Delivery: each `add` starts a Structured Streaming tail over the
  * [[PointStore]] directory ([[Subscriptions.addMetric]]); matched points are
@@ -65,7 +63,7 @@ import graft.streaming.{MetricResponseJson, Subscriptions}
  * endpoint rides the same SslHandler as HTTP — Server.java:579); two-way
  * mode requires a client certificate in the handshake and the verified
  * subject DN resolves to the session's authorizations before any cookie is
- * consulted ([[AuthSessions.resolveCert]]).
+ * consulted ([[AuthSessions.caller]]).
  */
 class WebSocketApi(
     spark: SparkSession,
@@ -135,11 +133,12 @@ class WebSocketApi(
   private def pointsStream(): DataFrame =
     spark.readStream.schema(PointStore.Schema).parquet(dataDir)
 
-  private def catalog(): Catalog = PointStore.catalog(spark, metaDir)
+  private val ops = new Operations(spark, dataDir, metaDir)
 
   // ---- one connection ----------------------------------------------------
 
   private final class Conn(socket: Socket) {
+    private val peer = String.valueOf(socket.getRemoteSocketAddress)
     private val in = new BufferedInputStream(socket.getInputStream)
     private val out = new BufferedOutputStream(socket.getOutputStream)
     private val writeLock = new Object
@@ -155,30 +154,18 @@ class WebSocketApi(
         val (_, headers) = WebSocketCodec.readHandshake(in)
         val key = headers.get("sec-websocket-key")
         if (key.isEmpty || !headers.get("upgrade").exists(_.equalsIgnoreCase("websocket"))) {
-          writeLock.synchronized {
-            out.write(WebSocketCodec.refuseResponse(400, "Bad Request")); out.flush()
-          }
+          refuse(400, "Bad Request")
           return
         }
-        // two-way TLS: the handshake-verified client-cert subject, if any
-        // (the read above forced the SSL handshake, so the session is live)
-        val peerDn: Option[String] = socket match {
-          case s: javax.net.ssl.SSLSocket =>
-            try Option(s.getSession.getPeerPrincipal).map(_.getName)
-            catch { case _: javax.net.ssl.SSLPeerUnverifiedException => None }
+        // two-way TLS: the read above forced the SSL handshake, so the
+        // session is live
+        val ssl = socket match {
+          case s: javax.net.ssl.SSLSocket => Some(s.getSession)
           case _ => None
         }
-        val auths: Seq[String] = sessions match {
-          case None => Seq.empty
-          case Some(a) =>
-            a.resolveCert(peerDn, AuthSessions.sessionFromCookie(headers.get("cookie"))) match {
-              case Some(resolved) => resolved
-              case None =>
-                writeLock.synchronized {
-                  out.write(WebSocketCodec.refuseResponse(401, "Unauthorized")); out.flush()
-                }
-                return
-            }
+        val auths = AuthSessions.caller(sessions, ssl, headers.get("cookie")) match {
+          case Some(resolved) => resolved
+          case None => refuse(401, "Unauthorized"); return
         }
         writeLock.synchronized {
           out.write(WebSocketCodec.handshakeResponse(key.get)); out.flush()
@@ -187,144 +174,96 @@ class WebSocketApi(
           flushIntervalMs, flushIntervalMs, TimeUnit.MILLISECONDS)
         serve(auths)
       } catch {
-        case NonFatal(e) => if (WebSocketApi.debug) e.printStackTrace()
+        case NonFatal(e) => if (!closed) Operations.reportFailure(s"ws connection from $peer", e)
       } finally shutdown()
+    }
+
+    private def refuse(status: Int, reason: String): Unit = writeLock.synchronized {
+      out.write(WebSocketCodec.refuseResponse(status, reason)); out.flush()
     }
 
     private def serve(auths: Seq[String]): Unit = {
       var open = true
       while (open && !closed) {
-        val msg = WebSocketCodec.readMessage(in)
-        if (WebSocketApi.debug) System.err.println(
-          s"WS recv: ${msg.map { case (op, p) => s"op=$op ${new String(p, UTF_8).take(120)}" }}")
-        msg match {
+        WebSocketCodec.readMessage(in) match {
           case None => open = false
-          case Some((WebSocketCodec.OpClose, _)) =>
-            writeLock.synchronized(
-              try WebSocketCodec.writeClose(out, 1000, "") catch { case NonFatal(_) => () })
-            open = false
+          case Some((WebSocketCodec.OpClose, _)) => open = closeWith(1000, "")
           case Some((WebSocketCodec.OpPing, payload)) =>
             writeLock.synchronized(WebSocketCodec.writeFrame(out, WebSocketCodec.OpPong, payload))
           case Some((WebSocketCodec.OpText, payload)) =>
-            open =
-              try handle(new String(payload, UTF_8), auths)
-              catch {
-                case NonFatal(e) =>
-                  if (WebSocketApi.debug) e.printStackTrace()
-                  writeLock.synchronized(
-                    try WebSocketCodec.writeClose(out, 1011, "internal error")
-                    catch { case NonFatal(_) => () })
-                  false
-              }
+            open = handle(new String(payload, UTF_8), auths)
           case Some(_) => () // binary/pong: ignored
         }
       }
     }
 
+    /** Send a close frame; false, the value of a frame that ends the
+      * connection. */
+    private def closeWith(code: Int, reason: String): Boolean = {
+      writeLock.synchronized(
+        try WebSocketCodec.writeClose(out, code, reason) catch { case NonFatal(_) => () })
+      false
+    }
+
     /** Dispatch one operation frame; returns false when the connection must
       * close (the reference closes with a CloseWebSocketFrame on protocol
       * errors — WSAddSubscriptionRequestHandler.java:27,48). */
-    private def handle(json: String, auths: Seq[String]): Boolean = {
-      val jv =
-        try JsonMethods.parse(json)
-        catch {
-          case NonFatal(_) =>
-            writeLock.synchronized(WebSocketCodec.writeClose(out, 1008, "unparseable request"))
-            return false
-        }
-      def str(f: String): Option[String] = jv \ f match {
-        case JString(s) => Some(s); case _ => None
-      }
-      def lng(f: String): Option[Long] = jv \ f match {
-        case JInt(i) => Some(i.toLong); case JLong(l) => Some(l); case _ => None
-      }
-      val op = str("operation").getOrElse("")
-      val subId = str("subscriptionId")
-      try {
-        op match {
-          case "create" =>
-            val id = subId.getOrElse(throw new IllegalArgumentException("Subscription ID is required."))
-            created.computeIfAbsent(id, _ => new Subscriptions(
-              row => enqueue(MetricResponseJson.response(row, id), immediate = false),
-              (_, m) => enqueue(MetricResponseJson.completed(m, id), immediate = true)))
-            true
-          case "add" =>
-            val id = subId.getOrElse(throw new IllegalArgumentException("Subscription ID is required."))
-            val subs = created.get(id)
-            if (subs == null) {
-              // reference: unknown id -> CloseWebSocketFrame(1003, ...)
-              writeLock.synchronized(WebSocketCodec.writeClose(out, 1003,
-                "Unknown subscription id, create subscription first"))
-              false
-            } else str("metric") match {
-              case None =>
-                writeLock.synchronized(WebSocketCodec.writeClose(out, 1008,
-                  "Metric name cannot be null in add subscription"))
-                false
+    private def handle(frame: String, auths: Seq[String]): Boolean = {
+      val f = Operations.Body(frame)
+      try f.json catch { case NonFatal(_) => return closeWith(1008, "unparseable request") }
+      val op = f.str("operation").getOrElse("")
+      val subId = f.str("subscriptionId")
+      def requireId = subId.getOrElse(throw new IllegalArgumentException("Subscription ID is required."))
+      try op match {
+        case "create" =>
+          val id = requireId
+          created.computeIfAbsent(id, _ => new Subscriptions(
+            row => enqueue(MetricResponseJson.response(row, id), immediate = false),
+            (_, m) => enqueue(MetricResponseJson.completed(m, id), immediate = true)))
+          true
+        case "add" =>
+          val id = requireId
+          Option(created.get(id)) match {
+            // reference: unknown id -> CloseWebSocketFrame(1003, ...)
+            case None => closeWith(1003, "Unknown subscription id, create subscription first")
+            case Some(subs) => f.str("metric") match {
+              case None => closeWith(1008, "Metric name cannot be null in add subscription")
               case Some(metric) =>
-                val tags = jv \ "tags" match {
+                val tags = f.json \ "tags" match {
                   case JObject(fields) => fields.collect { case (k, JString(v)) => k -> v }.toMap
                   case _ => Map.empty[String, String]
                 }
                 subs.addMetric(id, pointsStream(), metric, tags, auths,
-                  beginTimeMs = lng("startTime").getOrElse(0L),
-                  endTimeMs = lng("endTime").getOrElse(0L),
-                  delayMs = lng("delayTime").getOrElse(1000L))
+                  beginTimeMs = f.long("startTime").getOrElse(0L),
+                  endTimeMs = f.long("endTime").getOrElse(0L),
+                  delayMs = f.long("delayTime").getOrElse(1000L))
                 true
             }
-          case "remove" =>
-            for (id <- subId; m <- str("metric"); s <- Option(created.get(id)))
-              s.removeMetric(id, m)
+          }
+        case "remove" =>
+          for (id <- subId; m <- f.str("metric"); s <- Option(created.get(id)))
+            s.removeMetric(id, m)
+          true
+        case "close" =>
+          subId.flatMap(id => Option(created.remove(id))).foreach(s => s.close(subId.get))
+          true
+        // every other operation (put, version, aggregators, metrics, suggest,
+        // lookup, query, cache) is the HTTP facade's too; a put answers
+        // nothing, and a live subscription's tail picks its file up
+        case _ => ops.table.get(op) match {
+          case None => closeWith(1008, s"unknown operation: $op")
+          case Some(run) =>
+            val w = new java.io.StringWriter()
+            run(f, auths)(w)
+            if (w.getBuffer.length > 0) sendText(w.toString)
             true
-          case "close" =>
-            subId.flatMap(id => Option(created.remove(id))).foreach(s => s.close(subId.get))
-            true
-          // ---- put ingest over WS (@WebSocket(operation="put"),
-          // MetricRequest.java:26; WSMetricPutHandler.java:17-19): a live
-          // subscription's streaming tail picks the new file up ----------
-          case "put" =>
-            PointStore.append(spark, Seq(MetricJson.parse(jv \ "metric")), dataDir, metaDir)
-            true
-          // ---- timeseries operations (netty/websocket/timeseries/) -------
-          case "version" =>
-            sendText(TimelyApi.Version)
-            true
-          case "aggregators" =>
-            sendText(TimelyApi.aggregatorsJson)
-            true
-          case "metrics" =>
-            sendText(TimelyApi.metricsJson(catalog(), Set.empty, TimelyApi.MetricsMaxRows))
-            true
-          case "suggest" =>
-            sendText(TimelyApi.suggestJson(catalog(),
-              str("type").getOrElse("metrics"), str("q").orElse(str("m")).getOrElse(""),
-              tagKey = str("tagk"),
-              max = lng("max").map(_.toInt).getOrElse(25)))
-            true
-          case "lookup" =>
-            val (metric, tags) = TimelyApi.parseLookupQuery(
-              str("query").getOrElse(throw new IllegalArgumentException("query required")))
-            sendText(TimelyApi.lookupJson(catalog(), metric, tags,
-              lng("limit").map(_.toInt).getOrElse(25), 0))
-            true
-          case "query" =>
-            sendText(QueryPlanner.runQuery(PointStore.points(spark, dataDir),
-              QueryJson.parseRequest(json), auths, meta = Some(catalog())))
-            true
-          case "cache" =>
-            // CacheRequest is a WS operation too (@WebSocket(operation="cache"))
-            sendText(TimelyApi.cacheJson(PointStore.points(spark, dataDir), auths))
-            true
-          case other =>
-            writeLock.synchronized(
-              WebSocketCodec.writeClose(out, 1008, s"unknown operation: $other"))
-            false
         }
       } catch {
         case e: IllegalArgumentException =>
-          writeLock.synchronized(WebSocketCodec.writeClose(out, 1008,
-            Option(e.getMessage).getOrElse("bad request")))
-          false
+          closeWith(1008, Option(e.getMessage).getOrElse("bad request"))
+        case NonFatal(e) =>
+          Operations.reportFailure(s"ws $op from $peer", e)
+          closeWith(1011, "internal error")
       }
     }
 
@@ -370,9 +309,4 @@ class WebSocketApi(
       try socket.close() catch { case NonFatal(_) => () }
     }
   }
-}
-
-object WebSocketApi {
-  /** Diagnostics for the gateway's connection loop (spec debugging only). */
-  @volatile var debug: Boolean = java.lang.Boolean.getBoolean("graft.ws.debug")
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{DataFrame, ForeachWriter, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -15,21 +15,26 @@ import graft.planner.QueryPlanner
  * per-metric tailing MetricScanner threads,
  * server/src/main/java/timely/server/subscription/MetricScanner.java:45-120).
  *
- * Each (session, metric) subscription becomes a named Structured Streaming
- * query: `readStream -> filter(metric ∧ tags ∧ viz) -> sink`. The reference's
- * `lag` (serve only points older than now-lag) maps onto a watermark, and its
- * replay-from-beginTime maps onto the stream starting position; `delay`
- * becomes the processing trigger interval.
+ * Each (session, metric) subscription becomes a Structured Streaming query:
+ * `readStream -> filter(metric ∧ tags ∧ viz) -> sink`. The reference's
+ * replay-from-beginTime maps onto the stream starting position, and `delay`
+ * becomes the processing trigger interval. Every subscription lives in its
+ * instance, keyed by its (session, metric) pair: two instances — two
+ * WebSocket connections — may hold the same pair without meeting.
  */
 class Subscriptions(
     sink: Row => Unit,
     onComplete: (String, String) => Unit = (_, _) => ()) {
 
-  private val active = new ConcurrentHashMap[String, StreamingQuery]()
-  // subscription key -> external channel dir, for sentinel delivery on remove
-  private val external = new ConcurrentHashMap[String, String]()
+  private type Key = (String, String) // (session id, metric)
 
-  private def key(sessionId: String, metric: String) = s"$sessionId/$metric"
+  private val active = new ConcurrentHashMap[Key, StreamingQuery]()
+  // the local relay's sinks, looked up per micro-batch rather than captured,
+  // so a subscription replaced under the same key stops delivering at once
+  private val sinks = new ConcurrentHashMap[Key, Subscriptions.SubSink]()
+  // the external channel dir of an addMetricExternal subscription, for
+  // sentinel delivery on remove
+  private val external = new ConcurrentHashMap[Key, String]()
 
   /** The reference sends a `complete:true` MetricResponse sentinel when a
     * scanner finishes or its subscription is torn down
@@ -65,27 +70,26 @@ class Subscriptions(
       auths: Seq[String] = Seq.empty,
       beginTimeMs: Long = 0L,
       endTimeMs: Long = 0L,
-      lagSeconds: Long = 0L,
       delayMs: Long = 1000L,
       ageOffTtlMs: Option[Long] = None,
       nowMs: () => Long = () => System.currentTimeMillis()): StreamingQuery = {
-    val df = planFiltered(pointsStream, metric, tags, auths, beginTimeMs, endTimeMs,
-      lagSeconds, ageOffTtlMs, nowMs)
-    val k = key(sessionId, metric)
+    val df = planFiltered(pointsStream, metric, tags, auths, beginTimeMs, ageOffTtlMs, nowMs)
+    val k = (sessionId, metric)
     external.remove(k) // replacing an external subscription under the same key
     val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
-    Subscriptions.sinks.put(k,
+    sinks.put(k,
       Subscriptions.SubSink(sink, endTimeMs, () => completeBounded(sessionId, metric, fired)))
     // foreachBatch, not a row-wise ForeachWriter: one micro-batch's rows land
     // unordered across partitions, so a past-end row could tear the sink down
     // BEFORE other partitions delivered their in-range rows. Batch-granular
     // delivery sorts by ts (the reference scanner's key order), serves every
     // in-range row, and only then fires the bounded-completion signal.
+    // unnamed: Spark requires a query's name to be unique per session, and
+    // the same (session, metric) pair may be live on two connections
     val q = df.writeStream
-      .queryName(k)
       .trigger(Trigger.ProcessingTime(delayMs))
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val s = Subscriptions.sinks.get(k)
+        val s = sinks.get(k)
         if (s != null) {
           var pastEnd = false
           // BOUNDED replay: the sorted micro-batch streams to the driver one
@@ -106,7 +110,7 @@ class Subscriptions(
         }
       }
       .start()
-    val old = active.put(key(sessionId, metric), q)
+    val old = active.put(k, q)
     if (old != null) old.stop()
     q
   }
@@ -120,13 +124,13 @@ class Subscriptions(
       sessionId: String, metric: String,
       fired: java.util.concurrent.atomic.AtomicBoolean): Unit =
     if (fired.compareAndSet(false, true)) {
-      val k = key(sessionId, metric)
+      val k = (sessionId, metric)
       val q = active.remove(k)
-      Subscriptions.sinks.remove(k)
+      sinks.remove(k)
       signalComplete(sessionId, metric)
       if (q != null) {
         val t = new Thread(() => try q.stop() catch { case _: Throwable => () },
-          s"graft-sub-complete-$k")
+          s"graft-sub-complete-$sessionId/$metric")
         t.setDaemon(true)
         t.start()
       }
@@ -161,13 +165,11 @@ class Subscriptions(
       auths: Seq[String] = Seq.empty,
       beginTimeMs: Long = 0L,
       endTimeMs: Long = 0L,
-      lagSeconds: Long = 0L,
       delayMs: Long = 1000L,
       batchSize: Int = 100,
       ageOffTtlMs: Option[Long] = None,
       nowMs: () => Long = () => System.currentTimeMillis()): StreamingQuery = {
-    val df = planFiltered(pointsStream, metric, tags, auths, beginTimeMs, endTimeMs,
-      lagSeconds, ageOffTtlMs, nowMs)
+    val df = planFiltered(pointsStream, metric, tags, auths, beginTimeMs, ageOffTtlMs, nowMs)
     val sid = sessionId
     val m = metric
     val end = endTimeMs
@@ -184,10 +186,9 @@ class Subscriptions(
         data ++ sentinel
       }
     }(org.apache.spark.sql.Encoders.STRING)
-    val k = key(sessionId, metric)
-    Subscriptions.sinks.remove(k) // replacing a relay subscription under the same key
+    val k = (sessionId, metric)
+    sinks.remove(k) // replacing a relay subscription under the same key
     val q = envelopes.toDF("value").writeStream
-      .queryName(k)
       .trigger(Trigger.ProcessingTime(delayMs))
       .format("text")
       .option("path", channelDir)
@@ -200,16 +201,14 @@ class Subscriptions(
   }
 
   /** Shared subscription plan: metric + time-range + visibility + tag
-    * predicates (+ the lag watermark) — one filter implementation for the
-    * local relay and the external channel paths. */
+    * predicates — one filter implementation for the local relay and the
+    * external channel paths. */
   private def planFiltered(
       pointsStream: DataFrame,
       metric: String,
       tags: Map[String, String],
       auths: Seq[String],
       beginTimeMs: Long,
-      endTimeMs: Long,
-      lagSeconds: Long,
       ageOffTtlMs: Option[Long],
       nowMs: () => Long): DataFrame = {
     val begin =
@@ -221,19 +220,14 @@ class Subscriptions(
       .where(col("metric") === metric && col("ts") >= begin)
       .where(graft.functions.VizFunctions.vizVisible(col("viz"), lit(auths.mkString(","))))
     tags.foreach { case (k, v) => df = df.where(QueryPlanner.tagPredicate(k, v)) }
-    if (lagSeconds > 0) {
-      df = df.withColumn("event_time", timestamp_millis(col("ts")))
-        .withWatermark("event_time", s"$lagSeconds seconds")
-        .drop("event_time")
-    }
     df
   }
 
   /** `remove` operation: stop one metric's tail (+ completion sentinel). */
   def removeMetric(sessionId: String, metric: String): Unit = {
-    val k = key(sessionId, metric)
+    val k = (sessionId, metric)
     val q = active.remove(k)
-    Subscriptions.sinks.remove(k)
+    sinks.remove(k)
     val channel = external.remove(k)
     if (q != null) {
       q.stop()
@@ -248,15 +242,15 @@ class Subscriptions(
   def close(sessionId: String): Unit = {
     val it = active.keySet().iterator()
     while (it.hasNext) {
-      val k = it.next()
-      if (k.startsWith(s"$sessionId/"))
-        removeMetric(sessionId, k.substring(sessionId.length + 1))
+      val (id, metric) = it.next()
+      if (id == sessionId) removeMetric(id, metric)
     }
   }
 
+  /** The live subscriptions as `<session id>/<metric>`, sorted. */
   def activeQueries: Seq[String] = {
     import scala.jdk.CollectionConverters._
-    active.keySet().asScala.toSeq.sorted
+    active.keySet().asScala.toSeq.map { case (id, metric) => s"$id/$metric" }.sorted
   }
 }
 
@@ -278,16 +272,4 @@ object Subscriptions {
     * subscription end (0 = unbounded tail), and the auto-completion hook. */
   private[streaming] case class SubSink(
       deliver: Row => Unit, endTimeMs: Long, onPastEnd: () => Unit)
-
-  /**
-   * Driver-side sink registry, resolved per micro-batch inside foreachBatch —
-   * keyed lookup instead of closure capture so a replaced subscription under
-   * the same key stops delivering immediately. foreachBatch runs on the
-   * driver, so this in-JVM push channel works in any deploy mode (the
-   * micro-batch is collected to the driver — the right shape for a
-   * subscription feed, which funnels to one consumer connection anyway; the
-   * reference scanner likewise single-threads each subscription's delivery).
-   * Cluster-scale fan-out without a driver hop is [[Subscriptions.addMetricExternal]].
-   */
-  private[streaming] val sinks = new ConcurrentHashMap[String, SubSink]()
 }

@@ -51,13 +51,13 @@ class GraftServerSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll 
     client.send(b.build(), HttpResponse.BodyHandlers.ofString())
   }
 
-  /** A WebSocket connection to the server, upgraded with `cookie`. */
-  private final class Ws(cookie: Option[String] = None) {
-    private val socket = new Socket("127.0.0.1", ports.ws)
+  /** A WebSocket connection to the server on `port`, upgraded with `cookie`. */
+  private final class Ws(port: Int, cookie: Option[String]) {
+    private val socket = new Socket("127.0.0.1", port)
     socket.setSoTimeout(500)
     private val out = new java.io.BufferedOutputStream(socket.getOutputStream)
     val in = new java.io.BufferedInputStream(socket.getInputStream)
-    out.write(WebSocketCodec.clientHandshake("/websocket", s"127.0.0.1:${ports.ws}",
+    out.write(WebSocketCodec.clientHandshake("/websocket", s"127.0.0.1:$port",
       "dGhlIHNhbXBsZSBub25jZQ==", cookie))
     out.flush()
     private val sb = new StringBuilder
@@ -73,14 +73,18 @@ class GraftServerSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll 
       out, WebSocketCodec.OpText, json.getBytes(UTF_8), Array[Byte](9, 8, 7, 6))
 
     /** Send one operation and return the text frame that answers it. */
-    def ask(json: String): String = {
+    def ask(json: String): String = reply(json).fold(c => fail(s"closed: $c"), identity)
+
+    /** Send one operation; its answer: a close frame's (code, reason) or a
+      * text frame. */
+    def reply(json: String): Either[(Int, String), String] = {
       send(json)
       val t0 = System.currentTimeMillis()
       while (System.currentTimeMillis() - t0 < 60000L) {
         try WebSocketCodec.readMessage(in) match {
-          case Some((WebSocketCodec.OpText, p)) => return new String(p, UTF_8)
+          case Some((WebSocketCodec.OpText, p)) => return Right(new String(p, UTF_8))
           case Some((WebSocketCodec.OpClose, p)) =>
-            fail(s"closed: ${new String(p, 2, p.length - 2, UTF_8)}")
+            return Left((((p(0) & 0xFF) << 8) | (p(1) & 0xFF), new String(p, 2, p.length - 2, UTF_8)))
           case Some(_) => ()
           case None => fail("connection ended")
         } catch { case _: java.net.SocketTimeoutException => () }
@@ -140,7 +144,7 @@ class GraftServerSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll 
     // subscribe over WS first, then put over TCP — the subscription must
     // deliver the socket-ingested point (reference: MetricScanner tails the
     // store every put handler writes)
-    val ws = new Ws()
+    val ws = new Ws(ports.ws, None)
     import ws.{in, send}
     send("""{"operation":"create","subscriptionId":"xp"}""")
     send("""{"operation":"add","subscriptionId":"xp","metric":"live.metric","delayTime":200}""")
@@ -233,24 +237,61 @@ class GraftServerSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll 
     val query = s"""{"start":$T,"end":${T + 10000},"msResolution":true,""" +
       """"queries":[{"aggregator":"sum","metric":"same.metric","tags":{"rack":"*"}}]}"""
     val lookup = "same.metric{rack=r.*}"
+    val encoded = java.net.URLEncoder.encode(lookup, UTF_8)
     val http = Seq(
       httpPost("/api/query", query, cookie),
       httpGet("/api/suggest?type=metrics&q=same&max=10", cookie),
-      httpGet("/api/search/lookup?q=" +
-        java.net.URLEncoder.encode(lookup, UTF_8) + "&limit=10", cookie),
+      httpGet("/api/suggest?type=tagk&q=same.metric", cookie),
+      httpGet("/api/suggest?type=tagv&q=same.metric&tagk=rack", cookie),
+      httpGet(s"/api/search/lookup?q=$encoded&limit=10", cookie),
+      httpGet(s"/api/search/lookup?q=$encoded", cookie),
       httpGet("/api/metrics", cookie),
-      httpGet("/api/cache", cookie))
+      httpGet("/api/cache", cookie),
+      httpGet("/api/aggregators", cookie))
     http.foreach(r => assert(r.statusCode() == 200, r.body()))
-    val ws = new Ws(cookie)
+    val ws = new Ws(ports.ws, cookie)
     val overWs = try Seq(
       ws.ask("""{"operation":"query",""" + query.drop(1)),
       ws.ask("""{"operation":"suggest","type":"metrics","q":"same","max":10}"""),
+      ws.ask("""{"operation":"suggest","type":"tagk","q":"same.metric"}"""),
+      ws.ask("""{"operation":"suggest","type":"tagv","q":"same.metric","tagk":"rack"}"""),
       ws.ask(s"""{"operation":"lookup","query":"$lookup","limit":10}"""),
+      ws.ask(s"""{"operation":"lookup","query":"$lookup"}"""),
       ws.ask("""{"operation":"metrics"}"""),
-      ws.ask("""{"operation":"cache"}""")) finally ws.close()
-    http.map(_.body()).zip(overWs).zip(Seq("query", "suggest", "lookup", "metrics", "cache"))
+      ws.ask("""{"operation":"cache"}"""),
+      ws.ask("""{"operation":"aggregators"}""")) finally ws.close()
+    http.map(_.body()).zip(overWs).zip(Seq("query", "suggest metrics", "suggest tagk",
+      "suggest tagv", "lookup", "lookup without limit", "metrics", "cache", "aggregators"))
       .foreach { case ((h, w), op) => assert(h == w, s"$op over HTTP vs WS") }
     // the caller's authorization applies: the viz=A point is in the answer
     assert(overWs.head.contains(s""""${T + 2000}":4.0"""), overWs.head)
+  }
+
+  test("a failed append is a 500 over HTTP and a 1011 over WS, each with one stderr line") {
+    // a catalog on a filesystem scheme nothing serves: every append throws
+    val broken = new GraftServer(spark, new java.io.File(dir, "broken-data").getAbsolutePath,
+      "nosuch://nowhere/meta")
+    val p = broken.start()
+    val captured = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(captured, true, UTF_8))
+    val (status, closed) = try {
+      val put = client.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${p.http}/api/put"))
+        .POST(HttpRequest.BodyPublishers.ofString(s"put broken.metric $T 1.0 host=a", UTF_8)).build(),
+        HttpResponse.BodyHandlers.ofString())
+      val ws = new Ws(p.ws, None)
+      try (put.statusCode(), ws.reply(s"""{"operation":"put","metric":{"name":"broken.metric",""" +
+        s""""timestamp":$T,"measure":1.0,"tags":[{"host":"a"}]}}"""))
+      finally ws.close()
+    } finally {
+      System.setErr(stderr)
+      broken.stop()
+    }
+    assert(status == 500)
+    assert(closed.left.toOption.map(_._1).contains(1011), s"got $closed")
+    val lines = new String(captured.toByteArray, UTF_8).linesIterator
+      .filter(_.contains("UnsupportedFileSystemException")).toSeq
+    assert(lines.exists(_.contains("POST /api/put")), lines.mkString("\n"))
+    assert(lines.exists(_.contains("ws put from")), lines.mkString("\n"))
   }
 }

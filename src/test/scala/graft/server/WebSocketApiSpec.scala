@@ -346,4 +346,42 @@ class WebSocketApiSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
     assert(rs.exists(r => r \ "complete" == JBool(true) && r \ "metric" == JString("sys.cpu.idle")),
       s"remove must deliver the complete:true sentinel, got $frames")
   }
+
+  test("two connections may hold the same subscription id and metric, each with its caller's points") {
+    // alice (auths A) and an anonymous caller both subscribe `dup` to the
+    // same metric: each tail keeps its own sink and viz filter, and neither
+    // connection is refused
+    val sid = auth.login("alice", "secret").get
+    val alice = new Client(cookie = Some(s"${AuthSessions.CookieName}=$sid"))
+    val anon = new Client()
+    assert(alice.handshake() == 101 && anon.handshake() == 101)
+    for (c <- Seq(alice, anon)) {
+      c.send("""{"operation":"create","subscriptionId":"dup"}""")
+      c.send("""{"operation":"add","subscriptionId":"dup","metric":"sys.cpu.user","delayTime":100}""")
+    }
+    def put(ts: Long, tags: String): Unit = alice.send(s"""{"operation":"put","metric":""" +
+      s"""{"name":"sys.cpu.user","timestamp":$ts,"measure":5.0,"tags":[$tags]}}""")
+    put(T + 3000, """{"rack":"r4"},{"viz":"A"}""")
+    put(T + 3100, """{"rack":"r4"}""") // unlabelled: shows the anonymous tail got past T+3000
+    /** Data timestamps delivered until `ts` arrives (30 s at most), and
+      * whether the server closed the connection. */
+    def until(c: Client, ts: Long): (Set[Long], Boolean) = {
+      var seen = Set.empty[Long]
+      var closed = false
+      val t0 = System.currentTimeMillis()
+      while (!seen(ts) && !closed && System.currentTimeMillis() - t0 < 30000L) {
+        val (frames, cl) = c.collectFrames(untilComplete = false, deadlineMs = 1000L, minFrames = 1)
+        seen ++= responsesOf(frames).filter(r => r \ "complete" == JBool(false)).map(tsOf)
+        closed = cl
+      }
+      (seen, closed)
+    }
+    val (aliceTs, aliceClosed) = until(alice, T + 3000)
+    val (anonTs, anonClosed) = until(anon, T + 3100)
+    for (c <- Seq(alice, anon)) { c.send("""{"operation":"close","subscriptionId":"dup"}"""); c.close() }
+    assert(!aliceClosed && !anonClosed, "neither connection may be closed")
+    assert(aliceTs(T + 3000), s"alice receives the viz=A point, got $aliceTs")
+    assert(anonTs(T + 3100) && anonTs.subsetOf(Set(T, T + 2000, T + 3100)),
+      s"the anonymous connection receives only unlabelled points, got $anonTs")
+  }
 }

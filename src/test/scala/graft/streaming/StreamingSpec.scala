@@ -318,7 +318,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val input = MemoryStream[MetricPoint]
     // reference AddSubscription.endTime + MetricScanner.java:110,270-280: a
     // bounded scan serves [begin, end] and sends complete:true on its own
-    subs.addMetric("s", input.toDS().toDF(), metric = "m", delayMs = 50L,
+    val query = subs.addMetric("s", input.toDS().toDF(), metric = "m", delayMs = 50L,
       beginTimeMs = T, endTimeMs = T + 1000L)
     input.addData(
       MetricPoint("m", T, 1.0, Map("host" -> "a"), None),          // in range
@@ -326,7 +326,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       MetricPoint("m", T + 2000L, 3.0, Map("host" -> "a"), None))  // past end -> sentinel
     val q = subs.activeQueries // registered before the batch runs
     assert(q == Seq("s/m"))
-    spark.streams.active.find(_.name == "s/m").foreach(_.processAllAvailable())
+    query.processAllAvailable()
     assert(received.toArray(Array.empty[java.lang.Long]).toSet == Set(T, T + 500L),
       "only the bounded range is delivered")
     assert(completed.peek() == ("s", "m"), "sentinel fired automatically")
@@ -342,13 +342,13 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val received = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val subs = new Subscriptions(row => { received.add(row.getAs[Long]("ts")); () })
     val input = MemoryStream[MetricPoint]
-    subs.addMetric("big", input.toDS().toDF(), metric = "m", delayMs = 50L)
+    val query = subs.addMetric("big", input.toDS().toDF(), metric = "m", delayMs = 50L)
     val n = 20000
     // shuffled insertion order: global order must come from the sort, not
     // the arrival order
     val idx = scala.util.Random.shuffle((0 until n).toVector)
     input.addData(idx.map(i => MetricPoint("m", T + i, i.toDouble, Map("host" -> "a"), None)))
-    spark.streams.active.find(_.name == "big/m").foreach(_.processAllAvailable())
+    query.processAllAvailable()
     val got = received.toArray(Array.empty[java.lang.Long]).map(_.toLong).toSeq
     assert(got.size == n, s"all $n backlog rows delivered, got ${got.size}")
     assert(got == got.sorted, "delivery preserves global ts order across range partitions")
