@@ -57,10 +57,10 @@ object Quickstart {
     println("M_RESPONSE=" + QueryJson.toResponses(
       QueryPlanner.plan(stored, mReq, auths = Seq("A")).head))
 
-    // S5: a FlatBuffers Metrics batch goes through the same ingest path —
-    // decodeFrame auto-detects the "TMFB" identifier vs put-line text
+    // S5: a FlatBuffers Metrics batch goes through the same put decoder —
+    // MetricParser.frame auto-detects the "TMFB" identifier vs put-line text
     val fbFrame = graft.model.MetricsFlatBuffer.encode(pts.collect().toIndexedSeq)
-    println(s"FB_DECODED=${PutLineIngest.decodeFrame(fbFrame).size}")
+    println(s"FB_DECODED=${graft.model.MetricParser.frame(fbFrame).points.size}")
 
     // P6: ingest-time exclusions — tag stripping configured per metric
     val stripped = PutLineIngest.parse(

@@ -18,9 +18,10 @@ import java.nio.charset.StandardCharsets.UTF_8
  * is needed: readers navigate via vtables, which makes the encoder's layout
  * choices irrelevant to interop.
  *
- * Timestamps are normalized to epoch ms like every other ingest path
- * (Value.java:43-45); the reserved `viz` tag is split out of the tag map
- * (MetricAdapter.java:152-159).
+ * The codec is lossless: [[decode]] returns what [[encode]] was given, the
+ * reserved `viz` tag in the visibility slot (MetricAdapter.java:152-159).
+ * The put decoder ([[MetricParser.frame]]) applies the admission rule to
+ * its output.
  */
 object MetricsFlatBuffer {
 
@@ -64,7 +65,7 @@ object MetricsFlatBuffer {
     new String(out, UTF_8)
   }
 
-  /** Decode a full Metrics buffer into canonical points. */
+  /** Decode a full Metrics buffer into its points, as encoded. */
   def decode(bytes: Array[Byte]): Seq[MetricPoint] = {
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     val root = indirect(bb, 0)
@@ -104,7 +105,7 @@ object MetricsFlatBuffer {
           i += 1
         }
       }
-      MetricPoint(name, MetricParser.normalizeTs(ts), value, tags.result(), viz)
+      MetricPoint(name, ts, value, tags.result(), viz)
     }
   }
 

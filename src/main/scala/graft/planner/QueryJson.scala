@@ -1,5 +1,7 @@
 package graft.planner
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.DataFrame
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -19,8 +21,13 @@ object QueryJson {
 
   private implicit val formats: Formats = DefaultFormats
 
+  /** A request document; text that is not JSON is the client's error. */
+  def parseDocument(text: String): JValue =
+    try JsonMethods.parse(text)
+    catch { case NonFatal(e) => throw new IllegalArgumentException("unparseable request", e) }
+
   def parseRequest(json: String): TsQueryRequest = {
-    val jv = JsonMethods.parse(json)
+    val jv = parseDocument(json)
     def str(j: JValue): Option[String] = j match {
       case JString(s) => Some(s); case _ => None
     }

@@ -448,7 +448,7 @@ object ApiQueries {
           col("ts_out"), col("value"))
     }),
     // S5 FlatBuffers batch ingest round trip: points -> per-partition Metrics
-    // buffers (100-point batches) -> auto-detecting frame decode -> points.
+    // buffers (100-point batches) -> the put decoder's frame decode -> points.
     // Same oracle shape as the put-line round trip: the wire format must be
     // lossless.
     "api_fb_roundtrip" -> ((s, dir) => {
@@ -456,7 +456,7 @@ object ApiQueries {
       import spark.implicits._
       points(s, dir).as[MetricPoint]
         .mapPartitions(_.grouped(100).map(g => graft.model.MetricsFlatBuffer.encode(g)))
-        .flatMap(bytes => graft.streaming.PutLineIngest.decodeFrame(bytes))
+        .flatMap(bytes => MetricParser.frame(bytes).points)
         .toDF()
         .select(col("metric"), col("ts"), col("value"),
           col("tags").getItem("user").as("tag_user"))

@@ -10,9 +10,8 @@ import scala.util.control.NonFatal
 import com.sun.net.httpserver.{HttpExchange, HttpServer, HttpsConfigurator, HttpsExchange, HttpsParameters, HttpsServer}
 import org.apache.spark.sql.SparkSession
 import org.json4s._
-import org.json4s.jackson.JsonMethods
 
-import graft.planner.TimelyApi
+import graft.planner.{QueryJson, TimelyApi}
 
 /**
  * HTTP facade — the serving analog of the reference's Netty HTTP pipeline
@@ -25,7 +24,9 @@ import graft.planner.TimelyApi
  * reference's flattened Metric JSON (Metric.java:19, HTTP body shape
  * MetricRequest.java:56-60) or newline-separated `put <metric> <ts> <value>
  * k=v...` lines (the TCP wire format, which the reference's own ITs use for
- * seeding — ITBase.java:183-198); bulk ingest at scale should use
+ * seeding — ITBase.java:183-198); a put with a line or field that
+ * [[graft.model.MetricParser]] refuses is a 400 naming it, and stores
+ * nothing. Bulk ingest at scale should use
  * [[graft.streaming.PutLineIngest]] or [[graft.sources.PointStore]] directly.
  *
  * A query answer streams chunked straight onto the response body, so an
@@ -35,7 +36,8 @@ import graft.planner.TimelyApi
  * Content-Length. The table parses, checks and plans before the 200 goes
  * out, so those errors still get their status.
  *
- * HTTP error mapping mirrors the reference: unparseable request → 400
+ * HTTP error mapping mirrors the reference: unparseable request (also a
+ * POST body that is not JSON) → 400
  * (TimelyExceptionHandler), no matching tags → 400 "No matching tags"
  * (HttpQueryRequestHandler.java:36), unknown path → 404, internal error → 500,
  * which also prints one stderr line (method, path, exception).
@@ -157,7 +159,7 @@ class HttpApi(
         case (_, "/version") =>
           respond(ex, 200, TimelyApi.Version + "\n", "text/plain")
         case ("POST", "/login") if sessions.isDefined =>
-          val jv = JsonMethods.parse(body(ex))
+          val jv = QueryJson.parseDocument(body(ex))
           val cred = for {
             u <- (jv \ "username") match { case JString(s) => Some(s); case _ => None }
             p <- (jv \ "password") match { case JString(s) => Some(s); case _ => None }

@@ -4,9 +4,8 @@ import java.io.Writer
 
 import org.apache.spark.sql.SparkSession
 import org.json4s._
-import org.json4s.jackson.JsonMethods
 
-import graft.model.{MetricParser, MetricPoint}
+import graft.model.MetricParser
 import graft.planner.{QueryJson, TimelyApi}
 import graft.sources.PointStore
 
@@ -21,8 +20,12 @@ import graft.sources.PointStore
  * [[PointStore.catalog]]), and returns the [[Operations.Answer]] that
  * writes the response body. Parsing, the query's meta check and planning
  * all run before the answer is returned, so a client error is thrown
- * before a transport has written a byte. A transport only frames: it maps
- * its request to a name and fields, and the answer to a response.
+ * before a transport has written a byte. A client error is an
+ * `IllegalArgumentException`: a request document that is not JSON, a bad
+ * field, or a put that the one put decoder ([[MetricParser]], shared with
+ * the TCP/UDP listeners and the streaming ingest) refuses. A transport only
+ * frames: it maps its request to a name and fields, and the answer to a
+ * response.
  */
 private[server] final class Operations(spark: SparkSession, dataDir: String, metaDir: String) {
   import Operations._
@@ -56,8 +59,23 @@ private[server] final class Operations(spark: SparkSession, dataDir: String, met
     },
     // the reference's CacheResponse, viz-filtered per caller
     "cache" -> op((_, auths) => text(TimelyApi.cacheJson(points, auths))),
+    // a put is newline-separated put lines (the TCP wire format, which the
+    // reference's own ITs seed with — ITBase.java:183-198), or one point in
+    // the flattened Metric JSON: the whole HTTP body (MetricRequest.java:
+    // 56-60) or a WS frame's `metric` field (WSMetricPutHandler.java:17-19).
+    // One refused line or field refuses the request, and nothing is stored.
     "put" -> op { (f, _) =>
-      PointStore.append(spark, putBatch(f), dataDir, metaDir)
+      val put = f match {
+        case Params(_) => throw new IllegalArgumentException("put needs a body")
+        case b: Body if b.text.startsWith("put ") || b.text.startsWith("put\t") =>
+          MetricParser.lines(b.text.linesIterator)
+        case b: Body => MetricParser.metricJson(b.json \ "metric" match {
+          case m: JObject => m
+          case _ => b.json
+        })
+      }
+      put.refused.headOption.foreach(why => throw new IllegalArgumentException(why))
+      PointStore.append(spark, put.points, dataDir, metaDir)
       _ => ()
     })
 }
@@ -90,7 +108,7 @@ private[server] object Operations {
 
   /** A request document: an HTTP POST body or a WebSocket text frame. */
   final case class Body(text: String) extends Fields {
-    lazy val json: JValue = JsonMethods.parse(text)
+    lazy val json: JValue = QueryJson.parseDocument(text)
 
     def str(name: String): Option[String] = json \ name match {
       case JString(s) => Some(s)
@@ -98,56 +116,6 @@ private[server] object Operations {
       case JLong(l) => Some(l.toString)
       case _ => None
     }
-  }
-
-  /** A put's points: newline-separated put lines (the TCP wire format, which
-    * the reference's own ITs seed with — ITBase.java:183-198), or one point
-    * in the reference's flattened Metric JSON, the whole HTTP body
-    * (MetricRequest.java:56-60) or a WS frame's `metric` field
-    * (WSMetricPutHandler.java:17-19). */
-  private def putBatch(f: Fields): Seq[MetricPoint] = f match {
-    case Params(_) => throw new IllegalArgumentException("put needs a body")
-    case b: Body if b.text.startsWith("put ") || b.text.startsWith("put\t") =>
-      b.text.linesIterator.filter(_.trim.nonEmpty).map { l =>
-        MetricParser.parse(l)
-          .getOrElse(throw new IllegalArgumentException(s"unparseable put line: $l"))
-      }.toSeq
-    case b: Body => Seq(metric(b.json \ "metric" match {
-      case m: JObject => m
-      case _ => b.json
-    }))
-  }
-
-  /** `{"name":m,"timestamp":ms,"measure":v,"tags":[{"k":"v"},…]}`
-    * (Metric.java:19) -> [[MetricPoint]]; the `viz` tag moves to the
-    * visibility slot like every other ingest path (MetricAdapter.java:44). */
-  private def metric(jv: JValue): MetricPoint = {
-    val name = jv \ "name" match {
-      case JString(s) => s
-      case _ => throw new IllegalArgumentException("metric name required")
-    }
-    val ts = jv \ "timestamp" match {
-      case JInt(i) => i.toLong; case JLong(l) => l
-      case _ => throw new IllegalArgumentException("timestamp required")
-    }
-    val measure = jv \ "measure" match {
-      case JDouble(d) => d; case JInt(i) => i.toDouble; case JLong(l) => l.toDouble
-      case _ => throw new IllegalArgumentException("measure required")
-    }
-    val tags = jv \ "tags" match {
-      case JArray(ts) => ts.flatMap {
-        case JObject(fields) => fields.collect { case (k, JString(v)) => k -> v }
-        case _ => Nil
-      }.toMap
-      case _ => Map.empty[String, String]
-    }
-    // line-protocol parity: MetricParser requires >= 1 tag, and a tag-less
-    // point would write no meta rows — permanently unqueryable data (every
-    // query 400s on "No matching tags"). Reject at the door instead.
-    if ((tags - MetricPoint.VisibilityTag).isEmpty)
-      throw new IllegalArgumentException("at least one tag required")
-    MetricPoint(name, ts, measure,
-      tags - MetricPoint.VisibilityTag, tags.get(MetricPoint.VisibilityTag))
   }
 
   /** One stderr line for a failure no client is told the cause of. */

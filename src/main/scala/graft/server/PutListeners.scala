@@ -1,50 +1,61 @@
 package graft.server
 
-import java.io.{BufferedInputStream, EOFException, PushbackInputStream}
+import java.io.{BufferedInputStream, PushbackInputStream}
 import java.net.{DatagramPacket, DatagramSocket, InetSocketAddress, ServerSocket, Socket, SocketTimeoutException}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
-import graft.model.{MetricPoint, MetricsFlatBuffer}
-import graft.streaming.PutLineIngest
+import graft.model.{MetricParser, MetricPoint, MetricsFlatBuffer}
 
 /**
  * Live TCP/UDP put listeners — the dev-parity acceptors of the reference's
  * socket ingest (server/src/main/java/timely/server/netty/tcp/
  * TcpPutHandler.java, udp/UdpPutHandler.java, exercised by
- * TimelyTcpIT/TimelyUdpIT put round trips). All parsing and policy live in
- * the oracle-gated ingest path ([[PutLineIngest.decodeFrame]] /
- * [[graft.model.MetricParser]]); these classes only move bytes from a socket
- * into it and hand decoded batches to the supplied sink.
+ * TimelyTcpIT/TimelyUdpIT put round trips). These classes only move bytes
+ * from a socket into the one put decoder ([[MetricParser]], which every
+ * transport shares) and hand its admitted points to the supplied sink.
  *
  * Frame auto-detection mirrors the reference's MetricsBufferDecoder
  * (common/src/main/java/timely/netty/tcp/MetricsBufferDecoder.java:28-52):
  * a TCP connection opening with the FlatBuffers "TMFB" identifier is read to
  * EOF and decoded as one Metrics batch; anything else streams as newline-
- * delimited put lines. A UDP datagram is one frame either way.
+ * delimited put lines, and a `version` line answers the version string. A
+ * UDP datagram is one frame either way.
  *
- * Text lines batch toward the sink: a batch flushes at `batchSize` lines or
- * when the connection pauses for `lingerMs` (so an interactive `telnet put`
- * still lands promptly) — the socket-side analog of the ingest pipeline's
- * micro-batching. Malformed lines are dropped exactly like the reference
- * drops unparseable messages. A failure that ends a connection or a
- * datagram (a sink that throws, a frame that does not decode) prints one
- * stderr line naming the peer, the exception and the parsed points that
- * were not stored.
+ * Text lines batch toward the sink: a batch flushes at `BatchSize` lines
+ * or when the connection pauses for `LingerMs` (so an interactive `telnet
+ * put` still lands promptly) — the socket-side analog of the ingest
+ * pipeline's micro-batching. A batch, frame or datagram with points the
+ * decoder refuses (a malformed line, a point without a tag, a corrupt TMFB
+ * frame) stores the rest and prints one stderr line naming the peer, the
+ * refused count and the first refusal. A failure that ends a connection or
+ * a datagram (a sink that throws) prints one stderr line naming the peer,
+ * the exception and the decoded points that were not stored.
  */
 object PutListeners {
 
-  /** Decode a batch of text put lines through the shared ingest parser. */
-  private def parseLines(lines: Seq[String]): Seq[MetricPoint] =
-    lines.flatMap(l => graft.model.MetricParser.parse(l))
+  /** Put lines a TCP connection batches before it flushes. */
+  private val BatchSize = 1000
+
+  /** A TCP connection idle this long flushes its partial batch. */
+  private val LingerMs = 100
+
+  /** The largest UDP datagram. */
+  private val MaxPacket = 65535
 
   private def reportFailure(peer: String, e: Throwable, unstored: Int): Unit =
     System.err.println(s"[graft] put from $peer failed: $e; $unstored parsed point(s) not stored")
 
-  final class Tcp(sink: Seq[MetricPoint] => Unit,
-                  batchSize: Int = 1000, lingerMs: Int = 100) {
+  /** The decoded put's points; first, one stderr line if it refused any. */
+  private def admitted(peer: String, put: MetricParser.Decoded): Seq[MetricPoint] = {
+    if (put.refused.nonEmpty) System.err.println(
+      s"[graft] put from $peer refused ${put.refused.size} point(s); first: ${put.refused.head}")
+    put.points
+  }
+
+  final class Tcp(sink: Seq[MetricPoint] => Unit) {
     private var server: ServerSocket = _
     @volatile private var running = false
 
@@ -77,34 +88,38 @@ object PutListeners {
     }
 
     private def serve(socket: Socket): Unit = {
+      val peer = String.valueOf(socket.getRemoteSocketAddress)
       var unstored = 0 // points of the sink call in progress
-      def store(pts: Seq[MetricPoint]): Unit = if (pts.nonEmpty) {
-        unstored = pts.size
-        sink(pts)
-        unstored = 0
+      def store(put: MetricParser.Decoded): Unit = {
+        val pts = admitted(peer, put)
+        if (pts.nonEmpty) {
+          unstored = pts.size
+          sink(pts)
+          unstored = 0
+        }
       }
       try {
         val in = new PushbackInputStream(new BufferedInputStream(socket.getInputStream), 8)
         val head = new Array[Byte](8)
-        val n = readUpTo(in, head, 8)
+        val n = in.readNBytes(head, 0, 8)
         in.unread(head, 0, n)
         if (n == 8 && MetricsFlatBuffer.hasIdentifier(head)) {
           // binary batch: one frame per connection, read to EOF
           // (MetricsBufferDecoder's TMFB branch)
-          store(PutLineIngest.decodeFrame(in.readAllBytes()))
+          store(MetricParser.frame(in.readAllBytes()))
         } else serveText(socket, in, store)
-      } catch { case NonFatal(e) => reportFailure(String.valueOf(socket.getRemoteSocketAddress), e, unstored) }
+      } catch { case NonFatal(e) => reportFailure(peer, e, unstored) }
       finally { try socket.close() catch { case NonFatal(_) => () } }
     }
 
     private def serveText(socket: Socket, in: PushbackInputStream,
-                          store: Seq[MetricPoint] => Unit): Unit = {
-      socket.setSoTimeout(lingerMs)
+                          store: MetricParser.Decoded => Unit): Unit = {
+      socket.setSoTimeout(LingerMs)
       val batch = new ArrayBuffer[String]()
       def flush(): Unit = if (batch.nonEmpty) {
-        val pts = parseLines(batch.toSeq)
+        val put = MetricParser.lines(batch)
         batch.clear()
-        store(pts)
+        store(put)
       }
       val line = new java.io.ByteArrayOutputStream()
       var open = true
@@ -125,7 +140,7 @@ object PutListeners {
               out.flush()
             } else {
               batch += l
-              if (batch.size >= batchSize) flush()
+              if (batch.size >= BatchSize) flush()
             }
           } else if (b != '\r') line.write(b)
         } catch {
@@ -134,21 +149,9 @@ object PutListeners {
       }
       flush()
     }
-
-    private def readUpTo(in: java.io.InputStream, buf: Array[Byte], n: Int): Int = {
-      var off = 0
-      try {
-        while (off < n) {
-          val r = in.read(buf, off, n - off)
-          if (r < 0) return off
-          off += r
-        }
-      } catch { case _: EOFException => () }
-      off
-    }
   }
 
-  final class Udp(sink: Seq[MetricPoint] => Unit, maxPacket: Int = 65535) {
+  final class Udp(sink: Seq[MetricPoint] => Unit) {
     private var socket: DatagramSocket = _
     @volatile private var running = false
 
@@ -157,10 +160,13 @@ object PutListeners {
       socket = new DatagramSocket(new InetSocketAddress(port))
       running = true
       val rx = new Thread(() => {
-        val buf = new Array[Byte](maxPacket)
+        val buf = new Array[Byte](MaxPacket)
         val packet = new DatagramPacket(buf, buf.length)
         while (running) {
           var unstored = 0
+          // the packet's address, not getSocketAddress: that throws before
+          // the first datagram has arrived
+          def peer = s"${packet.getAddress}:${packet.getPort}"
           try {
             socket.receive(packet)
             // one datagram = one frame (text lines or a TMFB batch), exactly
@@ -168,15 +174,13 @@ object PutListeners {
             val frame = java.util.Arrays.copyOfRange(
               packet.getData, packet.getOffset, packet.getOffset + packet.getLength)
             if (frame.nonEmpty) {
-              val pts = PutLineIngest.decodeFrame(frame)
+              val pts = admitted(peer, MetricParser.frame(frame))
               unstored = pts.size
               if (pts.nonEmpty) sink(pts)
             }
           } catch {
             case _: Throwable if !running => ()
-            // the packet's address, not getSocketAddress: that throws
-            // before the first datagram has arrived
-            case NonFatal(e) => reportFailure(s"${packet.getAddress}:${packet.getPort}", e, unstored)
+            case NonFatal(e) => reportFailure(peer, e, unstored)
           }
         }
       }, "graft-udp-put-rx")

@@ -8,7 +8,7 @@ import java.util.concurrent.{ConcurrentHashMap, Executors, ScheduledFuture, Time
 import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.json4s._
 
 import graft.sources.PointStore
@@ -41,8 +41,8 @@ import graft.streaming.{MetricResponseJson, Subscriptions}
  * like a connection that ends on an exception, prints one stderr line
  * (peer, operation, exception).
  *
- * Delivery: each `add` starts a Structured Streaming tail over the
- * [[PointStore]] directory ([[Subscriptions.addMetric]]); matched points are
+ * Delivery: each `add` starts a Structured Streaming tail of the store
+ * ([[PointStore.stream]], [[Subscriptions.addMetric]]); matched points are
  * pushed as `{"responses":[MetricResponse…]}` envelopes. Batching follows
  * MetricScanner: responses accumulate until `subscriptionBatchSize`
  * (MetricScanner.java:212-214) and a fixed-rate flusher drains partial
@@ -84,9 +84,6 @@ class WebSocketApi(
 
   def start(port: Int = 0): Int = synchronized {
     require(server == null, "already started")
-    // the streaming tail needs the dir to exist
-    val root = new org.apache.hadoop.fs.Path(dataDir)
-    root.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(root)
     server = tls match {
       case None =>
         val s = new ServerSocket()
@@ -126,12 +123,6 @@ class WebSocketApi(
     conns.clear()
     flushPool.shutdown()
   }
-
-  /** The streaming tail every subscription plans over: new parquet files in
-    * the store directory become micro-batches (the MetricScanner re-scan
-    * loop, minus the hand-rolled ranges — the file source tracks progress). */
-  private def pointsStream(): DataFrame =
-    spark.readStream.schema(PointStore.Schema).parquet(dataDir)
 
   private val ops = new Operations(spark, dataDir, metaDir)
 
@@ -233,7 +224,7 @@ class WebSocketApi(
                   case JObject(fields) => fields.collect { case (k, JString(v)) => k -> v }.toMap
                   case _ => Map.empty[String, String]
                 }
-                subs.addMetric(id, pointsStream(), metric, tags, auths,
+                subs.addMetric(id, PointStore.stream(spark, dataDir), metric, tags, auths,
                   beginTimeMs = f.long("startTime").getOrElse(0L),
                   endTimeMs = f.long("endTime").getOrElse(0L),
                   delayMs = f.long("delayTime").getOrElse(1000L))

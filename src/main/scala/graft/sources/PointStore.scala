@@ -112,11 +112,22 @@ object PointStore {
     spark.read.parquet(dataDir)
 
   /** The store as read back: the canonical point columns plus the `dt`/`hr`
-    * partition columns (also the schema a streaming tail of the store
-    * declares — a file source cannot infer one). */
+    * partition columns (also the schema of [[stream]]). */
   val Schema: StructType = StructType(
     Encoders.product[MetricPoint].schema.fields ++ Seq(
       StructField("dt", StringType), StructField("hr", IntegerType)))
+
+  /** The store as a stream, the tail every subscription plans over: each new
+    * parquet file in the store becomes a micro-batch (the MetricScanner
+    * re-scan loop, minus the hand-rolled ranges — the file source tracks
+    * progress). A file source infers no schema and needs its directory, so
+    * the stream declares [[Schema]] and creates the directory first,
+    * through the directory's own `FileSystem`. */
+  def stream(spark: SparkSession, dataDir: String): DataFrame = {
+    val root = new Path(dataDir)
+    root.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(root)
+    spark.readStream.schema(Schema).parquet(dataDir)
+  }
 
   /** The meta catalog's (metric, tagk, tagv) rows. */
   private val MetaSchema: StructType = StructType(Seq(

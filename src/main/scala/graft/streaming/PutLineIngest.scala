@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.{Exclusions, MetricParser, MetricPoint, MetricsFlatBuffer}
+import graft.model.{Exclusions, MetricParser, MetricPoint}
 import graft.sources.PointStore
 
 /**
@@ -13,12 +13,13 @@ import graft.sources.PointStore
  * common/src/main/java/timely/model/parse/MetricParser.java:17-30).
  *
  * Any line source works (socket for dev, Kafka value column, file drop):
- * the contract is a streaming Dataset[String] of put lines in, a canonical
- * points stream out. Malformed lines are dropped like the reference drops
- * unparseable messages — route them to a rejects sink by filtering on
- * `parsed IS NULL` before the flatMap if auditing is needed. The storage
- * sink writes nothing itself: every store write goes through
- * [[PointStore.append]].
+ * the contract is a streaming Dataset[String] of put lines (or of binary
+ * frames) in, a canonical points stream out. Lines and frames go through
+ * the one put decoder every transport uses ([[MetricParser]]), so a point
+ * is admitted here exactly when a socket or HTTP put of it would be; what
+ * the decoder refuses is dropped, like the reference drops unparseable
+ * messages. The storage sink writes nothing itself: every store write goes
+ * through [[PointStore.append]].
  */
 object PutLineIngest {
 
@@ -57,27 +58,12 @@ object PutLineIngest {
     applyPolicy(lines.flatMap(MetricParser.parse(_)), excludeMetricRegex, excludedTags, defaultViz)
   }
 
-  /** Decode one binary ingest frame, auto-detecting FlatBuffers batches vs
-    * put-line text exactly like the reference's TCP pipeline
-    * (common/src/main/java/timely/netty/tcp/MetricsBufferDecoder.java:28-52):
-    * a frame carrying the "TMFB" identifier unpacks as a Metrics batch, any
-    * other frame is treated as UTF-8 put lines. A corrupt binary frame is
-    * DROPPED (empty result) like the text path drops malformed lines —
-    * otherwise one bad frame would fail the micro-batch and checkpoint
-    * replay would crash-loop the whole streaming ingest. */
-  def decodeFrame(bytes: Array[Byte]): Seq[MetricPoint] =
-    if (MetricsFlatBuffer.hasIdentifier(bytes)) {
-      // decode bounds every wire length before allocating, so corrupt frames
-      // surface as cheap (non-fatal) exceptions — dropped here like the text
-      // path drops malformed lines
-      try MetricsFlatBuffer.decode(bytes)
-      catch { case scala.util.control.NonFatal(_) => Seq.empty }
-    } else new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-      .linesIterator.flatMap(MetricParser.parse(_)).toSeq
-
   /** Parse a (streaming or batch) dataset of binary frames — the S5 batch
     * ingest source. Works for any framed byte source (Kafka value column,
-    * socket with length framing, file drop). */
+    * socket with length framing, file drop). Each frame is a TMFB batch or
+    * put-line text ([[MetricParser.frame]]); a corrupt frame is dropped, so
+    * one bad frame never fails the micro-batch and crash-loops checkpoint
+    * replay. */
   def parseFrames(
       frames: Dataset[Array[Byte]],
       excludeMetricRegex: Option[String] = None,
@@ -85,7 +71,7 @@ object PutLineIngest {
       excludedTags: Map[String, Set[String]] = Map.empty): Dataset[MetricPoint] = {
     val spark = frames.sparkSession
     import spark.implicits._
-    applyPolicy(frames.flatMap(decodeFrame(_)), excludeMetricRegex, excludedTags, defaultViz)
+    applyPolicy(frames.flatMap(MetricParser.frame(_).points), excludeMetricRegex, excludedTags, defaultViz)
   }
 
   /** Exact-dedup a streaming points frame within an event-time watermark.

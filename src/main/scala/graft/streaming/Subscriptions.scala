@@ -29,12 +29,9 @@ class Subscriptions(
   private type Key = (String, String) // (session id, metric)
 
   private val active = new ConcurrentHashMap[Key, StreamingQuery]()
-  // the local relay's sinks, looked up per micro-batch rather than captured,
+  // each subscription's sink, looked up per micro-batch rather than captured,
   // so a subscription replaced under the same key stops delivering at once
   private val sinks = new ConcurrentHashMap[Key, Subscriptions.SubSink]()
-  // the external channel dir of an addMetricExternal subscription, for
-  // sentinel delivery on remove
-  private val external = new ConcurrentHashMap[Key, String]()
 
   /** The reference sends a `complete:true` MetricResponse sentinel when a
     * scanner finishes or its subscription is torn down
@@ -73,9 +70,16 @@ class Subscriptions(
       delayMs: Long = 1000L,
       ageOffTtlMs: Option[Long] = None,
       nowMs: () => Long = () => System.currentTimeMillis()): StreamingQuery = {
-    val df = planFiltered(pointsStream, metric, tags, auths, beginTimeMs, ageOffTtlMs, nowMs)
+    val begin =
+      if (beginTimeMs == 0L) ageOffTtlMs.map(ttl => nowMs() - ttl).getOrElse(0L)
+      else beginTimeMs
+    // the ts upper cut is enforced at delivery, not in the plan: the first
+    // past-end row is the bounded-subscription completion SIGNAL
+    var df = pointsStream
+      .where(col("metric") === metric && col("ts") >= begin)
+      .where(graft.functions.VizFunctions.vizVisible(col("viz"), lit(auths.mkString(","))))
+    tags.foreach { case (k, v) => df = df.where(QueryPlanner.tagPredicate(k, v)) }
     val k = (sessionId, metric)
-    external.remove(k) // replacing an external subscription under the same key
     val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
     sinks.put(k,
       Subscriptions.SubSink(sink, endTimeMs, () => completeBounded(sessionId, metric, fired)))
@@ -136,102 +140,13 @@ class Subscriptions(
       }
     }
 
-  /**
-   * Cluster-mode subscription delivery (the deployment shape of ST1/ST2):
-   * the in-JVM relay of [[addMetric]] only works where driver and executors
-   * share a JVM, so here the subscription stream is serialized to
-   * [[MetricResponseJson]] envelopes ON THE EXECUTORS and appended to an
-   * external channel directory through Spark's transactional streaming file
-   * sink — a shared-filesystem path a WebSocket gateway tails (a Kafka topic
-   * is this same code with `format("kafka")`; no broker exists in this
-   * environment, so the filesystem is the one real external channel).
-   * Envelopes batch up to `batchSize` responses, the reference's
-   * subscriptionBatchSize flush (MetricScanner.java:61).
-   *
-   * Completion: remove/close appends the `complete:true` sentinel envelope to
-   * the channel from the driver; a bounded (endTimeMs != 0) subscription also
-   * emits it from whichever executor task first sees a past-end point —
-   * at-least-once, since the reference's `completedResponseSent` flag is
-   * per-scanner state with no distributed single-writer analog; channel
-   * consumers dedupe on (subscriptionId, complete).
-   */
-  def addMetricExternal(
-      sessionId: String,
-      pointsStream: DataFrame,
-      metric: String,
-      channelDir: String,
-      checkpointDir: String,
-      tags: Map[String, String] = Map.empty,
-      auths: Seq[String] = Seq.empty,
-      beginTimeMs: Long = 0L,
-      endTimeMs: Long = 0L,
-      delayMs: Long = 1000L,
-      batchSize: Int = 100,
-      ageOffTtlMs: Option[Long] = None,
-      nowMs: () => Long = () => System.currentTimeMillis()): StreamingQuery = {
-    val df = planFiltered(pointsStream, metric, tags, auths, beginTimeMs, ageOffTtlMs, nowMs)
-    val sid = sessionId
-    val m = metric
-    val end = endTimeMs
-    val bs = batchSize
-    val envelopes = df.mapPartitions { it =>
-      it.grouped(bs).flatMap { rows =>
-        val (inRange, pastEnd) = rows.partition(r => end == 0L || r.getAs[Long]("ts") <= end)
-        val data =
-          if (inRange.isEmpty) Nil
-          else Seq(MetricResponseJson.envelope(inRange.map(MetricResponseJson.response(_, sid))))
-        val sentinel =
-          if (pastEnd.isEmpty) Nil
-          else Seq(MetricResponseJson.envelope(Seq(MetricResponseJson.completed(m, sid))))
-        data ++ sentinel
-      }
-    }(org.apache.spark.sql.Encoders.STRING)
-    val k = (sessionId, metric)
-    sinks.remove(k) // replacing a relay subscription under the same key
-    val q = envelopes.toDF("value").writeStream
-      .trigger(Trigger.ProcessingTime(delayMs))
-      .format("text")
-      .option("path", channelDir)
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    external.put(k, channelDir)
-    val old = active.put(k, q)
-    if (old != null) old.stop()
-    q
-  }
-
-  /** Shared subscription plan: metric + time-range + visibility + tag
-    * predicates — one filter implementation for the local relay and the
-    * external channel paths. */
-  private def planFiltered(
-      pointsStream: DataFrame,
-      metric: String,
-      tags: Map[String, String],
-      auths: Seq[String],
-      beginTimeMs: Long,
-      ageOffTtlMs: Option[Long],
-      nowMs: () => Long): DataFrame = {
-    val begin =
-      if (beginTimeMs == 0L) ageOffTtlMs.map(ttl => nowMs() - ttl).getOrElse(0L)
-      else beginTimeMs
-    // the ts upper cut is enforced at delivery, not in the plan: the first
-    // past-end row is the bounded-subscription completion SIGNAL
-    var df = pointsStream
-      .where(col("metric") === metric && col("ts") >= begin)
-      .where(graft.functions.VizFunctions.vizVisible(col("viz"), lit(auths.mkString(","))))
-    tags.foreach { case (k, v) => df = df.where(QueryPlanner.tagPredicate(k, v)) }
-    df
-  }
-
   /** `remove` operation: stop one metric's tail (+ completion sentinel). */
   def removeMetric(sessionId: String, metric: String): Unit = {
     val k = (sessionId, metric)
     val q = active.remove(k)
     sinks.remove(k)
-    val channel = external.remove(k)
     if (q != null) {
       q.stop()
-      if (channel != null) Subscriptions.writeSentinel(channel, sessionId, metric)
       signalComplete(sessionId, metric)
     }
   }
@@ -255,18 +170,6 @@ class Subscriptions(
 }
 
 object Subscriptions {
-
-  /** Append the complete:true sentinel envelope to an external channel dir as
-    * its own file — streaming-file-sink part files are never touched, and a
-    * gateway tailing the directory picks it up like any other envelope. */
-  private[streaming] def writeSentinel(channelDir: String, sessionId: String, metric: String): Unit = {
-    val line = MetricResponseJson.envelope(Seq(MetricResponseJson.completed(metric, sessionId)))
-    val path = java.nio.file.Paths.get(channelDir,
-      s"complete-$sessionId-$metric-${java.util.UUID.randomUUID()}.txt")
-    java.nio.file.Files.createDirectories(path.getParent)
-    java.nio.file.Files.write(path, java.util.Collections.singletonList(line),
-      java.nio.charset.StandardCharsets.UTF_8)
-  }
 
   /** One registered subscription sink: the delivery callback, the bounded-
     * subscription end (0 = unbounded tail), and the auto-completion hook. */

@@ -37,6 +37,25 @@ class MetricParserSpec extends AnyFunSuite {
     assert(MetricParser.parse("put m 1 1.0 malformedtag").isEmpty)
   }
 
+  test("one admission rule for put lines, TMFB entries and Metric JSON") {
+    import org.json4s.jackson.JsonMethods.parse
+    // a name, a tag other than viz, a seconds timestamp scaled to ms
+    val ok = MetricPoint("m", 1447767913000L, 1.0, Map("k" -> "v"), Some("A"))
+    assert(MetricParser.parseLine("put m 1447767913 1.0 k=v viz=A") == Right(ok))
+    assert(MetricParser.frame(MetricsFlatBuffer.encode(Seq(ok.copy(ts = 1447767913L))))
+      == MetricParser.Decoded(Seq(ok), Nil))
+    assert(MetricParser.metricJson(parse("""{"name":"m","timestamp":1447767913,""" +
+      """"measure":1.0,"tags":[{"k":"v"},{"viz":"A"}]}""")) == MetricParser.Decoded(Seq(ok), Nil))
+    // refused on every format: only a viz tag, no tags, no name
+    assert(MetricParser.parseLine("put m 1447767913 1.0 viz=A").isLeft)
+    val refused = MetricParser.frame(MetricsFlatBuffer.encode(Seq(
+      ok.copy(tags = Map.empty), ok.copy(tags = Map.empty, viz = None), ok.copy(metric = ""))))
+    assert(refused.points.isEmpty && refused.refused.size == 3, refused)
+    assert(MetricParser.metricJson(parse(
+      """{"name":"","timestamp":1,"measure":1.0,"tags":[{"k":"v"}]}""")).refused ==
+      Seq("metric name required"))
+  }
+
   test("escaped = and , in tag keys/values") {
     val p = MetricParser.parse("""put m 1447767913681 1.0 a\=b=c\,d""").get
     assert(p.tags == Map("a=b" -> "c,d"))

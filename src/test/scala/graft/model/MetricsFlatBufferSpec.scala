@@ -2,10 +2,9 @@ package graft.model
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.PutLineIngest
-
 /** Hand-rolled FlatBuffers Metrics codec: identifier detection, lossless
-  * round trip, viz splitting, ts normalization, and the auto-detect path. */
+  * round trip, viz splitting, and the put decoder's frame path (auto-detect,
+  * ts normalization, corrupt frames). */
 class MetricsFlatBufferSpec extends AnyFunSuite {
 
   private val pts = Seq(
@@ -28,7 +27,7 @@ class MetricsFlatBufferSpec extends AnyFunSuite {
 
   test("seconds-precision timestamps normalize to ms like every ingest path") {
     val p = MetricPoint("m", 1704067200L, 1.0, Map("h" -> "a"), None) // seconds
-    val back = MetricsFlatBuffer.decode(MetricsFlatBuffer.encode(Seq(p)))
+    val back = MetricParser.frame(MetricsFlatBuffer.encode(Seq(p))).points
     assert(back.head.ts == 1704067200000L)
   }
 
@@ -37,21 +36,21 @@ class MetricsFlatBufferSpec extends AnyFunSuite {
     // identifier present but body is garbage with a huge offset/length word
     val garbage = Array[Byte](12, 0, 0, 0, 'T', 'M', 'F', 'B',
       0x7f.toByte, 0x7f.toByte, 0x7f.toByte, 0x7f.toByte)
-    assert(PutLineIngest.decodeFrame(garbage).isEmpty)
+    assert(MetricParser.frame(garbage).points.isEmpty)
     // truncated mid-table
-    assert(PutLineIngest.decodeFrame(good.take(20)).isEmpty)
+    assert(MetricParser.frame(good.take(20)).points.isEmpty)
     // a length word patched to a huge positive value must throw cheaply (and
-    // be swallowed by decodeFrame), not allocate gigabytes
+    // be refused by the frame decoder), not allocate gigabytes
     val patched = good.clone()
     patched(patched.length - 6) = 0x7f.toByte
-    assert(PutLineIngest.decodeFrame(patched).size <= pts.size)
+    assert(MetricParser.frame(patched).points.size <= pts.size)
   }
 
   test("frame decode auto-detects: FB batch vs put-line text") {
-    val fb = PutLineIngest.decodeFrame(MetricsFlatBuffer.encode(pts.take(2)))
+    val fb = MetricParser.frame(MetricsFlatBuffer.encode(pts.take(2))).points
     assert(fb == pts.take(2))
     val text = "put sys.cpu.user 1704067200 1.5 host=a\nput bad line\nput m 1704067201 2 h=b"
-    val parsed = PutLineIngest.decodeFrame(text.getBytes("UTF-8"))
+    val parsed = MetricParser.frame(text.getBytes("UTF-8")).points
     assert(parsed.map(_.metric) == Seq("sys.cpu.user", "m")) // malformed line dropped
   }
 

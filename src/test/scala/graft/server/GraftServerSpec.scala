@@ -73,14 +73,15 @@ class GraftServerSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll 
       out, WebSocketCodec.OpText, json.getBytes(UTF_8), Array[Byte](9, 8, 7, 6))
 
     /** Send one operation and return the text frame that answers it. */
-    def ask(json: String): String = reply(json).fold(c => fail(s"closed: $c"), identity)
+    def ask(json: String, timeoutMs: Long = 60000L): String =
+      reply(json, timeoutMs).fold(c => fail(s"closed: $c"), identity)
 
     /** Send one operation; its answer: a close frame's (code, reason) or a
       * text frame. */
-    def reply(json: String): Either[(Int, String), String] = {
+    def reply(json: String, timeoutMs: Long = 60000L): Either[(Int, String), String] = {
       send(json)
       val t0 = System.currentTimeMillis()
-      while (System.currentTimeMillis() - t0 < 60000L) {
+      while (System.currentTimeMillis() - t0 < timeoutMs) {
         try WebSocketCodec.readMessage(in) match {
           case Some((WebSocketCodec.OpText, p)) => return Right(new String(p, UTF_8))
           case Some((WebSocketCodec.OpClose, p)) =>
@@ -265,6 +266,44 @@ class GraftServerSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll 
       .foreach { case ((h, w), op) => assert(h == w, s"$op over HTTP vs WS") }
     // the caller's authorization applies: the viz=A point is in the answer
     assert(overWs.head.contains(s""""${T + 2000}":4.0"""), overWs.head)
+  }
+
+  test("a point put over TCP, UDP TMFB, HTTP JSON and WS is stored as the same ms row") {
+    // one point, its timestamp in seconds, carried by each transport in its
+    // own wire format; `src` tells the copies apart
+    val secs = T / 1000 + 7
+    def json(src: String) =
+      s"""{"name":"same.row","timestamp":$secs,"measure":5.0,"tags":[{"src":"$src"}]}"""
+    val s = new Socket("127.0.0.1", ports.tcp)
+    s.getOutputStream.write(s"put same.row $secs 5.0 src=tcp\n".getBytes(UTF_8))
+    s.shutdownOutput()
+    s.setSoTimeout(5000)
+    assert(s.getInputStream.read() == -1) // closed once the append returned
+    s.close()
+    assert(httpPost("/api/put", json("http")).statusCode() == 200)
+    val ws = new Ws(ports.ws, None)
+    try {
+      ws.send(s"""{"operation":"put","metric":${json("ws")}}""")
+      ws.ask("""{"operation":"version"}""", timeoutMs = 5000L) // answered after the put
+    } finally ws.close()
+    import org.apache.spark.sql.functions.col
+    def rows(): Set[(String, Long, Double)] = graft.sources.PointStore.readOrEmpty(spark,
+        new java.io.File(dir, "data").getAbsolutePath)
+      .where(col("metric") === "same.row")
+      .select(col("tags")("src"), col("ts"), col("value")).distinct().collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+    // UDP is fire-and-forget: resend until the row shows (a resent copy may
+    // be stored twice, hence distinct rows)
+    val frame = graft.model.MetricsFlatBuffer.encode(Seq(
+      graft.model.MetricPoint("same.row", secs, 5.0, Map("src" -> "udp"), None)))
+    val sock = new DatagramSocket()
+    val t0 = System.currentTimeMillis()
+    while (!rows().exists(_._1 == "udp") && System.currentTimeMillis() - t0 < 5000L) {
+      sock.send(new DatagramPacket(frame, frame.length, InetAddress.getByName("127.0.0.1"), ports.udp))
+      Thread.sleep(500)
+    }
+    sock.close()
+    assert(rows() == Seq("tcp", "udp", "http", "ws").map(src => (src, T + 7000, 5.0)).toSet)
   }
 
   test("a failed append is a 500 over HTTP and a 1011 over WS, each with one stderr line") {

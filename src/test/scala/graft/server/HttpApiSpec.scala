@@ -161,7 +161,34 @@ class HttpApiSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll {
     val r2 = post("/api/put",
       """{"name":"orphan.metric","timestamp":1,"measure":1.0,"tags":[{"viz":"A"}]}""")
     assert(r2.statusCode() == 400)
+    // nor on a put line: the same admission rule holds for every format
+    val r3 = post("/api/put", "put orphan.metric 1704067200000 1.0 viz=A")
+    assert(r3.statusCode() == 400, s"got ${r3.statusCode()}: ${r3.body()}")
+    assert(r3.body().contains("put orphan.metric"), r3.body())
     assert(get("/api/suggest?type=metrics&q=orphan&max=10").body() == "[]")
+  }
+
+  test("a POST body that is not JSON is a 400, not a server failure") {
+    val sessions = new AuthSessions(Map("u" -> AuthSessions.User("pw", Seq("A"))),
+      allowAnonymous = true)
+    val own = new HttpApi(spark, new java.io.File(dir, "data").getAbsolutePath,
+      new java.io.File(dir, "meta").getAbsolutePath, sessions = Some(sessions))
+    val c = new Client(own.start())
+    val captured = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(captured, true, UTF_8))
+    val truncated = s"""{"start":$T,"""
+    val answers = try Seq("/api/query", "/api/search/lookup", "/api/put", "/login")
+      .map(path => path -> c.post(path, truncated))
+    finally {
+      System.setErr(stderr)
+      own.stop()
+    }
+    answers.foreach { case (path, r) =>
+      assert(r.statusCode() == 400, s"$path: ${r.statusCode()} ${r.body()}")
+    }
+    val reported = new String(captured.toByteArray, UTF_8).linesIterator.filter(_.contains("[graft]")).toSeq
+    assert(reported.isEmpty, reported.mkString("\n"))
   }
 
   test("gzip response compression when the client advertises it (HttpContentCompressor parity)") {

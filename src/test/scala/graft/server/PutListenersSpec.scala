@@ -37,6 +37,77 @@ class PutListenersSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
     }
   }
 
+  /** `f` with `System.err` captured; its result and the `[graft] put from
+    * … refused` lines printed once `until` holds of them (at most 5 s). */
+  private def refusalsDuring[A](until: Seq[String] => Boolean)(f: => A): (A, Seq[String]) = {
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    try {
+      val a = f
+      def reports = err.synchronized(err.toString("UTF-8")).linesIterator
+        .filter(l => l.startsWith("[graft] put from") && l.contains(" refused ")).toSeq
+      val t0 = System.currentTimeMillis()
+      while (!until(reports) && System.currentTimeMillis() - t0 < 5000L) Thread.sleep(20)
+      (a, reports)
+    } finally System.setErr(saved)
+  }
+
+  private def refusedCount(reports: Seq[String]): Int =
+    reports.map(l => """refused (\d+) point""".r.findFirstMatchIn(l).get.group(1).toInt).sum
+
+  /** A refused point of each kind, and a good point beside it. */
+  private val refusedLines =
+    s"put sys.cpu.user $T 1.0 viz=A\nput bad\nput sys.cpu.user ${T + 1} 2.0 host=a\n"
+  private val refusedFrame = MetricsFlatBuffer.encode(Seq(
+    MetricPoint("sys.cpu.idle", T, 3.0, Map.empty, Some("A")),
+    MetricPoint("sys.cpu.idle", T + 2, 4.0, Map("host" -> "b"), None)))
+  private val admittedPoints = Set(
+    MetricPoint("sys.cpu.user", T + 1, 2.0, Map("host" -> "a"), None),
+    MetricPoint("sys.cpu.idle", T + 2, 4.0, Map("host" -> "b"), None))
+
+  test("TCP stores only admitted points and reports the refused ones per batch") {
+    val cap = new Capture
+    val tcp = new PutListeners.Tcp(cap.sink)
+    val port = tcp.start()
+    try {
+      val (peers, reports) = refusalsDuring(r => refusedCount(r) >= 3) {
+        Seq[Array[Byte]](refusedLines.getBytes(UTF_8), refusedFrame).map { payload =>
+          val s = new Socket("127.0.0.1", port)
+          s.getOutputStream.write(payload)
+          s.getOutputStream.flush()
+          val peer = String.valueOf(s.getLocalSocketAddress)
+          s.close()
+          peer
+        }
+      }
+      assert(cap.await(2, timeoutMs = 5000L).toSet == admittedPoints)
+      // a viz-only line, a malformed line and a tagless TMFB entry
+      assert(refusedCount(reports) == 3, reports)
+      assert(peers.forall(p => reports.exists(_.contains(s"put from $p"))), reports)
+    } finally tcp.stop()
+  }
+
+  test("UDP stores only admitted points and reports the refused ones per datagram") {
+    val cap = new Capture
+    val udp = new PutListeners.Udp(cap.sink)
+    val port = udp.start()
+    try {
+      val sock = new DatagramSocket()
+      val peer = s"put from /127.0.0.1:${sock.getLocalPort}"
+      val (_, reports) = refusalsDuring(_.size >= 2) {
+        Seq(refusedLines.getBytes(UTF_8), refusedFrame).foreach(b =>
+          sock.send(new DatagramPacket(b, b.length, InetAddress.getByName("127.0.0.1"), port)))
+      }
+      sock.close()
+      assert(cap.await(2, timeoutMs = 5000L).toSet == admittedPoints)
+      assert(reports.size == 2, reports)
+      assert(reports.exists(_.contains("refused 2 point(s)")), reports)
+      assert(reports.exists(_.contains("refused 1 point(s)")), reports)
+      assert(reports.forall(_.contains(peer)), reports)
+    } finally udp.stop()
+  }
+
   test("TCP put lines round trip (TimelyTcpIT.testPutMultiple)") {
     val cap = new Capture
     val tcp = new PutListeners.Tcp(cap.sink)
@@ -58,7 +129,7 @@ class PutListenersSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
 
   test("TCP linger flush delivers without closing the connection") {
     val cap = new Capture
-    val tcp = new PutListeners.Tcp(cap.sink, lingerMs = 50)
+    val tcp = new PutListeners.Tcp(cap.sink)
     val port = tcp.start()
     try {
       val s = new Socket("127.0.0.1", port)

@@ -356,63 +356,6 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     subs.close("big")
   }
 
-  test("external-channel subscription delivers envelopes + sentinel end-to-end") {
-    val dir = Files.createTempDirectory("graft-sub-ext").toString
-    val subs = new Subscriptions(_ => ())
-    val input = MemoryStream[MetricPoint]
-    // cluster-mode path: executors serialize envelopes into the channel dir
-    // through the streaming file sink — no in-JVM callback anywhere
-    val q = subs.addMetricExternal("sx", input.toDS().toDF(), metric = "m",
-      channelDir = s"$dir/chan", checkpointDir = s"$dir/ckpt",
-      tags = Map("host" -> "a"), delayMs = 50L)
-    input.addData(
-      MetricPoint("m", T, 1.0, Map("host" -> "a"), None),
-      MetricPoint("m", T + 1, 2.0, Map("host" -> "b"), None), // tag mismatch
-      MetricPoint("x", T + 2, 9.0, Map("host" -> "a"), None)) // other metric
-    q.processAllAvailable()
-    subs.removeMetric("sx", "m")
-    assert(!q.isActive && subs.activeQueries.isEmpty)
-    // a gateway tails the RAW directory (data part files + sentinel files)
-    import scala.jdk.CollectionConverters._
-    val lines = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$dir/chan"))
-      .iterator().asScala
-      .filter(p => p.toString.endsWith(".txt") && !p.toString.contains("_spark_metadata"))
-      .flatMap(p => java.nio.file.Files.readAllLines(p).asScala)
-      .toSeq
-    assert(lines.contains(
-      s"""{"responses":[{"metric":"m","timestamp":$T,"value":1.0,""" +
-      """"tags":[{"host":"a"}],"subscriptionId":"sx","complete":false}]}"""))
-    assert(lines.contains(
-      """{"responses":[{"metric":"m","timestamp":0,"value":0.0,""" +
-      """"tags":null,"subscriptionId":"sx","complete":true}]}"""))
-    assert(lines.size == 2, s"exactly one data envelope + one sentinel: $lines")
-  }
-
-  test("bounded external subscription emits the sentinel from the executors") {
-    val dir = Files.createTempDirectory("graft-sub-extb").toString
-    val subs = new Subscriptions(_ => ())
-    val input = MemoryStream[MetricPoint]
-    val q = subs.addMetricExternal("sb", input.toDS().toDF(), metric = "m",
-      channelDir = s"$dir/chan", checkpointDir = s"$dir/ckpt",
-      delayMs = 50L, endTimeMs = T + 1000L)
-    input.addData(
-      MetricPoint("m", T, 1.0, Map("host" -> "a"), None),         // in range
-      MetricPoint("m", T + 5000L, 9.0, Map("host" -> "a"), None)) // past end
-    q.processAllAvailable()
-    q.stop()
-    import scala.jdk.CollectionConverters._
-    val lines = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$dir/chan"))
-      .iterator().asScala
-      .filter(p => p.toString.endsWith(".txt") && !p.toString.contains("_spark_metadata"))
-      .flatMap(p => java.nio.file.Files.readAllLines(p).asScala)
-      .toSeq
-    // past-end data never delivered; the sentinel rode the channel from the
-    // executor side (at-least-once — dedupe is the consumer's, so >=1)
-    assert(!lines.exists(_.contains("\"value\":9.0")))
-    assert(lines.count(_.contains("\"complete\":true")) >= 1)
-    assert(lines.exists(l => l.contains(s""""timestamp":$T""") && l.contains("\"complete\":false")))
-  }
-
   test("zero beginTime clamps to the age-off horizon (MetricScanner semantics)") {
     val received = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val subs = new Subscriptions(row => { received.add(row.getAs[Long]("ts")); () })

@@ -9,8 +9,10 @@ OPENS=$(for p in java.base/java.lang java.base/java.lang.invoke java.base/java.l
   java.base/java.util.concurrent java.base/java.util.concurrent.atomic java.base/sun.nio.ch \
   java.base/sun.nio.cs java.base/sun.security.action java.base/sun.util.calendar; do \
   echo --add-opens $p=ALL-UNNAMED; done)
+# half of RAM, 2-8 GB: the heap the tier-1 test command gives SPARK_DRIVER_MEM
+HEAP="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)"
 run_verify() { # sfdir outdir cpus
-  SPARK_GRAFT_CPUS=$3 java $OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -Xmx24g \
+  SPARK_GRAFT_CPUS=$3 java $OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -Xmx$HEAP \
     -cp "target/scala-2.13/classes:/opt/spark/jars/*" graft.Verify "$1" "$2" "$GATES" 2>/dev/null
 }
 rc=0
