@@ -30,7 +30,14 @@ object MetricParser {
 
   /** A put's admitted points, and one reason per refused line, entry or
     * frame. */
-  final case class Decoded(points: Seq[MetricPoint], refused: Seq[String])
+  final case class Decoded(points: Seq[MetricPoint], refused: Seq[String]) {
+
+    /** One stderr line when anything was refused:
+      * `[graft] <source> refused <n> point(s); first: <reason>`. */
+    def reportRefused(source: String): Unit = refused.headOption.foreach { first =>
+      System.err.println(s"[graft] $source refused ${refused.size} point(s); first: $first")
+    }
+  }
 
   private def decoded(results: Seq[Either[String, MetricPoint]]): Decoded = {
     val (refused, points) = results.partitionMap(identity)

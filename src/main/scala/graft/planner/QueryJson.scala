@@ -26,6 +26,14 @@ object QueryJson {
     try JsonMethods.parse(text)
     catch { case NonFatal(e) => throw new IllegalArgumentException("unparseable request", e) }
 
+  /** A request's `tags` object, tag key -> value; a value that is not a
+    * string is skipped. A subquery and a subscription's `add` read their
+    * tags here. */
+  def parseTags(jv: JValue): Map[String, String] = jv match {
+    case JObject(fields) => fields.collect { case (k, JString(v)) => k -> v }.toMap
+    case _ => Map.empty
+  }
+
   def parseRequest(json: String): TsQueryRequest = {
     val jv = parseDocument(json)
     def str(j: JValue): Option[String] = j match {
@@ -52,10 +60,7 @@ object QueryJson {
             resetValue = lng(ro \ "resetValue").getOrElse(0L),
             interval = str(ro \ "interval")),
           downsample = str(q \ "downsample"),
-          tags = (q \ "tags") match {
-            case JObject(fields) => fields.collect { case (k, JString(v)) => k -> v }.toMap
-            case _ => Map.empty[String, String]
-          },
+          tags = parseTags(q \ "tags"),
           // wire parity with QueryRequest.SubQuery.filters/tsuids
           // (QueryRequest.java:227-228,282-283): parsed faithfully, consumed
           // by nothing — the reference's DataStore reads only tags, so a

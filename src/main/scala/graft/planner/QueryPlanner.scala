@@ -97,12 +97,27 @@ object QueryPlanner {
     else tagVal === value
   }
 
+  /** The points `auths` may see, like the reference's scan-time
+    * VisibilityFilter: the one visibility decision of every read. */
+  def visible(points: DataFrame, auths: Seq[String]): DataFrame =
+    points.where(VizFunctions.vizVisible(col("viz"), lit(auths.mkString(","))))
+
+  /** The points of `metric` visible to `auths`, from `fromTs` on, whose tags
+    * match `tags` ([[tagPredicate]]): the selection a served query and a
+    * subscription share. */
+  def select(
+      points: DataFrame, metric: String, auths: Seq[String],
+      fromTs: Long, tags: Map[String, String]): DataFrame =
+    tags.foldLeft(visible(points.where(col("metric") === metric && col("ts") >= fromTs), auths)) {
+      case (df, (k, v)) => df.where(tagPredicate(k, v))
+    }
+
   /**
    * Plan one subquery over the canonical points table.
    *
-   * @param auths session authorizations (comma-joined) — the visibility filter
-   *              is injected unconditionally, like the reference's scan-time
-   *              VisibilityFilter (security non-bypassable).
+   * @param auths session authorizations — the visibility filter of
+   *              [[select]] is injected unconditionally (security
+   *              non-bypassable).
    * @return DataFrame (metric, group_tags MAP, bucket_ms LONG, value DOUBLE)
    */
   def planSubQuery(points: DataFrame, req: TsQueryRequest, q: SubQuery, auths: Seq[String]): DataFrame = {
@@ -110,10 +125,7 @@ object QueryPlanner {
     // bucket alignment: start of first period (DataStore.java:693-695)
     val alignedStart = req.start - (req.start % periodMs)
 
-    var df = points
-      .where(col("metric") === q.metric && col("ts") >= req.start && col("ts") <= req.end)
-      .where(VizFunctions.vizVisible(col("viz"), lit(auths.mkString(","))))
-    q.tags.foreach { case (k, v) => df = df.where(tagPredicate(k, v)) }
+    var df = select(points.where(col("ts") <= req.end), q.metric, auths, req.start, q.tags)
 
     // rate BEFORE downsample (iterator priorities 499 < 500)
     if (q.rate) {

@@ -169,8 +169,7 @@ object TimelyApi {
     * names of the points visible to `auths`; nulls and an empty list for an
     * empty store. */
   def cacheJson(points: DataFrame, auths: Seq[String]): String = {
-    val agg = points
-      .where(graft.functions.VizFunctions.vizVisible(col("viz"), lit(auths.mkString(","))))
+    val agg = QueryPlanner.visible(points, auths)
       .agg(min("ts"), max("ts"), sort_array(collect_set(col("metric")))).collect().head
     val (oldest, newest, metrics) =
       if (agg.isNullAt(0)) (JNull, JNull, JArray(Nil))

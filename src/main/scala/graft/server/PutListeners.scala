@@ -50,8 +50,7 @@ object PutListeners {
 
   /** The decoded put's points; first, one stderr line if it refused any. */
   private def admitted(peer: String, put: MetricParser.Decoded): Seq[MetricPoint] = {
-    if (put.refused.nonEmpty) System.err.println(
-      s"[graft] put from $peer refused ${put.refused.size} point(s); first: ${put.refused.head}")
+    put.reportRefused(s"put from $peer")
     put.points
   }
 

@@ -3,14 +3,15 @@ package graft.server
 import java.io.{BufferedInputStream, BufferedOutputStream}
 import java.net.{InetSocketAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.{ConcurrentHashMap, Executors, ScheduledFuture, TimeUnit}
+import java.util.concurrent.ConcurrentHashMap
 
 import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.json4s._
 
+import graft.planner.QueryJson
 import graft.sources.PointStore
 import graft.streaming.{MetricResponseJson, Subscriptions}
 
@@ -41,15 +42,16 @@ import graft.streaming.{MetricResponseJson, Subscriptions}
  * like a connection that ends on an exception, prints one stderr line
  * (peer, operation, exception).
  *
- * Delivery: each `add` starts a Structured Streaming tail of the store
+ * Delivery: each connection holds one [[Subscriptions]] engine, and each
+ * `add` starts a Structured Streaming tail of the store
  * ([[PointStore.stream]], [[Subscriptions.addMetric]]); matched points are
  * pushed as `{"responses":[MetricResponse…]}` envelopes. Batching follows
  * MetricScanner: responses accumulate until `subscriptionBatchSize`
- * (MetricScanner.java:212-214) and a fixed-rate flusher drains partial
- * batches every `flushIntervalMs` (MetricScanner.java:180-183); the
- * `complete:true` sentinel flushes immediately (sendCompletedResponse,
- * MetricScanner.java:270-280). All frames of one connection serialize
- * through its write lock.
+ * (MetricScanner.java:212-214), and the end of each micro-batch sends what
+ * is left, where MetricScanner flushes on a timer (MetricScanner.java:
+ * 180-183); the `complete:true` sentinel rides in the envelope of the last
+ * rows (sendCompletedResponse, MetricScanner.java:270-280). All frames of
+ * one connection serialize through its write lock.
  *
  * Auth: the upgrade request's TSESSIONID cookie resolves to the session's
  * authorizations via [[AuthSessions]] — the viz filter inside every
@@ -71,15 +73,11 @@ class WebSocketApi(
     metaDir: String,
     sessions: Option[AuthSessions] = None,
     subscriptionBatchSize: Int = 100,
-    flushIntervalMs: Long = 500L,
     tls: Option[Tls.Config] = None) {
 
   private var server: ServerSocket = _
   @volatile private var running = false
   private var acceptor: Thread = _
-  private val flushPool = Executors.newScheduledThreadPool(1, r => {
-    val t = new Thread(r, "graft-ws-flusher"); t.setDaemon(true); t
-  })
   private val conns = ConcurrentHashMap.newKeySet[Conn]()
 
   def start(port: Int = 0): Int = synchronized {
@@ -121,7 +119,6 @@ class WebSocketApi(
     if (server != null) { try server.close() catch { case NonFatal(_) => () }; server = null }
     conns.forEach(_.shutdown())
     conns.clear()
-    flushPool.shutdown()
   }
 
   private val ops = new Operations(spark, dataDir, metaDir)
@@ -132,12 +129,12 @@ class WebSocketApi(
     private val peer = String.valueOf(socket.getRemoteSocketAddress)
     private val in = new BufferedInputStream(socket.getInputStream)
     private val out = new BufferedOutputStream(socket.getOutputStream)
+    // guards the socket's output and `pending`
     private val writeLock = new Object
-    // subscriptionId -> its Subscriptions engine (one per created id, so the
-    // delivery callback closes over the id the reference threads explicitly)
-    private val created = new ConcurrentHashMap[String, Subscriptions]()
+    private val subs = new Subscriptions(deliver, end)
+    // the subscription ids `create` made: `add` needs one
+    private val created = ConcurrentHashMap.newKeySet[String]()
     private val pending = new ArrayBuffer[JValue]()
-    @volatile private var flusher: ScheduledFuture[_] = _
     @volatile private var closed = false
 
     def run(): Unit = {
@@ -161,8 +158,6 @@ class WebSocketApi(
         writeLock.synchronized {
           out.write(WebSocketCodec.handshakeResponse(key.get)); out.flush()
         }
-        flusher = flushPool.scheduleAtFixedRate(() => flush(),
-          flushIntervalMs, flushIntervalMs, TimeUnit.MILLISECONDS)
         serve(auths)
       } catch {
         case NonFatal(e) => if (!closed) Operations.reportFailure(s"ws connection from $peer", e)
@@ -207,36 +202,27 @@ class WebSocketApi(
       def requireId = subId.getOrElse(throw new IllegalArgumentException("Subscription ID is required."))
       try op match {
         case "create" =>
-          val id = requireId
-          created.computeIfAbsent(id, _ => new Subscriptions(
-            row => enqueue(MetricResponseJson.response(row, id), immediate = false),
-            (_, m) => enqueue(MetricResponseJson.completed(m, id), immediate = true)))
+          created.add(requireId)
           true
         case "add" =>
           val id = requireId
-          Option(created.get(id)) match {
-            // reference: unknown id -> CloseWebSocketFrame(1003, ...)
-            case None => closeWith(1003, "Unknown subscription id, create subscription first")
-            case Some(subs) => f.str("metric") match {
-              case None => closeWith(1008, "Metric name cannot be null in add subscription")
-              case Some(metric) =>
-                val tags = f.json \ "tags" match {
-                  case JObject(fields) => fields.collect { case (k, JString(v)) => k -> v }.toMap
-                  case _ => Map.empty[String, String]
-                }
-                subs.addMetric(id, PointStore.stream(spark, dataDir), metric, tags, auths,
-                  beginTimeMs = f.long("startTime").getOrElse(0L),
-                  endTimeMs = f.long("endTime").getOrElse(0L),
-                  delayMs = f.long("delayTime").getOrElse(1000L))
-                true
-            }
+          // reference: unknown id -> CloseWebSocketFrame(1003, ...)
+          if (!created.contains(id)) closeWith(1003, "Unknown subscription id, create subscription first")
+          else f.str("metric") match {
+            case None => closeWith(1008, "Metric name cannot be null in add subscription")
+            case Some(metric) =>
+              subs.addMetric(id, PointStore.stream(spark, dataDir), metric,
+                QueryJson.parseTags(f.json \ "tags"), auths,
+                beginTimeMs = f.long("startTime").getOrElse(0L),
+                endTimeMs = f.long("endTime").getOrElse(0L),
+                delayMs = f.long("delayTime").getOrElse(1000L))
+              true
           }
         case "remove" =>
-          for (id <- subId; m <- f.str("metric"); s <- Option(created.get(id)))
-            s.removeMetric(id, m)
+          for (id <- subId; m <- f.str("metric")) subs.removeMetric(id, m)
           true
         case "close" =>
-          subId.flatMap(id => Option(created.remove(id))).foreach(s => s.close(subId.get))
+          subId.filter(created.remove).foreach(subs.close)
           true
         // every other operation (put, version, aggregators, metrics, suggest,
         // lookup, query, cache) is the HTTP facade's too; a put answers
@@ -258,28 +244,24 @@ class WebSocketApi(
       }
     }
 
-    // ---- batched delivery (MetricScanner flush semantics) ----------------
+    // ---- batched delivery (MetricScanner batch semantics) ----------------
 
-    private def enqueue(r: JValue, immediate: Boolean): Unit = {
-      val toSend: Seq[JValue] = pending.synchronized {
-        pending += r
-        if (immediate || pending.size >= subscriptionBatchSize) {
-          val batch = pending.toSeq; pending.clear(); batch
-        } else Nil
-      }
-      if (toSend.nonEmpty) sendEnvelope(toSend)
+    private def deliver(id: String, row: Row): Unit = writeLock.synchronized {
+      pending += MetricResponseJson.response(row, id)
+      if (pending.size >= subscriptionBatchSize) sendPending()
     }
 
-    private def flush(): Unit = {
-      val toSend: Seq[JValue] = pending.synchronized {
-        if (pending.isEmpty) Nil
-        else { val batch = pending.toSeq; pending.clear(); batch }
-      }
-      if (toSend.nonEmpty) sendEnvelope(toSend)
+    /** The end of a micro-batch sends what is pending; the end of a
+      * subscription adds its sentinel to the same envelope. */
+    private def end(id: String, metric: String, complete: Boolean): Unit = writeLock.synchronized {
+      if (complete) pending += MetricResponseJson.completed(metric, id)
+      if (pending.nonEmpty) sendPending()
     }
 
-    private def sendEnvelope(responses: Seq[JValue]): Unit =
-      sendText(MetricResponseJson.envelope(responses))
+    private def sendPending(): Unit = {
+      sendText(MetricResponseJson.envelope(pending.toSeq))
+      pending.clear()
+    }
 
     private def sendText(text: String): Unit =
       writeLock.synchronized {
@@ -288,14 +270,11 @@ class WebSocketApi(
       }
 
     def shutdown(): Unit = {
-      if (!closed) {
-        // drain before teardown so sentinels enqueued by close() still flush
-        created.forEach((id, s) => s.close(id))
-        flush()
-        closed = true
-      }
+      // every tail stops, even after a failed write; while the socket is
+      // open, the sentinels of the subscriptions torn down here still go out
+      created.forEach(id => subs.close(id))
+      closed = true
       created.clear()
-      if (flusher != null) flusher.cancel(false)
       conns.remove(this)
       try socket.close() catch { case NonFatal(_) => () }
     }

@@ -356,9 +356,10 @@ object PointStore {
    * compaction/MetricCompactionStrategy.java): per-metric-prefix TTLs with a
    * required "default", longest prefix wins. Two forms: [[ageOff]] rewrites
    * the exactly-retained set (row-accurate), [[ageOffDropPartitions]] deletes
-   * fully-expired day directories in place (metadata/file-level, no data
-   * movement — the daily maintenance form; pair with [[clampStart]] for the
-   * boundary day).
+   * fully-expired day and hour directories in place (metadata/file-level,
+   * no data movement — the daily maintenance form). No served read clamps
+   * to the horizon: after a drop, the expired rows of the horizon hour stay
+   * visible until a later pass drops that hour.
    */
   def ageOff(
       spark: SparkSession,
@@ -391,9 +392,10 @@ object PointStore {
    * partial boundary). On the horizon day itself, fully-expired `hr=`
    * subdirectories are dropped the same way — the layout's hour granularity
    * mirrors the reference row key's hour rounding (MetricAdapter.java:47-53),
-   * so only the horizon HOUR retains expired rows (bounded slack < 1 hour) —
-   * the query-time [[clampStart]] keeps those invisible, like the
-   * reference's scan-time age-off iterator. A pass that drops anything
+   * so only the horizon HOUR retains expired rows (bounded slack < 1 hour).
+   * Those rows stay visible to queries and subscriptions: unlike the
+   * reference's scan-time age-off iterator, no served read calls
+   * [[clampStart]]. A pass that drops anything
    * touches `dataDir`'s modification time, so a server over the store in
    * another process re-lists it (see the object doc).
    */
@@ -409,32 +411,21 @@ object PointStore {
       .withZone(java.time.ZoneOffset.UTC)
     val dropped = Seq.newBuilder[String]
     def drop(): Unit = if (fs.exists(root)) {
-      for (metricDir <- fs.listStatus(root) if metricDir.getPath.getName.startsWith("metric=")) {
-        // the true inverse of Spark's partition-path escaping (URLDecoder is
-        // NOT: it would turn '+' in a metric name into a space and resolve
-        // the wrong TTL)
-        val metric = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(
-          metricDir.getPath.getName.stripPrefix("metric="))
+      for ((metric, metricDir) <- partitionDirs(fs, root, "metric")) {
         // ISO dates compare correctly as strings
         val horizon = horizonMs(metric, ttlMsByPrefix, nowMs)
         val horizonDay = fmt.format(java.time.Instant.ofEpochMilli(horizon))
         val horizonHour = Math.floorDiv(horizon, 3600000L) % 24L
-        for (dtDir <- fs.listStatus(metricDir.getPath)
-             if dtDir.getPath.getName.startsWith("dt=")) {
-          val day = dtDir.getPath.getName.stripPrefix("dt=")
+        for ((day, dtDir) <- partitionDirs(fs, metricDir, "dt")) {
           if (day < horizonDay) {
-            if (!dryRun) fs.delete(dtDir.getPath, true)
+            if (!dryRun) fs.delete(dtDir, true)
             dropped += s"$metric/$day"
           } else if (day == horizonDay) {
             // boundary day: hr= dirs wholly below the horizon hour hold only
             // ts < hourStart(horizon) <= horizon — droppable in full
-            for (hrDir <- fs.listStatus(dtDir.getPath)
-                 if hrDir.getPath.getName.startsWith("hr=")) {
-              val hr = hrDir.getPath.getName.stripPrefix("hr=").toLong
-              if (hr < horizonHour) {
-                if (!dryRun) fs.delete(hrDir.getPath, true)
-                dropped += s"$metric/$day/hr=$hr"
-              }
+            for ((hr, hrDir) <- partitionDirs(fs, dtDir, "hr") if hr.toLong < horizonHour) {
+              if (!dryRun) fs.delete(hrDir, true)
+              dropped += s"$metric/$day/hr=${hr.toLong}"
             }
           }
         }
@@ -447,6 +438,28 @@ object PointStore {
     }
     dropped.result().sorted
   }
+
+  /** The store's hour partitions as (metric, day, hour): one walk of its
+    * `metric=/dt=/hr=` directories; a store not yet written has none. */
+  def hourPartitions(spark: SparkSession, dataDir: String): Seq[(String, String, Long)] = {
+    val root = new Path(dataDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) Nil
+    else for {
+      (metric, m) <- partitionDirs(fs, root, "metric")
+      (day, d) <- partitionDirs(fs, m, "dt")
+      (hr, _) <- partitionDirs(fs, d, "hr")
+    } yield (metric, day, hr.toLong)
+  }
+
+  /** (value, directory) of each `key=value` partition directory under
+    * `dir`. The value is unescaped by the true inverse of Spark's
+    * partition-path escaping (URLDecoder is NOT: it would turn '+' in a
+    * metric name into a space and resolve the wrong TTL). */
+  private def partitionDirs(fs: FileSystem, dir: Path, key: String): Seq[(String, Path)] =
+    for (p <- fs.listStatus(dir).toSeq.map(_.getPath) if p.getName.startsWith(s"$key="))
+      yield (org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .unescapePathName(p.getName.stripPrefix(s"$key=")), p)
 
   /**
    * Meta age-off (L2) — the reference ages catalog entries alongside the data
@@ -467,8 +480,9 @@ object PointStore {
         .write.mode(SaveMode.Overwrite).parquet(outMetaDir)
     }
 
-  /** Query-time age-off clamp: like the reference's cache iterator clamping
-    * the scan start to the retention horizon (cache/DataStoreCache.java:748-752). */
+  /** Age-off clamp of a scan start, like the reference's cache iterator
+    * clamping the scan start to the retention horizon
+    * (cache/DataStoreCache.java:748-752). No served read calls it yet. */
   def clampStart(requestedStartMs: Long, nowMs: Long, ttlMs: Long): Long =
     math.max(requestedStartMs, nowMs - ttlMs)
 }

@@ -16,10 +16,11 @@ import graft.sources.PointStore
  * the contract is a streaming Dataset[String] of put lines (or of binary
  * frames) in, a canonical points stream out. Lines and frames go through
  * the one put decoder every transport uses ([[MetricParser]]), so a point
- * is admitted here exactly when a socket or HTTP put of it would be; what
+ * is admitted here exactly when a socket or HTTP put of it would be. What
  * the decoder refuses is dropped, like the reference drops unparseable
- * messages. The storage sink writes nothing itself: every store write goes
- * through [[PointStore.append]].
+ * messages, and each partition that refused any prints one stderr line, as
+ * the TCP and UDP listeners do. The storage sink writes nothing itself:
+ * every store write goes through [[PointStore.append]].
  */
 object PutLineIngest {
 
@@ -43,6 +44,18 @@ object PutLineIngest {
     out
   }
 
+  /** Decode each partition as one put; its refusals make one stderr line. */
+  private def decodePartitions[A](in: Dataset[A])(
+      decode: Iterator[A] => MetricParser.Decoded): Dataset[MetricPoint] = {
+    val spark = in.sparkSession
+    import spark.implicits._
+    in.mapPartitions { it =>
+      val put = decode(it)
+      put.reportRefused("ingest")
+      put.points.iterator
+    }
+  }
+
   /** Parse a (streaming or batch) line dataset into canonical points.
     * Exclusion filters (reference Exclusions.java) are predicate pushups:
     * apply `excludeMetricRegex` before anything else so excluded series
@@ -53,15 +66,13 @@ object PutLineIngest {
       excludeMetricRegex: Option[String] = None,
       defaultViz: Option[String] = None,
       excludedTags: Map[String, Set[String]] = Map.empty): Dataset[MetricPoint] = {
-    val spark = lines.sparkSession
-    import spark.implicits._
-    applyPolicy(lines.flatMap(MetricParser.parse(_)), excludeMetricRegex, excludedTags, defaultViz)
+    applyPolicy(decodePartitions(lines)(MetricParser.lines), excludeMetricRegex, excludedTags, defaultViz)
   }
 
   /** Parse a (streaming or batch) dataset of binary frames — the S5 batch
     * ingest source. Works for any framed byte source (Kafka value column,
     * socket with length framing, file drop). Each frame is a TMFB batch or
-    * put-line text ([[MetricParser.frame]]); a corrupt frame is dropped, so
+    * put-line text ([[MetricParser.frame]]); a corrupt frame is refused, so
     * one bad frame never fails the micro-batch and crash-loops checkpoint
     * replay. */
   def parseFrames(
@@ -69,9 +80,11 @@ object PutLineIngest {
       excludeMetricRegex: Option[String] = None,
       defaultViz: Option[String] = None,
       excludedTags: Map[String, Set[String]] = Map.empty): Dataset[MetricPoint] = {
-    val spark = frames.sparkSession
-    import spark.implicits._
-    applyPolicy(frames.flatMap(MetricParser.frame(_).points), excludeMetricRegex, excludedTags, defaultViz)
+    val decoded = decodePartitions(frames) { fs =>
+      val puts = fs.map(MetricParser.frame).toSeq
+      MetricParser.Decoded(puts.flatMap(_.points), puts.flatMap(_.refused))
+    }
+    applyPolicy(decoded, excludeMetricRegex, excludedTags, defaultViz)
   }
 
   /** Exact-dedup a streaming points frame within an event-time watermark.
@@ -132,18 +145,18 @@ object PutLineIngest {
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        internal match {
-          case Some(im) =>
-            val b = batch.persist()
-            PointStore.append(b, dataDir, metaDir)
+        // the append reads the batch twice (catalog triples, then points):
+        // persisted, its lines are decoded, and their refusals reported, once
+        val b = batch.persist()
+        try {
+          PointStore.append(b, dataDir, metaDir)
+          internal.foreach { im =>
             val n = b.count()
             im.incrementMetricsReceived(n)
             im.incrementMetricKeysInserted(n)
             im.incrementMetaKeysInserted(PointStore.metaProjection(b).count())
-            b.unpersist()
-          case None =>
-            PointStore.append(batch, dataDir, metaDir)
-        }
+          }
+        } finally b.unpersist()
         ()
       }
       .start()

@@ -15,9 +15,10 @@ import graft.sources.PointStore
  * MetricCompactionStrategy.java — file metadata only, no surviving row is
  * rewritten), then the meta catalog is aged to the survivors' metric set
  * (MetaAgeOffIterator.java:77-97: a catalog row lives iff its metric still
- * has live points). Query-time [[PointStore.clampStart]] keeps the
- * sub-hour boundary slack invisible, like the reference's scan-time
- * age-off iterator.
+ * has live points). The expired rows of the horizon hour stay on disk and
+ * stay visible to served reads until a later pass drops that hour: no
+ * served read clamps to the horizon ([[PointStore.clampStart]] is not on
+ * that path), where the reference's scan-time age-off iterator hides them.
  *
  * Dry-run mode reports everything the pass WOULD do — partition paths and
  * meta row delta — touching nothing, so an operator can review a TTL change
@@ -99,19 +100,15 @@ object Maintenance {
         compaction.flatMap(maybeCompact(spark, dataDir, _, dryRun)))
     val metaBefore = spark.read.parquet(metaDir)
     val before = metaBefore.count()
-    // the surviving-data metric set. In dry-run the data dirs are untouched,
-    // so survivors are computed from the partition list MINUS the would-drop
-    // set (metric-level: a metric survives iff it keeps any partition)
+    // the surviving-data metric set. In dry-run the data dirs are untouched:
+    // a metric survives iff one of its hour partitions is not in the
+    // would-drop list, whether as its day or as itself
     val after =
       if (dryRun) {
-        val dropSet = dropped.map(_.takeWhile(_ != '/')).toSet
-        val allMetrics = partitionMetrics(spark, dataDir)
-        val liveMetrics = allMetrics.filterNot { m =>
-          // a metric dies iff EVERY one of its day dirs is in the drop set
-          val kept = partitionDays(spark, dataDir, m)
-            .exists(d => !dropped.contains(s"$m/$d"))
-          !kept
-        }
+        val gone = dropped.toSet
+        val liveMetrics = PointStore.hourPartitions(spark, dataDir).collect {
+          case (m, day, hr) if !gone(s"$m/$day") && !gone(s"$m/$day/hr=$hr") => m
+        }.distinct
         import spark.implicits._
         metaBefore.join(liveMetrics.toDF("metric"), Seq("metric"), "left_semi").count()
       } else {
@@ -2068,29 +2065,6 @@ object Maintenance {
       vecIdsUnique = r.getLong(0) == r.getLong(1),
       listIdsValid = nulls == 0L &&
         (r.getLong(0) == 0L || (lo >= c.getLong(0) && hi <= c.getLong(1))))
-  }
-
-  private def partitionMetrics(spark: SparkSession, dataDir: String): Seq[String] = {
-    val root = new Path(dataDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("metric="))
-      .map(n => org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .unescapePathName(n.stripPrefix("metric=")))
-  }
-
-  private def partitionDays(spark: SparkSession, dataDir: String, metric: String): Seq[String] = {
-    val root = new Path(dataDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(root).toSeq
-      .filter { s =>
-        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(s.getPath.getName.stripPrefix("metric=")) == metric
-      }
-      .flatMap(m => fs.listStatus(m.getPath).toSeq.map(_.getPath.getName))
-      .filter(_.startsWith("dt="))
-      .map(_.stripPrefix("dt="))
   }
 
   /** CLI: `Maintenance <dataDir> <metaDir> <ttlSpec> [nowMs] [--dry-run]`

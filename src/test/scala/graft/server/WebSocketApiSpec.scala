@@ -39,7 +39,7 @@ class WebSocketApiSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
     allowAnonymous = true)
 
   private lazy val api = new WebSocketApi(spark, dataDir, metaDir,
-    sessions = Some(auth), subscriptionBatchSize = 100, flushIntervalMs = 100L)
+    sessions = Some(auth), subscriptionBatchSize = 100)
   private lazy val port = api.start()
 
   override def beforeAll(): Unit = {
@@ -244,9 +244,9 @@ class WebSocketApiSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
   }
 
   test("MetricScanner batch semantics: size-bounded envelopes, sentinel flush, slow consumer") {
-    // dedicated gateway: batch size 2 with the periodic flusher effectively
-    // off, so envelope shapes are forced by the batch bound + sentinel flush
-    // alone (MetricScanner.java:212-214 size flush, 270-280 completion flush)
+    // dedicated gateway: batch size 2, so envelope shapes are forced by the
+    // batch bound + the micro-batch's end, which carries the sentinel
+    // (MetricScanner.java:212-214 size flush, 270-280 completion flush)
     val dir2 = Files.createTempDirectory("graft-ws-batch").toFile
     val dataDir2 = new java.io.File(dir2, "data").getAbsolutePath
     val metaDir2 = new java.io.File(dir2, "meta").getAbsolutePath
@@ -257,7 +257,7 @@ class WebSocketApiSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
     PointStore.write(pts.toDF(), dataDir2)
     PointStore.writeMeta(pts.toDF(), metaDir2)
     val api2 = new WebSocketApi(spark, dataDir2, metaDir2,
-      subscriptionBatchSize = 2, flushIntervalMs = 600000L)
+      subscriptionBatchSize = 2)
     val port2 = api2.start()
     try {
       val c = new Client(portOverride = Some(port2))
@@ -280,6 +280,26 @@ class WebSocketApiSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
       val beforeSentinel = perEnvelope.takeWhile(!_.exists(r => r \ "complete" == JBool(true)))
       assert(beforeSentinel.forall(_.size == 2),
         s"size-bounded envelopes, got ${perEnvelope.map(_.size)}")
+    } finally api2.stop()
+  }
+
+  test("a gateway started, stopped and started again serves a bounded subscription to completion") {
+    val api2 = new WebSocketApi(spark, dataDir, metaDir)
+    api2.start()
+    api2.stop()
+    val port2 = api2.start()
+    try {
+      val c = new Client(portOverride = Some(port2))
+      assert(c.handshake() == 101)
+      c.send("""{"operation":"create","subscriptionId":"again"}""")
+      c.send(s"""{"operation":"add","subscriptionId":"again","metric":"sys.cpu.user",""" +
+        s""""startTime":$T,"endTime":${T + 1000},"delayTime":100}""")
+      val (frames, closed) = c.collectFrames(untilComplete = true, deadlineMs = 10000L)
+      c.close()
+      val rs = responsesOf(frames)
+      assert(!closed, s"the restarted gateway closed the connection after $frames")
+      assert(rs.filter(r => r \ "complete" == JBool(false)).map(tsOf) == Seq(T), frames)
+      assert(rs.exists(r => r \ "complete" == JBool(true)), s"no sentinel in $frames")
     } finally api2.stop()
   }
 

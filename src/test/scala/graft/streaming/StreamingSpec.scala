@@ -42,6 +42,36 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     assert(rows.forall(_.metric == "sys.cpu.user"))
   }
 
+  test("ingest reports its refused points on stderr, batch and streaming alike") {
+    val lines = Seq(
+      s"put ingest.refused $T 1.0 host=a",
+      "garbage",                                  // unparseable
+      s"put ingest.refused ${T + 1} 2.0 viz=A")   // no tag besides viz
+    val Refused = """\[graft\] ingest refused (\d+) point\(s\); first: .+""".r
+    /** Run `body` with System.err captured; the refused points it reports. */
+    def refusedIn(body: => Unit): Int = {
+      val err = new java.io.ByteArrayOutputStream()
+      val saved = System.err
+      System.setErr(new java.io.PrintStream(err, true))
+      try body finally System.setErr(saved)
+      err.toString("UTF-8").linesIterator.collect { case Refused(n) => n.toInt }.sum
+    }
+    val dir = Files.createTempDirectory("graft-ingest-refused").toString
+    var points = Seq.empty[MetricPoint]
+    assert(refusedIn {
+      points = PutLineIngest.parse(lines.toDS().repartition(2)).collect().toSeq
+    } == 2)
+    graft.sources.PointStore.append(spark, points, s"$dir/data", s"$dir/meta")
+    assert(graft.sources.PointStore.read(spark, s"$dir/data").count() == 1)
+    // the storage sink reads each micro-batch twice; its refusals count once
+    val input = MemoryStream[String]
+    val q = PutLineIngest.startStorageSink(PutLineIngest.parse(input.toDS()),
+      s"$dir/sdata", s"$dir/smeta", s"$dir/ckpt")
+    try assert(refusedIn { input.addData(lines); q.processAllAvailable() } == 2)
+    finally q.stop()
+    assert(graft.sources.PointStore.read(spark, s"$dir/sdata").count() == 1)
+  }
+
   test("streaming ingest dedup drops redelivered points, keeps distinct ones") {
     val input = MemoryStream[String]
     val deduped = PutLineIngest.dedupPoints(PutLineIngest.parse(input.toDS()))
@@ -262,9 +292,9 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val received = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val completed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val subs = new Subscriptions(
-      row => { received.add(MetricResponseJson.envelope(
-        Seq(MetricResponseJson.response(row, "session1")))); () },
-      (sid, m) => { completed.add(MetricResponseJson.envelope(
+      (sid, row) => { received.add(MetricResponseJson.envelope(
+        Seq(MetricResponseJson.response(row, sid)))); () },
+      (sid, m, complete) => if (complete) { completed.add(MetricResponseJson.envelope(
         Seq(MetricResponseJson.completed(m, sid)))); () })
     val input = MemoryStream[MetricPoint]
     val q = subs.addMetric("session1", input.toDS().toDF(), metric = "sys.cpu.user",
@@ -287,6 +317,42 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     assert(completed.peek() ==
       """{"responses":[{"metric":"sys.cpu.user","timestamp":0,"value":0.0,""" +
       """"tags":null,"subscriptionId":"session1","complete":true}]}""")
+  }
+
+  test("a subscription's tag filter selects exactly what a query with the same tags returns") {
+    import graft.planner.QueryPlanner
+    import graft.sources.PointStore
+    val dir = Files.createTempDirectory("graft-sub-tags").toString
+    val pts = Seq(
+      MetricPoint("sub.tags", T, 1.0, Map("host" -> "a"), None),
+      MetricPoint("sub.tags", T + 1, 2.0, Map("host" -> "b"), None),
+      MetricPoint("sub.tags", T + 2, 3.0, Map("host" -> "c"), None),
+      MetricPoint("sub.tags", T + 3, 4.0, Map("host" -> "w1"), None),
+      MetricPoint("sub.tags", T + 4, 5.0, Map("host" -> "xw"), None),     // w.* must full-match
+      MetricPoint("sub.tags", T + 5, 6.0, Map("rack" -> "r1"), None),     // no host tag
+      MetricPoint("sub.tags", T + 6, 7.0, Map("host" -> "a"), Some("X")), // hidden
+      MetricPoint("sub.other", T + 7, 8.0, Map("host" -> "a"), None))
+    PointStore.write(pts.toDF(), dir)
+    type Seen = (Map[String, String], Long, Double)
+    val received = new java.util.concurrent.ConcurrentHashMap[String, Set[Seen]]()
+    val subs = new Subscriptions(
+      (id, r) => { received.merge(id, Set((r.getMap[String, String](r.fieldIndex("tags")).toMap,
+        r.getAs[Long]("ts"), r.getAs[Double]("value"))), (a: Set[Seen], b: Set[Seen]) => a ++ b); () },
+      (_, _, _) => ())
+    // the subscription id names its host filter; every tail reads the store
+    val filters = Seq("*", "a|b", "w.*")
+    val tails = filters.map(f => subs.addMetric(f, PointStore.stream(spark, dir), "sub.tags",
+      tags = Map("host" -> f), beginTimeMs = T, delayMs = 50L))
+    tails.foreach(_.processAllAvailable())
+    filters.foreach(subs.close)
+    for (f <- filters) {
+      val req = QueryPlanner.TsQueryRequest(T, T + 1000L, msResolution = true,
+        Seq(QueryPlanner.SubQuery("none", "sub.tags", tags = Map("host" -> f))))
+      val queried = QueryPlanner.plan(PointStore.read(spark, dir), req, Seq.empty).head
+        .select("group_tags", "ts_out", "value").collect()
+        .map(r => (r.getMap[String, String](0).toMap, r.getLong(1), r.getDouble(2))).toSet
+      assert(queried.nonEmpty && received.getOrDefault(f, Set.empty) == queried, s"host -> $f")
+    }
   }
 
   test("streaming binary-frame ingest: FB batches and put-line text interleave") {
@@ -313,8 +379,8 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val received = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val completed = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     val subs = new Subscriptions(
-      row => { received.add(row.getAs[Long]("ts")); () },
-      (sid, m) => { completed.add((sid, m)); () })
+      (_, row) => { received.add(row.getAs[Long]("ts")); () },
+      (sid, m, complete) => if (complete) { completed.add((sid, m)); () })
     val input = MemoryStream[MetricPoint]
     // reference AddSubscription.endTime + MetricScanner.java:110,270-280: a
     // bounded scan serves [begin, end] and sends complete:true on its own
@@ -340,7 +406,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     // deliver in global ts order; a slow consumer is simulated by the
     // callback doing per-row work on the driver thread
     val received = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val subs = new Subscriptions(row => { received.add(row.getAs[Long]("ts")); () })
+    val subs = new Subscriptions((_, row) => { received.add(row.getAs[Long]("ts")); () }, (_, _, _) => ())
     val input = MemoryStream[MetricPoint]
     val query = subs.addMetric("big", input.toDS().toDF(), metric = "m", delayMs = 50L)
     val n = 20000
@@ -358,7 +424,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
 
   test("zero beginTime clamps to the age-off horizon (MetricScanner semantics)") {
     val received = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val subs = new Subscriptions(row => { received.add(row.getAs[Long]("ts")); () })
+    val subs = new Subscriptions((_, row) => { received.add(row.getAs[Long]("ts")); () }, (_, _, _) => ())
     val input = MemoryStream[MetricPoint]
     // now = T + 100s, ttl = 60s -> horizon T + 40s; the T-point must be dropped
     val q = subs.addMetric("s", input.toDS().toDF(), metric = "m", delayMs = 50L,

@@ -62,6 +62,23 @@ class MaintenanceSpec extends AnyFunSuite with SparkSpec {
     assert(!new java.io.File(meta + ".tmp").exists())
   }
 
+  test("dry run counts a metric whose last hour expires within the horizon day as gone") {
+    val base = Files.createTempDirectory("graft-maint-hour").toString
+    val (data, meta) = (s"$base/data", s"$base/meta")
+    val now = T + 7 * Day + 5 * 3600000L // 7d TTL: horizon hour 5 of 2024-01-01
+    val pts = Seq(
+      MetricPoint("hour0.metric", T, 1.0, Map("h" -> "a"), None),             // hr=0: dropped
+      MetricPoint("hour6.metric", T + 6 * 3600000L, 2.0, Map("h" -> "b"), None)) // hr=6: kept
+    PointStore.write(pts.toDF(), data)
+    PointStore.writeMeta(pts.toDF(), meta)
+    val dry = Maintenance.run(spark, data, meta, ttl, now, dryRun = true)
+    val real = Maintenance.run(spark, data, meta, ttl, now)
+    assert(dry.droppedPartitions == Seq("hour0.metric/2024-01-01/hr=0"))
+    assert(real.droppedPartitions == dry.droppedPartitions)
+    assert(real.metaRowsAfter == 1)
+    assert(dry.metaRowsAfter == real.metaRowsAfter)
+  }
+
   test("a second pass is a no-op with an accurate report") {
     val (data, meta, now) = seed()
     Maintenance.run(spark, data, meta, ttl, now)

@@ -4,6 +4,12 @@
 # sf0.01 — the house per-batch discipline.
 set -u
 GATES="$1"
+# the gates run the compiled classes: refuse to check classes older than a source
+NEWEST_CLASS=$(find target/scala-2.13/classes -name '*.class' -printf '%T@ %p\n' 2>/dev/null | sort -n | tail -1 | cut -d' ' -f2-)
+if [ -z "$NEWEST_CLASS" ] || [ -n "$(find src/main/scala -type f -newer "$NEWEST_CLASS" -print -quit)" ]; then
+  echo "tier_check: src/main/scala has a file newer than every class in target/scala-2.13/classes; compile first" >&2
+  exit 2
+fi
 OPENS=$(for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
   java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \
   java.base/java.util.concurrent java.base/java.util.concurrent.atomic java.base/sun.nio.ch \
