@@ -18,7 +18,8 @@ import graft.operators.TimeSeries
  * here: one declarative DataFrame per SubQuery —
  * `filter(metric ∧ ts-range ∧ viz ∧ tag-predicates) [-> rate] ->
  * groupBy(series, bucket).agg(dsAgg) [-> groupBy(queriedTags, bucket).agg(agg)]`.
- * Catalyst provides partition pruning on the metric/time predicates, partial
+ * Catalyst provides partition pruning on the metric predicate (the ts range
+ * filters rows in the scan: no `dt`/`hr` predicate is derived from it), partial
  * aggregation, and spilling; the iterator ORDER (rate before downsample) is
  * preserved structurally.
  */

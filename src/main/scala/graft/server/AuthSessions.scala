@@ -76,9 +76,6 @@ class AuthSessions(
     peerDn.map(AuthSessions.canonicalDn).flatMap(dnAuths.get)
       .map(Some(_))
       .getOrElse(resolve(sessionId))
-
-  /** Explicit logout (session invalidation). */
-  def invalidate(sessionId: String): Unit = sessions.remove(sessionId)
 }
 
 object AuthSessions {

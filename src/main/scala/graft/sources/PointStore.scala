@@ -18,9 +18,10 @@ import graft.model.MetricPoint
  * (metric, hour-rounded timestamp) row keys (reference
  * common/src/main/java/timely/accumulo/MetricAdapter.java:36,47-53,189-196 —
  * hour rounding is explicitly for scan efficiency and compression). Catalyst
- * partition pruning then plays the role of `DataStore.getQueryRanges`
+ * partition pruning plays part of the role of `DataStore.getQueryRanges`
  * (server/src/main/java/timely/server/store/DataStore.java:997-1039): a query
- * `metric = m AND ts BETWEEN a AND b` touches only the matching directories.
+ * `metric = m AND ts BETWEEN a AND b` prunes to `metric=m`'s directories, but
+ * no query derives `dt`/`hr` predicates from its ts range, so it reads them all.
  *
  * Serving state: each store directory has one in-JVM entry, looked up by its
  * qualified Hadoop path (so `/x` and `file:/x` share one). It holds the
@@ -28,7 +29,7 @@ import graft.model.MetricPoint
  * query's partition pruning then runs over) and the in-memory catalog
  * ([[catalog]]), each loaded on first use. Every write into a directory
  * through this object — [[append]], [[write]], [[writeZOrdered]],
- * [[writeMeta]], [[ageOff]], [[metaAgeOff]], [[ageOffDropPartitions]] — and
+ * [[writeMeta]], [[ageOff]], [[ageOffDropPartitions]], [[ageOffCatalog]] — and
  * every [[AtomicDir]] swap (the maintenance passes' rewrites) moves that
  * directory's generation on once its files are in place. A reader tags what
  * it loads with the generation, and the directory's modification time, read
@@ -49,8 +50,8 @@ object PointStore {
 
   /** Canonical points frame with derived partition columns. At cluster scale
     * `(metric, dt, hr)` partitioning is the analog of the reference's
-    * (metric, hour-bucket) row keys — time+metric predicates become partition
-    * pruning (MetricAdapter.java:47-53,189-196).
+    * (metric, hour-bucket) row keys (MetricAdapter.java:47-53,189-196); only
+    * a metric predicate prunes (see the object doc).
     *
     * dt/hr derive from pure epoch arithmetic (UTC by construction), NOT from
     * date_format/hour — those follow the session timezone, and a non-UTC
@@ -106,11 +107,6 @@ object PointStore {
     }
   }
 
-  /** Read the store back as the canonical schema (partition cols retained for
-    * pruning; `ts` stays the epoch-ms source of truth). */
-  def read(spark: SparkSession, dataDir: String): DataFrame =
-    spark.read.parquet(dataDir)
-
   /** The store as read back: the canonical point columns plus the `dt`/`hr`
     * partition columns (also the schema of [[stream]]). */
   val Schema: StructType = StructType(
@@ -120,12 +116,12 @@ object PointStore {
   /** The store as a stream, the tail every subscription plans over: each new
     * parquet file in the store becomes a micro-batch (the MetricScanner
     * re-scan loop, minus the hand-rolled ranges — the file source tracks
-    * progress). A file source infers no schema and needs its directory, so
-    * the stream declares [[Schema]] and creates the directory first,
-    * through the directory's own `FileSystem`. */
+    * progress). A file source needs its directory, so the stream creates it
+    * first, through the directory's own `FileSystem`, after restoring a
+    * crash-left `.bak` (see [[restored]]). */
   def stream(spark: SparkSession, dataDir: String): DataFrame = {
-    val root = new Path(dataDir)
-    root.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(root)
+    val (fs, root) = restored(spark, dataDir)
+    fs.mkdirs(root)
     spark.readStream.schema(Schema).parquet(dataDir)
   }
 
@@ -134,23 +130,23 @@ object PointStore {
     StructField("metric", StringType), StructField("tagk", StringType),
     StructField("tagv", StringType)))
 
-  /** The store's points read afresh: a store nothing has been put to yet
-    * reads as an empty frame instead of failing schema inference. */
-  def readOrEmpty(spark: SparkSession, dataDir: String): DataFrame =
-    orEmpty(spark, dataDir, Schema)(read(spark, dataDir))
+  /** The store's points read afresh as [[Schema]] (partition columns kept
+    * for pruning; `ts` stays the epoch-ms source of truth). */
+  def read(spark: SparkSession, dataDir: String): DataFrame =
+    load(spark, dataDir, Schema)
 
-  /** The meta catalog read afresh, empty-safe like [[readOrEmpty]]. */
+  /** The meta catalog read afresh as its (metric, tagk, tagv) schema. */
   def readMeta(spark: SparkSession, metaDir: String): DataFrame =
-    orEmpty(spark, metaDir, MetaSchema)(spark.read.parquet(metaDir))
+    load(spark, metaDir, MetaSchema)
 
-  /** Emptiness is asked of the directory's own Hadoop `FileSystem`, so a
-    * store given as a URI (`file:/x`, `hdfs://…`) reads like a plain path. */
-  private def orEmpty(spark: SparkSession, dir: String, schema: StructType)(
-      load: => DataFrame): DataFrame = {
+  /** `dir` read with its declared schema: inferring one costs a Spark job and
+    * reads a numeric-looking metric name back as a number. A directory not
+    * yet written (asked of its own `FileSystem`, so a URI store reads like a
+    * plain path) is read as zero paths, an empty frame of the same schema. */
+  private def load(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
     val path = new Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path) && fs.listStatus(path).nonEmpty) load
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    val written = path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
+    spark.read.schema(schema).parquet(Seq(dir).filter(_ => written): _*)
   }
 
   // ---- the per-directory serving entries ----------------------------------
@@ -212,16 +208,26 @@ object PointStore {
   }
 
   private def writing(spark: SparkSession, path: String)(write: => Unit): Long = {
-    val p = new Path(path)
-    writing(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)(write)
+    val (fs, p) = restored(spark, path)
+    writing(fs, p)(write)
   }
 
-  /** The served points relation of a store: [[readOrEmpty]], listed once per
+  /** `path` and its `FileSystem`, once a `.bak` left by a crashed
+    * [[AtomicDir.swap]] is restored: a write that created the directory
+    * beside its only copy would let the next swap delete that copy. */
+  private def restored(spark: SparkSession, path: String): (FileSystem, Path) = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    AtomicDir.recover(fs, p)
+    (fs, p)
+  }
+
+  /** The served points relation of a store: [[read]], listed once per
     * [[Stamp]] of the directory, so a query prunes partitions over the
     * cached listing instead of re-listing the store. */
   def points(spark: SparkSession, dataDir: String): DataFrame = {
     val (d, stamp) = stamped(spark, dataDir)
-    d.points.get(stamp)(readOrEmpty(spark, dataDir))
+    d.points.get(stamp)(read(spark, dataDir))
   }
 
   /** The store's catalog in memory: read from `metaDir` once per [[Stamp]]
@@ -264,10 +270,12 @@ object PointStore {
       }
     }
 
-  /** Under the append lock: write the triples the catalog lacks, add them to
-    * the in-memory catalog, then write the points. */
+  /** Under the append lock: restore the catalog (see [[restored]]) before
+    * reading it, write the triples it lacks, add them to the in-memory
+    * catalog, then write the points. */
   private def appendWith(spark: SparkSession, triples: Iterable[Catalog.Triple],
                          dataDir: String, metaDir: String)(writePoints: => Unit): Unit = {
+    restored(spark, metaDir)
     val known = catalog(spark, metaDir)
     val added = triples.iterator.filterNot(known.triples.contains).toSet
     if (added.nonEmpty) {
@@ -439,9 +447,33 @@ object PointStore {
     dropped.result().sorted
   }
 
+  /** Catalog age-off after [[ageOffDropPartitions]] returned `dropped`: a
+    * metric is live iff one of its hour partitions is not dropped (one rule
+    * whether a dry run left them on disk or not). A real pass that ages rows
+    * off stages them in `<metaDir>.tmp` and swaps it in ([[AtomicDir.swap]]).
+    * Returns the catalog's row count before and after. */
+  def ageOffCatalog(spark: SparkSession, dataDir: String, metaDir: String,
+                    dropped: Seq[String], dryRun: Boolean): (Long, Long) = {
+    import spark.implicits._
+    val (fs, meta) = restored(spark, metaDir)
+    val catalog = readMeta(spark, metaDir)
+    val gone = dropped.toSet
+    val live = hourPartitions(spark, dataDir).collect {
+      case (m, day, hr) if !gone(s"$m/$day") && !gone(s"$m/$day/hr=$hr") => m
+    }.distinct
+    val aged = metaAgeOff(catalog, live.toDF("metric"))
+    val (before, after) = (catalog.count(), aged.count())
+    if (!dryRun && after < before) {
+      val tmp = new Path(metaDir + ".tmp")
+      aged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+      AtomicDir.swap(fs, tmp, meta)
+    }
+    (before, after)
+  }
+
   /** The store's hour partitions as (metric, day, hour): one walk of its
     * `metric=/dt=/hr=` directories; a store not yet written has none. */
-  def hourPartitions(spark: SparkSession, dataDir: String): Seq[(String, String, Long)] = {
+  private def hourPartitions(spark: SparkSession, dataDir: String): Seq[(String, String, Long)] = {
     val root = new Path(dataDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) Nil
@@ -471,14 +503,6 @@ object PointStore {
    */
   def metaAgeOff(meta: DataFrame, livePoints: DataFrame): DataFrame =
     meta.join(livePoints.select("metric").distinct(), Seq("metric"), "left_semi")
-
-  /** File-level meta maintenance paired with [[ageOff]]: rewrite the meta dir
-    * keeping only metrics that survive in the aged data dir. */
-  def metaAgeOff(spark: SparkSession, metaDir: String, agedDataDir: String, outMetaDir: String): Unit =
-    writing(spark, outMetaDir) {
-      metaAgeOff(spark.read.parquet(metaDir), read(spark, agedDataDir))
-        .write.mode(SaveMode.Overwrite).parquet(outMetaDir)
-    }
 
   /** Age-off clamp of a scan start, like the reference's cache iterator
     * clamping the scan start to the retention horizon

@@ -4,8 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
-import graft.operators.Summarization
-
 /**
  * Streaming histogram summarization — parity with the reference's Flink job
  * (reference analytics/src/main/java/timely/analytics/flink/SummarizationJob.java:36-105):
@@ -64,9 +62,4 @@ object SummarizationJob {
       .format("parquet")
       .option("path", outDir)
       .start()
-
-  /** Batch equivalence anchor: identical math to [[Summarization.summarize]]
-    * — the spec asserts stream output == batch output on the same data. */
-  def summarizeBatch(points: DataFrame, windowMs: Long): DataFrame =
-    Summarization.summarize(points, windowMs)
 }

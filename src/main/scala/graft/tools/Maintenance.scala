@@ -15,8 +15,8 @@ import graft.sources.PointStore
  * MetricCompactionStrategy.java — file metadata only, no surviving row is
  * rewritten), then the meta catalog is aged to the survivors' metric set
  * (MetaAgeOffIterator.java:77-97: a catalog row lives iff its metric still
- * has live points). The expired rows of the horizon hour stay on disk and
- * stay visible to served reads until a later pass drops that hour: no
+ * has a live hour partition). The expired rows of the horizon hour stay on
+ * disk and stay visible to served reads until a later pass drops that hour: no
  * served read clamps to the horizon ([[PointStore.clampStart]] is not on
  * that path), where the reference's scan-time age-off iterator hides them.
  *
@@ -78,11 +78,10 @@ object Maintenance {
   }
 
   /**
-   * One maintenance pass over a store: partition-level data age-off, then
-   * meta age-off against the surviving data. The meta rewrite stages into
-   * `<metaDir>.tmp` and swaps via rename — readers never observe a
-   * half-written catalog dir. No-op (with an accurate report) when nothing
-   * is expired.
+   * One maintenance pass over a store: partition-level data age-off
+   * ([[PointStore.ageOffDropPartitions]]), catalog age-off against the
+   * surviving partitions ([[PointStore.ageOffCatalog]]), then the optional
+   * compaction. No-op (with an accurate report) when nothing is expired.
    */
   def run(
       spark: SparkSession,
@@ -93,36 +92,7 @@ object Maintenance {
       dryRun: Boolean = false,
       compaction: Option[CompactionPolicy] = None): Report = {
     val dropped = PointStore.ageOffDropPartitions(spark, dataDir, ttlMsByPrefix, nowMs, dryRun)
-    val fs = new Path(metaDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverDir(fs, new Path(metaDir)) // mid-swap crash: .bak is the catalog
-    if (!fs.exists(new Path(metaDir)))
-      return Report(dryRun, dropped, 0L, 0L,
-        compaction.flatMap(maybeCompact(spark, dataDir, _, dryRun)))
-    val metaBefore = spark.read.parquet(metaDir)
-    val before = metaBefore.count()
-    // the surviving-data metric set. In dry-run the data dirs are untouched:
-    // a metric survives iff one of its hour partitions is not in the
-    // would-drop list, whether as its day or as itself
-    val after =
-      if (dryRun) {
-        val gone = dropped.toSet
-        val liveMetrics = PointStore.hourPartitions(spark, dataDir).collect {
-          case (m, day, hr) if !gone(s"$m/$day") && !gone(s"$m/$day/hr=$hr") => m
-        }.distinct
-        import spark.implicits._
-        metaBefore.join(liveMetrics.toDF("metric"), Seq("metric"), "left_semi").count()
-      } else {
-        // a fully-expired store leaves no readable parquet: every catalog row dies
-        val live =
-          try PointStore.read(spark, dataDir)
-          catch { case _: org.apache.spark.sql.AnalysisException => metaBefore.limit(0) }
-        val aged = PointStore.metaAgeOff(metaBefore, live)
-        val tmp = new Path(metaDir + ".tmp")
-        aged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        val n = spark.read.parquet(tmp.toString).count()
-        swapDir(fs, tmp, new Path(metaDir))
-        n
-      }
+    val (before, after) = PointStore.ageOffCatalog(spark, dataDir, metaDir, dropped, dryRun)
     Report(dryRun, dropped, before, after,
       compaction.flatMap(maybeCompact(spark, dataDir, _, dryRun)))
   }
@@ -130,8 +100,8 @@ object Maintenance {
   /** The census-driven trigger behind [[run]]'s `compaction` policy: measure
     * both signals on the CURRENT store files, and only when one degrades
     * past its threshold run (or, dry-run, size up) a [[compactZOrder]] pass.
-    * Returns None when the store is healthy — a no-op pass measures two
-    * cheap aggregates and rewrites nothing. */
+    * Returns None when the store is healthy or holds no file — a no-op pass
+    * measures two cheap aggregates and rewrites nothing. */
   private def maybeCompact(
       spark: SparkSession,
       dataDir: String,
@@ -139,9 +109,8 @@ object Maintenance {
       dryRun: Boolean): Option[CompactReport] = {
     import graft.operators.Layout
     import org.apache.spark.sql.functions.{avg => favg}
-    val store =
-      try PointStore.read(spark, dataDir)
-      catch { case _: org.apache.spark.sql.AnalysisException => return None }
+    val store = PointStore.read(spark, dataDir)
+    if (store.inputFiles.isEmpty) return None
     val filesPerHr = PointStore.census(spark, dataDir)
       .agg(favg(org.apache.spark.sql.functions.col("files_per_partition"))).head
     val avgFiles = if (filesPerHr.isNullAt(0)) 0.0 else filesPerHr.getDouble(0)

@@ -216,7 +216,7 @@ class GraftServerSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll 
     start.countDown()
     senders.foreach(_.join())
     import org.apache.spark.sql.functions.col
-    def stored() = graft.sources.PointStore.readOrEmpty(spark,
+    def stored() = graft.sources.PointStore.read(spark,
       new java.io.File(dir, "data").getAbsolutePath).where(col("metric") === "conc.metric")
     val expected = agents.toLong * perAgent
     val t0 = System.currentTimeMillis()
@@ -287,7 +287,7 @@ class GraftServerSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll 
       ws.ask("""{"operation":"version"}""", timeoutMs = 5000L) // answered after the put
     } finally ws.close()
     import org.apache.spark.sql.functions.col
-    def rows(): Set[(String, Long, Double)] = graft.sources.PointStore.readOrEmpty(spark,
+    def rows(): Set[(String, Long, Double)] = graft.sources.PointStore.read(spark,
         new java.io.File(dir, "data").getAbsolutePath)
       .where(col("metric") === "same.row")
       .select(col("tags")("src"), col("ts"), col("value")).distinct().collect()

@@ -263,6 +263,23 @@ class HttpApiSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll {
     }
   }
 
+  test("numeric-looking metric names stay strings: a query and /api/cache tell 1 from 01") {
+    val base = Files.createTempDirectory("graft-http-numeric").toString
+    withApi(s"$base/data", s"$base/meta") { c =>
+      assert(c.post("/api/put", Seq(
+        s"put 1 $T 1.0 host=a",
+        s"put 01 $T 2.0 host=a",
+        s"put 7.5 $T 3.0 host=a").mkString("\n")).statusCode() == 200)
+      val q = c.post("/api/query", rawQuery("01"))
+      assert(q.statusCode() == 200, q.body())
+      assert(q.body() == s"""[{"metric":"01","tags":{},"aggregatedTags":["host"],""" +
+        s""""dps":{"$T":2.0}}]""", q.body())
+      val cache = c.get("/api/cache")
+      assert(cache.statusCode() == 200, cache.body())
+      assert(cache.body().contains(""""metrics":["01","1","7.5"]"""), cache.body())
+    }
+  }
+
   test("a direct PointStore.write + writeMeta shows on the very next request") {
     import spark.implicits._
     val base = Files.createTempDirectory("graft-http-write").toString

@@ -53,7 +53,7 @@ class PointStoreSpec extends AnyFunSuite with SparkSpec {
     PointStore.append(spark, Seq.empty[MetricPoint], s"$base/data", s"$base/meta")
     assert(!new java.io.File(s"$base/data").exists())
     assert(!new java.io.File(s"$base/meta").exists())
-    assert(PointStore.readOrEmpty(spark, s"$base/data").isEmpty)
+    assert(PointStore.read(spark, s"$base/data").isEmpty)
     assert(PointStore.readMeta(spark, s"$base/meta").isEmpty)
   }
 
@@ -64,7 +64,7 @@ class PointStoreSpec extends AnyFunSuite with SparkSpec {
     intercept[Exception](PointStore.append(spark,
       Seq(MetricPoint("sys.cpu.user", T, 1.0, Map("host" -> "a"), None)),
       s"$base/data", metaFile.getPath))
-    assert(PointStore.readOrEmpty(spark, s"$base/data").isEmpty,
+    assert(PointStore.read(spark, s"$base/data").isEmpty,
       "points must not be stored without their catalog rows")
   }
 
@@ -86,6 +86,66 @@ class PointStoreSpec extends AnyFunSuite with SparkSpec {
     assert(PointStore.readMeta(spark, meta).count() == 3)
     assert(PointStore.catalog(spark, meta).triples ==
       PointStore.readMeta(spark, meta).as[(String, String, String)].collect().toSet)
+  }
+
+  test("an append and a stream restore a store that a crashed swap left as .bak") {
+    val base = Files.createTempDirectory("graft-append-bak").toString
+    val (data, meta) = (s"$base/data", s"$base/meta")
+    def park(dir: String): Unit =
+      assert(new java.io.File(dir).renameTo(new java.io.File(dir + ".bak")))
+    val first = MetricPoint("sys.cpu.user", T, 1.0, Map("host" -> "a"), None)
+    PointStore.append(spark, Seq(first), data, meta)
+    // the crash window inside AtomicDir.swap: each directory only at its .bak
+    park(data)
+    park(meta)
+    PointStore.append(spark, Seq(first.copy(ts = T + 1000L, tags = Map("host" -> "b"))), data, meta)
+    assert(PointStore.read(spark, data).select("ts").as[Long].collect().toSet == Set(T, T + 1000L))
+    assert(PointStore.readMeta(spark, meta).as[(String, String, String)].collect().toSet ==
+      Set(("sys.cpu.user", "host", "a"), ("sys.cpu.user", "host", "b")))
+    assert(!new java.io.File(data + ".bak").exists() && !new java.io.File(meta + ".bak").exists())
+    // a subscription's stream creates the data directory: it restores it first
+    park(data)
+    PointStore.stream(spark, data)
+    assert(PointStore.read(spark, data).count() == 2)
+    assert(!new java.io.File(data + ".bak").exists())
+  }
+
+  test("re-listing a served store after an append starts no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val base = Files.createTempDirectory("graft-relist").toString
+    val (data, meta) = (s"$base/data", s"$base/meta")
+    val put = MetricPoint("sys.cpu.user", T, 1.0, Map("host" -> "a"), None)
+    PointStore.append(spark, Seq(put), data, meta)
+    val served = PointStore.points(spark, data)
+    PointStore.append(spark, Seq(put.copy(ts = T + 1000L)), data, meta)
+    // job groups tell this thread's jobs from any other suite's
+    val (relist, marker) = (s"relist-${System.nanoTime}", s"marker-${System.nanoTime}")
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val relisted =
+      try {
+        sc.setJobGroup(relist, "re-list after an append")
+        val df = PointStore.points(spark, data)
+        // the bus delivers events in order: once the marker job's start is
+        // seen, so is every job the re-list started
+        sc.setJobGroup(marker, "listener bus marker")
+        sc.parallelize(Seq(1), 1).count()
+        val deadline = System.nanoTime + 10000000000L
+        while (!groups.contains(marker) && System.nanoTime < deadline) Thread.sleep(10)
+        assert(groups.contains(marker), "the marker job's start never reached the listener")
+        df
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+    assert(!groups.contains(relist), "the re-list started a Spark job")
+    assert(relisted ne served, "the append must move the store's listing on")
+    assert(relisted.count() == 2)
   }
 
   test("partition columns are UTC epoch arithmetic, whatever the session timezone") {
@@ -204,13 +264,14 @@ class PointStoreSpec extends AnyFunSuite with SparkSpec {
     PointStore.writeMeta(pts.toDF(), s"$base/meta")
     PointStore.ageOff(spark, s"$base/data", s"$base/aged",
       Map("default" -> 3 * Day), now)
-    PointStore.metaAgeOff(spark, s"$base/meta", s"$base/aged", s"$base/metaOut")
+    val aged = PointStore.metaAgeOff(PointStore.readMeta(spark, s"$base/meta"),
+      PointStore.read(spark, s"$base/aged"))
     // dead.m has no surviving points -> all of its meta rows (both tags) drop;
     // suggest over the aged catalog no longer offers it
     val before = spark.read.parquet(s"$base/meta").select("metric").distinct()
       .as[String].collect().toSet
     assert(before == Set("live.m", "dead.m"))
-    val after = spark.read.parquet(s"$base/metaOut")
+    val after = aged
       .select("metric", "tagk", "tagv").as[(String, String, String)].collect().toSet
     assert(after == Set(("live.m", "host", "a")))
   }

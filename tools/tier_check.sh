@@ -22,12 +22,14 @@ run_verify() { # sfdir outdir cpus
     -cp "target/scala-2.13/classes:/opt/spark/jars/*" graft.Verify "$1" "$2" "$GATES" 2>/dev/null
 }
 rc=0
+# the Verify output directories go when the script exits
+trap 'rm -rf /tmp/tier_*_$$' EXIT
 for sf in 0.001 0.01 0.1; do
   out=/tmp/tier_${sf}_$$
   rm -rf $out
   run_verify /root/testdata/sf$sf $out 8
   python3 tools/check_oracle.py /root/testdata/sf$sf $out | tail -n +0 | grep -v "^$" | sed "s/^/[sf$sf] /"
-  python3 tools/check_oracle.py /root/testdata/sf$sf $out >/dev/null 2>&1 || rc=1
+  [ "${PIPESTATUS[0]}" -ne 0 ] && rc=1
 done
 # parallelism check at sf0.01: local[4] vs local[8]
 outA=/tmp/tier_par4_$$; outB=/tmp/tier_par8_$$
