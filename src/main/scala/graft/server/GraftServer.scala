@@ -13,8 +13,11 @@ import graft.sources.PointStore
  *
  * A put over any transport lands through the same [[PointStore.append]],
  * which serializes appends, so concurrent puts from many connections are
- * each stored exactly once and are immediately queryable over every other
- * transport; live subscriptions tail the same store. HTTP and WS serve the
+ * each stored exactly once; a put is queryable over every other transport
+ * once the append that carries it returns. A TCP connection or the UDP
+ * listener reads on while it appends, so its next append carries every
+ * point read meanwhile ([[PutListeners]]); live subscriptions tail the same
+ * store. HTTP and WS serve the
  * same operations through one table ([[Operations]]), each transport only
  * framing its requests and answers, so a request gets the same body on
  * either. An optional [[AuthSessions]] store gives the HTTP and WS

@@ -3,6 +3,7 @@ package graft.server
 import java.io.{BufferedInputStream, PushbackInputStream}
 import java.net.{DatagramPacket, DatagramSocket, InetSocketAddress, ServerSocket, Socket, SocketTimeoutException}
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.ConcurrentHashMap
 
 import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
@@ -24,29 +25,50 @@ import graft.model.{MetricParser, MetricPoint, MetricsFlatBuffer}
  * delimited put lines, and a `version` line answers the version string. A
  * UDP datagram is one frame either way.
  *
- * Text lines batch toward the sink: a batch flushes at `BatchSize` lines
- * or when the connection pauses for `LingerMs` (so an interactive `telnet
- * put` still lands promptly) — the socket-side analog of the ingest
- * pipeline's micro-batching. A batch, frame or datagram with points the
- * decoder refuses (a malformed line, a point without a tag, a corrupt TMFB
- * frame) stores the rest and prints one stderr line naming the peer, the
- * refused count and the first refusal. A failure that ends a connection or
- * a datagram (a sink that throws) prints one stderr line naming the peer,
- * the exception and the decoded points that were not stored.
+ * Text lines batch toward the sink: the reader hands a batch off at
+ * `BatchSize` lines or when the connection pauses for `LingerMs` (so an
+ * interactive `telnet put` still lands promptly) — the socket-side analog of
+ * the ingest pipeline's micro-batching. Handing off does not wait for the
+ * append: each connection (and the UDP listener) has one appender thread,
+ * whose next sink call carries every point handed off while the previous one
+ * ran — one append in flight and one filling, so batches grow when the write
+ * falls behind, as Timely's buffered `BatchWriter` does (DataStore.java:
+ * 183-186). A put is queryable once the append that carries it returns; a
+ * connection closes its socket only after its last append returns, and
+ * `Tcp.stop` ends the open connections that way.
+ *
+ * A batch, frame or datagram with points the decoder refuses (a malformed
+ * line, a point without a tag, a corrupt TMFB frame) stores the rest and
+ * prints one stderr line naming the peer, the refused count and the first
+ * refusal. A failed append (a sink that throws) prints one stderr line
+ * naming the peer, the exception and every decoded point the connection held
+ * that was not stored: the failed call's and those read while it ran; a TCP
+ * connection then ends, the UDP listener goes on. A failed read or accept
+ * prints one stderr line too.
  */
 object PutListeners {
 
-  /** Put lines a TCP connection batches before it flushes. */
+  /** Put lines a TCP connection reads before it hands them off. */
   private val BatchSize = 1000
 
-  /** A TCP connection idle this long flushes its partial batch. */
+  /** A TCP connection idle this long hands its partial batch off. */
   private val LingerMs = 100
+
+  /**
+   * Decoded points a connection (or the UDP listener) holds, in flight and
+   * filling, before its reader blocks. Chosen for heap, not for a workload:
+   * at about 500 bytes a point (a decoded put line with a 16-character name
+   * and three short tags measures 450) it is about 25 MB a connection.
+   * One hand-off may overshoot it by the batch, datagram or TMFB frame that
+   * crosses it.
+   */
+  private val MaxHeld = 50000
 
   /** The largest UDP datagram. */
   private val MaxPacket = 65535
 
-  private def reportFailure(peer: String, e: Throwable, unstored: Int): Unit =
-    System.err.println(s"[graft] put from $peer failed: $e; $unstored parsed point(s) not stored")
+  private def reportFailure(what: String, e: Throwable, unstored: Int): Unit =
+    System.err.println(s"[graft] $what failed: $e; $unstored parsed point(s) not stored")
 
   /** The decoded put's points; first, one stderr line if it refused any. */
   private def admitted(peer: String, put: MetricParser.Decoded): Seq[MetricPoint] = {
@@ -54,25 +76,86 @@ object PutListeners {
     put.points
   }
 
+  /**
+   * The points one reader hands off to its own appender thread, which calls
+   * the sink with everything handed off since its previous call returned. A
+   * failed call prints one stderr line counting its points and those read
+   * while it ran, which are dropped; later hand-offs append as before.
+   */
+  private final class Handoff(what: String, sink: Seq[MetricPoint] => Unit, thread: String) {
+    private val filling = new ArrayBuffer[MetricPoint]()
+    private var inFlight = 0
+    private var closed = false
+    private var failed = false
+
+    private val appender = new Thread(() => {
+      var batch = take()
+      while (batch.nonEmpty) {
+        try sink(batch)
+        catch { case NonFatal(e) => reportFailure(what, e, dropHeld(batch.size)) }
+        batch = take()
+      }
+    }, thread)
+    appender.setDaemon(true)
+    appender.start()
+
+    /** Hands `points` off, first waiting while `MaxHeld` are held; false
+      * once an append has failed. */
+    def offer(points: Seq[MetricPoint]): Boolean = synchronized {
+      while (filling.size + inFlight >= MaxHeld) wait()
+      if (points.nonEmpty) { filling ++= points; notifyAll() }
+      !failed
+    }
+
+    /** Waits until everything handed off has been appended or reported. */
+    def close(): Unit = {
+      synchronized { closed = true; notifyAll() }
+      appender.join()
+    }
+
+    /** Everything handed off since the last call; empty once closed. */
+    private def take(): Seq[MetricPoint] = synchronized {
+      inFlight = 0
+      notifyAll()
+      while (filling.isEmpty && !closed) wait()
+      val batch = filling.toVector
+      filling.clear()
+      inFlight = batch.size
+      batch
+    }
+
+    /** The failed call's points plus those filling, which are dropped. */
+    private def dropHeld(failedCall: Int): Int = synchronized {
+      failed = true
+      val n = failedCall + filling.size
+      filling.clear()
+      n
+    }
+  }
+
   final class Tcp(sink: Seq[MetricPoint] => Unit) {
     private var server: ServerSocket = _
+    private var acceptor: Thread = _
     @volatile private var running = false
+    // the open connections and their reader threads, ended by `stop`
+    private val conns = new ConcurrentHashMap[Socket, Thread]()
 
     def start(port: Int = 0): Int = synchronized {
       require(server == null, "already started")
       server = new ServerSocket()
       server.bind(new InetSocketAddress(port))
       running = true
-      val acceptor = new Thread(() => {
+      acceptor = new Thread(() => {
         while (running) {
           try {
             val s = server.accept()
             val t = new Thread(() => serve(s), s"graft-tcp-put-${s.getPort}")
             t.setDaemon(true)
+            conns.put(s, t)
             t.start()
           } catch {
             case _: Throwable if !running => ()
-            case NonFatal(_) => ()
+            case NonFatal(e) => Operations.reportFailure("TCP put accept", e)
           }
         }
       }, "graft-tcp-put-accept")
@@ -81,22 +164,23 @@ object PutListeners {
       server.getLocalPort
     }
 
+    /** Stops accepting, then ends every open connection: it reads no more,
+      * and its points already read are appended (or reported) first. */
     def stop(): Unit = synchronized {
       running = false
-      if (server != null) { try server.close() catch { case NonFatal(_) => () }; server = null }
+      if (server != null) {
+        try server.close() catch { case NonFatal(_) => () }
+        acceptor.join()
+        server = null
+      }
+      conns.keySet.forEach(s => try s.shutdownInput() catch { case NonFatal(_) => () })
+      conns.values.forEach(_.join())
     }
 
     private def serve(socket: Socket): Unit = {
       val peer = String.valueOf(socket.getRemoteSocketAddress)
-      var unstored = 0 // points of the sink call in progress
-      def store(put: MetricParser.Decoded): Unit = {
-        val pts = admitted(peer, put)
-        if (pts.nonEmpty) {
-          unstored = pts.size
-          sink(pts)
-          unstored = 0
-        }
-      }
+      val handoff = new Handoff(s"put from $peer", sink, s"graft-tcp-put-append-${socket.getPort}")
+      def store(put: MetricParser.Decoded): Boolean = handoff.offer(admitted(peer, put))
       try {
         val in = new PushbackInputStream(new BufferedInputStream(socket.getInputStream), 8)
         val head = new Array[Byte](8)
@@ -107,21 +191,26 @@ object PutListeners {
           // (MetricsBufferDecoder's TMFB branch)
           store(MetricParser.frame(in.readAllBytes()))
         } else serveText(socket, in, store)
-      } catch { case NonFatal(e) => reportFailure(peer, e, unstored) }
-      finally { try socket.close() catch { case NonFatal(_) => () } }
+      } catch { case NonFatal(e) => reportFailure(s"put from $peer", e, 0) }
+      finally {
+        handoff.close()
+        try socket.close() catch { case NonFatal(_) => () }
+        conns.remove(socket)
+      }
     }
 
+    /** Reads put lines until EOF or a failed append, handing off each batch. */
     private def serveText(socket: Socket, in: PushbackInputStream,
-                          store: MetricParser.Decoded => Unit): Unit = {
+                          store: MetricParser.Decoded => Boolean): Unit = {
       socket.setSoTimeout(LingerMs)
       val batch = new ArrayBuffer[String]()
+      var open = true
       def flush(): Unit = if (batch.nonEmpty) {
         val put = MetricParser.lines(batch)
         batch.clear()
-        store(put)
+        if (!store(put)) open = false // an append failed: the connection ends
       }
       val line = new java.io.ByteArrayOutputStream()
-      var open = true
       while (open) {
         try {
           val b = in.read()
@@ -143,7 +232,7 @@ object PutListeners {
             }
           } else if (b != '\r') line.write(b)
         } catch {
-          case _: SocketTimeoutException => flush() // connection paused: linger flush
+          case _: SocketTimeoutException => flush() // connection paused: linger hand-off
         }
       }
       flush()
@@ -152,17 +241,18 @@ object PutListeners {
 
   final class Udp(sink: Seq[MetricPoint] => Unit) {
     private var socket: DatagramSocket = _
+    private var rx: Thread = _
     @volatile private var running = false
 
     def start(port: Int = 0): Int = synchronized {
       require(socket == null, "already started")
       socket = new DatagramSocket(new InetSocketAddress(port))
       running = true
-      val rx = new Thread(() => {
+      val handoff = new Handoff(s"put over UDP port ${socket.getLocalPort}", sink, "graft-udp-put-append")
+      rx = new Thread(() => {
         val buf = new Array[Byte](MaxPacket)
         val packet = new DatagramPacket(buf, buf.length)
         while (running) {
-          var unstored = 0
           // the packet's address, not getSocketAddress: that throws before
           // the first datagram has arrived
           def peer = s"${packet.getAddress}:${packet.getPort}"
@@ -172,25 +262,28 @@ object PutListeners {
             // the reference's UDP pipeline shape
             val frame = java.util.Arrays.copyOfRange(
               packet.getData, packet.getOffset, packet.getOffset + packet.getLength)
-            if (frame.nonEmpty) {
-              val pts = admitted(peer, MetricParser.frame(frame))
-              unstored = pts.size
-              if (pts.nonEmpty) sink(pts)
-            }
+            if (frame.nonEmpty) handoff.offer(admitted(peer, MetricParser.frame(frame)))
           } catch {
             case _: Throwable if !running => ()
-            case NonFatal(e) => reportFailure(peer, e, unstored)
+            case NonFatal(e) => reportFailure(s"put from $peer", e, 0)
           }
         }
+        handoff.close()
       }, "graft-udp-put-rx")
       rx.setDaemon(true)
       rx.start()
       socket.getLocalPort
     }
 
+    /** Stops receiving; the datagrams already received are appended (or
+      * reported) first. */
     def stop(): Unit = synchronized {
       running = false
-      if (socket != null) { socket.close(); socket = null }
+      if (socket != null) {
+        socket.close()
+        rx.join()
+        socket = null
+      }
     }
   }
 }

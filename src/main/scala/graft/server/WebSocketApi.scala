@@ -105,7 +105,7 @@ class WebSocketApi(
           t.start()
         } catch {
           case _: Throwable if !running => () // closed during accept
-          case NonFatal(_) => ()
+          case NonFatal(e) => Operations.reportFailure("ws accept", e)
         }
       }
     }, "graft-ws-accept")

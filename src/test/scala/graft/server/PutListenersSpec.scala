@@ -1,10 +1,14 @@
 package graft.server
 
+import java.io.{BufferedOutputStream, BufferedReader, InputStreamReader}
 import java.net.{DatagramPacket, DatagramSocket, InetAddress, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
+import java.util.concurrent.CountDownLatch
+import java.util.concurrent.TimeUnit.SECONDS
 
 import scala.collection.mutable.ArrayBuffer
+import scala.util.Try
 
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -55,6 +59,54 @@ class PutListenersSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
 
   private def refusedCount(reports: Seq[String]): Int =
     reports.map(l => """refused (\d+) point""".r.findFirstMatchIn(l).get.group(1).toInt).sum
+
+  /** A sink whose calls wait until `release` opens (at most 10 s), then
+    * record their sizes and, with `fail`, throw. */
+  private final class Gate(fail: Boolean) {
+    val entered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    private val sizes = new ArrayBuffer[Int]()
+    def calls: Seq[Int] = sizes.synchronized(sizes.toSeq)
+    def sink(batch: Seq[MetricPoint]): Unit = {
+      entered.countDown()
+      release.await(10, SECONDS)
+      sizes.synchronized(sizes += batch.size)
+      if (fail) throw new RuntimeException("append failed")
+    }
+  }
+
+  /**
+   * Sends `lines` put lines over one connection while the gate holds the
+   * first append: 1,000 lines, which the listener hands off at once, then
+   * the rest and a `version` line, whose answer shows the listener has read
+   * every line before it (a listener that does not read on answers after 5
+   * s). Then shuts the output, opens the gate and waits (at most 10 s) for
+   * the listener to close the connection; returns the version answer.
+   */
+  private def putPastGate(port: Int, gate: Gate, lines: Int): Try[String] = {
+    val s = new Socket("127.0.0.1", port)
+    try {
+      val out = new BufferedOutputStream(s.getOutputStream)
+      def put(from: Int, until: Int): Unit = (from until until).foreach(i =>
+        out.write(s"put gate.metric ${T + i} $i.0 host=a\n".getBytes(UTF_8)))
+      put(0, 1000)
+      out.flush()
+      assert(gate.entered.await(10, SECONDS), "the first append never started")
+      // the rest from another thread: a listener that does not read on
+      // leaves them in the socket buffers, which may fill
+      val sender = new Thread(() => { put(1000, lines); out.write("version\n".getBytes(UTF_8)); out.flush() })
+      sender.start()
+      s.setSoTimeout(5000)
+      val in = new BufferedReader(new InputStreamReader(s.getInputStream, UTF_8))
+      val answer = Try(in.readLine())
+      sender.join(10000L)
+      s.shutdownOutput()
+      gate.release.countDown()
+      s.setSoTimeout(10000)
+      Try(in.read()) // EOF: the connection's last append has returned
+      answer
+    } finally s.close()
+  }
 
   /** A refused point of each kind, and a good point beside it. */
   private val refusedLines =
@@ -266,5 +318,88 @@ class PutListenersSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
       System.setErr(saved)
       tcp.stop()
     }
+  }
+
+  test("a TCP connection reads on while it appends: its next append carries every line read meanwhile") {
+    val gate = new Gate(fail = false)
+    val tcp = new PutListeners.Tcp(gate.sink)
+    val port = tcp.start()
+    try {
+      val answer = putPastGate(port, gate, 3500)
+      assert(gate.calls.sum == 3500, gate.calls)
+      // one append in flight, one filling: the second carries what was read
+      // while the first ran, not one 1,000-line batch
+      assert(gate.calls(1) > 1000, gate.calls)
+      assert(answer.toOption.contains(graft.planner.TimelyApi.Version))
+    } finally tcp.stop()
+  }
+
+  test("a failed TCP append reports every point the connection held, and stores none") {
+    val gate = new Gate(fail = true)
+    val tcp = new PutListeners.Tcp(gate.sink)
+    val port = tcp.start()
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    try {
+      putPastGate(port, gate, 2500)
+      // the connection is closed: every report has been printed
+      val lost = err.synchronized(err.toString("UTF-8")).linesIterator
+        .filter(_.contains("append failed"))
+        .map(l => """(\d+) parsed point""".r.findFirstMatchIn(l).get.group(1).toInt).toSeq
+      assert(lost.nonEmpty, err.toString("UTF-8"))
+      // the failed call's 1,000 points plus those read while it ran
+      assert(lost.head > 1000, lost)
+      // every line sent is counted as lost (the sink stores nothing)
+      assert(lost.sum == 2500, lost)
+    } finally {
+      System.setErr(saved)
+      tcp.stop()
+    }
+  }
+
+  test("TCP stop ends the open connections: a line put after stop is never stored") {
+    val cap = new Capture
+    val tcp = new PutListeners.Tcp(cap.sink)
+    val port = tcp.start()
+    val s = new Socket("127.0.0.1", port)
+    try {
+      val out = s.getOutputStream
+      out.write(s"put before.stop $T 1.0 host=a\n".getBytes(UTF_8))
+      out.flush()
+      assert(cap.await(1, timeoutMs = 5000L).map(_.metric) == Seq("before.stop"))
+      tcp.stop()
+      // the connection may already be reset
+      Try { out.write(s"put after.stop ${T + 1} 2.0 host=a\n".getBytes(UTF_8)); out.flush() }
+      // an open connection hands this line off within its 100 ms linger
+      assert(cap.await(2, timeoutMs = 2000L).map(_.metric) == Seq("before.stop"))
+    } finally { s.close(); tcp.stop() }
+  }
+
+  test("UDP datagrams received while an append runs go out together in the next one") {
+    val gate = new Gate(fail = false)
+    val udp = new PutListeners.Udp(gate.sink)
+    val port = udp.start()
+    try {
+      val sock = new DatagramSocket()
+      def send(i: Int): Unit = {
+        // a refused line beside each point: its stderr report shows the
+        // datagram has been received
+        val b = s"put udp.metric ${T + i} $i.0 host=a\nput bad\n".getBytes(UTF_8)
+        sock.send(new DatagramPacket(b, b.length, InetAddress.getByName("127.0.0.1"), port))
+      }
+      send(0)
+      assert(gate.entered.await(10, SECONDS), "the first append never started")
+      // the five datagrams' reports: each of the first four has been handed
+      // off before the fifth is reported (a receiver that does not read on
+      // reports none of them until the gate opens, after 5 s)
+      refusalsDuring(_.size >= 5)((1 to 5).foreach(send))
+      sock.close()
+      gate.release.countDown()
+      val t0 = System.currentTimeMillis()
+      while (gate.calls.sum < 6 && System.currentTimeMillis() - t0 < 10000L) Thread.sleep(20)
+      assert(gate.calls.sum == 6, gate.calls)
+      assert(gate.calls.size - 1 < 5, gate.calls)
+    } finally udp.stop()
   }
 }

@@ -17,9 +17,15 @@ OPENS=$(for p in java.base/java.lang java.base/java.lang.invoke java.base/java.l
   echo --add-opens $p=ALL-UNNAMED; done)
 # half of RAM, 2-8 GB: the heap the tier-1 test command gives SPARK_DRIVER_MEM
 HEAP="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)"
-run_verify() { # sfdir outdir cpus
-  SPARK_GRAFT_CPUS=$3 java $OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -Xmx$HEAP \
-    -cp "target/scala-2.13/classes:/opt/spark/jars/*" graft.Verify "$1" "$2" "$GATES" 2>/dev/null
+run_verify() { # sfdir outdir cpus; a crash prints the tail of Verify's stderr and sets rc
+  local log=/tmp/tier_log_$$/$(basename "$2").err
+  mkdir -p /tmp/tier_log_$$
+  if ! SPARK_GRAFT_CPUS=$3 java $OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -Xmx$HEAP \
+    -cp "target/scala-2.13/classes:/opt/spark/jars/*" graft.Verify "$1" "$2" "$GATES" 2>"$log"; then
+    echo "tier_check: graft.Verify $1 failed; last 20 lines of its stderr:" >&2
+    tail -n 20 "$log" >&2
+    rc=1
+  fi
 }
 rc=0
 # the Verify output directories go when the script exits
