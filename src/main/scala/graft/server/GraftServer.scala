@@ -1,5 +1,7 @@
 package graft.server
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 import graft.sources.PointStore
@@ -24,6 +26,10 @@ import graft.sources.PointStore
  * surfaces per-caller authorization (the TCP/UDP line protocol is
  * unauthenticated in the reference too — it binds those listeners to trusted
  * interfaces).
+ *
+ * [[start]] starts all four transports or none: a failed start stops those
+ * already started and rethrows. [[stop]] returns once every transport has
+ * appended, answered or reported what it had read.
  */
 class GraftServer(
     spark: SparkSession,
@@ -48,11 +54,12 @@ class GraftServer(
   def start(httpPort: Int = 0, wsPort: Int = 0,
             tcpPort: Int = 0, udpPort: Int = 0): Ports = synchronized {
     require(ports.isEmpty, "already started")
-    val p = Ports(
+    val p = try Ports(
       http = http.start(httpPort),
       ws = ws.start(wsPort),
       tcp = tcp.start(tcpPort),
       udp = udp.start(udpPort))
+    catch { case NonFatal(e) => stop(); throw e }
     ports = Some(p)
     p
   }

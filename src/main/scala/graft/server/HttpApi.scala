@@ -3,7 +3,7 @@ package graft.server
 import java.io.OutputStreamWriter
 import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.Executors
+import java.util.concurrent.{Executors, TimeUnit}
 
 import scala.util.control.NonFatal
 
@@ -102,11 +102,17 @@ class HttpApi(
     server.getAddress.getPort
   }
 
+  /** Closes every connection, then waits for the running handlers: a put
+    * that was read is appended (or reported), though it gets no answer. */
   def stop(): Unit = synchronized {
     if (server != null) { server.stop(0); server = null }
     // HttpServer.stop does NOT shut down a user-supplied executor — without
     // this the 4 non-daemon pool threads outlive every server lifecycle
-    if (pool != null) { pool.shutdown(); pool = null }
+    if (pool != null) {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.MILLISECONDS)
+      pool = null
+    }
   }
 
   private val ops = new Operations(spark, dataDir, metaDir)

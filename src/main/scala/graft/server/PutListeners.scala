@@ -3,7 +3,6 @@ package graft.server
 import java.io.{BufferedInputStream, PushbackInputStream}
 import java.net.{DatagramPacket, DatagramSocket, InetSocketAddress, ServerSocket, Socket, SocketTimeoutException}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.ConcurrentHashMap
 
 import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
@@ -34,8 +33,11 @@ import graft.model.{MetricParser, MetricPoint, MetricsFlatBuffer}
  * ran — one append in flight and one filling, so batches grow when the write
  * falls behind, as Timely's buffered `BatchWriter` does (DataStore.java:
  * 183-186). A put is queryable once the append that carries it returns; a
- * connection closes its socket only after its last append returns, and
- * `Tcp.stop` ends the open connections that way.
+ * connection closes its socket only after its last append returns.
+ *
+ * The TCP listener runs on [[SocketServer]]: a start that fails to bind
+ * leaves nothing running, and `stop` returns once each open connection has
+ * appended (or reported) the points it had read.
  *
  * A batch, frame or datagram with points the decoder refuses (a malformed
  * line, a point without a tag, a corrupt TMFB frame) stores the rest and
@@ -134,48 +136,13 @@ object PutListeners {
   }
 
   final class Tcp(sink: Seq[MetricPoint] => Unit) {
-    private var server: ServerSocket = _
-    private var acceptor: Thread = _
-    @volatile private var running = false
-    // the open connections and their reader threads, ended by `stop`
-    private val conns = new ConcurrentHashMap[Socket, Thread]()
+    private val server = new SocketServer("TCP put", "graft-tcp-put-accept", "graft-tcp-put", serve)
 
-    def start(port: Int = 0): Int = synchronized {
-      require(server == null, "already started")
-      server = new ServerSocket()
-      server.bind(new InetSocketAddress(port))
-      running = true
-      acceptor = new Thread(() => {
-        while (running) {
-          try {
-            val s = server.accept()
-            val t = new Thread(() => serve(s), s"graft-tcp-put-${s.getPort}")
-            t.setDaemon(true)
-            conns.put(s, t)
-            t.start()
-          } catch {
-            case _: Throwable if !running => ()
-            case NonFatal(e) => Operations.reportFailure("TCP put accept", e)
-          }
-        }
-      }, "graft-tcp-put-accept")
-      acceptor.setDaemon(true)
-      acceptor.start()
-      server.getLocalPort
-    }
+    def start(port: Int = 0): Int = server.start(new ServerSocket(port))
 
     /** Stops accepting, then ends every open connection: it reads no more,
       * and its points already read are appended (or reported) first. */
-    def stop(): Unit = synchronized {
-      running = false
-      if (server != null) {
-        try server.close() catch { case NonFatal(_) => () }
-        acceptor.join()
-        server = null
-      }
-      conns.keySet.forEach(s => try s.shutdownInput() catch { case NonFatal(_) => () })
-      conns.values.forEach(_.join())
-    }
+    def stop(): Unit = server.stop()
 
     private def serve(socket: Socket): Unit = {
       val peer = String.valueOf(socket.getRemoteSocketAddress)
@@ -192,11 +159,7 @@ object PutListeners {
           store(MetricParser.frame(in.readAllBytes()))
         } else serveText(socket, in, store)
       } catch { case NonFatal(e) => reportFailure(s"put from $peer", e, 0) }
-      finally {
-        handoff.close()
-        try socket.close() catch { case NonFatal(_) => () }
-        conns.remove(socket)
-      }
+      finally handoff.close()
     }
 
     /** Reads put lines until EOF or a failed append, handing off each batch. */
@@ -242,17 +205,15 @@ object PutListeners {
   final class Udp(sink: Seq[MetricPoint] => Unit) {
     private var socket: DatagramSocket = _
     private var rx: Thread = _
-    @volatile private var running = false
 
     def start(port: Int = 0): Int = synchronized {
       require(socket == null, "already started")
       socket = new DatagramSocket(new InetSocketAddress(port))
-      running = true
       val handoff = new Handoff(s"put over UDP port ${socket.getLocalPort}", sink, "graft-udp-put-append")
       rx = new Thread(() => {
         val buf = new Array[Byte](MaxPacket)
         val packet = new DatagramPacket(buf, buf.length)
-        while (running) {
+        while (!socket.isClosed) {
           // the packet's address, not getSocketAddress: that throws before
           // the first datagram has arrived
           def peer = s"${packet.getAddress}:${packet.getPort}"
@@ -264,8 +225,7 @@ object PutListeners {
               packet.getData, packet.getOffset, packet.getOffset + packet.getLength)
             if (frame.nonEmpty) handoff.offer(admitted(peer, MetricParser.frame(frame)))
           } catch {
-            case _: Throwable if !running => ()
-            case NonFatal(e) => reportFailure(s"put from $peer", e, 0)
+            case NonFatal(e) => if (!socket.isClosed) reportFailure(s"put from $peer", e, 0)
           }
         }
         handoff.close()
@@ -278,7 +238,6 @@ object PutListeners {
     /** Stops receiving; the datagrams already received are appended (or
       * reported) first. */
     def stop(): Unit = synchronized {
-      running = false
       if (socket != null) {
         socket.close()
         rx.join()

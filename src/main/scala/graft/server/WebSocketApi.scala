@@ -1,7 +1,7 @@
 package graft.server
 
 import java.io.{BufferedInputStream, BufferedOutputStream}
-import java.net.{InetSocketAddress, ServerSocket, Socket}
+import java.net.{ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.ConcurrentHashMap
 
@@ -61,6 +61,11 @@ import graft.streaming.{MetricResponseJson, Subscriptions}
  * (WebSocketClientIT.testClientAnonymousAccess). Without a session store
  * every connection is anonymous (no authorizations).
  *
+ * The gateway runs on [[SocketServer]]: a start that fails to bind leaves
+ * nothing running, and `stop` ends each connection as a client disconnect
+ * does. Its own thread finishes the current operation and tears its
+ * subscriptions down, sentinels included, before `stop` returns.
+ *
  * TLS: with a [[Tls.Config]] the gateway serves WSS (the reference's WS
  * endpoint rides the same SslHandler as HTTP — Server.java:579); two-way
  * mode requires a client certificate in the handshake and the verified
@@ -75,51 +80,18 @@ class WebSocketApi(
     subscriptionBatchSize: Int = 100,
     tls: Option[Tls.Config] = None) {
 
-  private var server: ServerSocket = _
-  @volatile private var running = false
-  private var acceptor: Thread = _
-  private val conns = ConcurrentHashMap.newKeySet[Conn]()
+  private val server = new SocketServer("ws", "graft-ws-accept", "graft-ws-conn", new Conn(_).run())
 
-  def start(port: Int = 0): Int = synchronized {
-    require(server == null, "already started")
-    server = tls match {
-      case None =>
-        val s = new ServerSocket()
-        s.bind(new InetSocketAddress(port))
-        s
-      case Some(cfg) =>
-        val s = cfg.sslContext().getServerSocketFactory
-          .createServerSocket(port).asInstanceOf[javax.net.ssl.SSLServerSocket]
-        if (cfg.needClientAuth) s.setNeedClientAuth(true)
-        s
-    }
-    running = true
-    acceptor = new Thread(() => {
-      while (running) {
-        try {
-          val s = server.accept()
-          val c = new Conn(s)
-          conns.add(c)
-          val t = new Thread(() => c.run(), s"graft-ws-conn-${s.getPort}")
-          t.setDaemon(true)
-          t.start()
-        } catch {
-          case _: Throwable if !running => () // closed during accept
-          case NonFatal(e) => Operations.reportFailure("ws accept", e)
-        }
-      }
-    }, "graft-ws-accept")
-    acceptor.setDaemon(true)
-    acceptor.start()
-    server.getLocalPort
-  }
+  def start(port: Int = 0): Int = server.start(tls match {
+    case None => new ServerSocket(port)
+    case Some(cfg) =>
+      val s = cfg.sslContext().getServerSocketFactory
+        .createServerSocket(port).asInstanceOf[javax.net.ssl.SSLServerSocket]
+      if (cfg.needClientAuth) s.setNeedClientAuth(true)
+      s
+  })
 
-  def stop(): Unit = synchronized {
-    running = false
-    if (server != null) { try server.close() catch { case NonFatal(_) => () }; server = null }
-    conns.forEach(_.shutdown())
-    conns.clear()
-  }
+  def stop(): Unit = server.stop()
 
   private val ops = new Operations(spark, dataDir, metaDir)
 
@@ -160,8 +132,16 @@ class WebSocketApi(
         }
         serve(auths)
       } catch {
-        case NonFatal(e) => if (!closed) Operations.reportFailure(s"ws connection from $peer", e)
-      } finally shutdown()
+        // a connection `stop` ended reports nothing, even when that cut a
+        // frame off
+        case NonFatal(e) => if (!closed && !socket.isInputShutdown)
+          Operations.reportFailure(s"ws connection from $peer", e)
+      } finally {
+        // every tail stops, even after a failed write; while the socket is
+        // open, the sentinels of the subscriptions torn down here still go out
+        created.forEach(id => subs.close(id))
+        closed = true
+      }
     }
 
     private def refuse(status: Int, reason: String): Unit = writeLock.synchronized {
@@ -268,15 +248,5 @@ class WebSocketApi(
         if (!closed) try WebSocketCodec.writeText(out, text)
         catch { case NonFatal(_) => closed = true }
       }
-
-    def shutdown(): Unit = {
-      // every tail stops, even after a failed write; while the socket is
-      // open, the sentinels of the subscriptions torn down here still go out
-      created.forEach(id => subs.close(id))
-      closed = true
-      created.clear()
-      conns.remove(this)
-      try socket.close() catch { case NonFatal(_) => () }
-    }
   }
 }

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{SaveMode, SparkSession}
 
-import graft.sources.PointStore
+import graft.sources.{AtomicDir, PointStore}
 
 /**
  * Retention maintenance driver — the single-pass operational entry point for
@@ -25,16 +25,6 @@ import graft.sources.PointStore
  * before running it for real.
  */
 object Maintenance {
-
-  /** See [[graft.sources.AtomicDir.recover]] — called at the entry of every
-    * maintained-pass function AND defensively inside [[swapDir]]; a no-op
-    * when `target` exists. */
-  private def recoverDir(fs: org.apache.hadoop.fs.FileSystem, target: Path): Unit =
-    graft.sources.AtomicDir.recover(fs, target)
-
-  /** See [[graft.sources.AtomicDir.swap]]. */
-  private def swapDir(fs: org.apache.hadoop.fs.FileSystem, tmp: Path, target: Path): Unit =
-    graft.sources.AtomicDir.swap(fs, tmp, target)
 
   /** Census-driven z-order compaction policy for [[run]] — the analog of
     * the reference's scheduled compaction strategies
@@ -165,9 +155,9 @@ object Maintenance {
     val fs = new Path(dimDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a mid-swap crash must read as "history exists" (restored), never as a
     // fresh bootstrap that would let the next swap delete the only copy
-    recoverDir(fs, new Path(dimDir))
+    AtomicDir.recover(fs, new Path(dimDir))
     val metaPath = new Path(dimDir + ".meta")
-    recoverDir(fs, metaPath)
+    AtomicDir.recover(fs, metaPath)
     val exists = fs.exists(new Path(dimDir))
     // RETRY detection (the streaming-sink replay shape): the pass marker
     // swaps AFTER the dim swap, so a committed pass's blind retry skips
@@ -199,13 +189,13 @@ object Maintenance {
       val written = spark.read.parquet(tmp.toString)
       val rowsAfter = written.count()
       val openAfter = written.where(org.apache.spark.sql.functions.col("is_current") === 1L).count()
-      swapDir(fs, tmp, new Path(dimDir))
+      AtomicDir.swap(fs, tmp, new Path(dimDir))
       if (passId.nonEmpty) {
         import spark.implicits._
         val metaTmp = new Path(metaPath.toString + ".tmp")
         Seq(Tuple1(passId)).toDF("last_pass")
           .write.mode(SaveMode.Overwrite).parquet(metaTmp.toString)
-        swapDir(fs, metaTmp, metaPath)
+        AtomicDir.swap(fs, metaTmp, metaPath)
       }
       Scd2Report(dryRun = false, bootstrap = !exists, rowsBefore, rowsAfter, openBefore, openAfter)
     }
@@ -254,7 +244,7 @@ object Maintenance {
     def nFiles(df: org.apache.spark.sql.DataFrame): Long =
       df.select(org.apache.spark.sql.functions.input_file_name()).distinct().count()
     val fsPre = new Path(dataDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverDir(fsPre, new Path(dataDir)) // mid-swap crash: .bak is the store
+    AtomicDir.recover(fsPre, new Path(dataDir)) // mid-swap crash: .bak is the store
     val before = PointStore.read(spark, dataDir)
     val rows = before.count()
     val filesBefore = nFiles(before)
@@ -267,7 +257,7 @@ object Maintenance {
     // them from ts, and a duplicate dt/hr column would break partitionBy
     PointStore.writeZOrdered(before.drop("dt", "hr"), tmp, xCol, yCol, bits, numFiles,
       mode = SaveMode.Overwrite)
-    swapDir(fs, new Path(tmp), new Path(dataDir))
+    AtomicDir.swap(fs, new Path(tmp), new Path(dataDir))
     val after = PointStore.read(spark, dataDir)
     CompactReport(dryRun = false, rows, filesBefore, nFiles(after), skipBefore, skipOf(after))
   }
@@ -319,8 +309,8 @@ object Maintenance {
     val centsPath = new Path(indexDir, "centroids")
     val assignPath = new Path(indexDir, "assignments")
     val fs = centsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverDir(fs, centsPath)
-    recoverDir(fs, assignPath)
+    AtomicDir.recover(fs, centsPath)
+    AtomicDir.recover(fs, assignPath)
     if (!fs.exists(marker)) return
     val cents = spark.read.parquet(centsPath.toString)
     val vecs = spark.read.parquet(assignPath.toString).select("vec_id", "embedding")
@@ -331,7 +321,7 @@ object Maintenance {
       org.apache.spark.sql.functions.col("vec_id"), 16)
       .write.mode(SaveMode.Overwrite)
       .partitionBy("list_id").parquet(tmp.toString)
-    swapDir(fs, tmp, assignPath)
+    AtomicDir.swap(fs, tmp, assignPath)
     fs.delete(marker, false)
   }
 
@@ -349,9 +339,9 @@ object Maintenance {
     val assignPath = new Path(indexDir, "assignments")
     val metaPath = new Path(indexDir, "meta")
     val fs = centsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverDir(fs, centsPath)
-    recoverDir(fs, assignPath)
-    recoverDir(fs, metaPath)
+    AtomicDir.recover(fs, centsPath)
+    AtomicDir.recover(fs, assignPath)
+    AtomicDir.recover(fs, metaPath)
     if (!dryRun && fs.exists(centsPath)) {
       // publish/drop pendings BEFORE repair: a crashed retrain's repair
       // re-assigns every LIVE row against the live centroids, so any
@@ -412,7 +402,7 @@ object Maintenance {
         Seq((prior.getLong(0) + staged, prior.getLong(1), id))
           .toDF("n_vecs", "n_lists", "last_pass")
           .write.mode(SaveMode.Overwrite).parquet(metaTmp.toString)
-        swapDir(fs, metaTmp, metaPath)
+        AtomicDir.swap(fs, metaTmp, metaPath)
         publishPending(fs, assignPath, pending)
         val root = new Path(indexDir, "assignments.pending")
         if (fs.exists(root) && fs.listStatus(root).isEmpty) fs.delete(root, true)
@@ -475,7 +465,7 @@ object Maintenance {
    * burst shouldn't need an append pass against the stale geometry first),
    * backfills EVERY assignment against the new centroids with the batch
    * [[graft.operators.SimilarityIvf.assign]], and atomically swaps both
-   * directories (`.tmp` stage + [[swapDir]], crash windows auto-restored).
+   * directories (`.tmp` stage + [[AtomicDir.swap]], crash windows auto-restored).
    *
    * The two swaps are bracketed by a `retrain.pending` marker: a crash
    * between them persists v2 centroids with v1 assignments, and the next
@@ -505,7 +495,7 @@ object Maintenance {
       reconcilePending(fs, indexDir, "assignments",
         lastPassOf(spark, new Path(indexDir, "meta")))
       ivfRepair(spark, indexDir) // also recovers both dirs
-    } else { recoverDir(fs, centsPath); recoverDir(fs, assignPath) }
+    } else { AtomicDir.recover(fs, centsPath); AtomicDir.recover(fs, assignPath) }
     val listsBefore = spark.read.parquet(centsPath.toString).count()
     val stored = spark.read.parquet(assignPath.toString).select("vec_id", "embedding")
     val vecs = increment match {
@@ -529,8 +519,8 @@ object Maintenance {
     val nVec = spark.read.parquet(assignTmp.toString).count()
     val nLists2 = spark.read.parquet(centsTmp.toString).count()
     fs.create(marker, true).close() // bracket the two swaps (see ivfRepair)
-    swapDir(fs, centsTmp, centsPath)
-    swapDir(fs, assignTmp, assignPath)
+    AtomicDir.swap(fs, centsTmp, centsPath)
+    AtomicDir.swap(fs, assignTmp, assignPath)
     fs.delete(marker, false)
     // refresh the commit descriptor (vector/list counts; last_pass kept so
     // an already-committed increment's retry detection survives a retrain)
@@ -541,7 +531,7 @@ object Maintenance {
       val metaTmp = new Path(metaPath.toString + ".tmp")
       Seq((nVec, nLists2, lp)).toDF("n_vecs", "n_lists", "last_pass")
         .write.mode(SaveMode.Overwrite).parquet(metaTmp.toString)
-      swapDir(fs, metaTmp, metaPath)
+      AtomicDir.swap(fs, metaTmp, metaPath)
     }
     IvfRetrainReport(dryRun = false, nVec, listsBefore, nLists2)
   }
@@ -762,10 +752,10 @@ object Maintenance {
     val positionsPath = new Path(indexDir, "positions")
     val statsPath = new Path(indexDir, "stats")
     val fs = postingsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverDir(fs, postingsPath)
-    recoverDir(fs, normsPath)
-    recoverDir(fs, positionsPath)
-    recoverDir(fs, statsPath)
+    AtomicDir.recover(fs, postingsPath)
+    AtomicDir.recover(fs, normsPath)
+    AtomicDir.recover(fs, positionsPath)
+    AtomicDir.recover(fs, statsPath)
     if (!dryRun) {
       val lp = lastPassOf(spark, statsPath)
       reconcilePending(fs, indexDir, "postings", lp)
@@ -842,7 +832,7 @@ object Maintenance {
       Seq((prior.getLong(0) + dN, prior.getLong(1) + dSum, id))
         .toDF("n_docs", "sum_dl", "last_pass")
         .write.mode(SaveMode.Overwrite).parquet(statsTmp.toString)
-      swapDir(fs, statsTmp, statsPath)
+      AtomicDir.swap(fs, statsTmp, statsPath)
       // PUBLISH — idempotent file moves; a crash here is finished by the
       // next pass/reader's reconcilePending
       publishPending(fs, postingsPath, pending)
@@ -962,9 +952,9 @@ object Maintenance {
     val positionsPath = new Path(indexDir, "positions")
     val statsPath = new Path(indexDir, "stats")
     val fs = postingsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverDir(fs, postingsPath)
-    recoverDir(fs, normsPath)
-    recoverDir(fs, positionsPath)
+    AtomicDir.recover(fs, postingsPath)
+    AtomicDir.recover(fs, normsPath)
+    AtomicDir.recover(fs, positionsPath)
     if (!dryRun) {
       val lp = lastPassOf(spark, statsPath)
       reconcilePending(fs, indexDir, "postings", lp)
@@ -980,7 +970,7 @@ object Maintenance {
       val tmp = new Path(path.toString + ".tmp")
       spark.read.parquet(path.toString).repartition(col(part))
         .write.mode(SaveMode.Overwrite).partitionBy(part).parquet(tmp.toString)
-      swapDir(fs, tmp, path)
+      AtomicDir.swap(fs, tmp, path)
     }
     // the postings buckets and both sidecars accumulate one file per pass;
     // census each, rewrite each only when ITS max degrades
@@ -1040,7 +1030,7 @@ object Maintenance {
       maxFiles: Int, dryRun: Boolean): StoreCompactReport = {
     import org.apache.spark.sql.functions._
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverDir(fs, path)
+    AtomicDir.recover(fs, path)
     val before = bucketCensus(fs, path, partCol + "=")
     val (fb, mb) = (before.sum, if (before.isEmpty) 0L else before.max)
     val triggered = before.nonEmpty && before.max > maxFiles
@@ -1049,7 +1039,7 @@ object Maintenance {
     val tmp = new Path(path.toString + ".tmp")
     spark.read.parquet(path.toString).repartition(col(partCol))
       .write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(tmp.toString)
-    swapDir(fs, tmp, path)
+    AtomicDir.swap(fs, tmp, path)
     StoreCompactReport(dryRun = false, triggered = true, fb,
       bucketCensus(fs, path, partCol + "=").sum, mb)
   }
@@ -1162,8 +1152,8 @@ object Maintenance {
     val vocabPath = new Path(indexDir, "vocab")
     val statsPath = new Path(indexDir, "stats")
     val fs = vocabPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverDir(fs, vocabPath)
-    recoverDir(fs, statsPath)
+    AtomicDir.recover(fs, vocabPath)
+    AtomicDir.recover(fs, statsPath)
     if (!dryRun) reconcilePending(fs, indexDir, "vocab", lastPassOf(spark, statsPath))
     val id = effectivePassId(passId)
     val exists = fs.exists(statsPath)
@@ -1195,7 +1185,7 @@ object Maintenance {
       val statsTmp = new Path(statsPath.toString + ".tmp")
       Seq((before + dTok, id)).toDF("n_tokens", "last_pass")
         .write.mode(SaveMode.Overwrite).parquet(statsTmp.toString)
-      swapDir(fs, statsTmp, statsPath)
+      AtomicDir.swap(fs, statsTmp, statsPath)
       publishPending(fs, vocabPath, pending)
       val root = new Path(indexDir, "vocab.pending")
       if (fs.exists(root) && fs.listStatus(root).isEmpty) fs.delete(root, true)
@@ -1217,7 +1207,7 @@ object Maintenance {
     import org.apache.spark.sql.functions._
     val vocabPath = new Path(indexDir, "vocab")
     val fs = vocabPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverDir(fs, vocabPath)
+    AtomicDir.recover(fs, vocabPath)
     if (!dryRun) reconcilePending(fs, indexDir, "vocab",
       lastPassOf(spark, new Path(indexDir, "stats")))
     val before = bucketCensus(fs, vocabPath, "vb=")
@@ -1232,7 +1222,7 @@ object Maintenance {
       .select("w", "n", "vb")
       .repartition(col("vb"))
       .write.mode(SaveMode.Overwrite).partitionBy("vb").parquet(tmp.toString)
-    swapDir(fs, tmp, vocabPath)
+    AtomicDir.swap(fs, tmp, vocabPath)
     StoreCompactReport(dryRun = false, triggered = true, fb,
       bucketCensus(fs, vocabPath, "vb=").sum, mb)
   }
@@ -1327,10 +1317,10 @@ object Maintenance {
     val positionsPath = new Path(indexDir, "positions")
     val statsPath = new Path(indexDir, "stats")
     val fs = postingsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverDir(fs, postingsPath)
-    recoverDir(fs, normsPath)
-    recoverDir(fs, positionsPath)
-    recoverDir(fs, statsPath)
+    AtomicDir.recover(fs, postingsPath)
+    AtomicDir.recover(fs, normsPath)
+    AtomicDir.recover(fs, positionsPath)
+    AtomicDir.recover(fs, statsPath)
     if (!dryRun) {
       val lp = lastPassOf(spark, statsPath)
       reconcilePending(fs, indexDir, "postings", lp)
@@ -1365,7 +1355,7 @@ object Maintenance {
     affected.foreach { b =>
       val src = new Path(stage, s"tb=$b")
       val dst = new Path(postingsPath, s"tb=$b")
-      if (fs.exists(src)) swapDir(fs, src, dst)
+      if (fs.exists(src)) AtomicDir.swap(fs, src, dst)
       else if (fs.exists(dst)) fs.delete(dst, true)
     }
     fs.delete(stage, true)
@@ -1383,7 +1373,7 @@ object Maintenance {
     nAffected.foreach { b =>
       val src = new Path(nStage, s"nb=$b")
       val dst = new Path(normsPath, s"nb=$b")
-      if (fs.exists(src)) swapDir(fs, src, dst)
+      if (fs.exists(src)) AtomicDir.swap(fs, src, dst)
       else if (fs.exists(dst)) fs.delete(dst, true)
     }
     fs.delete(nStage, true)
@@ -1405,7 +1395,7 @@ object Maintenance {
         xAffected.foreach { b =>
           val src = new Path(xStage, s"pb=$b")
           val dst = new Path(positionsPath, s"pb=$b")
-          if (fs.exists(src)) swapDir(fs, src, dst)
+          if (fs.exists(src)) AtomicDir.swap(fs, src, dst)
           else if (fs.exists(dst)) fs.delete(dst, true)
         }
         fs.delete(xStage, true)
@@ -1422,7 +1412,7 @@ object Maintenance {
     Seq((nAfter, sumAfter, s"ageoff-${System.nanoTime()}"))
       .toDF("n_docs", "sum_dl", "last_pass")
       .write.mode(SaveMode.Overwrite).parquet(statsTmp.toString)
-    swapDir(fs, statsTmp, statsPath)
+    AtomicDir.swap(fs, statsTmp, statsPath)
     PostingsAgeOffReport(dryRun = false, docsBefore, nAfter, rowsDropped,
       affected.length.toLong)
   }
@@ -1682,8 +1672,8 @@ object Maintenance {
     val sigPath = new Path(indexDir, "signatures")
     val metaPath = new Path(indexDir, "meta")
     val fs = sigPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverDir(fs, sigPath)
-    recoverDir(fs, metaPath)
+    AtomicDir.recover(fs, sigPath)
+    AtomicDir.recover(fs, metaPath)
     if (!dryRun) reconcilePending(fs, indexDir, "signatures", lastPassOf(spark, metaPath))
     val id = effectivePassId(passId)
     val exists = fs.exists(metaPath)
@@ -1710,7 +1700,7 @@ object Maintenance {
         .toDF("n_docs", "num_hashes", "band_size", "last_pass")
       tmpTo match {
         case Some(tmp) =>
-          df.write.mode(SaveMode.Overwrite).parquet(tmp.toString); swapDir(fs, tmp, metaPath)
+          df.write.mode(SaveMode.Overwrite).parquet(tmp.toString); AtomicDir.swap(fs, tmp, metaPath)
         case None => df.write.mode(SaveMode.Overwrite).parquet(metaPath.toString)
       }
     }
@@ -1834,8 +1824,8 @@ object Maintenance {
     val sigPath = new Path(indexDir, "signatures")
     val metaPath = new Path(indexDir, "meta")
     val fs = sigPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverDir(fs, sigPath)
-    recoverDir(fs, metaPath)
+    AtomicDir.recover(fs, sigPath)
+    AtomicDir.recover(fs, metaPath)
     if (!dryRun) reconcilePending(fs, indexDir, "signatures", lastPassOf(spark, metaPath))
     val sigs = spark.read.parquet(sigPath.toString)
     val drop = dropDocs.select("doc_id").distinct()
@@ -1859,7 +1849,7 @@ object Maintenance {
     affected.foreach { b =>
       val src = new Path(stage, s"kb=$b")
       val dst = new Path(sigPath, s"kb=$b")
-      if (fs.exists(src)) swapDir(fs, src, dst)
+      if (fs.exists(src)) AtomicDir.swap(fs, src, dst)
       else if (fs.exists(dst)) fs.delete(dst, true)
     }
     fs.delete(stage, true)
@@ -1872,7 +1862,7 @@ object Maintenance {
         s"ageoff-${System.nanoTime()}"))
       .toDF("n_docs", "num_hashes", "band_size", "last_pass")
       .write.mode(SaveMode.Overwrite).parquet(metaTmp.toString)
-    swapDir(fs, metaTmp, metaPath)
+    AtomicDir.swap(fs, metaTmp, metaPath)
     LshAgeOffReport(dryRun = false, docsBefore, nAfter, rowsDropped,
       affected.length.toLong)
   }
@@ -1922,7 +1912,7 @@ object Maintenance {
       reconcilePending(fs, indexDir, "assignments",
         lastPassOf(spark, new Path(indexDir, "meta")))
       ivfRepair(spark, indexDir)
-    } else recoverDir(fs, assignPath)
+    } else AtomicDir.recover(fs, assignPath)
     val a = spark.read.parquet(assignPath.toString)
     val drop = dropVecs.select("vec_id").distinct()
     val before = a.count()
@@ -1932,7 +1922,7 @@ object Maintenance {
     val tmp = new Path(assignPath.toString + ".tmp")
     survivors.write.mode(SaveMode.Overwrite).partitionBy("list_id").parquet(tmp.toString)
     val after = spark.read.parquet(tmp.toString).count()
-    swapDir(fs, tmp, assignPath)
+    AtomicDir.swap(fs, tmp, assignPath)
     // keep the commit descriptor's vector count current for reporting;
     // the pass starts with a reconcile, so no pending stage can be orphaned
     val metaPath = new Path(indexDir, "meta")
@@ -1943,7 +1933,7 @@ object Maintenance {
       Seq((after, prior.getLong(1), s"ageoff-${System.nanoTime()}"))
         .toDF("n_vecs", "n_lists", "last_pass")
         .write.mode(SaveMode.Overwrite).parquet(metaTmp.toString)
-      swapDir(fs, metaTmp, metaPath)
+      AtomicDir.swap(fs, metaTmp, metaPath)
     }
     IvfAgeOffReport(dryRun = false, before, after)
   }
@@ -1976,7 +1966,7 @@ object Maintenance {
       dryRun: Boolean = false): Scd2PruneReport = {
     import org.apache.spark.sql.functions._
     val fs = new Path(dimDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverDir(fs, new Path(dimDir))
+    AtomicDir.recover(fs, new Path(dimDir))
     val dim = spark.read.parquet(dimDir)
     val before = dim.count()
     val kept = dim.where(col("is_current") === 1L || col("valid_to") >= cutoffMs)
@@ -1990,7 +1980,7 @@ object Maintenance {
     val w = spark.read.parquet(tmp.toString)
     val k = w.agg(count(lit(1)).as("n"),
       sum(when(col("is_current") === 1L, 1L).otherwise(0L)).as("open")).head
-    swapDir(fs, tmp, new Path(dimDir))
+    AtomicDir.swap(fs, tmp, new Path(dimDir))
     Scd2PruneReport(dryRun = false, before, k.getLong(0), k.getLong(1))
   }
 

@@ -16,6 +16,9 @@ import graft.server.{AuthSessions, GraftServer}
  * `--users`, login + per-caller visibility enforcement are active on the
  * HTTP/WS surfaces; `--no-anonymous` additionally refuses sessionless
  * callers (SecurityProperties.allowAnonymous* in the reference).
+ *
+ * A port that cannot be bound ends it with the bind error. The shutdown
+ * hook stops Spark once every transport has finished what it read.
  */
 object Serve {
   def main(args: Array[String]): Unit = {

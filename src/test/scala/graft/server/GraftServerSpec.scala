@@ -333,4 +333,33 @@ class GraftServerSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll 
     assert(lines.exists(_.contains("POST /api/put")), lines.mkString("\n"))
     assert(lines.exists(_.contains("ws put from")), lines.mkString("\n"))
   }
+
+  test("a start that fails on a taken port stops what it started; stop returns and a new start serves") {
+    val restart = new GraftServer(spark, new java.io.File(dir, "restart-data").getAbsolutePath,
+      new java.io.File(dir, "restart-meta").getAbsolutePath)
+    val taken = new java.net.ServerSocket(0)
+    val free = Seq.fill(2)(new java.net.ServerSocket(0))
+    val Seq(httpPort, wsPort) = free.map(_.getLocalPort)
+    free.foreach(_.close())
+    try {
+      intercept[java.net.BindException](
+        restart.start(httpPort = httpPort, wsPort = wsPort, tcpPort = taken.getLocalPort))
+      // the HTTP and WS transports started before the TCP bind failed are stopped
+      Seq(httpPort, wsPort).foreach(new java.net.ServerSocket(_).close())
+      restart.stop()
+      val p = restart.start()
+      val s = new Socket("127.0.0.1", p.tcp)
+      s.getOutputStream.write(s"put restart.metric $T 4.0 host=a\n".getBytes(UTF_8))
+      s.shutdownOutput()
+      s.setSoTimeout(10000)
+      assert(s.getInputStream.read() == -1) // the append has returned
+      s.close()
+      val q = client.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${p.http}/api/query"))
+        .POST(HttpRequest.BodyPublishers.ofString(s"""{"start":$T,"end":${T + 1000},""" +
+          """"msResolution":true,"queries":[{"aggregator":"max","metric":"restart.metric"}]}""", UTF_8))
+        .build(), HttpResponse.BodyHandlers.ofString())
+      assert(q.statusCode() == 200, q.body())
+      assert(q.body().contains(s""""$T":4.0"""), q.body())
+    } finally { taken.close(); restart.stop() }
+  }
 }

@@ -376,6 +376,21 @@ class PutListenersSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
     } finally { s.close(); tcp.stop() }
   }
 
+  test("a TCP listener that fails to bind a taken port stops, then starts again and stores a put") {
+    val cap = new Capture
+    val tcp = new PutListeners.Tcp(cap.sink)
+    val taken = new java.net.ServerSocket(0)
+    try {
+      intercept[java.net.BindException](tcp.start(taken.getLocalPort))
+      tcp.stop()
+      val port = tcp.start(0)
+      val s = new Socket("127.0.0.1", port)
+      s.getOutputStream.write(s"put after.failed.start $T 1.0 host=a\n".getBytes(UTF_8))
+      s.close()
+      assert(cap.await(1, timeoutMs = 10000L).map(_.metric) == Seq("after.failed.start"))
+    } finally { taken.close(); tcp.stop() }
+  }
+
   test("UDP datagrams received while an append runs go out together in the next one") {
     val gate = new Gate(fail = false)
     val udp = new PutListeners.Udp(gate.sink)

@@ -243,6 +243,20 @@ class TlsITSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll {
       }
     }
 
+    /** The text frames read until the stream ends, and how it ended: None
+      * at end of stream, else the exception the read threw. */
+    def textsToEnd(): (Seq[String], Option[Throwable]) = {
+      val texts = scala.collection.mutable.ArrayBuffer[String]()
+      try {
+        var frame = WebSocketCodec.readMessage(in)
+        while (frame.nonEmpty) {
+          frame.collect { case (WebSocketCodec.OpText, p) => texts += new String(p, UTF_8) }
+          frame = WebSocketCodec.readMessage(in)
+        }
+        (texts.toSeq, None)
+      } catch { case scala.util.control.NonFatal(e) => (texts.toSeq, Some(e)) }
+    }
+
     def close(): Unit = socket.close()
   }
 
@@ -283,5 +297,36 @@ class TlsITSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll {
         rogue.readText()
       }
     } finally ws.stop()
+  }
+
+  test("WSS: stop ends a live subscription with its sentinel, then end of stream, and no failure line") {
+    val ws = new WebSocketApi(spark, dataDir, metaDir, sessions = Some(auth),
+      tls = Some(Tls.Config(stores.serverKs, stores.pass)))
+    val port = ws.start()
+    val captured = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    val (texts, ended) = try {
+      val c = new WssClient(port)
+      assert(c.handshake() == 101)
+      c.send("""{"operation":"create","subscriptionId":"live"}""")
+      c.send(s"""{"operation":"add","subscriptionId":"live","metric":"sys.cpu.user",""" +
+        s""""startTime":$T,"delayTime":100}""")
+      // the first row shows the tail is live (two 5 s reads at most)
+      val first = try c.readText() catch { case _: java.net.SocketTimeoutException => c.readText() }
+      assert(first.contains("responses"), first)
+      System.setErr(new java.io.PrintStream(captured, true, UTF_8))
+      ws.stop()
+      try c.textsToEnd() finally c.close()
+    } finally {
+      System.setErr(stderr)
+      ws.stop()
+    }
+    // the SSL socket's shutdownInput throws (no close_notify from the peer)
+    // but shuts the input all the same, so the connection ends as over plain
+    // WS: its sentinel goes out, then the stream ends
+    assert(ended.isEmpty, s"the stream ended on $ended")
+    assert(texts.lastOption.exists(_.contains("\"complete\":true")), texts)
+    val failures = new String(captured.toByteArray, UTF_8).linesIterator.filter(_.startsWith("[graft]")).toSeq
+    assert(failures.isEmpty, failures.mkString("\n"))
   }
 }

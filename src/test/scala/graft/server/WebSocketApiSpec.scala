@@ -132,6 +132,21 @@ class WebSocketApiSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
       None
     }
 
+    /** The text frames read until the stream ends; None when it has not
+      * ended within `deadlineMs`. */
+    def textsToEnd(deadlineMs: Long): Option[Seq[String]] = {
+      val texts = ArrayBuffer[String]()
+      val t0 = System.currentTimeMillis()
+      while (System.currentTimeMillis() - t0 < deadlineMs) {
+        try WebSocketCodec.readMessage(in) match {
+          case Some((WebSocketCodec.OpText, p)) => texts += new String(p, UTF_8)
+          case Some(_) => ()
+          case None => return Some(texts.toSeq)
+        } catch { case _: java.net.SocketTimeoutException => () }
+      }
+      None
+    }
+
     def close(): Unit = socket.close()
   }
 
@@ -300,6 +315,31 @@ class WebSocketApiSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
       assert(!closed, s"the restarted gateway closed the connection after $frames")
       assert(rs.filter(r => r \ "complete" == JBool(false)).map(tsOf) == Seq(T), frames)
       assert(rs.exists(r => r \ "complete" == JBool(true)), s"no sentinel in $frames")
+    } finally api2.stop()
+  }
+
+  test("stopping the gateway ends a live subscription as a disconnect does: its sentinel, then end of stream") {
+    val api2 = new WebSocketApi(spark, dataDir, metaDir)
+    val port2 = api2.start()
+    try {
+      val before = spark.streams.active.map(_.id).toSet
+      val c = new Client(portOverride = Some(port2))
+      assert(c.handshake() == 101)
+      c.send("""{"operation":"create","subscriptionId":"live"}""")
+      c.send(s"""{"operation":"add","subscriptionId":"live","metric":"sys.cpu.idle",""" +
+        s""""startTime":$T,"delayTime":100}""")
+      val (first, _) = c.collectFrames(untilComplete = false, deadlineMs = 10000L, minFrames = 1)
+      assert(responsesOf(first).exists(r => r \ "complete" == JBool(false)), s"no row before stop: $first")
+      val started = spark.streams.active.map(_.id).toSet -- before
+      assert(started.nonEmpty)
+      api2.stop()
+      val outliving = spark.streams.active.map(_.id).toSet.intersect(started)
+      val rest = c.textsToEnd(10000L)
+      c.close()
+      assert(outliving.isEmpty, "a query the add started outlives stop")
+      val last = rest.flatMap(_.lastOption).toSeq.flatMap(f => responsesOf(Seq(f)))
+      assert(last.exists(r => r \ "complete" == JBool(true) && r \ "metric" == JString("sys.cpu.idle")),
+        s"the sentinel, then end of stream: $rest")
     } finally api2.stop()
   }
 
