@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-import graft.planner.{QueryJson, QueryPlanner}
+import graft.planner.{QueryJson, QueryPlanner, TimelyApi}
 import graft.sources.PointStore
 import graft.streaming.PutLineIngest
 
@@ -41,21 +41,26 @@ object Quickstart {
       s"""{"start": $T, "end": ${T + 60000}, "queries": [
          |  {"aggregator": "sum", "metric": "sys.cpu.user",
          |   "downsample": "1s-avg", "tags": {}}]}""".stripMargin)
-    // session with auth A only: the host=b point (viz A&B) must stay invisible
-    println("RESPONSE=" + QueryPlanner.runQuery(stored, req, auths = Seq("A")))
+    // the one query entry, answered for a session with auth A only: the
+    // host=b point (viz A&B) must stay invisible
+    def answer(points: DataFrame, req: QueryPlanner.TsQueryRequest): String = {
+      val out = new java.io.StringWriter()
+      TimelyApi.query(points, req, Seq("A"), None, None)(out)
+      out.toString
+    }
+    println("RESPONSE=" + answer(stored, req))
 
     // hot/cold tiering: recent window cached in memory, reads split at the
     // boundary (reference cache-probe semantics) — same answer either way
     val hot = graft.sources.HotColdPoints.hotWindow(stored, T + 1000)
     val tiered = graft.sources.HotColdPoints.union(stored, hot, T + 1000)
     println("TIERED_RESPONSE_EQUAL=" +
-      (QueryPlanner.runQuery(tiered, req, Seq("A")) == QueryPlanner.runQuery(stored, req, Seq("A"))))
+      (answer(tiered, req) == answer(stored, req)))
 
-    // GET-form query string (OpenTSDB m= syntax) through the same planner
+    // GET-form query string (OpenTSDB m= syntax) through the same entry
     val mReq = QueryPlanner.TsQueryRequest(T, T + 60000, msResolution = false,
       queries = Seq(QueryJson.parseMQuery("sum:1s-avg:sys.cpu.user{host=a}")))
-    println("M_RESPONSE=" + QueryJson.toResponses(
-      QueryPlanner.plan(stored, mReq, auths = Seq("A")).head))
+    println("M_RESPONSE=" + answer(stored, mReq))
 
     // S5: a FlatBuffers Metrics batch goes through the same put decoder —
     // MetricParser.frame auto-detects the "TMFB" identifier vs put-line text

@@ -13,7 +13,8 @@ import graft.planner.QueryPlanner._
  * `QueryRequest` (reference common/src/main/java/timely/api/request/
  * timeseries/QueryRequest.java:219-380) and response assembly mirroring
  * `QueryResponse{metric, tags, aggregatedTags, dps}` (server/src/main/java/
- * timely/api/response/timeseries/QueryResponse.java:1-40).
+ * timely/api/response/timeseries/QueryResponse.java:1-40). A parsed request
+ * is answered by [[TimelyApi.query]], which writes through [[writeResponses]].
  *
  * Uses the json4s shipped with Spark — no extra dependency.
  */
@@ -177,21 +178,12 @@ object QueryJson {
   }
 
   /**
-   * One planned subquery frame as QueryResponse JSON objects: one per
-   * (metric, group_tags), dps ordered by timestamp (the reference emits
-   * TreeMap order — Aggregation.java:58). Streams through [[writeResponses]]
-   * — driver memory stays O(one output partition), never the whole result.
-   */
-  def toResponses(planned: DataFrame): String = {
-    val sw = new java.io.StringWriter()
-    writeResponses(Seq(planned), sw)
-    sw.toString
-  }
-
-  /**
    * Stream planned subquery frames as ONE spliced QueryResponse array (the
    * reference splices every SubQuery's responses into a single array —
-   * DataStore.java:645-662), writing each series object as its rows arrive.
+   * DataStore.java:645-662), writing each series object as its rows arrive:
+   * one object per (metric, group_tags), dps ordered by timestamp (the
+   * reference emits TreeMap order — Aggregation.java:58). Returns the number
+   * of objects written.
    *
    * The reference server materializes the whole merged response in its JVM
    * (DataStore.java:748-788) — bounded for any downsampled query, but an

@@ -22,8 +22,15 @@ import graft.operators.TimeSeries
  * filters rows in the scan: no `dt`/`hr` predicate is derived from it), partial
  * aggregation, and spilling; the iterator ORDER (rate before downsample) is
  * preserved structurally.
+ *
+ * The planner only turns a request into frames. Every query is answered
+ * through `TimelyApi.query`, which checks the catalog, calls [[plan]] and
+ * streams the frames out; nothing here reads the catalog or writes JSON.
  */
 object QueryPlanner {
+
+  /** Exactly the reference's aggregator set (AggregatorsResponse.java:21-30). */
+  val Aggregators: Seq[String] = Seq("avg", "dev", "max", "min", "sum", "count", "none")
 
   /** Rate options (QueryRequest.java:30-136). */
   case class RateOptions(
@@ -152,7 +159,7 @@ object QueryPlanner {
     // (Aggregator.getAggregator's default, Aggregator.java:55-56) and no
     // AggregationIterator is added (DataStore.java:738-746) — the query then
     // behaves exactly like aggregator=none rather than erroring.
-    if (q.aggregator == "none" || !TimelyApi.Aggregators.contains(q.aggregator)) {
+    if (q.aggregator == "none" || !Aggregators.contains(q.aggregator)) {
       perSeries.select(col("metric"), col("tags").as("group_tags"), col("bucket_ms"),
         typedlit(Seq.empty[String]).as("aggregated_tags"), col("value"))
     } else {
@@ -216,30 +223,4 @@ object QueryPlanner {
       val (periodMs, _) = parseDownsample(q.downsample)
       withResponseTs(planSubQuery(points, req, q, auths), req.msResolution, periodMs)
     }
-
-  /** One-call API: plan every subquery and concatenate their response objects
-    * into a single JSON array (the reference returns one array for the whole
-    * request — QueryResponse.java). With `internal` set, the query is counted
-    * into the S10 internal-metrics loopback like the reference's
-    * DataStore.query does (response count + elapsed ms). With `meta` set, the
-    * reference's pre-scan catalog validation runs first
-    * ([[TimelyApi.planQuery]]): a subquery whose first tag matches no catalog
-    * entry throws [[TimelyApi.NoMatchingTagsException]] (HTTP 400,
-    * DataStore.java:936-941) instead of returning an empty array. */
-  def runQuery(
-      points: DataFrame,
-      req: TsQueryRequest,
-      auths: Seq[String],
-      internal: Option[graft.streaming.InternalMetrics] = None,
-      meta: Option[graft.sources.Catalog] = None): String = {
-    val t0 = System.currentTimeMillis()
-    val frames = TimelyApi.planQuery(points, req, auths, meta)
-    // ONE spliced stream over all subqueries (reference DataStore.java:645-662)
-    // — each series object is written as its sorted rows arrive, so even here
-    // the intermediate is the response string itself, never a row collect
-    val sw = new java.io.StringWriter()
-    val numResponses = QueryJson.writeResponses(frames, sw)
-    internal.foreach(_.addQueryResponse(numResponses, System.currentTimeMillis() - t0))
-    sw.toString
-  }
 }

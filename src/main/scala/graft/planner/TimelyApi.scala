@@ -1,5 +1,6 @@
 package graft.planner
 
+import java.io.Writer
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.DataFrame
@@ -8,9 +9,13 @@ import org.json4s._
 import org.json4s.jackson.JsonMethods
 
 import graft.sources.Catalog
+import graft.streaming.InternalMetrics
 
 /**
- * The small constant/catalog API endpoints of the reference, as library calls:
+ * The query entry and the small constant/catalog API endpoints of the
+ * reference, as library calls:
+ * - [[query]], the one entry of every query: meta check, plan, then the
+ *   streamed response
  * - aggregators list (/api/aggregators — reference
  *   server/src/main/java/timely/api/response/timeseries/AggregatorsResponse.java:21-30)
  * - version (/version — common/src/main/java/timely/api/request/VersionRequest.java:2-14)
@@ -19,23 +24,19 @@ import graft.sources.Catalog
  *   each keeps a `DataFrame` form that collects a meta frame into a
  *   [[Catalog]] first (the batch query implementations live in
  *   graft.queries.TimelyQueries and graft.sources.PointStore.metaProjection)
- * - the lookup-query grammar, the cache report (M6) and the query's
- *   meta-check-then-plan step.
+ * - the lookup-query grammar and the cache report (M6).
  * HTTP and WebSocket serve these operations through one table that calls
  * them here (`graft.server.Operations`), so an answer does not depend on the
  * socket a request arrives on.
  */
 object TimelyApi {
 
-  /** Exactly the reference's set (AggregatorsResponse.java:21-30). */
-  val Aggregators: Seq[String] = Seq("avg", "dev", "max", "min", "sum", "count", "none")
-
   val Version = "graft-0.1.0"
 
   /** The row cap of a served /api/metrics report ([[metricsJson]]). */
   val MetricsMaxRows = 100000
 
-  def aggregatorsJson: String = Aggregators.mkString("[\"", "\",\"", "\"]")
+  def aggregatorsJson: String = QueryPlanner.Aggregators.mkString("[\"", "\",\"", "\"]")
 
   /** /api/suggest (DataStore.java:528-580): `metrics` = substring match on
     * the metric name; `tagk` = the tag keys of ONE metric; `tagv` = the tag
@@ -105,17 +106,30 @@ object TimelyApi {
   private def rlike(p: Pattern)(value: String): Boolean =
     value != null && p.matcher(value).find()
 
-  /** The query's step before execution, shared by every transport and
-    * [[QueryPlanner.runQuery]]: with a catalog, the [[requireMatchingTags]]
-    * check of every subquery, then [[QueryPlanner.plan]]. Both fail before
-    * any row is read, so a caller can still answer with an error status. */
-  def planQuery(
+  /**
+   * The one query entry (the reference's DataStore.query,
+   * DataStore.java:645-771): every transport, tool and test answers a query
+   * here. With a catalog, every subquery first passes [[requireMatchingTags]];
+   * then [[QueryPlanner.plan]] plans them all. Both run before this returns,
+   * so a client error is thrown before a caller has written a byte. The
+   * returned writer streams the one spliced response array
+   * ([[QueryJson.writeResponses]]); with `internal` set, it counts the
+   * response objects and the elapsed ms from this call into it, like the
+   * reference's query counters.
+   */
+  def query(
       points: DataFrame,
       req: QueryPlanner.TsQueryRequest,
       auths: Seq[String],
-      meta: Option[Catalog]): Seq[DataFrame] = {
-    meta.foreach(m => req.queries.foreach(q => requireMatchingTags(m, q)))
-    QueryPlanner.plan(points, req, auths)
+      catalog: Option[Catalog],
+      internal: Option[InternalMetrics]): Writer => Unit = {
+    val t0 = System.currentTimeMillis()
+    catalog.foreach(c => req.queries.foreach(requireMatchingTags(c, _)))
+    val frames = QueryPlanner.plan(points, req, auths)
+    out => {
+      val responses = QueryJson.writeResponses(frames, out)
+      internal.foreach(_.addQueryResponse(responses, System.currentTimeMillis() - t0))
+    }
   }
 
   /** `metric{tagk=regex,...}` — the reference's SearchLookupRequest query

@@ -18,9 +18,10 @@ import graft.sources.PointStore
  * [[TimelyApi]] / [[PointStore]] call over the store entry's points
  * relation and in-memory catalog ([[PointStore.points]] /
  * [[PointStore.catalog]]), and returns the [[Operations.Answer]] that
- * writes the response body. Parsing, the query's meta check and planning
- * all run before the answer is returned, so a client error is thrown
- * before a transport has written a byte. A client error is an
+ * writes the response body. A query goes through [[TimelyApi.query]], the
+ * one query entry. Parsing, the query's meta check and planning all run
+ * before the answer is returned, so a client error is thrown before a
+ * transport has written a byte. A client error is an
  * `IllegalArgumentException`: a request document that is not JSON, a bad
  * field, or a put that the one put decoder ([[MetricParser]], shared with
  * the TCP/UDP listeners and the streaming ingest) refuses. A transport only
@@ -54,8 +55,7 @@ private[server] final class Operations(spark: SparkSession, dataDir: String, met
         case Params(p) => QueryJson.parseGetQuery(p)
         case b: Body => QueryJson.parseRequest(b.text)
       }
-      val frames = TimelyApi.planQuery(points, req, auths, Some(catalog))
-      QueryJson.writeResponses(frames, _)
+      TimelyApi.query(points, req, auths, Some(catalog), None)
     },
     // the reference's CacheResponse, viz-filtered per caller
     "cache" -> op((_, auths) => text(TimelyApi.cacheJson(points, auths))),

@@ -10,13 +10,17 @@ import scala.util.control.NonFatal
  * gateway and the TCP put listener. It accepts on one thread from a listener
  * its transport has bound, plain or TLS, and serves each connection on its
  * own daemon thread, which closes the socket once `serve` returns. A failed
- * accept prints one `[graft] <name> accept failed: …` line. [[stop]] closes
- * the listener, shuts each open connection's input and joins its thread: a
- * connection ends as on a client disconnect, finishing what it read.
+ * accept prints one `[graft] <name> accept failed: …` line and waits 100 ms
+ * before it accepts again: a persistent failure (no file descriptor left)
+ * prints at most ten lines a second, and a listener that recovers, or a
+ * [[stop]], waits at most that long. [[stop]] closes the listener, shuts
+ * each open connection's input and joins its thread: a connection ends as
+ * on a client disconnect, finishing what it read.
  */
 private[server] final class SocketServer(
     name: String, acceptThread: String, connThread: String, serve: Socket => Unit) {
 
+  private val AcceptRetryMs = 100L
   private var listener: ServerSocket = _
   private var acceptor: Thread = _
   // the open connections and their threads, ended by `stop`
@@ -41,7 +45,10 @@ private[server] final class SocketServer(
           conns.put(s, t)
           t.start()
         } catch {
-          case NonFatal(e) => if (!l.isClosed) Operations.reportFailure(s"$name accept", e)
+          case NonFatal(e) => if (!l.isClosed) {
+            Operations.reportFailure(s"$name accept", e)
+            Thread.sleep(AcceptRetryMs)
+          }
         }
       }
     }, acceptThread)

@@ -46,7 +46,7 @@ import graft.streaming.{MetricResponseJson, Subscriptions}
  * `add` starts a Structured Streaming tail of the store
  * ([[PointStore.stream]], [[Subscriptions.addMetric]]); matched points are
  * pushed as `{"responses":[MetricResponse…]}` envelopes. Batching follows
- * MetricScanner: responses accumulate until `subscriptionBatchSize`
+ * MetricScanner: responses accumulate until a batch of 100
  * (MetricScanner.java:212-214), and the end of each micro-batch sends what
  * is left, where MetricScanner flushes on a timer (MetricScanner.java:
  * 180-183); the `complete:true` sentinel rides in the envelope of the last
@@ -77,7 +77,6 @@ class WebSocketApi(
     dataDir: String,
     metaDir: String,
     sessions: Option[AuthSessions] = None,
-    subscriptionBatchSize: Int = 100,
     tls: Option[Tls.Config] = None) {
 
   private val server = new SocketServer("ws", "graft-ws-accept", "graft-ws-conn", new Conn(_).run())
@@ -94,6 +93,9 @@ class WebSocketApi(
   def stop(): Unit = server.stop()
 
   private val ops = new Operations(spark, dataDir, metaDir)
+
+  /** Responses per full envelope, the reference's batch size. */
+  private val SubscriptionBatchSize = 100
 
   // ---- one connection ----------------------------------------------------
 
@@ -228,7 +230,7 @@ class WebSocketApi(
 
     private def deliver(id: String, row: Row): Unit = writeLock.synchronized {
       pending += MetricResponseJson.response(row, id)
-      if (pending.size >= subscriptionBatchSize) sendPending()
+      if (pending.size >= SubscriptionBatchSize) sendPending()
     }
 
     /** The end of a micro-batch sends what is pending; the end of a

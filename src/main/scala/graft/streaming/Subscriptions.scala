@@ -42,10 +42,10 @@ class Subscriptions(
 
   /** `add` operation: start a tailing query for one metric. `pointsStream`
     * is a streaming DataFrame of the canonical point schema. A zero
-    * `beginTimeMs` clamps to the retention horizon when `ageOffTtlMs` is
-    * configured — the reference starts zero-start subscriptions at the
-    * age-off horizon, not the epoch (MetricScanner.java:45-120). Adding a
-    * key again replaces its tail.
+    * `beginTimeMs` replays from the epoch. This differs from the reference,
+    * which starts a zero-start subscription at its age-off horizon
+    * (MetricScanner.java:45-120): the server has no retention horizon to
+    * clamp to. Adding a key again replaces its tail.
     *
     * A nonzero `endTimeMs` makes the subscription BOUNDED (reference
     * AddSubscription.endTime, AddSubscription.java:14,45-46): points past the
@@ -66,12 +66,7 @@ class Subscriptions(
       auths: Seq[String] = Seq.empty,
       beginTimeMs: Long = 0L,
       endTimeMs: Long = 0L,
-      delayMs: Long = 1000L,
-      ageOffTtlMs: Option[Long] = None,
-      nowMs: () => Long = () => System.currentTimeMillis()): StreamingQuery = {
-    val begin =
-      if (beginTimeMs == 0L) ageOffTtlMs.map(ttl => nowMs() - ttl).getOrElse(0L)
-      else beginTimeMs
+      delayMs: Long = 1000L): StreamingQuery = {
     val k = (id, metric)
     val tail = new Tail
     // a replaced tail is no longer current, so it delivers nothing more; it
@@ -83,7 +78,7 @@ class Subscriptions(
     // subscription BEFORE other partitions delivered their in-range rows.
     // unnamed: Spark requires a query's name to be unique per session, and
     // the same key may be live on two connections
-    val q = QueryPlanner.select(pointsStream, metric, auths, begin, tags).writeStream
+    val q = QueryPlanner.select(pointsStream, metric, auths, beginTimeMs, tags).writeStream
       .trigger(Trigger.ProcessingTime(delayMs))
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         // the sorted micro-batch streams to the driver one range-partition

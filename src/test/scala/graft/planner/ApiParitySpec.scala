@@ -98,15 +98,15 @@ class ApiParitySpec extends AnyFunSuite with SparkSpec {
       TsQueryRequest(T, T + 6000, msResolution = false,
         Seq(SubQuery("sum", metric, downsample = Some("1s-max"), tags = tags)))
     val e = intercept[TimelyApi.NoMatchingTagsException](
-      QueryPlanner.runQuery(pts, req(Map("rack" -> "r3")), Seq.empty, meta = Some(meta)))
+      QueryAnswer(pts, req(Map("rack" -> "r3")), Seq.empty, Some(meta)))
     assert(e.status == 400)
     // matching tags (incl. regex) and tag-less queries still answer normally
-    assert(QueryPlanner.runQuery(pts, req(Map("rack" -> "r1")), Seq.empty, meta = Some(meta)).nonEmpty)
-    assert(QueryPlanner.runQuery(pts, req(Map("rack" -> "r.*")), Seq.empty, meta = Some(meta)).nonEmpty)
-    assert(QueryPlanner.runQuery(pts, req(Map.empty), Seq.empty, meta = Some(meta)).nonEmpty)
+    assert(QueryAnswer(pts, req(Map("rack" -> "r1")), Seq.empty, Some(meta)).nonEmpty)
+    assert(QueryAnswer(pts, req(Map("rack" -> "r.*")), Seq.empty, Some(meta)).nonEmpty)
+    assert(QueryAnswer(pts, req(Map.empty), Seq.empty, Some(meta)).nonEmpty)
     // unknown metric with no tags: no catalog entries at all -> 400 too
     intercept[TimelyApi.NoMatchingTagsException](
-      QueryPlanner.runQuery(pts, req(Map.empty, metric = "nope"), Seq.empty, meta = Some(meta)))
+      QueryAnswer(pts, req(Map.empty, metric = "nope"), Seq.empty, Some(meta)))
   }
 
   test("aggregator none keeps per-series rows with full tag sets") {

@@ -84,7 +84,7 @@ class QueryPlannerSpec extends AnyFunSuite with SparkSpec {
     val req = TsQueryRequest(T, T + 6000, msResolution = false, Seq(
       SubQuery(aggregator = "sum", metric = "sys.cpu.idle",
         downsample = Some("1s-max"), tags = Map("tag3" -> "value3"))))
-    val json = QueryJson.toResponses(QueryPlanner.plan(fixture, req, Seq.empty).head)
+    val json = QueryAnswer(fixture, req, Seq.empty)
     assert(json.contains(""""metric":"sys.cpu.idle""""))
     assert(json.contains(""""tags":{"tag3":"value3"}"""))
     // the reference serializes the FIELD name aggregatedTags (with the d,
@@ -131,16 +131,14 @@ class QueryPlannerSpec extends AnyFunSuite with SparkSpec {
         SubQuery(aggregator = "none", metric = "sys.cpu.idle"))))
     for (req <- reqs) {
       val dfs = QueryPlanner.plan(fixture, req, Seq.empty)
-      assert(dfs.map(QueryJson.toResponses).map(_.stripPrefix("[").stripSuffix("]"))
-        .filter(_.nonEmpty).mkString("[", ",", "]") ==
-        dfs.map(collected).map(_.stripPrefix("[").stripSuffix("]"))
-          .filter(_.nonEmpty).mkString("[", ",", "]"))
-      // the spliced multi-frame writer agrees with per-frame assembly
+      val perFrame = dfs.map(collected).map(_.stripPrefix("[").stripSuffix("]"))
+        .filter(_.nonEmpty).mkString("[", ",", "]")
+      // the one query entry and the spliced multi-frame writer agree with
+      // per-frame assembly
+      assert(QueryAnswer(fixture, req, Seq.empty) == perFrame)
       val sw = new java.io.StringWriter()
       QueryJson.writeResponses(dfs, sw)
-      assert(sw.toString ==
-        dfs.map(collected).map(_.stripPrefix("[").stripSuffix("]"))
-          .filter(_.nonEmpty).mkString("[", ",", "]"))
+      assert(sw.toString == perFrame)
     }
     // scale guard for aggregator:none: the assembly input plans a RANGE-
     // partitioned (multi-partition-capable) sort — toLocalIterator then holds

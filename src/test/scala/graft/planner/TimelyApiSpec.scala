@@ -103,7 +103,7 @@ class TimelyApiSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("aggregators list matches the reference set") {
-    assert(TimelyApi.Aggregators == Seq("avg", "dev", "max", "min", "sum", "count", "none"))
+    assert(QueryPlanner.Aggregators == Seq("avg", "dev", "max", "min", "sum", "count", "none"))
     assert(TimelyApi.aggregatorsJson == """["avg","dev","max","min","sum","count","none"]""")
   }
 }

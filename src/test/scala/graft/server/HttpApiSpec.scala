@@ -416,4 +416,48 @@ class HttpApiSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll {
       assert(queries > 0, "no query overlapped the appends")
     }
   }
+
+  test("stop waits for a handler that is inside its operation") {
+    // the store's FileSystem holds the /api/cache handler inside the
+    // operation until the test lets it go
+    spark.sparkContext.hadoopConfiguration.set("fs.latchfs.impl", classOf[LatchedFileSystem].getName)
+    val dir = Files.createTempDirectory("graft-http-stop").toString
+    val own = new HttpApi(spark, s"latchfs://$dir/data", s"latchfs://$dir/meta")
+    val port = own.start()
+    val stopper = new Thread(() => own.stop())
+    try {
+      client.sendAsync(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/api/cache")).GET().build(),
+        HttpResponse.BodyHandlers.discarding())
+      assert(LatchedFileSystem.entered.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "the handler never reached the store")
+      stopper.start()
+      stopper.join(1000)
+      assert(stopper.isAlive, "stop returned while a handler was inside its operation")
+      LatchedFileSystem.release.countDown()
+      stopper.join(10000)
+      assert(!stopper.isAlive, "stop did not return within 10 s of the handler going on")
+    } finally {
+      LatchedFileSystem.release.countDown()
+      own.stop()
+    }
+  }
+}
+
+/** A local `FileSystem` under the `latchfs` scheme whose `initialize` waits
+  * until [[LatchedFileSystem.release]] opens. */
+class LatchedFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: URI = URI.create("latchfs:///")
+
+  override def getScheme: String = "latchfs"
+
+  override def initialize(uri: URI, conf: org.apache.hadoop.conf.Configuration): Unit = {
+    LatchedFileSystem.entered.countDown()
+    LatchedFileSystem.release.await()
+    super.initialize(uri, conf)
+  }
+}
+
+object LatchedFileSystem {
+  val entered = new java.util.concurrent.CountDownLatch(1)
+  val release = new java.util.concurrent.CountDownLatch(1)
 }

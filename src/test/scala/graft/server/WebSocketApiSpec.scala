@@ -38,8 +38,7 @@ class WebSocketApiSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
     Map("alice" -> AuthSessions.User("secret", Seq("A"))),
     allowAnonymous = true)
 
-  private lazy val api = new WebSocketApi(spark, dataDir, metaDir,
-    sessions = Some(auth), subscriptionBatchSize = 100)
+  private lazy val api = new WebSocketApi(spark, dataDir, metaDir, sessions = Some(auth))
   private lazy val port = api.start()
 
   override def beforeAll(): Unit = {
@@ -259,20 +258,21 @@ class WebSocketApiSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
   }
 
   test("MetricScanner batch semantics: size-bounded envelopes, sentinel flush, slow consumer") {
-    // dedicated gateway: batch size 2, so envelope shapes are forced by the
-    // batch bound + the micro-batch's end, which carries the sentinel
+    // dedicated gateway over 250 in-range rows, more than two batches of
+    // the gateway's 100: envelope shapes are forced by the batch bound + the
+    // micro-batch's end, which carries the sentinel
     // (MetricScanner.java:212-214 size flush, 270-280 completion flush)
     val dir2 = Files.createTempDirectory("graft-ws-batch").toFile
     val dataDir2 = new java.io.File(dir2, "data").getAbsolutePath
     val metaDir2 = new java.io.File(dir2, "meta").getAbsolutePath
     import spark.implicits._
-    val pts = (0 until 5).map(i =>
-      MetricPoint("m.batch", T + i * 100L, i.toDouble, Map("rack" -> "r1"), None)) :+
+    val n = 250
+    val pts = (0 until n).map(i =>
+      MetricPoint("m.batch", T + i * 4L, i.toDouble, Map("rack" -> "r1"), None)) :+
       MetricPoint("m.batch", T + 2000, 9.0, Map("rack" -> "r1"), None) // past-end trigger
     PointStore.write(pts.toDF(), dataDir2)
     PointStore.writeMeta(pts.toDF(), metaDir2)
-    val api2 = new WebSocketApi(spark, dataDir2, metaDir2,
-      subscriptionBatchSize = 2)
+    val api2 = new WebSocketApi(spark, dataDir2, metaDir2)
     val port2 = api2.start()
     try {
       val c = new Client(portOverride = Some(port2))
@@ -288,12 +288,12 @@ class WebSocketApiSpec extends AnyFunSuite with SparkSpec with BeforeAndAfterAll
       val perEnvelope = frames.map(f => responsesOf(Seq(f)))
       val all = perEnvelope.flatten
       val data = all.filter(r => r \ "complete" == JBool(false))
-      assert(data.map(tsOf) == (0 until 5).map(T + _ * 100L),
+      assert(data.map(tsOf) == (0 until n).map(T + _ * 4L),
         s"all in-range rows, ts-ordered: ${data.map(tsOf)}")
       assert(all.exists(r => r \ "complete" == JBool(true)), "sentinel must flush the tail")
       // every envelope before the sentinel-bearing one is exactly batch-sized
       val beforeSentinel = perEnvelope.takeWhile(!_.exists(r => r \ "complete" == JBool(true)))
-      assert(beforeSentinel.forall(_.size == 2),
+      assert(beforeSentinel.forall(_.size == 100),
         s"size-bounded envelopes, got ${perEnvelope.map(_.size)}")
     } finally api2.stop()
   }

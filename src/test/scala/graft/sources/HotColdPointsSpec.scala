@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
 import graft.model.{MetricParser, MetricPoint}
-import graft.planner.QueryPlanner
+import graft.planner.QueryAnswer
 import graft.planner.QueryPlanner.{SubQuery, TsQueryRequest}
 
 /** Hot/cold range-split serving (reference cache-probe semantics). */
@@ -24,22 +24,22 @@ class HotColdPointsSpec extends AnyFunSuite with SparkSpec {
     val served = HotColdPoints.union(all, hot, boundary)
     assert(served.count() == 10)
     assert(HotColdPoints.oldestHotTs(hot).contains(boundary))
-    // a query through the planner over the tiered frame equals the plain one
+    // a query through the one entry over the tiered frame equals the plain one
     val req = TsQueryRequest(T, T + 60000, msResolution = true,
       Seq(SubQuery("sum", "m", downsample = Some("10s-sum"))))
-    val tiered = QueryPlanner.runQuery(served, req, Seq.empty)
-    val plain = QueryPlanner.runQuery(all, req, Seq.empty)
+    val tiered = QueryAnswer(served, req, Seq.empty)
+    val plain = QueryAnswer(all, req, Seq.empty)
     assert(tiered == plain && tiered.contains("\"dps\""))
   }
 
-  test("multi-subquery runQuery concatenates response arrays") {
+  test("multi-subquery query concatenates response arrays") {
     val pts = Seq(
       s"put a $T 1.0 h=x",
       s"put b ${T + 1} 2.0 h=x").flatMap(MetricParser.parse).toDF()
     val req = TsQueryRequest(T, T + 60000, msResolution = true, Seq(
       SubQuery("sum", "a", downsample = Some("1s-avg")),
       SubQuery("sum", "b", downsample = Some("1s-avg"))))
-    val json = QueryPlanner.runQuery(pts, req, Seq.empty)
+    val json = QueryAnswer(pts, req, Seq.empty)
     assert(json.contains("\"metric\":\"a\"") && json.contains("\"metric\":\"b\""))
     assert(json.startsWith("[") && json.endsWith("]"))
   }

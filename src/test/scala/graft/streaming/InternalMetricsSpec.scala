@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
-import graft.planner.QueryPlanner
+import graft.planner.{QueryAnswer, QueryPlanner}
 import graft.planner.QueryPlanner.{SubQuery, TsQueryRequest}
 import graft.server.HttpApi
 
@@ -104,7 +104,7 @@ class InternalMetricsSpec extends AnyFunSuite with SparkSpec {
     } finally api.stop()
   }
 
-  test("runQuery and the storage sink feed the loopback counters") {
+  test("the query entry and the storage sink feed the loopback counters") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -124,7 +124,7 @@ class InternalMetricsSpec extends AnyFunSuite with SparkSpec {
     val stored = graft.sources.PointStore.read(spark, s"$dir/data")
     val req = TsQueryRequest(T, T + 10, queries = Seq(
       SubQuery(aggregator = "sum", metric = "sys.cpu.user", downsample = Some("1m-sum"))))
-    QueryPlanner.runQuery(stored, req, auths = Seq.empty, internal = Some(im))
+    QueryAnswer(stored, req, auths = Seq.empty, internal = Some(im))
 
     val v = im.metricsAndReset(T + 1).map(p => p.metric -> p.value).toMap
     assert(v("timely.metrics.received") == 3.0)

@@ -422,21 +422,6 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     subs.close("big")
   }
 
-  test("zero beginTime clamps to the age-off horizon (MetricScanner semantics)") {
-    val received = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val subs = new Subscriptions((_, row) => { received.add(row.getAs[Long]("ts")); () }, (_, _, _) => ())
-    val input = MemoryStream[MetricPoint]
-    // now = T + 100s, ttl = 60s -> horizon T + 40s; the T-point must be dropped
-    val q = subs.addMetric("s", input.toDS().toDF(), metric = "m", delayMs = 50L,
-      ageOffTtlMs = Some(60000L), nowMs = () => T + 100000L)
-    input.addData(
-      MetricPoint("m", T, 1.0, Map("host" -> "a"), None),          // pre-horizon
-      MetricPoint("m", T + 50000, 2.0, Map("host" -> "a"), None))  // post-horizon
-    q.processAllAvailable()
-    subs.close("s")
-    assert(received.size() == 1 && received.peek() == T + 50000)
-  }
-
   test("streaming bloom screen: micro-batches probe one prebuilt history bitset") {
     import graft.operators.Dedup
     // history built ONCE (the bloomBits build/probe split's whole point) and
